@@ -661,16 +661,20 @@ object Bench {
     // truncates long tails, which made BENCH_r18.json's per-query map
     // unrecoverable from the artifact alone. Persist the complete line
     // to a file too, so every bench run is self-contained regardless of
-    // how much of stdout the harness kept. Best-effort: a read-only cwd
-    // must not fail the bench.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_full_last.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] could not self-archive to $outPath: " +
-          e.getMessage)
+    // how much of stdout the harness kept. A targeted run (explicit query
+    // names) writes only where SPARK_GRAFT_BENCH_OUT points, so it never
+    // overwrites the committed full-sweep BENCH_full_last.json.
+    // Best-effort: a read-only cwd must not fail the bench.
+    val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(Option.when(args.isEmpty)("BENCH_full_last.json"))
+    outPath.foreach { path =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] could not self-archive to $path: " +
+            e.getMessage)
+      }
     }
     spark.stop()
   }

@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.IntegerType
 
-/** Registers the graft native expressions as SQL functions via
+/** Registers the SQL rows of [[Kernel.specs]] as SQL functions via
   * `SparkSessionExtensions` — usable from `spark.sql(...)`, `expr(...)`, and
   * `functions.call_function`. Install with
   * `SparkSession.builder.withExtensions(GraftExtensions.install)` (done by
@@ -30,89 +31,42 @@ object GraftExtensions {
     case other   => throw new IllegalArgumentException(s"$what must be a long literal, got $other")
   }
 
-  val install: SparkSessionExtensions => Unit = { ext =>
-    def reg(name: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction(
-        (FunctionIdentifier(name),
-         new ExpressionInfo("graft.functions", name),
-         builder))
+  /** Plan-time bounds of the md5 lane kernels: a misuse fails when the call
+    * is planned, not with a silently clipped digest read.
+    */
+  private def checkArgs(name: String, args: Seq[Any]): Unit = (name, args) match {
+    case ("md5_lane", Seq(pos: Int, len: Int)) =>
+      require(pos >= 1 && len >= 1 && pos + len - 1 <= 32 && len <= 15,
+        s"md5_lane: need 1 <= pos, 1 <= len <= 15, pos + len - 1 <= 32 " +
+          s"(got pos=$pos, len=$len)")
+    case ("md5_lanes", Seq(width: Int, n: Int, _)) =>
+      require(width >= 1 && width <= 15 && n >= 1 && n * width <= 32,
+        s"md5_lanes: need 1 <= width <= 15, n >= 1, n * width <= 32 " +
+          s"(got width=$width, n=$n)")
+    case _ =>
+  }
 
-    reg("cosine_sim", es => CosineSimilarity(es(0), es(1)))
-    // CONTRACT: jaccard_sorted requires both arrays sorted ascending and
-    // duplicate-free (array_sort over a distinct hash set) — it validates
-    // both inputs in full and throws on violation. The `_unchecked` variant
-    // is deliberately NOT registered here: handing it unsorted input returns
-    // a silently wrong Jaccard, so it never enters the public SQL namespace.
-    // Engine-internal confirm plans (whose inputs are array_sort-constructed
-    // by shape) build the expression directly via
-    // GraftColumns.jaccardSortedUnchecked. sig_agree_frac requires
-    // equal-length signatures and throws otherwise. See HashKernels scaladoc.
-    reg("jaccard_sorted", es => JaccardSorted(es(0), es(1)))
-    reg("sig_agree_frac", es => SigAgreeFrac(es(0), es(1)))
-    reg("simhash64", es => SimHash64(es(0)))
-    reg("normalize_text", es => NormalizeText(es(0)))
-    reg("fingerprint64", es => Fingerprint64(es(0)))
-    reg("min_window_fp", es => MinWindowFp(es(0), intArg(es(1), "window")))
-    reg("winnow_fps",
-        es => WinnowFps(es(0), intArg(es(1), "w"), intArg(es(2), "t")))
-    reg("minhash_sig",
-        es => MinHashSig(es(0), intArg(es(1), "k"), intArg(es(2), "shingle")))
-    reg("minhash_bands",
-        es =>
-          MinHashBands(
-            es(0),
-            intArg(es(1), "k"),
-            intArg(es(2), "shingle"),
-            intArg(es(3), "r")))
-    reg("minhash_sig_chars",
-        es => MinHashSigChars(es(0), intArg(es(1), "k"), intArg(es(2), "n")))
-    reg("bands_from_sig", es => BandsFromSig(es(0), intArg(es(1), "r")))
-    reg("rhp_sig",
-        es => RhpSig(es(0), intArg(es(1), "planes"), longArg(es(2), "seed")))
-    reg("rhp_bands",
-        es =>
-          RhpBands(
-            es(0),
-            intArg(es(1), "planes"),
-            intArg(es(2), "bands"),
-            longArg(es(3), "seed")))
-    // char-polynomial digest kernels (r21 optimization round): the native
-    // forms of the house (a*131 + codepoint) % (2^31-1) fold family — see
-    // PolyKernels scaladoc for the exact HOF equivalences each replaces.
-    reg("char_poly", es => CharPoly(es(0)))
-    reg("token_polys", es => TokenPolys(es(0)))
-    reg("poly_slide",
-        es => PolySlide(
-          es(0),
-          intArg(es(1), "l"),
-          longArg(es(2), "scale"),
-          longArg(es(3), "offset")))
-    reg("poly_blocks", es => PolyBlocks(es(0), intArg(es(1), "width")))
-    reg("cdc_chunks", es => CdcChunks(es(0)))
-    reg("cls_score", es => ClsScore(es(0)))
-    reg("token_shingle_hashes",
-        es => TokenShingleHashes(es(0), intArg(es(1), "n")))
-    reg("char_gram_hashes",
-        es => CharGramHashes(es(0), intArg(es(1), "n")))
-    reg("token_shingles",
-        es => TokenShingles(es(0), intArg(es(1), "n")))
-    reg("token_bigrams", es => TokenBigrams(es(0)))
-    // seeded-md5 lane kernels (r22): the native forms of the repo-wide
-    // CAST(conv(substring(md5(s), pos, len), 16, 10) AS BIGINT) idiom
-    reg("md5_lane",
-        es => Md5Lane(es(0), intArg(es(1), "pos"), intArg(es(2), "len")))
-    reg("md5_lanes",
-        es => Md5Lanes(es(0), intArg(es(1), "width"), intArg(es(2), "n"),
-          longArg(es(3), "mod")))
-    reg("token_bigram_structs", es => TokenBigramStructs(es(0)))
-    reg("max_sorted_run", es => MaxSortedRun(es(0)))
-    // BPE double-space serialization kernels (r22 optimization round): the
-    // native forms of the tokenizer-learn family's HOF chains — see
-    // BpeKernels scaladoc for the exact equivalences each replaces.
-    reg("ds_token_count", es => DsTokenCount(es(0)))
-    reg("ds_pairs", es => DsPairs(es(0)))
-    reg("ds_from_hex", es => DsFromHex(es(0)))
-    reg("bpe_apply_merges", es => BpeApplyMerges(es(0), es(1)))
+  /** The call's column inputs followed by its literal arguments, each
+    * evaluated now and bound as a literal of the row's declared type.
+    */
+  private def bind(spec: Kernel.Spec, es: Seq[Expression]): Seq[Expression] = {
+    val n = spec.in.size + spec.args.size
+    require(es.size == n, s"${spec.name} takes $n arguments, got ${es.size}")
+    val lits = spec.args.zip(es.drop(spec.in.size)).map {
+      case ((what, IntegerType), e) => Literal(intArg(e, what))
+      case ((what, _), e)           => Literal(longArg(e, what))
+    }
+    checkArgs(spec.name, lits.map(_.value))
+    es.take(spec.in.size) ++ lits
+  }
+
+  val install: SparkSessionExtensions => Unit = { ext =>
+    Kernel.specs.filter(_.sql).foreach { spec =>
+      ext.injectFunction(
+        (FunctionIdentifier(spec.name),
+         new ExpressionInfo("graft.functions", spec.name),
+         (es: Seq[Expression]) => Kernel(spec.name, bind(spec, es))))
+    }
 
     // the Rule[LogicalPlan] tier of the extension surface: collapse
     // defensively-stacked normalize_text calls at plan time (sound by

@@ -332,9 +332,9 @@ object HashKernels {
     * sortedness per pair in the single hottest measured loop buys nothing.
     * Deliberately NOT registered in the SQL namespace (unsorted input would
     * return a silently wrong Jaccard) — internal plans construct the
-    * [[JaccardSortedUnchecked]] expression directly via
-    * [[GraftColumns.jaccardSortedUnchecked]]; the SQL surface gets the
-    * checked [[jaccardSorted]].
+    * `jaccard_sorted_unchecked` row of [[Kernel.specs]] directly via
+    * [[GraftColumns.kernel]]; the SQL surface gets the checked
+    * [[jaccardSorted]].
     *
     * Dispatch: one `isInstanceOf` test per CALL (bimorphic, JIT-predictable)
     * selects the zero-allocation [[mergeJaccardUnsafe]] when both sides are
@@ -544,7 +544,7 @@ object HashKernels {
     * copy-free `UnsafeArrayData` fast path, and the same reason to exist:
     * it runs once per candidate pair. NOT SQL-registered (unsorted input
     * would return a silently wrong count); internal plans construct the
-    * expression via [[GraftColumns.intersectCountSorted]].
+    * `intersect_count_sorted` kernel via [[GraftColumns.kernel]].
     */
   def intersectCountSorted(a: ArrayData, b: ArrayData): Long =
     if (a.isInstanceOf[UnsafeArrayData] && b.isInstanceOf[UnsafeArrayData]) {

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Vector kernels invoked from generated code (whole-stage codegen calls these
-  * static forwarders directly — see the `doGenCode` of the expressions in
-  * [[graft.functions]]). All accumulation is sequential left-to-right so
+  * static forwarders directly — see [[Kernel]], whose `StaticInvoke`
+  * replacement emits the call). All accumulation is sequential left-to-right so
   * results are deterministic and bit-stable across runs/engines.
   *
   * Every kernel converts its `ArrayData` argument to a primitive array ONCE
@@ -83,7 +83,7 @@ object VectorOps {
   /** Squared L2 distance between two equal-length DOUBLE vectors, summed
     * left-to-right — bit-identical to the HOF form
     * `aggregate(zip_with(a, b, (x, y) -> (x-y)*(x-y)), 0D, (acc, v) -> acc+v)`
-    * it replaces in the PQ Lloyd rounds (r21; the L2SqLong precedent).
+    * it replaces in the PQ Lloyd rounds (r21; the l2sq_long precedent).
     */
   def l2sqDouble(a0: ArrayData, b0: ArrayData): Double = {
     val a = a0.toDoubleArray()

@@ -110,7 +110,7 @@ object Clustering {
     // native codegen kernel (VectorOps.l2sqLong) — the interpreted
     // aggregate(zip_with(...)) HOF pair allocates an intermediate array
     // per point·centroid and falls out of whole-stage codegen
-    val dist = graft.functions.GraftColumns.l2sqLong(col("v"), col("cv"))
+    val dist = graft.functions.GraftColumns.kernel("l2sq_long", col("v"), col("cv"))
     val scored = points
       .crossJoin(broadcast(centroids.select(col("cid"), col("v").as("cv"))))
       .withColumn("dist", dist)
@@ -225,7 +225,7 @@ object Clustering {
       (s, d) => {
         import org.apache.spark.sql.DataFrame
         val dist2 = (vcol: Column, ccol: Column) =>
-          graft.functions.GraftColumns.l2sqLong(vcol, ccol)
+          graft.functions.GraftColumns.kernel("l2sq_long", vcol, ccol)
         val pts = quantized(s, d).localCheckpoint()
         val c0 = pts.orderBy(col("vec_id")).limit(1).localCheckpoint()
         val s0 = pts
@@ -380,7 +380,7 @@ object Clustering {
           .select((col("vec_id") + batchIdOffset).as("vec_id"), col("v"))
         val scored = batch
           .crossJoin(broadcast(model.select(col("cid"), col("v").as("cv"))))
-          .withColumn("dist", graft.functions.GraftColumns.l2sqLong(col("v"), col("cv")))
+          .withColumn("dist", graft.functions.GraftColumns.kernel("l2sq_long", col("v"), col("cv")))
           .withColumn(
             "rn",
             row_number().over(Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cid"))))
@@ -514,7 +514,7 @@ object Clustering {
     // committed-check (manifest already past gen-base ⇒ skip). The
     // report reads BOTH generations back through their artifacts: per
     // cluster n_old/n_batch/n_new + exact integer centroid drift
-    // (L2SqLong(old,new)). Oracle: retrain, re-assign the +20M batch,
+    // (l2sq_long(old, new)). Oracle: retrain, re-assign the +20M batch,
     // re-fold — artifact math equals recomputed math.
     Entry(
       "q204_kmeans_update",
@@ -560,7 +560,7 @@ object Clustering {
             col("n_old"),
             (col("n_new") - col("n_old")).as("n_batch"),
             col("n_new"),
-            graft.functions.GraftColumns.l2sqLong(col("v_old"), col("v_new")).as("drift"),
+            graft.functions.GraftColumns.kernel("l2sq_long", col("v_old"), col("v_new")).as("drift"),
             element_at(col("v_new"), 1).as("c1_new"))
           .orderBy(col("cid"))
       },
@@ -642,7 +642,7 @@ object Clustering {
         val pairs = a
           .crossJoin(broadcast(b))
           .filter(col("cid") =!= col("cj"))
-          .withColumn("m", graft.functions.GraftColumns.l2sqLong(col("va"), col("vb")))
+          .withColumn("m", graft.functions.GraftColumns.kernel("l2sq_long", col("va"), col("vb")))
           .withColumn(
             "ratio",
             (col("ia").cast("double") / col("na").cast("double")

@@ -232,7 +232,7 @@ object Dedup {
       // dedup-free emission: keep the joined row iff this band index is the
       // pair's FIRST agreeing index — one survivor per pair, no distinct
       .filter(
-        graft.functions.GraftColumns.firstAgreeIdx(col("a_bands"), col("b_bands"))
+        graft.functions.GraftColumns.kernel("first_agree_idx", col("a_bands"), col("b_bands"))
           === col("idx"))
       .select(col("a_id"), col("b_id"))
   }
@@ -365,7 +365,7 @@ object Dedup {
     // The exact confirm runs over SORTED 64-BIT HASHES of the features, not
     // the feature strings (q36's documented trade, applied to every
     // confirm), through the UNCHECKED native merge kernel
-    // (GraftColumns.jaccardSortedUnchecked): no sortedness re-validation and
+    // jaccard_sorted_unchecked: no sortedness re-validation and
     // no per-pair copy on the post-shuffle UnsafeArrayData fast path — the
     // inputs here are array_sort over a distinct hash set BY PLAN SHAPE, so
     // the checked variant's two validation passes + two toLongArray
@@ -389,7 +389,7 @@ object Dedup {
       "hf")
       .withColumn(
         "jac",
-        graft.functions.GraftColumns.jaccardSortedUnchecked(col("a_hf"), col("b_hf")))
+        graft.functions.GraftColumns.kernel("jaccard_sorted_unchecked", col("a_hf"), col("b_hf")))
       .filter(col("jac") >= threshold)
       .select(col("a_id").as("ga"), col("b_id").as("gb"), col("jac"))
     (confirmed, memberOf)
@@ -625,7 +625,7 @@ object Dedup {
         Seq("b_id"))
       .withColumn(
         "jac",
-        graft.functions.GraftColumns.jaccardSortedUnchecked(col("toks"), col("b_toks")))
+        graft.functions.GraftColumns.kernel("jaccard_sorted_unchecked", col("toks"), col("b_toks")))
       .filter(col("jac") >= thr)
       .select(col("doc_id"), col("b_id"), col("jac"))
   }
@@ -859,7 +859,7 @@ object Dedup {
     attachFeatures(cand, lwins, "lw")
       .withColumn(
         "n_shared",
-        graft.functions.GraftColumns.intersectCountSorted(col("a_lw"), col("b_lw")))
+        graft.functions.GraftColumns.kernel("intersect_count_sorted", col("a_lw"), col("b_lw")))
       .filter(col("n_shared") >= 1)
       .select(col("a_id"), col("b_id"), col("n_shared"))
       .orderBy(col("a_id"), col("b_id"))
@@ -1002,7 +1002,7 @@ object Dedup {
       .repartition(col("band"), col("salt"))
     a.join(b, Seq("band", "salt"))
       .filter(
-        graft.functions.GraftColumns.firstAgreeIdx(col("n_bands"), col("o_bands"))
+        graft.functions.GraftColumns.kernel("first_agree_idx", col("n_bands"), col("o_bands"))
           === col("idx"))
       .select(col("new_id"), col("old_id"))
   }
@@ -1046,7 +1046,7 @@ object Dedup {
       .join(idx.select(col("doc_id").as("old_id"), col("hf").as("o_hf")),
         Seq("old_id"))
       .withColumn("jac",
-        graft.functions.GraftColumns.jaccardSortedUnchecked(col("n_hf"), col("o_hf")))
+        graft.functions.GraftColumns.kernel("jaccard_sorted_unchecked", col("n_hf"), col("o_hf")))
       .filter(col("jac") >= 0.9)
       .select(col("new_id"), col("old_id"), col("jac"))
   }
@@ -2626,8 +2626,8 @@ object Dedup {
     val featArr = sh.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("sh"))).as("arr"))
     val inter: (Column, Column) => Column =
-      if (hashOnly) graft.functions.GraftColumns.intersectCountSorted
-      else graft.functions.GraftColumns.intersectCountSortedStr
+      graft.functions.GraftColumns.kernel(
+        if (hashOnly) "intersect_count_sorted" else "intersect_count_sorted_str", _, _)
     cand
       .join(featArr.select(col("doc_id").as("a_id"), col("arr").as("a_arr")), Seq("a_id"))
       .join(featArr.select(col("doc_id").as("b_id"), col("arr").as("b_arr")), Seq("b_id"))

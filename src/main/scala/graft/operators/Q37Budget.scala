@@ -45,7 +45,7 @@ object Q37Budget {
       "hf")
     val confirmed = withFeat
       .withColumn("jac",
-        graft.functions.GraftColumns.jaccardSortedUnchecked(col("a_hf"), col("b_hf")))
+        graft.functions.GraftColumns.kernel("jaccard_sorted_unchecked", col("a_hf"), col("b_hf")))
       .filter(col("jac") >= 0.95)
 
     def t(label: String)(body: => Unit): Unit = {

@@ -198,7 +198,7 @@ object Similarity {
   private def nearestCent1(points: DataFrame, cents: DataFrame): DataFrame =
     attach1(points, centArr(cents), "cents")
       .withColumn("cid",
-        graft.functions.GraftColumns.nearestCid(col("v"), col("cents")))
+        graft.functions.GraftColumns.kernel("nearest_cid", col("v"), col("cents")))
       .drop("cents")
 
   /** Training sample: deterministic hash-mod of vec_id, ~1/IvfTrainMod of
@@ -248,8 +248,8 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("cid").as("bucket"))
     val probes = attach1(e.filter(col("vec_id") < nQueries), centArr(centroids), "cents")
       .select(col("vec_id").as("q_id"), col("v").as("q_v"),
-        explode(graft.functions.GraftColumns.nearestCids(
-          col("v"), col("cents"), nprobe)).as("bucket"))
+        explode(graft.functions.GraftColumns.kernel("nearest_cids",
+          col("v"), col("cents"), lit(nprobe))).as("bucket"))
 
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     bucketed
@@ -290,7 +290,7 @@ object Similarity {
   // aggregate(zip_with(...)) HOF — same left-to-right fold); the l2sq
   // sibling moved inside the pq_assign kernel in r22
   private def dotC(a: String, b: String): Column =
-    graft.functions.GraftColumns.dotDouble(col(a), col(b))
+    graft.functions.GraftColumns.kernel("dot_double", col(a), col(b))
 
   /** Per-subspace codebooks: seeded by the first `pqK` vectors' slices, then
     * `pqLloydRounds` (= 2) Lloyd rounds over [[ivfTrainingSample]] ONLY
@@ -315,8 +315,8 @@ object Similarity {
       val cbA = cb.agg(collect_list(struct(col("sub"), col("cid"), col("cw")))
         .as("cbA"))
       val assigned = attach1(sample, cbA, "cbA")
-        .select(explode(graft.functions.GraftColumns.pqAssign(
-          col("v"), col("cbA"), pqSubDim)).as("a"))
+        .select(explode(graft.functions.GraftColumns.kernel("pq_assign",
+          col("v"), col("cbA"), lit(pqSubDim))).as("a"))
         .select(col("a.sub").as("sub"), col("a.cid").as("cid"),
           col("a.sv").as("sv"))
       // r21: element-wise mean as ONE aggregation per round (8 per-dim avg
@@ -344,8 +344,8 @@ object Similarity {
       col("cw"))).as("cb"))
     attach1(e, cbA, "cb")
       .select(col("vec_id"),
-        explode(graft.functions.GraftColumns.pqAssign(
-          col("v"), col("cb"), pqSubDim)).as("a"))
+        explode(graft.functions.GraftColumns.kernel("pq_assign",
+          col("v"), col("cb"), lit(pqSubDim))).as("a"))
       .select(col("vec_id"), col("a.sub").as("sub"), col("a.cid").as("cid"))
   }
 
@@ -424,8 +424,8 @@ object Similarity {
       .select(col("vec_id").as("n_id"), col("cid").as("bucket"))
     val probes = attach1(e.filter(col("vec_id") < nQueries), centArr(centroids), "cents")
       .select(col("vec_id").as("q_id"),
-        explode(graft.functions.GraftColumns.nearestCids(
-          col("v"), col("cents"), IvfpqProbe)).as("bucket"))
+        explode(graft.functions.GraftColumns.kernel("nearest_cids",
+          col("v"), col("cents"), lit(IvfpqProbe))).as("bucket"))
     bucketed.join(broadcast(probes), Seq("bucket"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"))
@@ -959,8 +959,8 @@ object Similarity {
     attach1(vecs(s, d).select(col("vec_id"), col("v")),
         centArr(ivfCentroids(s, d, SemK)), "cents")
       .select(col("vec_id"), col("v"),
-        graft.functions.GraftColumns.nearestCids(
-          col("v"), col("cents"), SemProbe).as("cids"))
+        graft.functions.GraftColumns.kernel("nearest_cids",
+          col("v"), col("cents"), lit(SemProbe)).as("cids"))
 
   /** Candidate pairs of a probed corpus, each unordered pair emitted
     * EXACTLY ONCE — at its numerically-least shared cluster id (the q37

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.NormalizeText
+import graft.functions.Kernel
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * native expressions): collapse `normalize_text(normalize_text(x))` to one
   * application.
   *
-  * Why this rewrite is SOUND: NormalizeText is idempotent by construction —
+  * Why this rewrite is SOUND: normalize_text is idempotent by construction —
   * its output is already NFC-composed, ROOT-casefolded, and
   * whitespace-collapsed/trimmed, and each of those three passes is a
   * projection (applying it to its own output is the identity; pinned by a
@@ -30,6 +30,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 object CollapseIdempotentNormalize extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case NormalizeText(inner @ NormalizeText(_)) => inner
+      case Kernel("normalize_text", Seq(inner @ Kernel("normalize_text", _))) => inner
     }
 }

@@ -1110,8 +1110,8 @@ class DedupSimilaritySuite extends SparkTestBase {
     val cArr = cents.agg(collect_list(struct(col("cid"), col("cv"))).as("cents"))
     val kern = e.crossJoin(broadcast(cArr))
       .select(col("vec_id"),
-        graft.functions.GraftColumns.nearestCid(col("v"), col("cents")).as("k1"),
-        graft.functions.GraftColumns.nearestCids(col("v"), col("cents"), 3).as("k3"))
+        graft.functions.GraftColumns.kernel("nearest_cid", col("v"), col("cents")).as("k1"),
+        graft.functions.GraftColumns.kernel("nearest_cids", col("v"), col("cents"), lit(3)).as("k3"))
     // join output columns: vec_id, cids, cid1, k1, k3
     val joined = winKeep3.join(kern, Seq("vec_id")).collect()
     assert(joined.nonEmpty)
@@ -1141,7 +1141,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     val joinForm = slices
       .join(broadcast(cb), Seq("sub"))
       .withColumn("dist",
-        graft.functions.GraftColumns.l2sqDouble(col("sv"), col("cw")))
+        graft.functions.GraftColumns.kernel("l2sq_double", col("sv"), col("cw")))
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(struct(col("dist"), col("cid"))).as("am"),
         first(col("sv")).as("sv"))
@@ -1149,7 +1149,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     val cbA = cb.agg(collect_list(struct(col("sub"), col("cid"), col("cw"))).as("cb"))
     val kern = e.crossJoin(broadcast(cbA))
       .select(col("vec_id"),
-        explode(graft.functions.GraftColumns.pqAssign(col("v"), col("cb"), 8)).as("a"))
+        explode(graft.functions.GraftColumns.kernel("pq_assign", col("v"), col("cb"), lit(8))).as("a"))
       .select(col("vec_id"), col("a.sub").as("sub"), col("a.cid").as("kcid"),
         col("a.sv").as("ksv"))
     // join output columns: vec_id, sub, cid, sv, kcid, ksv

@@ -31,7 +31,7 @@ class HashKernelsSuite extends AnyFunSuite {
     val s = SparkTestBase.spark
     import org.apache.spark.sql.functions._
     val row = s.range(1)
-      .select(graft.functions.GraftColumns.l2sqLong(
+      .select(graft.functions.GraftColumns.kernel("l2sq_long",
         expr("array(1L, -3L, 5L)"), expr("array(4L, 0L, 5L)")).as("d"))
       .collect().head
     assert(row.getLong(0) == 9L + 9L)

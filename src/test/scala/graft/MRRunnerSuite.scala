@@ -4,26 +4,32 @@ import graft.mr.{MRRunner, MRSpec, WordCount}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** MR-surface parity with the reference engine's semantics
-  * (/root/reference/src/worker.h, mr_tasks.h — see SURVEY.md §2.1):
-  * word count over the reference's own test corpus, R output partitions,
-  * each key-sorted, every key in exactly one partition, counts exact.
+/** MR-surface parity with the reference engine's semantics (worker.h,
+  * mr_tasks.h — see SURVEY.md §2.1): word count over a committed prose
+  * corpus, R output partitions, each key-sorted, every key in exactly one
+  * partition, counts exact.
   */
 class MRRunnerSuite extends SparkTestBase {
 
-  private val refInput =
-    Seq(1, 2, 3).map(i => s"/root/reference/test/input/testdata_$i.txt")
-      .filter(f => Files.exists(Paths.get(f)))
+  /** src/test/resources/mr/testdata_{1,2,3}.txt, written by
+    * tools/gen_mr_testdata.py: every strtok delimiter, delimiter runs,
+    * paragraphs wrapped over several lines; testdata_1 is over 64 KB. A
+    * missing file fails the suite.
+    */
+  private val corpus: Seq[String] = Seq(1, 2, 3).map { i =>
+    val url = getClass.getResource(s"/mr/testdata_$i.txt")
+    assert(url != null, s"mr/testdata_$i.txt is missing from the test classpath")
+    Paths.get(url.toURI).toString
+  }
 
-  test("word count over the reference corpus matches a naive independent count") {
-    assume(refInput.nonEmpty, "reference test corpus not present")
-    val lines = spark.read.textFile(refInput: _*)
+  test("word count over the committed corpus matches a naive independent count") {
+    val lines = spark.read.textFile(corpus: _*)
     val R = 8
     val result = MRRunner.transform(spark, lines, WordCount, R)
     val got = result.collect().map { case (k, v) => (k, v.toLong) }.toMap
 
     // independent oracle: plain Scala count on the driver
-    val expected = spark.read.textFile(refInput: _*).collect()
+    val expected = spark.read.textFile(corpus: _*).collect()
       .iterator
       .flatMap(WordCount.tokenize)
       .foldLeft(Map.empty[String, Long]) { (m, w) => m.updated(w, m.getOrElse(w, 0L) + 1) }
@@ -32,8 +38,7 @@ class MRRunnerSuite extends SparkTestBase {
   }
 
   test("output has R partitions, each key-sorted, keys disjoint across partitions") {
-    assume(refInput.nonEmpty, "reference test corpus not present")
-    val lines = spark.read.textFile(refInput: _*)
+    val lines = spark.read.textFile(corpus: _*)
     val R = 8
     val result = MRRunner.transform(spark, lines, WordCount, R)
     assert(result.rdd.getNumPartitions == R)
@@ -50,12 +55,11 @@ class MRRunnerSuite extends SparkTestBase {
   }
 
   test("full run writes exactly R text files in 'key value' format") {
-    assume(refInput.nonEmpty, "reference test corpus not present")
     val out = Files.createTempDirectory("mr_out").toString
     val spec = MRSpec(
       nWorkers = 4,
       workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
-      inputFiles = refInput,
+      inputFiles = corpus,
       outputDir = out,
       nOutputFiles = 8,
       mapKilobytes = 500,
@@ -75,7 +79,7 @@ class MRRunnerSuite extends SparkTestBase {
     val ini =
       s"""n_workers=2
         |worker_ipaddr_ports=localhost:5000,localhost:5001
-        |input_files=/root/reference/test/input/testdata_1.txt
+        |input_files=${corpus.head}
         |output_dir=$outDir
         |n_output_files=4
         |map_kilobytes=500
@@ -97,12 +101,11 @@ class MRRunnerSuite extends SparkTestBase {
     val spec = MRSpec(
       nWorkers = 1,
       workerAddrs = Seq("localhost:5000"),
-      inputFiles = refInput.take(1),
+      inputFiles = corpus.take(1),
       outputDir = "/proc/graft_no_such_writable_dir",
       nOutputFiles = 1,
       mapKilobytes = 500,
       userId = "cs6210")
-    assume(refInput.nonEmpty, "reference test corpus not present")
     // /proc: exists-as-dir check passes for /proc itself? use both shapes —
     // a missing dir and an unwritable existing dir must each be rejected
     assert(MRSpec.validate(spec).exists(e =>
@@ -115,7 +118,8 @@ class MRRunnerSuite extends SparkTestBase {
   }
 
   test("run() restores the session split-size conf it scoped to the job") {
-    assume(refInput.nonEmpty, "reference test corpus not present")
+    // the job's 64 KB split size must actually cut the input file
+    assert(Files.size(Paths.get(corpus.head)) > 64 * 1024)
     val key = "spark.sql.files.maxPartitionBytes"
     val before = spark.conf.getOption(key)
     spark.conf.set(key, "134217728")
@@ -124,7 +128,7 @@ class MRRunnerSuite extends SparkTestBase {
       val spec = MRSpec(
         nWorkers = 2,
         workerAddrs = Seq("localhost:5000", "localhost:5001"),
-        inputFiles = refInput.take(1),
+        inputFiles = corpus.take(1),
         outputDir = out,
         nOutputFiles = 2,
         mapKilobytes = 64,

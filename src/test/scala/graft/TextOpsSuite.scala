@@ -273,14 +273,14 @@ class TextOpsSuite extends SparkTestBase {
     // the end-to-end soundness check either way
     assert(once.toSeq == twice.toSeq, "normalize_text is not idempotent")
     // the optimized plan of the registered query carries exactly ONE
-    // NormalizeText — the injected rule deleted the inner defensive pass
+    // normalize_text Kernel — the injected rule deleted the inner defensive pass
     val df = Registry.byName("q188_normalize_collapse").q(spark, sf)
     val n = df.queryExecution.optimizedPlan.collect { case p =>
       p.expressions.map(_.collect {
-        case e: graft.functions.NormalizeText => e
+        case e: graft.functions.Kernel if e.name == "normalize_text" => e
       }.size).sum
     }.sum
-    assert(n == 1, s"expected 1 NormalizeText after the collapse rule, found $n")
+    assert(n == 1, s"expected 1 normalize_text Kernel after the collapse rule, found $n")
     // and a triple stack collapses in the same single optimizer visit
     // (over the parquet table — a LocalRelation input would be folded away
     // whole by ConvertToLocalRelation before this count could see it)
@@ -288,10 +288,10 @@ class TextOpsSuite extends SparkTestBase {
       .selectExpr("normalize_text(normalize_text(normalize_text(text))) AS n")
       .queryExecution.optimizedPlan.collect { case p =>
         p.expressions.map(_.collect {
-          case e: graft.functions.NormalizeText => e
+          case e: graft.functions.Kernel if e.name == "normalize_text" => e
         }.size).sum
       }.sum
-    assert(n3 == 1, s"triple stack left $n3 NormalizeText nodes")
+    assert(n3 == 1, s"triple stack left $n3 normalize_text Kernel nodes")
   }
 
   test("q194 classifier: scores equal an independent replay; one-exchange map pass") {

@@ -21,7 +21,7 @@ those must keep failing the type-kind gate exactly as a live run would).
 Sweep accumulation (r19 verdict #8): when --json FILE already exists for
 the same sf dir, per-query results are MERGED into it (newest run wins per
 query) instead of overwritten, so a paused/resumed sf0.1 sweep builds ONE
-artifact directly and the merge_sf01_r*.py log-scrape tools are retired.
+artifact directly.
 """
 import hashlib
 import json
