@@ -526,7 +526,14 @@ object Bench {
     "q341_jpeg_progressive",
     "q342_etld1_rollup",
     "q343_webm_ebml_walk",
-    "q344_robots_politeness")
+    "q344_robots_politeness",
+    // the paper's own jobs through the MR surface: word count, word count
+    // from a bare (map, merge) pair, and the inverted index. Subtract these
+    // three when comparing secondary_total against artifacts that do not
+    // list them.
+    "q30_mr_wordcount",
+    "q59_mr_combiner",
+    "q73_mr_inverted_index")
 
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()

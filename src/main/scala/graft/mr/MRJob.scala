@@ -13,18 +13,35 @@ package graft.mr
   *     be value-order-insensitive
   *   - a key lands in exactly one of R output partitions (hash routing,
   *     mr_tasks.h:110)
+  *
+  * A job whose reduce can also serve as a combiner mixes in [[Combinable]].
   */
 trait MRJob extends Serializable {
   def map(line: String): IterableOnce[(String, String)]
   def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)]
 }
 
+/** Opt-in marker for a map-side combiner (Dean & Ghemawat §4.3, "Combiner
+  * Function": "typically the same code" as the reduce). It adds no method:
+  * mixing it in declares that the job's `reduce`
+  *   - is associative and commutative;
+  *   - returns exactly one pair, and that pair has the input key;
+  *   - returns a value that is itself a valid input value;
+  *   - keeps the job correct whether it runs as a combiner zero, one or
+  *     more times per key per map task.
+  * [[MRRunner.transform]] then partially reduces each map task's output
+  * before the shuffle, so the shuffle carries about one record per
+  * (map task, key) instead of one per emitted pair. Jobs without the
+  * marker shuffle every pair, as the reference does.
+  */
+trait Combinable extends MRJob
+
 /** Word count — the reference's only shipped job
   * (/root/reference/test/user_tasks.cc:9-35): strtok on delimiters
   * `" ,.\"'"` (empty tokens skipped), emit (word, "1"); reduce sums
-  * atoi-parsed values.
+  * atoi-parsed values. A sum is combinable: partial sums are valid counts.
   */
-object WordCount extends MRJob {
+object WordCount extends Combinable {
   private val delims = Set(' ', ',', '.', '"', '\'')
 
   def tokenize(line: String): Iterator[String] = new Iterator[String] {
@@ -52,7 +69,8 @@ object WordCount extends MRJob {
   * their document id as `docid:text`; map emits (word, docid) per
   * space-separated token; reduce outputs the sorted distinct posting list.
   * Value-order-insensitive (the reduce sorts), exactly as the reference's
-  * contract requires.
+  * contract requires. Not [[Combinable]]: its `"1,2,3"` output is not a
+  * valid doc-id input value.
   */
 object InvertedIndex extends MRJob {
   override def map(line: String): IterableOnce[(String, String)] = {
@@ -83,9 +101,10 @@ object InvertedIndex extends MRJob {
   * agnostic and the count is exactly what `grep -o pat | wc -l` reports
   * per line. Exercises the map-side-selective job shape (most lines emit
   * NOTHING — the profile where map output ≪ input and the shuffle is
-  * nearly free, the opposite regime from word count's fan-out).
+  * nearly free, the opposite regime from word count's fan-out). Combinable
+  * for the same reason as [[WordCount]].
   */
-final class Grep(pattern: String) extends MRJob {
+final class Grep(pattern: String) extends Combinable {
   override def map(line: String): IterableOnce[(String, String)] = {
     val sep = line.indexOf(':')
     if (sep < 0) Iterator.empty
@@ -114,6 +133,9 @@ object JobRegistry {
     "invertedindex" -> InvertedIndex,
     "grep" -> new Grep("scan"))
 
+  /** A job registered here takes the map-side combiner only if it mixes in
+    * [[Combinable]].
+    */
   def register(userId: String, job: MRJob): Unit =
     synchronized { jobs = jobs + (userId -> job) }
 

@@ -3,6 +3,7 @@ package graft.mr
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** The MapReduce pipeline re-expressed as one declarative Spark plan
   * (SURVEY.md §3): scan → flatMap(map) → hash-partition shuffle on key →
@@ -20,10 +21,20 @@ import scala.collection.mutable.ArrayBuffer
   * minimum any MapReduce requires. Reduce is streaming (one key's values in
   * memory at a time, like the reference's std::map but without holding the
   * whole partition). Skewed keys spill via UnsafeExternalSorter rather than
-  * OOM. For algebraic reducers prefer [[reduceByKeyDF]], which adds map-side
-  * partial aggregation the reference never had.
+  * OOM. A job that mixes in [[Combinable]] also gets a map-side combiner
+  * (Dean & Ghemawat §4.3), which the reference never had; see [[combine]].
   */
 object MRRunner {
+
+  /** A key's combine buffer is collapsed through `reduce` at this many
+    * values.
+    */
+  private val CombineValues = 64
+
+  /** The combine table is sent downstream and cleared at this many keys, so
+    * a map task's memory stays bounded whatever its split size.
+    */
+  private val CombineKeys = 65536
 
   /** Groups a key-sorted iterator into (key, values-of-key) runs without
     * materializing more than one key's values — the reduce-side grouping of
@@ -41,10 +52,60 @@ object MRRunner {
       }
     }
 
+  /** Reduces `values` of `key` to the single value the [[Combinable]]
+    * contract promises, failing the task if the job breaks it.
+    */
+  private def reduceOne(job: MRJob, key: String, values: Seq[String]): String =
+    job.reduce(key, values).iterator.toList match {
+      case (k, v) :: Nil if k == key => v
+      case out => throw new IllegalStateException(
+        s"a Combinable reduce must emit exactly one pair with key $key, got $out")
+    }
+
+  /** The map-side combiner: partially reduces one map task's pairs in an
+    * in-task hash table. A key's values are collapsed through `reduce`
+    * whenever they reach [[CombineValues]]; the table is emitted and cleared
+    * whenever it holds [[CombineKeys]] keys, and at the end of the input.
+    * A key may therefore leave a task more than once, which the
+    * [[Combinable]] contract allows.
+    */
+  def combine(job: MRJob, it: Iterator[(String, String)]): Iterator[(String, String)] =
+    new Iterator[(String, String)] {
+      private val table = new java.util.HashMap[String, ArrayBuffer[String]]
+      private var out: Iterator[(String, String)] = Iterator.empty
+
+      def hasNext: Boolean = out.hasNext || { fill(); out.hasNext }
+
+      def next(): (String, String) =
+        if (hasNext) out.next() else throw new NoSuchElementException
+
+      private def fill(): Unit = {
+        table.clear()
+        while (it.hasNext && table.size < CombineKeys) {
+          val (k, v) = it.next()
+          var buf = table.get(k)
+          if (buf == null) { buf = new ArrayBuffer[String](4); table.put(k, buf) }
+          buf += v
+          if (buf.length == CombineValues) {
+            val collapsed = reduceOne(job, k, buf.toSeq)
+            buf.clear()
+            buf += collapsed
+          }
+        }
+        out = table.entrySet.iterator.asScala.map { e =>
+          val vs = e.getValue
+          e.getKey -> (if (vs.length == 1) vs(0) else reduceOne(job, e.getKey, vs.toSeq))
+        }
+      }
+    }
+
   /** map → shuffle(R, key) → sort-within-partition → grouped reduce.
     * Output keeps the reference's guarantees: R partitions, each key-sorted,
     * every key in exactly one partition (Murmur3 instead of std::hash — see
     * SURVEY.md §7 gotcha 3: parity is at multiset level, not file bytes).
+    * A [[Combinable]] job's map output passes through [[combine]] in the
+    * same map task; the exchange, sort and reduce are the same for every
+    * job, so the combiner changes the shuffle's size, not the output.
     */
   def transform(
       spark: SparkSession,
@@ -52,8 +113,11 @@ object MRRunner {
       job: MRJob,
       nOutput: Int): Dataset[(String, String)] = {
     import spark.implicits._
-    lines
-      .flatMap(job.map _)
+    val mapped = job match {
+      case _: Combinable => lines.mapPartitions(it => combine(job, it.flatMap(job.map)))
+      case _             => lines.flatMap(job.map _)
+    }
+    mapped
       .repartition(nOutput, $"_1")
       .sortWithinPartitions($"_1")
       .mapPartitions(it => sortedRuns(it).flatMap { case (k, vs) => job.reduce(k, vs) })
@@ -86,10 +150,10 @@ object MRRunner {
     }
   }
 
-  /** Combiner upgrade path the reference lacks: for associative+commutative
-    * reducers, partial-aggregate map-side so the shuffle carries one row per
-    * (partition, key) instead of one per emit — the difference between
-    * shuffling 100 TB and shuffling the distinct-key set at scale.
+  /** Word count-style aggregation without writing a job class: `mapFn`
+    * with `merge` as an associative, commutative reduce, run through
+    * [[transform]] as a [[Combinable]] job, so it gets the map-side combiner
+    * and the single hash exchange.
     *
     * Takes the map function directly (not an MRJob): the caller-supplied
     * `merge` REPLACES the job's reduce here, and taking the whole job would
@@ -101,13 +165,11 @@ object MRRunner {
       mapFn: String => IterableOnce[(String, String)],
       merge: (String, String) => String,
       nOutput: Int): Dataset[(String, String)] = {
-    import spark.implicits._
-    lines
-      .flatMap(mapFn)
-      .groupByKey(_._1)
-      .reduceGroups((a, b) => (a._1, merge(a._2, b._2)))
-      .map { case (k, (_, v)) => (k, v) }
-      .repartition(nOutput, $"_1")
-      .sortWithinPartitions($"_1")
+    val job = new Combinable {
+      def map(line: String): IterableOnce[(String, String)] = mapFn(line)
+      def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+        Iterator(key -> values.reduce(merge))
+    }
+    transform(spark, lines, job, nOutput)
   }
 }

@@ -13,17 +13,19 @@ object Relational3 {
 
   private val T = Tables
 
-  /** Word count through the COMBINER path ([[MRRunner.reduceByKeyDF]]) — the
-    * partial-aggregation upgrade the reference never had: the shuffle carries
-    * one row per (map-partition, key) instead of one per token. Same result
-    * as q30's sort-group path, verified by the shared oracle.
+  /** Word count through [[MRRunner.reduceByKeyDF]]: a map function plus a
+    * merge, run as a [[graft.mr.Combinable]] job, so the map-side combiner
+    * (the partial aggregation the reference never had) cuts the shuffle to
+    * about one row per (map task, key) instead of one per token. Same result
+    * as q30, verified by the shared oracle.
     */
   private def countMap(line: String): IterableOnce[(String, String)] =
     line.split(' ').iterator.filter(_.nonEmpty).map(_ -> "1")
 
   val entries: Seq[Entry] = Seq(
-    // q59: MR wordcount via map-side combine (reduceByKeyDF); oracle shared
-    // with q30 — identical results from a different physical strategy.
+    // q59: MR wordcount from a bare (map, merge) pair via reduceByKeyDF —
+    // the combiner path, with one hash exchange on word plus the orderBy's
+    // range exchange; oracle shared with q30.
     Entry(
       "q59_mr_combiner",
       (s, d) => {

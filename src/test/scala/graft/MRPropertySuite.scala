@@ -1,6 +1,6 @@
 package graft
 
-import graft.mr.{MRJob, MRRunner}
+import graft.mr.{Combinable, MRJob, MRRunner}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -12,15 +12,16 @@ import scala.util.Random
   * scalatest isn't in the offline cache).
   */
 class MRPropertySuite extends AnyFunSuite {
+  import MRPropertySuite._
 
   private val vocab = Vector("alpha", "beta", "gamma", "delta", "eps")
 
-  object Count extends MRJob {
-    def map(line: String): IterableOnce[(String, String)] =
-      line.split(' ').iterator.filter(_.nonEmpty).map(_ -> "1")
-    def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
-      Iterator(key -> values.map(_.toLong).sum.toString)
-  }
+  /** Corpora where "alpha" is hot: about 45 of it per line, so each of the
+    * session's 4 input partitions holds far more than 64 of it.
+    */
+  private def hotCorpus(rnd: Random): List[String] =
+    List.fill(40)(List.fill(rnd.nextInt(150))(
+      if (rnd.nextDouble() < 0.6) "alpha" else vocab(rnd.nextInt(vocab.size))).mkString(" "))
 
   test("sortedRuns groups a sorted iterator exactly (100 random cases)") {
     val rnd = new Random(42)
@@ -97,5 +98,95 @@ class MRPropertySuite extends AnyFunSuite {
       val totalTokens = corpus.iterator.flatMap(_.split(' ')).count(_.nonEmpty)
       assert(r4.values.map(_.toLong).sum == totalTokens)
     }
+  }
+
+  test("combinable Count == plain Count for R in {4, 7}, with keys over 64 per map task") {
+    val s = SparkTestBase.spark
+    import s.implicits._
+    val rnd = new Random(31)
+    for (_ <- 1 to 5) {
+      val corpus = hotCorpus(rnd)
+      val ds = s.createDataset(corpus)
+      val hotPerTask = ds.mapPartitions(it =>
+        Iterator(it.flatMap(_.split(' ')).count(_ == "alpha"))).collect()
+      assert(hotPerTask.max > 64, s"no map task holds over 64 of the hot key: ${hotPerTask.toSeq}")
+      val expected = corpus.flatMap(_.split(' ')).filter(_.nonEmpty)
+        .groupBy(identity).map { case (w, ws) => w -> ws.size.toString }
+      for (r <- Seq(4, 7)) {
+        val plain = MRRunner.transform(s, ds, Count, r).collect().toMap
+        val combined = MRRunner.transform(s, ds, CombinableCount, r).collect().toMap
+        assert(combined == plain, s"R=$r")
+        assert(combined == expected, s"R=$r")
+      }
+    }
+  }
+
+  test("plain Count's reduce sees only raw \"1\" values: the combiner is opt-in") {
+    val s = SparkTestBase.spark
+    import s.implicits._
+    val corpus = hotCorpus(new Random(37))
+    val got = MRRunner.transform(s, s.createDataset(corpus), RawValueCount, 4).collect().toMap
+    val expected = corpus.flatMap(_.split(' ')).filter(_.nonEmpty)
+      .groupBy(identity).map { case (w, ws) => w -> ws.size.toString }
+    assert(got == expected)
+  }
+
+  test("combine collapses a key at 64 values and flushes its table at 65,536 keys") {
+    var maxValues = 0
+    val job = new Combinable {
+      def map(line: String): IterableOnce[(String, String)] = Iterator.empty
+      def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] = {
+        maxValues = maxValues max values.size
+        Iterator(key -> values.map(_.toLong).sum.toString)
+      }
+    }
+    // "hot" first and last, 70,000 one-off keys between: the table fills
+    // before the second run of "hot" arrives, so "hot" leaves twice
+    val in = Iterator.fill(1000)("hot" -> "1") ++
+      Iterator.range(0, 70000).map(i => s"k$i" -> "1") ++
+      Iterator.fill(10)("hot" -> "1")
+    val out = MRRunner.combine(job, in).toSeq
+    assert(maxValues == 64, s"reduce saw up to $maxValues values")
+    assert(out.filter(_._1 == "hot").map(_._2).sorted == Seq("10", "1000"))
+    assert(out.size == 70002)
+    assert(out.filter(_._1 != "hot").forall(_._2 == "1"))
+  }
+
+  test("combine rejects a reduce that breaks the one-pair, same-key contract") {
+    val twoPairs = new Combinable {
+      def map(line: String): IterableOnce[(String, String)] = Iterator.empty
+      def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+        Iterator(key -> "1", key -> "1")
+    }
+    val ex = intercept[IllegalStateException](
+      MRRunner.combine(twoPairs, Iterator.fill(3)("k" -> "1")).toList)
+    assert(ex.getMessage.contains("exactly one pair"))
+  }
+}
+
+object MRPropertySuite {
+
+  private def countMap(line: String): IterableOnce[(String, String)] =
+    line.split(' ').iterator.filter(_.nonEmpty).map(_ -> "1")
+
+  object Count extends MRJob {
+    def map(line: String): IterableOnce[(String, String)] = countMap(line)
+    def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+      Iterator(key -> values.map(_.toLong).sum.toString)
+  }
+
+  object CombinableCount extends Combinable {
+    def map(line: String): IterableOnce[(String, String)] = Count.map(line)
+    def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+      Count.reduce(key, values)
+  }
+
+  /** Counts by value-list length, and flags any value that is not the map's
+    * raw "1" — which only a combiner could have produced.
+    */
+  object RawValueCount extends MRJob {
+    def map(line: String): IterableOnce[(String, String)] = countMap(line)
+    def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+      Iterator(key -> (if (values.forall(_ == "1")) values.size.toString else "combined"))
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
-import graft.mr.{MRRunner, MRSpec, WordCount}
-import java.nio.file.{Files, Paths}
+import graft.mr.{JobRegistry, MRJob, MRRunner, MRSpec, WordCount}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import scala.jdk.CollectionConverters._
 
 /** MR-surface parity with the reference engine's semantics (worker.h,
@@ -10,6 +13,7 @@ import scala.jdk.CollectionConverters._
   * partition, counts exact.
   */
 class MRRunnerSuite extends SparkTestBase {
+  import MRRunnerSuite.UncombinedWordCount
 
   /** src/test/resources/mr/testdata_{1,2,3}.txt, written by
     * tools/gen_mr_testdata.py: every strtok delimiter, delimiter runs,
@@ -174,5 +178,94 @@ class MRRunnerSuite extends SparkTestBase {
         r.getLong(0) -> n.toLong
       }.filter(_._2 > 0).toMap
     assert(got == direct, "MR grep diverges from the direct substring sweep")
+  }
+
+  JobRegistry.register("wordcount-uncombined", UncombinedWordCount)
+
+  /** Runs `userId`'s job over the corpus with 64 KB splits (several map
+    * tasks) and R = 8 into a fresh directory. Returns the directory and the
+    * shuffle records that the job's successful tasks wrote.
+    */
+  private def runCountingShuffle(userId: String): (Path, Long) = {
+    val out = Files.createTempDirectory("mr_combiner")
+    val spec = MRSpec(
+      nWorkers = 4,
+      workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
+      inputFiles = corpus,
+      outputDir = out.toString,
+      nOutputFiles = 8,
+      mapKilobytes = 64,
+      userId = userId)
+    val group = s"mr-combiner-$userId"
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskInfo.successful && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, userId)
+    try MRRunner.run(spark, spec)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    out -> records.get
+  }
+
+  private def partFiles(dir: Path): Seq[Path] =
+    Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
+
+  test("combiner: word count writes the same R part files, byte for byte, as the uncombined job") {
+    val (combined, _) = runCountingShuffle("wordcount")
+    val (plain, _) = runCountingShuffle("wordcount-uncombined")
+    val (a, b) = (partFiles(combined), partFiles(plain))
+    assert(a.size == 8 && b.size == 8, s"expected 8 part files each, got ${a.size} and ${b.size}")
+    a.zip(b).foreach { case (x, y) =>
+      assert(Files.size(x) > 0, s"$x is empty")
+      assert(java.util.Arrays.equals(Files.readAllBytes(x), Files.readAllBytes(y)),
+        s"${x.getFileName} differs from ${y.getFileName}")
+    }
+  }
+
+  test("combiner: word count shuffles one record per (map task, word), the uncombined job one per token") {
+    val (_, combined) = runCountingShuffle("wordcount")
+    val (_, plain) = runCountingShuffle("wordcount-uncombined")
+    // the same 64 KB splits as the job's map tasks, counted independently
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, 64L * 1024)
+    val lines =
+      try spark.read.textFile(corpus: _*).rdd
+      finally before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+    val tasks = lines.getNumPartitions
+    val taskWords = lines.mapPartitions(it => it.flatMap(WordCount.tokenize).distinct).count()
+    val tokens = lines.flatMap(WordCount.tokenize).count()
+    assert(tasks > 1, s"expected several map tasks, got $tasks")
+    assert(combined == taskWords, s"combined job shuffled $combined records, expected $taskWords")
+    assert(plain == tokens, s"uncombined job shuffled $plain records, expected $tokens")
+    assert(combined < plain)
+  }
+}
+
+object MRRunnerSuite {
+
+  /** Word count without the [[graft.mr.Combinable]] marker: same map and
+    * reduce, so it takes the plain shuffle-every-pair plan.
+    */
+  object UncombinedWordCount extends MRJob {
+    def map(line: String): IterableOnce[(String, String)] = WordCount.map(line)
+    def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+      WordCount.reduce(key, values)
   }
 }
