@@ -1001,7 +1001,6 @@ object Clustering {
     * final accounting is exactly-once without a transaction log.
     */
   private def streamAssign(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.Files
     val gen = modelEnsure(s, d) // read-only model serve root
     val model = s.read.parquet(s"$gen/model")
       .select(col("cid"), col("v")).localCheckpoint()
@@ -1009,42 +1008,20 @@ object Clustering {
     val batch = quantized(s, d)
       .select((col("vec_id") + streamBatchIdOffset).as("vec_id"), col("v"))
       .localCheckpoint()
-    val arrivals = Files.createTempDirectory("graft_assign_arrivals").toString
-    def writeChunk(df: DataFrame, name: String, order: Int): Unit = {
-      val tmp = s"$arrivals/${name}_stage"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$arrivals/chunk_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
-    }
-    writeChunk(batch.filter(col("vec_id") % 2 === 0), "even", 1)
-    writeChunk(batch.filter(col("vec_id") % 2 === 1), "odd", 2)
+    val src = graft.streaming.BoundedStreams.arrivals(s, "assign",
+      Seq(batch.filter(col("vec_id") % 2 === 0), batch.filter(col("vec_id") % 2 === 1)))
     val nEpochs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val src = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$arrivals/chunk_*.parquet")
-    s.streams.active.filter(_.name == "graft_stream_assign").foreach(_.stop())
-    val q = src.writeStream
-      .queryName("graft_stream_assign")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (chunk: DataFrame, _: Long) =>
-        nEpochs.incrementAndGet()
-        val ss = chunk.sparkSession
-        // content key, not batchId: redelivery lands on the same dir. A
-        // 1-row scalar steering the output path — the adaptiveBandSalt
-        // plan-knob discipline (Dedup.scala:140), not a data collect.
-        val parity = chunk.agg(min(pmod(col("vec_id"), lit(2L)))).head().getLong(0)
-        assign(chunk, model)
-          .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outRoot/chunk_$parity")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    graft.streaming.BoundedStreams.forEachBatch(src, "graft_stream_assign") { (chunk, _) =>
+      nEpochs.incrementAndGet()
+      // content key, not batchId: redelivery lands on the same dir. A
+      // 1-row scalar steering the output path — the adaptiveBandSalt
+      // plan-knob discipline (Dedup.scala:140), not a data collect.
+      val parity = chunk.agg(min(pmod(col("vec_id"), lit(2L)))).head().getLong(0)
+      assign(chunk, model)
+        .groupBy(col("cid")).agg(count(lit(1)).as("n"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$outRoot/chunk_$parity")
+    }
     s.read.parquet(s"$outRoot/chunk_*")
       .groupBy(col("cid")).agg(sum(col("n")).as("n_assigned"))
       .select(col("cid"), col("n_assigned"),

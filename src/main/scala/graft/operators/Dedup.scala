@@ -1204,42 +1204,19 @@ object Dedup {
     graft.sources.Sources.scratch(d, "dedup_index_stream")
 
   private def streamIngest(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.Files
     val root = dedupStreamRoot(d)
     val batch = mixedBatch(s, d).localCheckpoint()
-    val arrivals = Files.createTempDirectory("graft_ingest_arrivals").toString
-    // two single-file arrival chunks with increasing mod times (re-ingests
-    // then novels, split by id parity) so maxFilesPerTrigger=1 delivers
+    // two arrival chunks (re-ingests then novels, split by id parity), so
     // exactly two micro-batches
-    def writeChunk(df: DataFrame, name: String, order: Int): Unit = {
-      val tmp = s"$arrivals/${name}_stage"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$arrivals/chunk_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
-    }
-    writeChunk(batch.filter(col("doc_id") % 2 === 0), "dups", 1)
-    writeChunk(batch.filter(col("doc_id") % 2 === 1), "novel", 2)
+    val src = graft.streaming.BoundedStreams.arrivals(s, "ingest",
+      Seq(batch.filter(col("doc_id") % 2 === 0), batch.filter(col("doc_id") % 2 === 1)))
     val nEpochs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val src = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$arrivals/chunk_*.parquet")
-    s.streams.active.filter(_.name == "graft_stream_ingest").foreach(_.stop())
-    val q = src.writeStream
-      .queryName("graft_stream_ingest")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (chunk: DataFrame, _: Long) =>
-        nEpochs.incrementAndGet()
-        // one ingest turn; the admit + publish run inside, the disposition
-        // is the chunk's log — not needed for the final accounting
-        ingestChunk(chunk.sparkSession, root, d, chunk)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    graft.streaming.BoundedStreams.forEachBatch(src, "graft_stream_ingest") { (chunk, _) =>
+      nEpochs.incrementAndGet()
+      // one ingest turn; the admit + publish run inside, the disposition
+      // is the chunk's log — not needed for the final accounting
+      ingestChunk(chunk.sparkSession, root, d, chunk)
+    }
     val gen = graft.sources.Sources.currentGeneration(s, root)
     s.read.parquet(s"$gen/index")
       .agg(

@@ -27,7 +27,7 @@ object Sources {
     java.lang.management.ManagementFactory.getRuntimeMXBean.getName
       .replaceAll("[^A-Za-z0-9]", "_")
 
-  private lazy val scratchRoot: String = {
+  private[graft] lazy val scratchRoot: String = {
     val root = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io_$runToken"
     graft.Tables.deleteOnExit(root)
     root

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Tables
 import graft.queries.Entry
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import scala.collection.mutable.ArrayBuffer
@@ -12,7 +12,7 @@ import scala.collection.mutable.ArrayBuffer
   * as the batch operators (EventOps), expressed as streams.
   *
   *   - [[hourlyCountsStream]]: readStream → event-time tumbling window agg →
-  *     memory sink. q29 runs it with Trigger.AvailableNow over the fixture
+  *     memory sink. q29 drains it as a [[BoundedStreams]] run over the fixture
   *     parquet, so the driver's batch oracle applies verbatim — the point is
   *     that the SAME aggregation runs unbounded with a watermark in
   *     production.
@@ -96,12 +96,7 @@ object EventStreams {
     * oracle-comparable).
     */
   def hourlyCountsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // The fixture table is a single FILE; FileStreamSource accepts only a
-    // directory or a glob, so address it as the glob `events*` (in production
-    // this is the arrival directory the stream tails).
-    val src = Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(s"$dir/events*"))
+    val src = Tables.normalizeEventTs(BoundedStreams.table(spark, dir, "events"))
     val agg = src
       .withColumn(
         "hour_epoch",
@@ -109,17 +104,7 @@ object EventStreams {
           lit(1000000000L)).cast("long"))
       .groupBy(col("hour_epoch"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-
-    spark.streams.active.filter(_.name == "graft_stream_hourly").foreach(_.stop())
-    val query = agg.writeStream
-      .format("memory")
-      .queryName("graft_stream_hourly")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark
-      .table("graft_stream_hourly")
+    BoundedStreams.toMemory(agg, "graft_stream_hourly", OutputMode.Complete)
       .orderBy(col("hour_epoch"), col("event_type"))
   }
 
@@ -211,21 +196,11 @@ object EventStreams {
     */
   def sessionizeStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet")
-      .select("event_id", "ts", "user_id", "event_type", "value").schema
     val src = Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(s"$dir/events*")
+      BoundedStreams.table(spark, dir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value"))
       .as[EventRow]
-    spark.streams.active.filter(_.name == "graft_stream_sessions").foreach(_.stop())
-    val q = sessionize(src).writeStream
-      .format("memory")
-      .queryName("graft_stream_sessions")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table("graft_stream_sessions")
+    BoundedStreams.toMemory(sessionize(src), "graft_stream_sessions", OutputMode.Append)
       // one row per user per micro-batch → the LATEST batch (highest seq)
       // wins; n_sessions itself is non-monotonic (late events merge
       // sessions), so max(n_sessions) would keep a stale count
@@ -247,22 +222,14 @@ object EventStreams {
     * with state expiry is [[streamDedupWatermarked]], registered as q79.)
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src = spark.readStream.schema(schema).parquet(s"$dir/events*")
+    def src = BoundedStreams.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     val deduped = src.union(src).dropDuplicates("event_id")
     val agg = deduped
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    spark.streams.active.filter(_.name == "graft_stream_dedup").foreach(_.stop())
-    val q = agg.writeStream
-      .format("memory")
-      .queryName("graft_stream_dedup")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table("graft_stream_dedup").orderBy(col("event_type"))
+    BoundedStreams.toMemory(agg, "graft_stream_dedup", OutputMode.Complete)
+      .orderBy(col("event_type"))
   }
 
   /** Production streaming dedup: `dropDuplicatesWithinWatermark`. State for
@@ -284,9 +251,7 @@ object EventStreams {
     * its state expired).
     */
   def streamDedupWatermarked(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src = Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(s"$dir/events*"))
+    def src = Tables.normalizeEventTs(BoundedStreams.table(spark, dir, "events"))
       .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
       .select(col("event_id"), col("event_type"), col("value"), col("event_time"))
     val deduped = src.union(src)
@@ -295,15 +260,8 @@ object EventStreams {
     val agg = deduped
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    spark.streams.active.filter(_.name == "graft_stream_dedup_wm").foreach(_.stop())
-    val q = agg.writeStream
-      .format("memory")
-      .queryName("graft_stream_dedup_wm")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table("graft_stream_dedup_wm").orderBy(col("event_type"))
+    BoundedStreams.toMemory(agg, "graft_stream_dedup_wm", OutputMode.Complete)
+      .orderBy(col("event_type"))
   }
 
   /** Stream-stream inner join with event-time watermarks — the stateful
@@ -317,9 +275,7 @@ object EventStreams {
     * conversion counts equal the batch oracle exactly.
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src = Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(s"$dir/events*"))
+    def src = Tables.normalizeEventTs(BoundedStreams.table(spark, dir, "events"))
       .withColumn("event_time", expr("timestamp_micros(ts div 1000)"))
     val clicks = src.filter(col("event_type") === "click")
       .select(
@@ -341,15 +297,7 @@ object EventStreams {
         col("p_time") >= col("c_time") &&
         col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR") &&
         col("p_ts") > col("c_ts"))
-    spark.streams.active.filter(_.name == "graft_stream_join").foreach(_.stop())
-    val q = joined.writeStream
-      .format("memory")
-      .queryName("graft_stream_join")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table("graft_stream_join")
+    BoundedStreams.toMemory(joined, "graft_stream_join", OutputMode.Append)
       .groupBy(col("c_user").as("user_id"))
       .agg(
         count(lit(1)).as("n_conversions"),
@@ -368,9 +316,7 @@ object EventStreams {
     * agg, not the state cardinality family.
     */
   def slidingCountsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(s"$dir/events*"))
+    val src = Tables.normalizeEventTs(BoundedStreams.table(spark, dir, "events"))
     val agg = src
       .withColumn(
         "hour_epoch",
@@ -380,17 +326,7 @@ object EventStreams {
         explode(array(col("hour_epoch"), col("hour_epoch") - 3600L)).as("win_start"))
       .groupBy(col("win_start"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-
-    spark.streams.active.filter(_.name == "graft_stream_sliding").foreach(_.stop())
-    val query = agg.writeStream
-      .format("memory")
-      .queryName("graft_stream_sliding")
-      .outputMode(OutputMode.Complete)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark
-      .table("graft_stream_sliding")
+    BoundedStreams.toMemory(agg, "graft_stream_sliding", OutputMode.Complete)
       .orderBy(col("win_start"), col("event_type"))
   }
 
@@ -465,23 +401,15 @@ object EventStreams {
     Entry(
       "q119_stream_enrich",
       (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/events*")
+        val src = BoundedStreams.table(s, d, "events")
         val dim = Tables.nation(s, d)
           .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
         val agg = src
           .join(broadcast(dim), pmod(col("user_id"), lit(25L)) === col("nk"))
           .groupBy(col("n_name"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        s.streams.active.filter(_.name == "graft_stream_enrich").foreach(_.stop())
-        val q = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_enrich")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("graft_stream_enrich").orderBy(col("n_name"))
+        BoundedStreams.toMemory(agg, "graft_stream_enrich", OutputMode.Complete)
+          .orderBy(col("n_name"))
       },
       Some("""SELECT n_name, count(*) AS n, round(sum(value),2) AS sum_value
              |FROM events JOIN nation ON n_nationkey = user_id % 25
@@ -518,17 +446,10 @@ object EventStreams {
         val src = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$d/events*")
-        s.streams.active.filter(_.name == "graft_stream_publish").foreach(_.stop())
-        val q = src.writeStream
-          .queryName("graft_stream_publish")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            graft.sources.Sources.commitEpoch(
-              batch.sparkSession, root, batch, f"epoch-$batchId%09d")
-          }
-          .start()
-        q.awaitTermination()
+        BoundedStreams.forEachBatch(src, "graft_stream_publish") { (batch, batchId) =>
+          graft.sources.Sources.commitEpoch(
+            batch.sparkSession, root, batch, f"epoch-$batchId%09d")
+        }
         graft.sources.Sources.readEpochs(s, root).agg(
           count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("value_cents"))
@@ -568,9 +489,7 @@ object EventStreams {
             sum(col("y")).as("sy"),
             sum(col("y") * col("y")).as("syy"))
         // the live side: streamed hourly rollup
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val src = Tables.normalizeEventTs(
-          s.readStream.schema(schema).parquet(s"$d/events*"))
+        val src = Tables.normalizeEventTs(BoundedStreams.table(s, d, "events"))
         val hourly = src
           .select(
             col("event_type"),
@@ -578,15 +497,7 @@ object EventStreams {
             round(col("value") * 100).cast("long").as("cents"))
           .groupBy(col("event_type"), col("hr"))
           .agg(sum(col("cents")).as("y"))
-        s.streams.active.filter(_.name == "graft_stream_anomaly").foreach(_.stop())
-        val q = hourly.writeStream
-          .format("memory")
-          .queryName("graft_stream_anomaly")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("graft_stream_anomaly")
+        BoundedStreams.toMemory(hourly, "graft_stream_anomaly", OutputMode.Complete)
           .join(broadcast(stats), Seq("event_type"))
           .withColumn("dev", col("n") * col("y") - col("sy"))
           .withColumn("mss", col("n") * col("syy") - col("sy") * col("sy"))
@@ -675,9 +586,7 @@ object EventStreams {
     Entry(
       "q267_stream_session_window",
       (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val src = Tables.normalizeEventTs(
-          s.readStream.schema(schema).parquet(s"$d/events*"))
+        val src = Tables.normalizeEventTs(BoundedStreams.table(s, d, "events"))
         val sess = src
           .select(col("user_id"),
             expr("timestamp_micros(ts div 1000)").as("tsu"))
@@ -687,16 +596,7 @@ object EventStreams {
           .select(col("user_id"), col("n_ev"),
             expr("unix_micros(w.end) - 1800000000L - unix_micros(w.start)")
               .as("span_us"))
-        s.streams.active.filter(_.name == "graft_stream_session")
-          .foreach(_.stop())
-        val query = sess.writeStream
-          .format("memory")
-          .queryName("graft_stream_session")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.table("graft_stream_session")
+        BoundedStreams.toMemory(sess, "graft_stream_session", OutputMode.Complete)
           .groupBy(col("user_id"))
           .agg(
             count(lit(1)).as("n_sessions"),
@@ -732,19 +632,11 @@ object EventStreams {
     Entry(
       "q294_stream_pii_redact",
       (s, d) => {
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/documents*")
+        val src = BoundedStreams.table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"))
         val agg = graft.operators.Transforms.piiScanRedact(src)
-        s.streams.active.filter(_.name == "graft_stream_pii").foreach(_.stop())
-        val query = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_pii")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.table("graft_stream_pii").orderBy(col("source"))
+        BoundedStreams.toMemory(agg, "graft_stream_pii", OutputMode.Complete)
+          .orderBy(col("source"))
       },
       Some(graft.operators.Transforms.PiiRedactOracle)),
 
@@ -777,19 +669,11 @@ object EventStreams {
         }
         val marr = Transforms.mergeArray(s.read.parquet(
           s"${graft.sources.Sources.currentGeneration(s, root)}/merges"))
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/documents*")
+        val src = BoundedStreams.table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"))
         val agg = Transforms.byteEncodeRollup(Transforms.byteSerialize(src), marr)
-        s.streams.active.filter(_.name == "graft_stream_bbpe").foreach(_.stop())
-        val query = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_bbpe")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.table("graft_stream_bbpe").orderBy(col("source"))
+        BoundedStreams.toMemory(agg, "graft_stream_bbpe", OutputMode.Complete)
+          .orderBy(col("source"))
       },
       Some(graft.operators.Transforms.ByteBpeOracle)),
 
@@ -805,19 +689,11 @@ object EventStreams {
       "q311_stream_rater_agreement",
       (s, d) => {
         import graft.operators.Feedback
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/documents*")
+        val src = BoundedStreams.table(s, d, "documents")
           .select(col("source"), col("doc_id"))
         val agg = Feedback.kappaRollup(Feedback.kappaLabels(src))
-        s.streams.active.filter(_.name == "graft_stream_kappa").foreach(_.stop())
-        val query = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_kappa")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        Feedback.kappaProject(s.table("graft_stream_kappa"))
+        Feedback.kappaProject(
+          BoundedStreams.toMemory(agg, "graft_stream_kappa", OutputMode.Complete))
       },
       Some(graft.operators.Feedback.KappaOracle)),
 
@@ -833,19 +709,10 @@ object EventStreams {
       "q313_stream_bradley_terry",
       (s, d) => {
         import graft.operators.Feedback
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/events*")
-          .select(col("event_id"))
+        val src = BoundedStreams.table(s, d, "events").select(col("event_id"))
         val agg = Feedback.btPairs(Feedback.btGames(src))
-        s.streams.active.filter(_.name == "graft_stream_bt").foreach(_.stop())
-        val query = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_bt")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        Feedback.btRank(s, s.table("graft_stream_bt"))
+        Feedback.btRank(s,
+          BoundedStreams.toMemory(agg, "graft_stream_bt", OutputMode.Complete))
       },
       Some(graft.operators.Feedback.BtOracle)),
 
@@ -863,8 +730,7 @@ object EventStreams {
       (s, d) => {
         import s.implicits._
         import graft.operators.Multimodal
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/documents*")
+        val src = BoundedStreams.table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
           .as[(Long, String, String, Long)]
           .map { case (id, sr, txt, nc) => Multimodal.TarIn(id, sr, txt, nc) }
@@ -877,15 +743,7 @@ object EventStreams {
             sum(col("n_bad_checksum")).as("n_bad_checksum"),
             sum(col("payload_bytes")).as("payload_bytes"),
             sum(col("name_digest")).as("dgsum"))
-        s.streams.active.filter(_.name == "graft_stream_shard").foreach(_.stop())
-        val query = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_shard")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.table("graft_stream_shard")
+        BoundedStreams.toMemory(agg, "graft_stream_shard", OutputMode.Complete)
           .select(col("source"), col("n_archives"), col("n_members"),
             col("n_bad_checksum"), col("payload_bytes"),
             pmod(col("dgsum"), lit(2147483647L)).as("name_digest"))
@@ -908,21 +766,12 @@ object EventStreams {
       "q322_stream_hll",
       (s, d) => {
         import graft.operators.Sketches
-        val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-        val regs = Sketches.hllProject(
-          s.readStream.schema(schema).parquet(s"$d/lineitem*"))
+        val regs = Sketches.hllProject(BoundedStreams.table(s, d, "lineitem"))
           .groupBy(col("bucket")).agg(max(col("rho")).as("m"))
-        s.streams.active.filter(_.name == "graft_stream_hll").foreach(_.stop())
-        val query = regs.writeStream
-          .format("memory")
-          .queryName("graft_stream_hll")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
+        val streamed = BoundedStreams.toMemory(regs, "graft_stream_hll", OutputMode.Complete)
         val batchRows = Sketches.hllRows(s, d)
         Sketches.hllReport(
-          Sketches.hllCollapse(s.table("graft_stream_hll"), "d"),
+          Sketches.hllCollapse(streamed, "d"),
           Sketches.hllCollapse(
             batchRows.groupBy(col("bucket")).agg(max(col("rho")).as("m")),
             "m"),
@@ -946,8 +795,7 @@ object EventStreams {
       (s, d) => {
         import s.implicits._
         import graft.operators.{Containers, Multimodal}
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
-        val src = s.readStream.schema(schema).parquet(s"$d/documents*")
+        val src = BoundedStreams.table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
           .as[(Long, String, String, Long)]
           .map { case (id, sr, txt, nc) => Multimodal.TarIn(id, sr, txt, nc) }
@@ -960,15 +808,7 @@ object EventStreams {
             sum(col("n_samples")).as("n_samples"),
             sum(col("payload_bytes")).as("payload_bytes"),
             sum(col("payload_digest")).as("dgsum"))
-        s.streams.active.filter(_.name == "graft_stream_mp4").foreach(_.stop())
-        val query = agg.writeStream
-          .format("memory")
-          .queryName("graft_stream_mp4")
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        s.table("graft_stream_mp4")
+        BoundedStreams.toMemory(agg, "graft_stream_mp4", OutputMode.Complete)
           .select(col("source"), col("n_files"), col("n_bad_index"),
             col("n_samples"), col("payload_bytes"),
             pmod(col("dgsum"), lit(2147483647L)).as("payload_digest"))
@@ -983,7 +823,6 @@ object EventStreams {
     * state dir, and a dead-letter dir holding the late rows themselves.
     */
   private def deadLetterStream(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.Files
     val HalfHourNs = 1800L * 1000000000L
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("event_type"), col("ts"))
@@ -996,56 +835,35 @@ object EventStreams {
     val bounds = ev.agg(min(col("arr")), max(col("arr"))).head()
     val split = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val outRoot = graft.sources.Sources.scratch(d, "dead_letter_out")
-    val arrivals = Files.createTempDirectory("graft_dlq_arrivals").toString
-    def writeChunk(df: DataFrame, name: String, order: Int): Unit = {
-      val tmp = s"$arrivals/${name}_stage"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$arrivals/chunk_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
-    }
-    writeChunk(ev.filter(col("arr") < split), "first", 1)
-    writeChunk(ev.filter(col("arr") >= split), "second", 2)
-    val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$arrivals/chunk_*.parquet")
-    s.streams.active.filter(_.name == "graft_dead_letter").foreach(_.stop())
-    val q = src.writeStream
-      .queryName("graft_dead_letter")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (chunk: DataFrame, _: Long) =>
-        val ss = chunk.sparkSession
-        // content key (all-first vs all-second arrival), not batchId — the
-        // q205 plan-knob discipline: redelivery lands on the same dirs.
-        val isFirst = chunk
-          .agg(max(col("arr"))).head().getLong(0) < split
-        if (isFirst) {
-          chunk.groupBy(col("event_type")).agg(count(lit(1)).as("n_first"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outRoot/first")
-          // the frozen watermark: 1-row state handed to the next epoch
-          chunk.agg((max(col("ts")) - HalfHourNs).as("wm"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outRoot/wm")
-        } else {
-          val wm = ss.read.parquet(s"$outRoot/wm").head().getLong(0)
-          chunk.filter(col("ts") >= wm)
-            .groupBy(col("event_type")).agg(count(lit(1)).as("n_ontime"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outRoot/ontime")
-          // the dead letter carries the ROWS — re-processable, not a count
-          chunk.filter(col("ts") < wm)
-            .select(col("event_id"), col("event_type"), col("ts"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outRoot/late_rows")
-        }
-        ()
+    val src = BoundedStreams.arrivals(s, "dlq",
+      Seq(ev.filter(col("arr") < split), ev.filter(col("arr") >= split)))
+    BoundedStreams.forEachBatch(src, "graft_dead_letter") { (chunk, _) =>
+      val ss = chunk.sparkSession
+      // content key (all-first vs all-second arrival), not batchId — the
+      // q205 plan-knob discipline: redelivery lands on the same dirs.
+      val isFirst = chunk
+        .agg(max(col("arr"))).head().getLong(0) < split
+      if (isFirst) {
+        chunk.groupBy(col("event_type")).agg(count(lit(1)).as("n_first"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$outRoot/first")
+        // the frozen watermark: 1-row state handed to the next epoch
+        chunk.agg((max(col("ts")) - HalfHourNs).as("wm"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$outRoot/wm")
+      } else {
+        val wm = ss.read.parquet(s"$outRoot/wm").head().getLong(0)
+        chunk.filter(col("ts") >= wm)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("n_ontime"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$outRoot/ontime")
+        // the dead letter carries the ROWS — re-processable, not a count
+        chunk.filter(col("ts") < wm)
+          .select(col("event_id"), col("event_type"), col("ts"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$outRoot/late_rows")
       }
-      .start()
-    q.awaitTermination()
+    }
     val wmNs = s.read.parquet(s"$outRoot/wm").head().getLong(0)
     val first = s.read.parquet(s"$outRoot/first")
     val ontime = s.read.parquet(s"$outRoot/ontime")

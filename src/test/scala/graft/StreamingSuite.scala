@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.Registry
-import graft.streaming.EventStreams
+import graft.streaming.{BoundedStreams, EventStreams}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -11,41 +11,25 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 class StreamingSuite extends SparkTestBase {
 
-  /** Build a multi-batch arrival dir from the fixture: two time-ordered
+  /** A multi-batch arrival stream from the fixture: two time-ordered
     * chunks plus two far-future sentinel events (user −1) whose batches push
-    * the watermark past all real data. Files get increasing mod times —
-    * FileStreamSource orders arrivals by modification time — so with
-    * maxFilesPerTrigger=1 each file is one micro-batch. Returns (glob,
-    * schema).
+    * the watermark past all real data, one micro-batch per chunk.
     */
-  private def arrivalDir(prefix: String): (String, org.apache.spark.sql.types.StructType) = {
+  private def arrivalStream(name: String): org.apache.spark.sql.DataFrame = {
     val s = spark
     import s.implicits._
-    import java.nio.file.Files
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val maxTs = ev.agg(max("ts")).head().getLong(0)
-    val dir = Files.createTempDirectory(prefix).toString
     val mid = ev.agg(expr("percentile(ts, 0.5)")).head().getDouble(0).toLong
-    def writeChunk(df: org.apache.spark.sql.DataFrame, name: String, order: Int): Unit = {
-      val tmp = s"$dir/${name}_stage"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$dir/ev_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
-    }
     val dayNs = 24L * 3600 * 1000 * 1000 * 1000
-    writeChunk(ev.filter(col("ts") <= mid), "c1", 1)
-    writeChunk(ev.filter(col("ts") > mid), "c2", 2)
-    writeChunk(
-      Seq((9000001L, maxTs + dayNs, -1L, "view", 0.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value"), "c3", 3)
-    writeChunk(
-      Seq((9000002L, maxTs + 2 * dayNs, -1L, "view", 0.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value"), "c4", 4)
-    (s"$dir/ev_*.parquet", ev.schema)
+    def sentinel(id: Long, ts: Long) =
+      Seq((id, ts, -1L, "view", 0.0)).toDF("event_id", "ts", "user_id", "event_type", "value")
+    BoundedStreams.arrivals(spark, name, Seq(
+      ev.filter(col("ts") <= mid),
+      ev.filter(col("ts") > mid),
+      sentinel(9000001L, maxTs + dayNs),
+      sentinel(9000002L, maxTs + 2 * dayNs)))
   }
 
   test("stream hourly counts == batch hourly counts (modulo avg col)") {
@@ -60,21 +44,12 @@ class StreamingSuite extends SparkTestBase {
   test("watermarked sessionize: state expires via EventTimeTimeout and finals match q26") {
     val s = spark
     import s.implicits._
-    val (glob, schema) = arrivalDir("wm_events")
-    val src = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(glob)
-      .as[EventStreams.EventRow]
+    val src = arrivalStream("wm_events").as[EventStreams.EventRow]
     val out = EventStreams.sessionizeWatermarked(src, "0 seconds")
-    spark.streams.active.filter(_.name == "test_wm_sessionize").foreach(_.stop())
-    val q = out.writeStream.format("memory").queryName("test_wm_sessionize")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // emissions are additive per activity epoch — SUM per user must equal
     // the batch sessionize (here each user happens to close in one epoch,
     // so this also exercises the documented consumption pattern)
-    val finals = spark.table("test_wm_sessionize")
+    val finals = BoundedStreams.toMemory(out, "test_wm_sessionize", OutputMode.Append)
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"))
       .agg(sum(col("n_sessions")).as("s"), sum(col("n_events")).as("n"))
@@ -86,23 +61,15 @@ class StreamingSuite extends SparkTestBase {
   }
 
   test("watermarked hourly agg: closed windows equal the batch aggregate") {
-    val (glob, schema) = arrivalDir("wm_hourly")
-    val src = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(glob)
-    val out = EventStreams.hourlyCountsWatermarked(src, "0 seconds")
-    spark.streams.active.filter(_.name == "test_wm_hourly").foreach(_.stop())
-    val q = out.writeStream.format("memory").queryName("test_wm_hourly")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val out = EventStreams.hourlyCountsWatermarked(arrivalStream("wm_hourly"), "0 seconds")
+    val closed = BoundedStreams.toMemory(out, "test_wm_hourly", OutputMode.Append)
     // every real-data hour closes below the sentinel-driven watermark; the
     // sentinel hours themselves may or may not have closed — exclude them
     val batch = Registry.byName("q25_events_hourly").q(spark, sf)
       .select(col("hour_epoch"), col("event_type"), col("n"), col("sum_value"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
     val maxRealHour = batch.map(_._1).max
-    val got = spark.table("test_wm_hourly")
+    val got = closed
       .filter(col("hour_epoch") <= maxRealHour)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
     assert(got == batch,
@@ -120,7 +87,6 @@ class StreamingSuite extends SparkTestBase {
   test("dropDuplicatesWithinWatermark: dup suppressed within delay, state expires after") {
     val s = spark
     import s.implicits._
-    import java.nio.file.Files
     // four micro-batches (mod-time ordered, maxFilesPerTrigger=1):
     //   b1: id=1 @ t=0        -> emitted (fresh key)
     //   b2: id=1 @ t=1min     -> suppressed (within the 10 min delay)
@@ -133,36 +99,18 @@ class StreamingSuite extends SparkTestBase {
     //                            documented WithinWatermark re-admission that
     //                            bounds state where dropDuplicates never would
     val minUs = 60L * 1000 * 1000
-    val dir = Files.createTempDirectory("wm_dedup").toString
-    def write(rows: Seq[(Long, Long)], name: String, order: Int): Unit = {
-      val tmp = s"$dir/${name}_stage"
-      rows.toDF("event_id", "ts_us")
-        .withColumn("event_time", expr("timestamp_micros(ts_us)"))
-        .select("event_id", "event_time")
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$dir/ev_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
-    }
-    write(Seq((1L, 0L)), "b1", 1)
-    write(Seq((1L, 1 * minUs)), "b2", 2)
-    write(Seq((2L, 100 * minUs)), "b3", 3)
-    write(Seq((3L, 101 * minUs)), "b4", 4)
-    write(Seq((1L, 102 * minUs)), "b5", 5)
-    val src = spark.readStream
-      .schema(spark.read.parquet(s"$dir/ev_b1.parquet").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/ev_*.parquet")
+    def batch(id: Long, tsUs: Long) = Seq((id, tsUs)).toDF("event_id", "ts_us")
+      .withColumn("event_time", expr("timestamp_micros(ts_us)"))
+      .select("event_id", "event_time")
+    val src = BoundedStreams.arrivals(spark, "wm_dedup", Seq(
+      batch(1L, 0L),
+      batch(1L, 1 * minUs),
+      batch(2L, 100 * minUs),
+      batch(3L, 101 * minUs),
+      batch(1L, 102 * minUs)))
     val out = src.withWatermark("event_time", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
-    spark.streams.active.filter(_.name == "test_wm_dedup").foreach(_.stop())
-    val q = out.writeStream.format("memory").queryName("test_wm_dedup")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("test_wm_dedup")
+    val got = BoundedStreams.toMemory(out, "test_wm_dedup", OutputMode.Append)
       .groupBy(col("event_id")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 2L, 2L -> 1L, 3L -> 1L),
@@ -173,43 +121,26 @@ class StreamingSuite extends SparkTestBase {
   test("late bridging event across batches lowers the final session count") {
     val s = spark
     import s.implicits._
-    import java.nio.file.Files
     // batch 1: events at t=0 and t=40min → 2 sessions; batch 2 delivers a
     // LATE event at t=20min that merges them into one. n_sessions is
     // non-monotonic, so the final answer must come from the LATEST batch
     // (seq), never max(n_sessions).
     val minNs = 60L * 1000 * 1000 * 1000
-    val dir = Files.createTempDirectory("late_bridge").toString
-    def write(rows: Seq[(Long, Long, Long, String, Double)], name: String, order: Int): Unit = {
-      val tmp = s"$dir/${name}_stage"
+    def batch(rows: (Long, Long, Long, String, Double)*) =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$dir/ev_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
-    }
-    write(Seq((1L, 0L, 7L, "view", 0.0), (2L, 40 * minNs, 7L, "view", 0.0)), "b1", 1)
-    write(Seq((3L, 20 * minNs, 7L, "view", 0.0)), "b2", 2)
-    val src = spark.readStream
-      .schema(spark.read.parquet(s"$dir/ev_b1.parquet").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/ev_*.parquet")
+    val src = BoundedStreams.arrivals(spark, "late_bridge", Seq(
+      batch((1L, 0L, 7L, "view", 0.0), (2L, 40 * minNs, 7L, "view", 0.0)),
+      batch((3L, 20 * minNs, 7L, "view", 0.0))))
       .as[EventStreams.EventRow]
-    spark.streams.active.filter(_.name == "test_late_bridge").foreach(_.stop())
-    val q = EventStreams.sessionize(src).writeStream
-      .format("memory").queryName("test_late_bridge")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val emissions = spark.table("test_late_bridge")
+    val drained = BoundedStreams.toMemory(
+      EventStreams.sessionize(src), "test_late_bridge", OutputMode.Append)
+    val emissions = drained
       .orderBy(col("seq")).collect()
       .map(r => (r.getLong(3), r.getLong(1), r.getLong(2))) // (seq, n_sessions, n_events)
     assert(emissions.toSeq == Seq((1L, 2L, 2L), (2L, 1L, 3L)),
       s"unexpected emissions: ${emissions.toSeq}")
     // the registered q63 selection (max_by seq) returns the merged count
-    val fin = spark.table("test_late_bridge")
+    val fin = drained
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_sessions"), col("n_events")), col("seq")).as("last"))
       .select(col("last.n_sessions"), col("last.n_events")).head()
@@ -245,14 +176,8 @@ class StreamingSuite extends SparkTestBase {
       .schema(spark.read.parquet(s"$dir/e").schema)
       .parquet(s"$dir/e")
       .as[EventStreams.EventRow]
-    spark.streams.active.filter(_.name == "test_hot_sessionize").foreach(_.stop())
-    val q = EventStreams.sessionize(src).writeStream
-      .format("memory").queryName("test_hot_sessionize")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val row = spark.table("test_hot_sessionize")
+    val row = BoundedStreams.toMemory(
+      EventStreams.sessionize(src), "test_hot_sessionize", OutputMode.Append)
       .groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("s"), max(col("n_events")).as("n"))
       .head()
@@ -270,19 +195,12 @@ class StreamingSuite extends SparkTestBase {
     // normalized Long schema over a TIMESTAMP(MICROS) file would silently
     // read micro longs and break the nano gap math (the production sources
     // in EventStreams use exactly this raw-schema + normalize idiom).
-    val rawSchema = spark.read.parquet(s"$sf/events.parquet").schema
     val src = Tables.normalizeEventTs(
-      spark.readStream.schema(rawSchema).parquet(s"$sf/events*")
+      BoundedStreams.table(spark, sf, "events")
         .select("event_id", "ts", "user_id", "event_type", "value"))
       .as[EventStreams.EventRow]
     val out = EventStreams.sessionize(src)
-    spark.streams.active.filter(_.name == "test_sessionize").foreach(_.stop())
-    val q = out.writeStream.format("memory").queryName("test_sessionize")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val got = spark.table("test_sessionize")
+    val got = BoundedStreams.toMemory(out, "test_sessionize", OutputMode.Append)
       .groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("n_sessions"), max(col("n_events")).as("n_events"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -316,39 +234,17 @@ class StreamingSuite extends SparkTestBase {
 
   test("multi-epoch exactly-once publish: ≥2 epochs, retry no-ops, crash dir invisible") {
     import graft.sources.Sources
-    import java.nio.file.Files
     val s = spark
     import s.implicits._
-    // two single-file arrival chunks (even/odd event ids) with increasing
-    // mod times, so maxFilesPerTrigger=1 delivers exactly two micro-batches
+    // two arrival chunks (even/odd event ids), so exactly two micro-batches
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val dir = Files.createTempDirectory("graft_pub_src").toString
-    def writeChunk(df: org.apache.spark.sql.DataFrame, name: String, order: Int): Unit = {
-      val tmp = s"$dir/${name}_stage"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val target = new java.io.File(s"$dir/ev_$name.parquet")
-      Files.move(part.toPath, target.toPath)
-      target.setLastModified(1000000L * order)
+    val src = BoundedStreams.arrivals(spark, "pub_src",
+      Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1)))
+    val root = java.nio.file.Files.createTempDirectory("graft_pub_root").toString + "/tbl"
+    BoundedStreams.forEachBatch(src, "test_epoch_publish") { (batch, batchId) =>
+      Sources.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
     }
-    writeChunk(ev.filter(col("event_id") % 2 === 0), "even", 1)
-    writeChunk(ev.filter(col("event_id") % 2 === 1), "odd", 2)
-    val root = Files.createTempDirectory("graft_pub_root").toString + "/tbl"
-    val src = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/ev_*.parquet")
-    spark.streams.active.filter(_.name == "test_epoch_publish").foreach(_.stop())
-    val q = src.writeStream
-      .queryName("test_epoch_publish")
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        Sources.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
-      }
-      .start()
-    q.awaitTermination()
     val nEvents = ev.count()
     assert(Sources.committedEpochs(spark, root).size == 2,
       "maxFilesPerTrigger=1 over two files must commit two epochs")
@@ -454,5 +350,35 @@ class StreamingSuite extends SparkTestBase {
     assert(again == streamRows, "stream re-run must converge")
     assert(spark.read.parquet(s"$gen/merges").inputFiles.sorted.toSeq == files1,
       "re-run must not re-learn or rewrite the published merge artifact")
+  }
+
+  test("q139, q205 and q220 leave no directory in java.io.tmpdir but the scratch root") {
+    // arrival chunks land under the JVM's scratch root, which is removed at
+    // exit; a per-run temp dir of their own would outlive the JVM. The
+    // first run also extracts what the JVM puts in tmpdir once (native
+    // codec libraries, the session's artifact dir), so list around a re-run.
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def runAll(): Unit =
+      for (name <- Seq("q139_stream_ingest", "q205_stream_cluster_assign",
+          "q220_stream_dead_letter"))
+        assert(Registry.byName(name).q(spark, sf).collect().nonEmpty, name)
+    runAll()
+    val before = tmp.list().toSet
+    runAll()
+    val added = tmp.list().toSet -- before
+    val scratchRoot = new java.io.File(graft.sources.Sources.scratchRoot).getName
+    assert(added.subsetOf(Set(scratchRoot)), s"new entries in $tmp: $added")
+  }
+
+  test("a bounded stream gives the same rows when it runs twice in one session") {
+    // Bench and Verify re-run queries in one JVM: Complete (q322) and
+    // Append (q63) memory tables must be rebuilt, not appended to
+    for (name <- Seq("q322_stream_hll", "q63_stream_sessionize")) {
+      val q = Registry.byName(name).q
+      val first = q(spark, sf).collect().map(_.toSeq).toSet
+      val second = q(spark, sf).collect().map(_.toSeq).toSet
+      assert(first.nonEmpty && second == first, s"$name re-run diverged")
+    }
+    assert(spark.streams.active.isEmpty, "a drained stream is still active")
   }
 }
