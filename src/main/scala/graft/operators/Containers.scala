@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import graft.queries.Entry
 import graft.{Tables => T}
 import graft.operators.Multimodal.TarIn
+import graft.sources.Bin
 
 /** Container formats, continued (Multimodal.scala hosts tar q308 / zip
   * q315): the compressed-member and raster-file formats a 100 TB crawl
@@ -37,10 +38,6 @@ object Containers {
     a
   }
 
-  private def crc32Of(b: Array[Byte]): Long = {
-    val c = new java.util.zip.CRC32(); c.update(b); c.getValue
-  }
-
   // ---------------------------------------------------------------- q319
   // Multi-member gzip: the WARC convention — one gzip MEMBER per record,
   // members concatenated into one .gz shard, so a reader can split at
@@ -62,36 +59,23 @@ object Containers {
     * explicit n_parse_fail count and contribute nothing else).
     */
   private[graft] def gzipFullBytes(t: TarIn): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    def member(name: String, payload: Array[Byte], corrupt: Boolean): Unit = {
-      out.write(0x1f); out.write(0x8b); out.write(8) // magic, CM=deflate
-      out.write(0x08) // FLG: FNAME only
-      le32(0L) // MTIME
-      out.write(0); out.write(255) // XFL, OS=unknown
-      out.write(name.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      out.write(0)
-      val d = new java.util.zip.Deflater(
-        java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-      d.setInput(payload); d.finish()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) {
-        val n = d.deflate(buf); out.write(buf, 0, n)
-      }
-      d.end()
-      le32(crc32Of(payload) ^ (if (corrupt) 1L else 0L))
-      le32(payload.length.toLong & 0xffffffffL)
-    }
+    val out = new Bin.Writer
+    def member(name: String, payload: Array[Byte], corrupt: Boolean): Unit =
+      out.u8(0x1f).u8(0x8b).u8(8) // magic, CM=deflate
+        .u8(0x08) // FLG: FNAME only
+        .le32(0L) // MTIME
+        .u8(0).u8(255) // XFL, OS=unknown
+        .ascii(name).u8(0)
+        .bytes(Bin.deflate(payload, nowrap = true))
+        .le32(Bin.crc32(payload) ^ (if (corrupt) 1L else 0L))
+        .le32(payload.length.toLong & 0xffffffffL)
     member(s"d${t.doc_id}.txt",
       t.text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       t.doc_id % 43 == 0)
     member(s"d${t.doc_id}.json",
       s"""{"doc_id":${t.doc_id},"n_chars":${t.n_chars}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8), false)
-    val b = out.toByteArray
+    val b = out.result
     if (t.doc_id % 59L == 0L) b.dropRight(5) else b
   }
 
@@ -104,9 +88,6 @@ object Containers {
     */
   private[graft] def parseGzipMembers(
       b: Array[Byte]): Option[Seq[(String, Long, Boolean)]] = {
-    def u32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Boolean)]
     var p = 0
     while (p < b.length) {
@@ -140,7 +121,7 @@ object Containers {
         }
         val tp = q + inf.getBytesRead.toInt
         if (tp + 8 > b.length) return None
-        val ok = crc.getValue == u32(tp) && (ilen & 0xffffffffL) == u32(tp + 4)
+        val ok = crc.getValue == Bin.u32le(b, tp) && (ilen & 0xffffffffL) == Bin.u32le(b, tp + 4)
         out += ((name, ilen, ok))
         p = tp + 8
       } catch {
@@ -219,17 +200,11 @@ object Containers {
   private[graft] def tiffFullBytes(t: TarIn): Array[Byte] = {
     val w = (4L * (1L + t.doc_id % 5L)).toInt
     val h = (4L * (1L + t.doc_id % 3L)).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    def entry(tag: Int, typ: Int, value: Long): Unit = {
-      le16(tag); le16(typ); le32(1L); le32(value)
-    }
-    out.write('I'); out.write('I'); le16(42); le32(8L) // header, IFD at 8
-    le16(9) // entry count
+    val out = new Bin.Writer
+    def entry(tag: Int, typ: Int, value: Long): Unit =
+      out.le16(tag).le16(typ).le32(1L).le32(value)
+    out.ascii("II").le16(42).le32(8L) // header, IFD at 8
+    out.le16(9) // entry count
     val pixOff = 8L + 2L + 9L * 12L + 4L // = 122
     val count = w.toLong * h +
       (if (t.doc_id % 47L == 0L) 1L else 0L) // the falsified lane
@@ -242,13 +217,13 @@ object Containers {
     entry(277, 3, 1L) // SamplesPerPixel
     entry(278, 4, h.toLong) // RowsPerStrip
     entry(279, 4, count) // StripByteCounts
-    le32(0L) // no next IFD
+    out.le32(0L) // no next IFD
     var i = 0
     while (i < w * h) {
-      out.write(((t.doc_id * 7L + i.toLong * 13L) % 251L).toInt)
+      out.u8(((t.doc_id * 7L + i.toLong * 13L) % 251L).toInt)
       i += 1
     }
-    out.toByteArray
+    out.result
   }
 
   /** IFD walk: validate the header, read the tag directory in whatever
@@ -258,24 +233,20 @@ object Containers {
     */
   private[graft] def parseTiffGray(
       b: Array[Byte]): Option[(Long, Long, Long)] = {
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    if (b.length < 8 || b(0) != 'I' || b(1) != 'I' || u16(2) != 42) return None
-    val ifd = u32(4)
+    if (b.length < 8 || b(0) != 'I' || b(1) != 'I' || Bin.u16le(b, 2) != 42) return None
+    val ifd = Bin.u32le(b, 4)
     if (ifd < 8L || ifd + 2L > b.length) return None
-    val n = u16(ifd.toInt)
+    val n = Bin.u16le(b, ifd.toInt)
     if (ifd + 2L + 12L * n + 4L > b.length) return None
     val tags = scala.collection.mutable.Map.empty[Int, Long]
     var k = 0
     while (k < n) {
       val e = ifd.toInt + 2 + 12 * k
-      val tag = u16(e); val typ = u16(e + 2)
-      if (u32(e + 4) != 1L) return None // count must be 1
+      val tag = Bin.u16le(b, e); val typ = Bin.u16le(b, e + 2)
+      if (Bin.u32le(b, e + 4) != 1L) return None // count must be 1
       val v = typ match {
-        case 3 => u16(e + 8).toLong // SHORT, left-justified LE
-        case 4 => u32(e + 8) // LONG
+        case 3 => Bin.u16le(b, e + 8).toLong // SHORT, left-justified LE
+        case 4 => Bin.u32le(b, e + 8) // LONG
         case _ => return None
       }
       tags(tag) = v
@@ -314,32 +285,26 @@ object Containers {
     val h = (2L * (1L + t.doc_id % 3L)).toInt
     val stride = (w * 3 + 3) & ~3
     val size = 54 + stride * h
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    out.write('B'); out.write('M')
-    le32(size.toLong + (if (t.doc_id % 31L == 0L) 1L else 0L))
-    le16(0); le16(0); le32(54L) // reserved, pixel-data offset
-    le32(40L); le32(w.toLong); le32(h.toLong) // biSize, w, h (bottom-up)
-    le16(1); le16(24); le32(0L); le32((stride * h).toLong) // planes, bpp, comp
-    le32(2835L); le32(2835L); le32(0L); le32(0L) // ppm, palette
+    val out = new Bin.Writer
+    out.ascii("BM")
+      .le32(size.toLong + (if (t.doc_id % 31L == 0L) 1L else 0L))
+      .le16(0).le16(0).le32(54L) // reserved, pixel-data offset
+      .le32(40L).le32(w.toLong).le32(h.toLong) // biSize, w, h (bottom-up)
+      .le16(1).le16(24).le32(0L).le32((stride * h).toLong) // planes, bpp, comp
+      .le32(2835L).le32(2835L).le32(0L).le32(0L) // ppm, palette
     var row = h - 1
     while (row >= 0) { // stored bottom-up: last logical row first
       var x = 0
       while (x < w) {
-        out.write(((t.doc_id + 3L * x + 7L * row) % 256L).toInt) // B
-        out.write(((t.doc_id * 2L + 5L * x + 11L * row) % 256L).toInt) // G
-        out.write(((t.doc_id * 3L + 11L * x + 13L * row) % 256L).toInt) // R
+        out.u8(((t.doc_id + 3L * x + 7L * row) % 256L).toInt) // B
+          .u8(((t.doc_id * 2L + 5L * x + 11L * row) % 256L).toInt) // G
+          .u8(((t.doc_id * 3L + 11L * x + 13L * row) % 256L).toInt) // R
         x += 1
       }
-      var p = w * 3
-      while (p < stride) { out.write(0); p += 1 }
+      out.zeros(stride - w * 3)
       row -= 1
     }
-    out.toByteArray
+    out.result
   }
 
   /** Validate both headers (incl. the bfSize == actual-length integrity
@@ -349,17 +314,13 @@ object Containers {
     * malformation.
     */
   private[graft] def parseBmp24(b: Array[Byte]): Option[(Long, Long, Long)] = {
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
-    if (u32(2) != b.length.toLong) return None // bfSize integrity
-    val off = u32(10)
-    if (u32(14) != 40L) return None // BITMAPINFOHEADER only
-    val w = u32(18); val h = u32(22)
+    if (Bin.u32le(b, 2) != b.length.toLong) return None // bfSize integrity
+    val off = Bin.u32le(b, 10)
+    if (Bin.u32le(b, 14) != 40L) return None // BITMAPINFOHEADER only
+    val w = Bin.u32le(b, 18); val h = Bin.u32le(b, 22)
     if (w <= 0L || h <= 0L || w * h > (1L << 24)) return None
-    if (u16(26) != 1 || u16(28) != 24 || u32(30) != 0L) return None
+    if (Bin.u16le(b, 26) != 1 || Bin.u16le(b, 28) != 24 || Bin.u32le(b, 30) != 0L) return None
     val stride = ((w * 3L + 3L) & ~3L)
     if (off < 54L || off + stride * h > b.length) return None
     var dg = 0L
@@ -414,14 +375,14 @@ object Containers {
     * lead at EOF (E2 82).
     */
   private[graft] def utf8StreamBytes(t: TarIn): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(t.text.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    out.write(0xc3); out.write(0xa9)
-    if (t.doc_id % 29 == 0) { out.write(0xc0); out.write(0xaf) }
-    if (t.doc_id % 17 == 0) { out.write(0xed); out.write(0xa0); out.write(0x80) }
-    if (t.doc_id % 23 == 0) out.write(0x80)
-    if (t.doc_id % 19 == 0) { out.write(0xe2); out.write(0x82) }
-    out.toByteArray
+    val out = new Bin.Writer
+    out.ascii(t.text)
+    out.u8(0xc3).u8(0xa9)
+    if (t.doc_id % 29 == 0) out.u8(0xc0).u8(0xaf)
+    if (t.doc_id % 17 == 0) out.u8(0xed).u8(0xa0).u8(0x80)
+    if (t.doc_id % 23 == 0) out.u8(0x80)
+    if (t.doc_id % 19 == 0) out.u8(0xe2).u8(0x82)
+    out.result
   }
 
   /** RFC 3629 validator with an explicit CONSUME-PREFIX error policy:
@@ -513,7 +474,7 @@ object Containers {
     */
   private[graft] def ulawEncode(s: Int): Int = {
     val sign = if (s < 0) 0x80 else 0
-    var x = math.min(if (s < 0) -s else s, 32635) + 132
+    val x = math.min(if (s < 0) -s else s, 32635) + 132
     var seg = 0
     while (seg < 7 && x >= (256 << seg)) seg += 1
     255 - (sign | (seg << 4) | ((x >> (seg + 3)) & 0x0f))
@@ -534,31 +495,23 @@ object Containers {
     */
   private[graft] def ulawWavBytes(t: TarIn): Array[Byte] = {
     val n = (64 + t.doc_id % 64).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    // RIFF size includes the pad byte an odd data chunk requires (r18
-    // advice: omitting it violated RIFF alignment and only worked because
-    // data was the last chunk — while the parser's own walk assumed the
-    // pad existed, so any chunk appended after data would have misparsed)
-    out.write("RIFF".getBytes); le32(4L + 26L + 12L + 8L + n + (n & 1))
-    out.write("WAVE".getBytes)
-    out.write("fmt ".getBytes); le32(18L)
-    le16(7); le16(1); le32(8000L); le32(8000L); le16(1); le16(8); le16(0)
-    out.write("fact".getBytes); le32(4L)
-    le32(n.toLong + (if (t.doc_id % 53L == 0L) 1L else 0L))
-    out.write("data".getBytes); le32(n.toLong)
-    var i = 0
-    while (i < n) {
-      out.write(ulawEncode(
-        (((t.doc_id * 31L + i.toLong * 40503L + 7L) % 65536L) - 32768L).toInt))
-      i += 1
-    }
-    if ((n & 1) == 1) out.write(0) // RIFF word-alignment pad
-    out.toByteArray
+    // the data chunk's RIFF pad byte (odd n) is counted in the RIFF size
+    // (r18 advice: omitting it violated RIFF alignment and only worked
+    // because data was the last chunk — while the parser's own walk
+    // assumed the pad existed, so any chunk appended after data would have
+    // misparsed)
+    val chunks = Bin.bytes(_
+      .riffChunk("fmt ")(_.le16(7).le16(1).le32(8000L).le32(8000L).le16(1).le16(8).le16(0))
+      .riffChunk("fact")(_.le32(n.toLong + (if (t.doc_id % 53L == 0L) 1L else 0L)))
+      .riffChunk("data") { d =>
+        var i = 0
+        while (i < n) {
+          d.u8(ulawEncode(
+            (((t.doc_id * 31L + i.toLong * 40503L + 7L) % 65536L) - 32768L).toInt))
+          i += 1
+        }
+      })
+    Bin.bytes(_.ascii("RIFF").le32(4L + chunks.length).ascii("WAVE").bytes(chunks))
   }
 
   /** Chunk walk (RIFF magic, fmt tag 7 / mono / 8-bit, fact-vs-data
@@ -566,29 +519,23 @@ object Containers {
     * samples; None on ANY malformation.
     */
   private[graft] def parseUlawWav(b: Array[Byte]): Option[Array[Int]] = {
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    def tag(o: Int): String = new String(b, o, 4,
-      java.nio.charset.StandardCharsets.US_ASCII)
-    if (b.length < 12 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    if (u32(4) != b.length - 8L) return None
+    if (b.length < 12 || Bin.fourcc(b, 0) != "RIFF" || Bin.fourcc(b, 8) != "WAVE") return None
+    if (Bin.u32le(b, 4) != b.length - 8L) return None
     var p = 12
     var fmtOk = false
     var nFact = -1L
     var data: Option[(Int, Int)] = None
     while (p + 8 <= b.length) {
-      val t = tag(p); val sz = u32(p + 4)
+      val t = Bin.fourcc(b, p); val sz = Bin.u32le(b, p + 4)
       if (p + 8 + sz > b.length) return None
       t match {
         case "fmt " =>
-          if (sz < 16 || u16(p + 8) != 7 || u16(p + 10) != 1 ||
-            u16(p + 22) != 8) return None
+          if (sz < 16 || Bin.u16le(b, p + 8) != 7 || Bin.u16le(b, p + 10) != 1 ||
+            Bin.u16le(b, p + 22) != 8) return None
           fmtOk = true
         case "fact" =>
           if (sz < 4) return None
-          nFact = u32(p + 8)
+          nFact = Bin.u32le(b, p + 8)
         case "data" => data = Some((p + 8, sz.toInt))
         case _ => // unknown chunks skipped, the RIFF contract
       }
@@ -772,62 +719,105 @@ object Containers {
     val s1 = Array.tabulate(n1)(j => mp4SampleSize(id, 1, j))
     val s2 = Array.tabulate(n2)(j => mp4SampleSize(id, 2, j))
     val corrupt = id % 67L == 0L
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be16(v: Int): Array[Byte] =
-      Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def box(tp: String, payload: Array[Byte]): Array[Byte] =
-      be32(payload.length + 8L) ++
-        tp.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ payload
-    def fullBox(tp: String, ver: Int, flags: Int,
-        payload: Array[Byte]): Array[Byte] =
-      box(tp, be32(((ver.toLong << 24) | flags)) ++ payload)
-    val unity = // identity transform matrix, 16.16 / 2.30 fixed point
-      be32(0x00010000L) ++ be32(0L) ++ be32(0L) ++
-        be32(0L) ++ be32(0x00010000L) ++ be32(0L) ++
-        be32(0L) ++ be32(0L) ++ be32(0x40000000L)
-    val mvhd = fullBox("mvhd", 0, 0,
-      be32(0L) ++ be32(0L) ++ be32(1000L) ++ be32(0L) ++ // times/scale/dur
-        be32(0x00010000L) ++ be16(0x0100) ++ be16(0) ++ // rate, volume
-        be32(0L) ++ be32(0L) ++ unity ++ // reserved, matrix
-        Array.fill(24)(0.toByte) ++ be32(3L)) // pre_defined, next track
-    def trak(tid: Long, handler: String, sizes: Array[Int],
-        stcoOff: Long, inflateLast: Boolean): Array[Byte] = {
-      val tkhd = fullBox("tkhd", 0, 7,
-        be32(0L) ++ be32(0L) ++ be32(tid) ++ be32(0L) ++ be32(0L) ++
-          Array.fill(8)(0.toByte) ++ be16(0) ++ be16(0) ++ be16(0) ++
-          be16(0) ++ unity ++ be32(0L) ++ be32(0L))
-      val mdhd = fullBox("mdhd", 0, 0,
-        be32(0L) ++ be32(0L) ++ be32(8000L) ++ be32(0L) ++
-          be16(0x55c4) ++ be16(0)) // language "und", pre_defined
-      val hdlr = fullBox("hdlr", 0, 0,
-        be32(0L) ++
-          handler.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
-          Array.fill(12)(0.toByte) ++ Array(0.toByte)) // name = ""
-      val stsz = fullBox("stsz", 0, 0,
-        be32(0L) ++ be32(sizes.length.toLong) ++
-          sizes.zipWithIndex.flatMap { case (s, i) =>
-            be32(if (inflateLast && i == sizes.length - 1) s + 1L else s.toLong)
-          })
-      val stco = fullBox("stco", 0, 0, be32(1L) ++ be32(stcoOff))
-      box("trak", tkhd ++ box("mdia", mdhd ++ hdlr ++
-        box("minf", box("stbl", stsz ++ stco))))
-    }
-    val ftyp = box("ftyp",
-      "isom".getBytes ++ be32(0x200L) ++ "isom".getBytes ++ "iso2".getBytes)
-    def moov(o1: Long, o2: Long): Array[Byte] = box("moov",
-      mvhd ++ trak(1L, "vide", s1, o1, corrupt) ++
-        trak(2L, "soun", s2, o2, inflateLast = false))
+    def trak(w: Bin.Writer, tid: Long, handler: String, sizes: Array[Int],
+        stcoOff: Long, inflateLast: Boolean): Unit =
+      mp4Trak(w, tid, handler, 0L) {
+        _.fullBox("stsz", 0, 0) { s =>
+          s.be32(0L).be32(sizes.length.toLong)
+          sizes.zipWithIndex.foreach { case (sz, i) =>
+            s.be32(if (inflateLast && i == sizes.length - 1) sz + 1L else sz.toLong)
+          }
+        }.fullBox("stco", 0, 0)(_.be32(1L).be32(stcoOff))
+      }
+    val ftyp = Bin.bytes(mp4Ftyp)
+    def moov(o1: Long, o2: Long): Array[Byte] = Bin.bytes(_.box("moov") { m =>
+      mp4Mvhd(m)
+      trak(m, 1L, "vide", s1, o1, corrupt)
+      trak(m, 2L, "soun", s2, o2, inflateLast = false)
+    })
     // two-pass: size the moov with placeholder offsets (stco is
     // fixed-width), then write the real absolute offsets
     val mdatPayloadStart = ftyp.length + moov(0L, 0L).length + 8L
     val o1 = mdatPayloadStart
     val o2 = mdatPayloadStart + s1.sum
-    val payload = new java.io.ByteArrayOutputStream()
-    for (j <- 0 until n1; k <- 0 until s1(j)) payload.write(mp4Byte(id, 1, j, k))
-    for (j <- 0 until n2; k <- 0 until s2(j)) payload.write(mp4Byte(id, 2, j, k))
-    ftyp ++ moov(o1, o2) ++ box("mdat", payload.toByteArray)
+    Bin.bytes(_.bytes(ftyp).bytes(moov(o1, o2)).box("mdat") { p =>
+      for (j <- 0 until n1; k <- 0 until s1(j)) p.u8(mp4Byte(id, 1, j, k))
+      for (j <- 0 until n2; k <- 0 until s2(j)) p.u8(mp4Byte(id, 2, j, k))
+    })
+  }
+
+  /** ftyp: major brand isom, minor version 0x200, compatible isom/iso2. */
+  private def mp4Ftyp(w: Bin.Writer): Unit =
+    w.box("ftyp")(_.ascii("isom").be32(0x200L).ascii("isom").ascii("iso2"))
+
+  /** The identity transform matrix, 16.16 / 2.30 fixed point. */
+  private def mp4Unity(w: Bin.Writer): Bin.Writer =
+    w.be32(0x00010000L).be32(0L).be32(0L)
+      .be32(0L).be32(0x00010000L).be32(0L)
+      .be32(0L).be32(0L).be32(0x40000000L)
+
+  private def mp4Mvhd(w: Bin.Writer): Unit =
+    w.fullBox("mvhd", 0, 0) { p =>
+      p.be32(0L).be32(0L).be32(1000L).be32(0L) // times/scale/dur
+        .be32(0x00010000L).be16(0x0100).be16(0) // rate, volume
+        .be32(0L).be32(0L) // reserved
+      mp4Unity(p).zeros(24).be32(3L) // matrix, pre_defined, next track
+    }
+
+  /** trak → tkhd + mdia (mdhd with `duration`, hdlr, minf → stbl whose
+    * children `stbl` writes).
+    */
+  private def mp4Trak(w: Bin.Writer, tid: Long, handler: String, duration: Long)(
+      stbl: Bin.Writer => Unit): Unit =
+    w.box("trak") { tr =>
+      tr.fullBox("tkhd", 0, 7) { p =>
+        p.be32(0L).be32(0L).be32(tid).be32(0L).be32(0L)
+          .zeros(8).be16(0).be16(0).be16(0).be16(0)
+        mp4Unity(p).be32(0L).be32(0L)
+      }
+      tr.box("mdia") {
+        _.fullBox("mdhd", 0, 0)(_.be32(0L).be32(0L).be32(8000L).be32(duration)
+          .be16(0x55c4).be16(0)) // language "und", pre_defined
+          .fullBox("hdlr", 0, 0)(_.be32(0L).ascii(handler).zeros(12).u8(0)) // name = ""
+          .box("minf")(_.box("stbl")(stbl))
+      }
+    }
+
+  /** Top-level ISO-BMFF walk shared by the MP4 parsers: ftyp MUST lead
+    * (14496-12 §4.3), exactly one moov and one mdat, exactly two traks
+    * in the moov. (mdat, traks), or None.
+    */
+  private def mp4Top(b: Array[Byte]): Option[(Bin.Box, Seq[Bin.Box])] = {
+    val top = Bin.boxes(b, 0, b.length).getOrElse(return None)
+    if (top.isEmpty || top.head.tpe != "ftyp") return None
+    val moov = top.filter(_.tpe == "moov") match {
+      case Seq(m) => m; case _ => return None
+    }
+    val mdat = top.filter(_.tpe == "mdat") match {
+      case Seq(m) => m; case _ => return None
+    }
+    val traks = Bin.boxes(b, moov.from, moov.until).getOrElse(return None)
+      .filter(_.tpe == "trak")
+    if (traks.length != 2) return None
+    Some((mdat, traks))
+  }
+
+  /** One trak's descent trak → mdia → (hdlr handler type, minf → stbl):
+    * (handler, mdia children, stbl children), or None.
+    */
+  private def mp4Track(b: Array[Byte], trak: Bin.Box)
+      : Option[(String, Seq[Bin.Box], Seq[Bin.Box])] = {
+    def child(in: Seq[Bin.Box], tpe: String): Option[Bin.Box] = in.find(_.tpe == tpe)
+    val mdia = child(Bin.boxes(b, trak.from, trak.until).getOrElse(return None), "mdia")
+      .getOrElse(return None)
+    val inMdia = Bin.boxes(b, mdia.from, mdia.until).getOrElse(return None)
+    val hdlr = child(inMdia, "hdlr").getOrElse(return None)
+    if (hdlr.until - hdlr.from < 12) return None
+    val minf = child(inMdia, "minf").getOrElse(return None)
+    val stbl = child(Bin.boxes(b, minf.from, minf.until).getOrElse(return None), "stbl")
+      .getOrElse(return None)
+    val inStbl = Bin.boxes(b, stbl.from, stbl.until).getOrElse(return None)
+    Some((Bin.fourcc(b, hdlr.from + 8), inMdia, inStbl))
   }
 
   /** ISO-BMFF walk: top-level box scan (ftyp MUST lead — 14496-12 §4.3),
@@ -842,62 +832,24 @@ object Containers {
     */
   private[graft] def parseMp4Index(
       b: Array[Byte]): Option[(Long, Long, Long, Long)] = {
-    def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    def tag(o: Int): String = new String(b, o, 4,
-      java.nio.charset.StandardCharsets.US_ASCII)
-    // walk one box level within [from, to); returns (type, payloadStart,
-    // payloadEnd) per box or None on malformation
-    def walk(from: Int, to: Int): Option[Seq[(String, Int, Int)]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-      var p = from
-      while (p < to) {
-        if (p + 8 > to) return None
-        val sz = u32(p)
-        if (sz < 8 || p + sz > to) return None // size 0/1 forms unsupported
-        out += ((tag(p + 4), p + 8, p + sz.toInt))
-        p += sz.toInt
-      }
-      Some(out.toSeq)
-    }
-    val top = walk(0, b.length).getOrElse(return None)
-    if (top.isEmpty || top.head._1 != "ftyp") return None
-    val moov = top.filter(_._1 == "moov") match {
-      case Seq(m) => m; case _ => return None
-    }
-    val mdat = top.filter(_._1 == "mdat") match {
-      case Seq(m) => m; case _ => return None
-    }
-    val traks = walk(moov._2, moov._3).getOrElse(return None)
-      .filter(_._1 == "trak")
-    if (traks.length != 2) return None
+    val (mdat, traks) = mp4Top(b).getOrElse(return None)
     // (handler, stcoOffset, recorded sizes) per trak
-    val idx = traks.map { case (_, ts, te) =>
-      val mdia = walk(ts, te).getOrElse(return None)
-        .find(_._1 == "mdia").getOrElse(return None)
-      val inMdia = walk(mdia._2, mdia._3).getOrElse(return None)
-      val hdlr = inMdia.find(_._1 == "hdlr").getOrElse(return None)
-      if (hdlr._3 - hdlr._2 < 12) return None
-      val handler = tag(hdlr._2 + 8)
-      val minf = inMdia.find(_._1 == "minf").getOrElse(return None)
-      val stbl = walk(minf._2, minf._3).getOrElse(return None)
-        .find(_._1 == "stbl").getOrElse(return None)
-      val inStbl = walk(stbl._2, stbl._3).getOrElse(return None)
-      val stsz = inStbl.find(_._1 == "stsz").getOrElse(return None)
-      if (u32(stsz._2) != 0L || u32(stsz._2 + 4) != 0L) return None
-      val n = u32(stsz._2 + 8)
-      if (n < 0 || n > 10000 || stsz._2 + 12 + 4 * n > stsz._3) return None
-      val sizes = Array.tabulate(n.toInt)(j => u32(stsz._2 + 12 + 4 * j))
-      val stco = inStbl.find(_._1 == "stco").getOrElse(return None)
-      if (u32(stco._2) != 0L || u32(stco._2 + 4) != 1L) return None
-      (handler, u32(stco._2 + 8), sizes)
+    val idx = traks.map { trak =>
+      val (handler, _, inStbl) = mp4Track(b, trak).getOrElse(return None)
+      val stsz = inStbl.find(_.tpe == "stsz").getOrElse(return None)
+      if (Bin.u32be(b, stsz.from) != 0L || Bin.u32be(b, stsz.from + 4) != 0L) return None
+      val n = Bin.u32be(b, stsz.from + 8)
+      if (n < 0 || n > 10000 || stsz.from + 12 + 4 * n > stsz.until) return None
+      val sizes = Array.tabulate(n.toInt)(j => Bin.u32be(b, stsz.from + 12 + 4 * j))
+      val stco = inStbl.find(_.tpe == "stco").getOrElse(return None)
+      if (Bin.u32be(b, stco.from) != 0L || Bin.u32be(b, stco.from + 4) != 1L) return None
+      (handler, Bin.u32be(b, stco.from + 8), sizes)
     }
     if (idx.map(_._1) != Seq("vide", "soun")) return None
     val Seq((_, o1, s1), (_, o2, s2)) = idx
     // the index/layout cross-check — the honest-negative lane's catch
-    val okIndex = o1 == mdat._2.toLong &&
-      o1 + s1.sum == o2 && o2 + s2.sum == mdat._3.toLong
+    val okIndex = o1 == mdat.from.toLong &&
+      o1 + s1.sum == o2 && o2 + s2.sum == mdat.until.toLong
     if (!okIndex) return Some((0L, 0L, 0L, 0L))
     var dg = 0L
     var p = o1
@@ -948,78 +900,46 @@ object Containers {
     val s2 = Array.tabulate(n2)(j => mp4SampleSize(id, 2, j))
     val h1 = (n1 + 1) / 2 // track-1 chunk split: ceil half
     val badDur = id % 79L == 0L
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be16(v: Int): Array[Byte] =
-      Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def box(tp: String, payload: Array[Byte]): Array[Byte] =
-      be32(payload.length + 8L) ++
-        tp.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ payload
-    def fullBox(tp: String, ver: Int, flags: Int,
-        payload: Array[Byte]): Array[Byte] =
-      box(tp, be32(((ver.toLong << 24) | flags)) ++ payload)
-    val unity =
-      be32(0x00010000L) ++ be32(0L) ++ be32(0L) ++
-        be32(0L) ++ be32(0x00010000L) ++ be32(0L) ++
-        be32(0L) ++ be32(0L) ++ be32(0x40000000L)
-    val mvhd = fullBox("mvhd", 0, 0,
-      be32(0L) ++ be32(0L) ++ be32(1000L) ++ be32(0L) ++
-        be32(0x00010000L) ++ be16(0x0100) ++ be16(0) ++
-        be32(0L) ++ be32(0L) ++ unity ++
-        Array.fill(24)(0.toByte) ++ be32(3L))
-    def trak(tid: Long, handler: String, sizes: Array[Int], delta: Long,
+    def trak(w: Bin.Writer, tid: Long, handler: String, sizes: Array[Int], delta: Long,
         chunks: Seq[(Long, Int)], stscRuns: Seq[(Long, Long)],
-        durBump: Long): Array[Byte] = {
+        durBump: Long): Unit =
       // chunks: (offset, nSamples) in chunk-index order; stscRuns:
       // (firstChunk, samplesPerChunk) runs
-      val tkhd = fullBox("tkhd", 0, 7,
-        be32(0L) ++ be32(0L) ++ be32(tid) ++ be32(0L) ++ be32(0L) ++
-          Array.fill(8)(0.toByte) ++ be16(0) ++ be16(0) ++ be16(0) ++
-          be16(0) ++ unity ++ be32(0L) ++ be32(0L))
-      val mdhd = fullBox("mdhd", 0, 0,
-        be32(0L) ++ be32(0L) ++ be32(8000L) ++
-          be32(sizes.length * delta + durBump) ++
-          be16(0x55c4) ++ be16(0))
-      val hdlr = fullBox("hdlr", 0, 0,
-        be32(0L) ++
-          handler.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
-          Array.fill(12)(0.toByte) ++ Array(0.toByte))
-      val stts = fullBox("stts", 0, 0,
-        be32(1L) ++ be32(sizes.length.toLong) ++ be32(delta))
-      val stsc = fullBox("stsc", 0, 0,
-        be32(stscRuns.length.toLong) ++ stscRuns.flatMap { case (fc, spc) =>
-          be32(fc) ++ be32(spc) ++ be32(1L)
-        })
-      val stsz = fullBox("stsz", 0, 0,
-        be32(0L) ++ be32(sizes.length.toLong) ++
-          sizes.flatMap(s => be32(s.toLong)))
-      val stco = fullBox("stco", 0, 0,
-        be32(chunks.length.toLong) ++ chunks.flatMap(c => be32(c._1)))
-      box("trak", tkhd ++ box("mdia", mdhd ++ hdlr ++
-        box("minf", box("stbl", stts ++ stsc ++ stsz ++ stco))))
-    }
-    val ftyp = box("ftyp",
-      "isom".getBytes ++ be32(0x200L) ++ "isom".getBytes ++ "iso2".getBytes)
+      mp4Trak(w, tid, handler, sizes.length * delta + durBump) {
+        _.fullBox("stts", 0, 0)(_.be32(1L).be32(sizes.length.toLong).be32(delta))
+          .fullBox("stsc", 0, 0) { s =>
+            s.be32(stscRuns.length.toLong)
+            stscRuns.foreach { case (fc, spc) => s.be32(fc).be32(spc).be32(1L) }
+          }
+          .fullBox("stsz", 0, 0) { s =>
+            s.be32(0L).be32(sizes.length.toLong)
+            sizes.foreach(sz => s.be32(sz.toLong))
+          }
+          .fullBox("stco", 0, 0) { s =>
+            s.be32(chunks.length.toLong)
+            chunks.foreach(c => s.be32(c._1))
+          }
+      }
+    val ftyp = Bin.bytes(mp4Ftyp)
     val c1a = s1.take(h1).sum.toLong // track-1 chunk 1 bytes
     val c2 = s2.sum.toLong // track-2 chunk bytes
-    def moov(base: Long): Array[Byte] = box("moov",
-      mvhd ++
-        trak(1L, "vide", s1, 1024L,
-          Seq((base, h1), (base + c1a + c2, n1 - h1)),
-          if (h1 == n1 - h1) Seq((1L, h1.toLong))
-          else Seq((1L, h1.toLong), (2L, (n1 - h1).toLong)),
-          if (badDur) 1024L else 0L) ++
-        trak(2L, "soun", s2, 800L, Seq((base + c1a, n2)),
-          Seq((1L, n2.toLong)), 0L))
+    def moov(base: Long): Array[Byte] = Bin.bytes(_.box("moov") { m =>
+      mp4Mvhd(m)
+      trak(m, 1L, "vide", s1, 1024L,
+        Seq((base, h1), (base + c1a + c2, n1 - h1)),
+        if (h1 == n1 - h1) Seq((1L, h1.toLong))
+        else Seq((1L, h1.toLong), (2L, (n1 - h1).toLong)),
+        if (badDur) 1024L else 0L)
+      trak(m, 2L, "soun", s2, 800L, Seq((base + c1a, n2)),
+        Seq((1L, n2.toLong)), 0L)
+    })
     val base0 = ftyp.length + moov(0L).length + 8L
-    val payload = new java.io.ByteArrayOutputStream()
-    // PHYSICAL order: v-chunk 1, a-chunk, v-chunk 2 (interleaved)
-    for (j <- 0 until h1; k <- 0 until s1(j)) payload.write(mp4Byte(id, 1, j, k))
-    for (j <- 0 until n2; k <- 0 until s2(j)) payload.write(mp4Byte(id, 2, j, k))
-    for (j <- h1 until n1; k <- 0 until s1(j))
-      payload.write(mp4Byte(id, 1, j, k))
-    ftyp ++ moov(base0) ++ box("mdat", payload.toByteArray)
+    Bin.bytes(_.bytes(ftyp).bytes(moov(base0)).box("mdat") { p =>
+      // PHYSICAL order: v-chunk 1, a-chunk, v-chunk 2 (interleaved)
+      for (j <- 0 until h1; k <- 0 until s1(j)) p.u8(mp4Byte(id, 1, j, k))
+      for (j <- 0 until n2; k <- 0 until s2(j)) p.u8(mp4Byte(id, 2, j, k))
+      for (j <- h1 until n1; k <- 0 until s1(j)) p.u8(mp4Byte(id, 1, j, k))
+    })
   }
 
   /** Chunked walk: per trak parse stts/stsc/stsz/stco + the mdhd
@@ -1036,83 +956,47 @@ object Containers {
     */
   private[graft] def parseMp4Chunked(
       b: Array[Byte]): Option[(Long, Long, Long, Long, Long, Long)] = {
-    def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    def tag(o: Int): String = new String(b, o, 4,
-      java.nio.charset.StandardCharsets.US_ASCII)
-    def walk(from: Int, to: Int): Option[Seq[(String, Int, Int)]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-      var p = from
-      while (p < to) {
-        if (p + 8 > to) return None
-        val sz = u32(p)
-        if (sz < 8 || p + sz > to) return None
-        out += ((tag(p + 4), p + 8, p + sz.toInt))
-        p += sz.toInt
-      }
-      Some(out.toSeq)
-    }
-    val top = walk(0, b.length).getOrElse(return None)
-    if (top.isEmpty || top.head._1 != "ftyp") return None
-    val moov = top.filter(_._1 == "moov") match {
-      case Seq(m) => m; case _ => return None
-    }
-    val mdat = top.filter(_._1 == "mdat") match {
-      case Seq(m) => m; case _ => return None
-    }
-    val traks = walk(moov._2, moov._3).getOrElse(return None)
-      .filter(_._1 == "trak")
-    if (traks.length != 2) return None
+    val (mdat, traks) = mp4Top(b).getOrElse(return None)
     // per trak: (handler, duration, sttsRuns, chunk offsets, per-chunk
     // sample counts expanded from stsc, sizes)
-    val idx = traks.map { case (_, ts, te) =>
-      val mdia = walk(ts, te).getOrElse(return None)
-        .find(_._1 == "mdia").getOrElse(return None)
-      val inMdia = walk(mdia._2, mdia._3).getOrElse(return None)
-      val mdhd = inMdia.find(_._1 == "mdhd").getOrElse(return None)
-      if (mdhd._3 - mdhd._2 < 24) return None
-      val dur = u32(mdhd._2 + 16)
-      val hdlr = inMdia.find(_._1 == "hdlr").getOrElse(return None)
-      if (hdlr._3 - hdlr._2 < 12) return None
-      val handler = tag(hdlr._2 + 8)
-      val minf = inMdia.find(_._1 == "minf").getOrElse(return None)
-      val stbl = walk(minf._2, minf._3).getOrElse(return None)
-        .find(_._1 == "stbl").getOrElse(return None)
-      val inStbl = walk(stbl._2, stbl._3).getOrElse(return None)
+    val idx = traks.map { trak =>
+      val (handler, inMdia, inStbl) = mp4Track(b, trak).getOrElse(return None)
+      val mdhd = inMdia.find(_.tpe == "mdhd").getOrElse(return None)
+      if (mdhd.until - mdhd.from < 24) return None
+      val dur = Bin.u32be(b, mdhd.from + 16)
       // full-box payload bounds (after the version+flags word, which
       // must be 0); Option so the failure propagates via getOrElse —
       // a bare `return` inside a nested def would exit the def, not
       // the parser
       def full(name: String): Option[(Int, Int)] =
-        inStbl.find(_._1 == name).flatMap { bx =>
-          if (u32(bx._2) != 0L) None else Some((bx._2 + 4, bx._3))
+        inStbl.find(_.tpe == name).flatMap { bx =>
+          if (Bin.u32be(b, bx.from) != 0L) None else Some((bx.from + 4, bx.until))
         }
       val (sttsP, sttsE) = full("stts").getOrElse(return None)
-      val nStts = u32(sttsP)
+      val nStts = Bin.u32be(b, sttsP)
       if (nStts < 1 || nStts > 1000 || sttsP + 4 + 8 * nStts > sttsE)
         return None
       val sttsRuns = Array.tabulate(nStts.toInt)(r =>
-        (u32(sttsP + 4 + 8 * r), u32(sttsP + 8 + 8 * r)))
+        (Bin.u32be(b, sttsP + 4 + 8 * r), Bin.u32be(b, sttsP + 8 + 8 * r)))
       val (stscP, stscE) = full("stsc").getOrElse(return None)
-      val nStsc = u32(stscP)
+      val nStsc = Bin.u32be(b, stscP)
       if (nStsc < 1 || nStsc > 1000 || stscP + 4 + 12 * nStsc > stscE)
         return None
       val stscRuns = Array.tabulate(nStsc.toInt)(r =>
-        (u32(stscP + 4 + 12 * r), u32(stscP + 8 + 12 * r),
-          u32(stscP + 12 + 12 * r)))
+        (Bin.u32be(b, stscP + 4 + 12 * r), Bin.u32be(b, stscP + 8 + 12 * r),
+          Bin.u32be(b, stscP + 12 + 12 * r)))
       if (stscRuns.exists(_._3 != 1L)) return None // one sample desc
       val (stszP, stszE) = full("stsz").getOrElse(return None)
-      if (u32(stszP) != 0L) return None
-      val nSamp = u32(stszP + 4)
+      if (Bin.u32be(b, stszP) != 0L) return None
+      val nSamp = Bin.u32be(b, stszP + 4)
       if (nSamp < 1 || nSamp > 10000 || stszP + 8 + 4 * nSamp > stszE)
         return None
-      val sizes = Array.tabulate(nSamp.toInt)(j => u32(stszP + 8 + 4 * j))
+      val sizes = Array.tabulate(nSamp.toInt)(j => Bin.u32be(b, stszP + 8 + 4 * j))
       val (stcoP, stcoE) = full("stco").getOrElse(return None)
-      val nChunk = u32(stcoP)
+      val nChunk = Bin.u32be(b, stcoP)
       if (nChunk < 1 || nChunk > 1000 || stcoP + 4 + 4 * nChunk > stcoE)
         return None
-      val offs = Array.tabulate(nChunk.toInt)(c => u32(stcoP + 4 + 4 * c))
+      val offs = Array.tabulate(nChunk.toInt)(c => Bin.u32be(b, stcoP + 4 + 4 * c))
       // expand stsc runs → per-chunk sample counts (14496-12 §8.7.4:
       // a run applies from first_chunk until the next run begins)
       if (stscRuns.head._1 != 1L) return None
@@ -1148,12 +1032,12 @@ object Containers {
       so
     }
     val sorted = regions.sortBy(_._1)
-    var cur = mdat._2.toLong
+    var cur = mdat.from.toLong
     sorted.foreach { case (o, l) =>
       if (o != cur) return Some((0L, 0L, 0L, 0L, 0L, 0L))
       cur = o + l
     }
-    if (cur != mdat._3.toLong || !durOk)
+    if (cur != mdat.until.toLong || !durOk)
       return Some((0L, 0L, 0L, 0L, 0L, 0L))
     var dg = 0L
     var pb = 0L
@@ -1338,7 +1222,7 @@ object Containers {
     val id = t.doc_id
     val n = (4 + id % 6).toInt
     val si = (id % 3L).toInt
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new Bin.Writer
     // ID3v2 lane (r19 verdict #7): real-world MP3s almost always OPEN
     // with an ID3v2 tag, so doc_id % 5 prepends one — 10-byte header
     // ("ID3", v2.4.0, flags 0) + a syncsafe 28-bit body size + filler
@@ -1347,14 +1231,13 @@ object Containers {
     // by construction in syncsafe integers): the falsification lane.
     if (id % 5L == 0L) {
       val bodyLen = (10 + id % 17L).toInt
-      out.write('I'); out.write('D'); out.write('3')
-      out.write(4); out.write(0) // v2.4.0
-      out.write(0) // flags
-      out.write(0); out.write(0)
-      out.write(if (id % 89L == 0L) 0x81 else 0)
-      out.write(bodyLen)
+      out.ascii("ID3").u8(4).u8(0) // v2.4.0
+        .u8(0) // flags
+        .u8(0).u8(0)
+        .u8(if (id % 89L == 0L) 0x81 else 0)
+        .u8(bodyLen)
       for (k <- 0 until bodyLen)
-        out.write(((id + k * 31L) % 251L).toInt)
+        out.u8(((id + k * 31L) % 251L).toInt)
     }
     for (f <- 0 until n) {
       val bi = if (id % 83L == 0L && f == 1) 0xf else mp3Bi(id, f)
@@ -1362,16 +1245,16 @@ object Containers {
       // header: sync(11) version 11 (MPEG-1), layer 01 (III),
       // protection 1; then bitrate(4) samplerate(2) padding(1)
       // private(0); channel mode 11 (mono), rest zeros
-      out.write(0xff); out.write(0xfb)
-      out.write((bi << 4) | (si << 2) | (pad << 1))
-      out.write(0xc0)
+      out.u8(0xff).u8(0xfb)
+        .u8((bi << 4) | (si << 2) | (pad << 1))
+        .u8(0xc0)
       // the corrupted-lane frame still carries its true-length payload:
       // only the HEADER lies, which is exactly what the walk must catch
       val len = mp3FrameLen(id, f)
       for (k <- 0 until len - 4)
-        out.write(((id + f * 13L + k * 7L) % 251L).toInt)
+        out.u8(((id + f * 13L + k * 7L) % 251L).toInt)
     }
-    out.toByteArray
+    out.result
   }
 
   /** Frame walk: per frame verify the sync word, version/layer bits,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.sources.Bin
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -36,10 +37,6 @@ object Multimodal {
   private val PngSignature: Array[Byte] =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  private def beInt(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-      ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-
   /** REAL container-header parse for PNG (spec §11.2.2, pure public byte
     * layout — no codec needed): signature, then the IHDR chunk at offset 8
     * (4-byte big-endian length=13, type "IHDR", 4-byte BE width, 4-byte BE
@@ -52,10 +49,10 @@ object Multimodal {
     if (b.length < 26) return None
     if (!b.take(8).sameElements(PngSignature)) return None
     // IHDR chunk: length must be 13, type bytes "IHDR"
-    if (beInt(b, 8) != 13L) return None
+    if (Bin.u32be(b, 8) != 13L) return None
     if (!(b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')) return None
-    val width = beInt(b, 16)
-    val height = beInt(b, 20)
+    val width = Bin.u32be(b, 16)
+    val height = Bin.u32be(b, 20)
     // the spec caps dimensions at 2^31-1; the fields are unsigned 32-bit, so
     // values in [2^31, 2^32-1] are malformed headers, not huge images
     if (width <= 0 || height <= 0 || width > Int.MaxValue || height > Int.MaxValue)
@@ -75,22 +72,12 @@ object Multimodal {
     * [[parsePngHeader]] consumes. Used to synthesize PNG payload columns in
     * tests and q82 — the bytes are a real PNG prefix, not a fake format.
     */
-  private[graft] def pngHeaderBytes(width: Int, height: Int, colorType: Int): Array[Byte] = {
-    val out = new Array[Byte](33)
-    PngSignature.copyToArray(out, 0)
-    def putBe(off: Int, v: Long): Unit = {
-      out(off) = ((v >>> 24) & 0xff).toByte; out(off + 1) = ((v >>> 16) & 0xff).toByte
-      out(off + 2) = ((v >>> 8) & 0xff).toByte; out(off + 3) = (v & 0xff).toByte
-    }
-    putBe(8, 13L) // IHDR payload length
-    out(12) = 'I'; out(13) = 'H'; out(14) = 'D'; out(15) = 'R'
-    putBe(16, width.toLong)
-    putBe(20, height.toLong)
-    out(24) = 8 // bit depth
-    out(25) = colorType.toByte
-    // bytes 26-28 (compression/filter/interlace) and 29-32 (CRC) stay 0
-    out
-  }
+  private[graft] def pngHeaderBytes(width: Int, height: Int, colorType: Int): Array[Byte] =
+    Bin.bytes(_.bytes(PngSignature)
+      .be32(13L).ascii("IHDR") // IHDR payload length and type
+      .be32(width.toLong).be32(height.toLong)
+      .u8(8).u8(colorType) // bit depth, color type
+      .zeros(3 + 4)) // compression/filter/interlace, then the CRC, stay 0
 
   final case class PdfMeta(
       doc_id: Long, version_minor: Long, n_objs: Long,
@@ -186,13 +173,6 @@ object Multimodal {
       }
     })
 
-  private def leInt(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
-
-  private def leShort(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8)
-
   /** Real RIFF/WAVE header parse (canonical 44-byte PCM layout, public byte
     * format): validates the RIFF/WAVE/fmt/data magics, reads the
     * LITTLE-endian fields (PNG above is big-endian — the pair exercises
@@ -206,13 +186,13 @@ object Multimodal {
     if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F')) return None
     if (!(b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E')) return None
     if (!(b(12) == 'f' && b(13) == 'm' && b(14) == 't' && b(15) == ' ')) return None
-    if (leShort(b, 20) != 1L) return None // PCM only
-    val channels = leShort(b, 22)
-    val rate = leInt(b, 24)
-    val bits = leShort(b, 34)
+    if (Bin.u16le(b, 20) != 1) return None // PCM only
+    val channels = Bin.u16le(b, 22).toLong
+    val rate = Bin.u32le(b, 24)
+    val bits = Bin.u16le(b, 34).toLong
     if (!(b(36) == 'd' && b(37) == 'a' && b(38) == 't' && b(39) == 'a')) return None
     if (channels < 1 || rate < 1 || bits < 8) return None
-    Some((rate, channels, bits, leInt(b, 40)))
+    Some((rate, channels, bits, Bin.u32le(b, 40)))
   }
 
   /** Well-formed canonical PCM WAV header — what [[parseWavHeader]]
@@ -222,27 +202,13 @@ object Multimodal {
   private[graft] def wavHeaderBytes(
       rate: Int, channels: Int, bits: Int, nSamples: Int): Array[Byte] = {
     val dataSize = nSamples.toLong * channels * (bits / 8)
-    val out = new Array[Byte](44)
-    def putAscii(off: Int, sArg: String): Unit =
-      sArg.zipWithIndex.foreach { case (ch, i) => out(off + i) = ch.toByte }
-    def putLe32(off: Int, v: Long): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >>> 8) & 0xff).toByte
-      out(off + 2) = ((v >>> 16) & 0xff).toByte; out(off + 3) = ((v >>> 24) & 0xff).toByte
-    }
-    def putLe16(off: Int, v: Long): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >>> 8) & 0xff).toByte
-    }
-    putAscii(0, "RIFF"); putLe32(4, 36L + dataSize); putAscii(8, "WAVE")
-    putAscii(12, "fmt "); putLe32(16, 16L); putLe16(20, 1L)
-    putLe16(22, channels.toLong); putLe32(24, rate.toLong)
-    putLe32(28, rate.toLong * channels * (bits / 8))
-    putLe16(32, channels.toLong * (bits / 8)); putLe16(34, bits.toLong)
-    putAscii(36, "data"); putLe32(40, dataSize)
-    out
+    Bin.bytes(_.ascii("RIFF").le32(36L + dataSize).ascii("WAVE")
+      .riffChunk("fmt ")(_.le16(1) // PCM
+        .le16(channels).le32(rate.toLong)
+        .le32(rate.toLong * channels * (bits / 8)) // byte rate
+        .le16(channels * (bits / 8)).le16(bits)) // block align, bits
+      .ascii("data").le32(dataSize)) // the header only: no samples follow
   }
-
-  private def beShort(b: Array[Byte], off: Int): Long =
-    ((b(off) & 0xffL) << 8) | (b(off + 1) & 0xffL)
 
   /** REAL JPEG header parse (ITU T.81 §B, public byte layout — no codec
     * needed): SOI (FFD8), then a marker-segment walk — each segment is
@@ -272,11 +238,10 @@ object Multimodal {
     * [[parsePngHeader]]/[[parseJpegHeader]]).
     */
   private[graft] def parseGifHeader(b: Array[Byte]): Option[(Long, Long, Long)] = {
-    def le16(off: Int): Long = (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8)
     if (b.length < 14) return None
     val sig = new String(b.slice(0, 6), "ISO-8859-1")
     if (sig != "GIF87a" && sig != "GIF89a") return None
-    val width = le16(6); val height = le16(8)
+    val width = Bin.u16le(b, 6).toLong; val height = Bin.u16le(b, 8).toLong
     if (width < 1 || height < 1) return None
     val packed = b(10) & 0xff
     var off = 13 + (if ((packed & 0x80) != 0) 3 * (1 << ((packed & 7) + 1)) else 0)
@@ -312,28 +277,25 @@ object Multimodal {
     * [[parseGifHeader]] consumes.
     */
   private[graft] def gifBytes(width: Int, height: Int, frames: Int): Array[Byte] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    out ++= "GIF89a".getBytes("ISO-8859-1")
-    def le16(v: Int): Unit = { out += (v & 0xff).toByte; out += ((v >> 8) & 0xff).toByte }
-    le16(width); le16(height)
-    out += 0x00 // packed: no global color table
-    out += 0x00 // background color index
-    out += 0x00 // pixel aspect ratio
+    val out = new Bin.Writer
+    out.ascii("GIF89a").le16(width).le16(height)
+    out.u8(0x00) // packed: no global color table
+      .u8(0x00) // background color index
+      .u8(0x00) // pixel aspect ratio
     (0 until frames).foreach { _ =>
       // graphic control extension: introducer, label, block size 4,
       // packed/delay/transparent-index, terminator
-      out += 0x21.toByte; out += 0xf9.toByte; out += 4
-      out += 0x00; out += 0x05; out += 0x00; out += 0x00
-      out += 0x00 // sub-block terminator
-      out += 0x2c.toByte // image separator
-      le16(0); le16(0); le16(width); le16(height)
-      out += 0x00 // no local color table
-      out += 0x02 // LZW min code size
-      out += 0x01; out += 0x44 // one 1-byte data sub-block
-      out += 0x00 // sub-block terminator
+      out.u8(0x21).u8(0xf9).u8(4)
+        .u8(0x00).u8(0x05).u8(0x00).u8(0x00)
+        .u8(0x00) // sub-block terminator
+      out.u8(0x2c) // image separator
+        .le16(0).le16(0).le16(width).le16(height)
+        .u8(0x00) // no local color table
+        .u8(0x02) // LZW min code size
+        .u8(0x01).u8(0x44) // one 1-byte data sub-block
+        .u8(0x00) // sub-block terminator
     }
-    out += 0x3b.toByte
-    out.toArray
+    out.u8(0x3b).result
   }
 
   private[graft] def parseJpegHeader(b: Array[Byte]): Option[(Long, Long, Long)] = {
@@ -351,9 +313,9 @@ object Multimodal {
         marker != 0xc4 && marker != 0xc8 && marker != 0xcc) {
         // SOF payload: len(2) precision(1) height(2) width(2) ncomp(1)
         if (mOff + 8 >= b.length) return None
-        if (beShort(b, mOff + 1) < 8L) return None
-        val height = beShort(b, mOff + 4)
-        val width = beShort(b, mOff + 6)
+        if (Bin.u16be(b, mOff + 1) < 8) return None
+        val height = Bin.u16be(b, mOff + 4).toLong
+        val width = Bin.u16be(b, mOff + 6).toLong
         val ncomp = b(mOff + 8) & 0xff
         if (width < 1 || height < 1 || ncomp < 1 || ncomp > 4) return None
         return Some((width, height, ncomp.toLong))
@@ -363,9 +325,9 @@ object Multimodal {
         return None // entropy-coded scan began before any SOF: malformed
       } else {
         if (mOff + 2 >= b.length) return None
-        val len = beShort(b, mOff + 1)
-        if (len < 2L) return None
-        off = mOff + 1 + len.toInt
+        val len = Bin.u16be(b, mOff + 1)
+        if (len < 2) return None
+        off = mOff + 1 + len
       }
     }
     None
@@ -378,32 +340,64 @@ object Multimodal {
     * pattern for the third container format).
     */
   private[graft] def jpegHeaderBytes(width: Int, height: Int, ncomp: Int): Array[Byte] = {
-    val out = new Array[Byte](2 + 18 + 6 + 2 + 8 + 3 * ncomp)
-    def putBe16(off: Int, v: Long): Unit = {
-      out(off) = ((v >>> 8) & 0xff).toByte; out(off + 1) = (v & 0xff).toByte
+    val out = jfifHead(new Bin.Writer)
+    out.segment(0xfe)(_.ascii("ok")) // COM: a second walked segment
+    sof(out, 0xc0, height, width, (1 to ncomp).map((_, 0x11, 0)))
+    out.result
+  }
+
+  /** SOI, then the JFIF 1.1 APP0 segment (1×1 density, no thumbnail) every
+    * synthesized JPEG opens with.
+    */
+  private def jfifHead(out: Bin.Writer): Bin.Writer =
+    out.be16(0xffd8).segment(0xe0)(
+      _.ascii("JFIF").u8(0).u8(1).u8(1).u8(0).be16(1).be16(1).u8(0).u8(0))
+
+  /** DQT for table `tq`, entries stored in zigzag order from the natural-
+    * order table `q`.
+    */
+  private def dqt(out: Bin.Writer, tq: Int, q: Int => Int): Bin.Writer =
+    out.segment(0xdb) { s => s.u8(tq); for (k <- 0 until 64) s.u8(q(JpegZigzag(k))) }
+
+  /** Frame header: precision 8, then (id, sampling, quant table) per
+    * component.
+    */
+  private def sof(out: Bin.Writer, marker: Int, h: Int, w: Int,
+      comps: Seq[(Int, Int, Int)]): Bin.Writer =
+    out.segment(marker) { s =>
+      s.u8(8).be16(h).be16(w).u8(comps.length)
+      comps.foreach { case (c, hv, tq) => s.u8(c).u8(hv).u8(tq) }
     }
-    out(0) = 0xff.toByte; out(1) = 0xd8.toByte // SOI
-    // APP0/JFIF, length 16: identifier, version 1.1, density 1×1, no thumb
-    out(2) = 0xff.toByte; out(3) = 0xe0.toByte; putBe16(4, 16L)
-    "JFIF".zipWithIndex.foreach { case (c, i) => out(6 + i) = c.toByte }
-    out(11) = 1; out(12) = 1 // version
-    putBe16(14, 1L); putBe16(16, 1L) // x/y density (unit byte 13 stays 0)
-    // COM, length 4: two comment bytes — a second walked segment
-    out(20) = 0xff.toByte; out(21) = 0xfe.toByte; putBe16(22, 4L)
-    out(24) = 'o'; out(25) = 'k'
-    // SOF0 (baseline): len 8+3·ncomp, precision 8, dims, components
-    out(26) = 0xff.toByte; out(27) = 0xc0.toByte
-    putBe16(28, 8L + 3 * ncomp)
-    out(30) = 8 // precision
-    putBe16(31, height.toLong)
-    putBe16(33, width.toLong)
-    out(35) = ncomp.toByte
-    (0 until ncomp).foreach { c =>
-      out(36 + 3 * c) = (c + 1).toByte // component id
-      out(37 + 3 * c) = 0x11 // 1×1 sampling
-      out(38 + 3 * c) = 0 // quant table
+
+  private def dht(out: Bin.Writer, tcth: Int, t: Bin.Huffman): Bin.Writer =
+    out.segment(0xc4) { s => s.u8(tcth); t.bits.foreach(s.u8); t.vals.foreach(s.u8) }
+
+  /** Scan header: (component, Td/Ta) per component, then Ss, Se, Ah/Al. */
+  private def sos(out: Bin.Writer, comps: Seq[(Int, Int)], ss: Int, se: Int,
+      ahal: Int): Bin.Writer =
+    out.segment(0xda) { s =>
+      s.u8(comps.length)
+      comps.foreach { case (c, t) => s.u8(c).u8(t) }
+      s.u8(ss).u8(se).u8(ahal)
     }
-    out
+
+  /** Head of a one-component 8-bit JFIF up to its scan: quant table 0 from
+    * `q`, the frame header, DC table 0 (Annex K) and AC table `ac`.
+    */
+  private def jpegGrayHead(sofMarker: Int, q: Int => Int, h: Int, w: Int,
+      ac: Bin.Huffman): Bin.Writer = {
+    val out = dqt(jfifHead(new Bin.Writer), 0, q)
+    sof(out, sofMarker, h, w, Seq((1, 0x11, 0)))
+    dht(dht(out, 0x00, JpegDcTab), 0x10, ac)
+  }
+
+  /** A DQT payload at `off` (zigzag order) as a natural-order table; None
+    * when an entry is 0.
+    */
+  private def naturalQ(b: Array[Byte], off: Int): Option[Array[Int]] = {
+    val q = new Array[Int](64)
+    for (k <- 0 until 64) q(JpegZigzag(k)) = b(off + k) & 0xff
+    if (q.exists(_ < 1)) None else Some(q)
   }
 
   final case class WavMeta(
@@ -1027,23 +1021,18 @@ object Multimodal {
     * real Adler-32 trailer (Inflater verifies it at stream end).
     */
   private def storedZlib(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0x78); out.write(0x01) // CMF/FLG, (0x78·256+0x01) % 31 == 0
+    val out = new Bin.Writer
+    out.u8(0x78).u8(0x01) // CMF/FLG, (0x78·256+0x01) % 31 == 0
     var i = 0
     while (i < data.length) {
       val len = math.min(64, data.length - i)
-      out.write(if (i + len >= data.length) 1 else 0) // BFINAL, BTYPE=00
-      out.write(len & 0xff); out.write((len >>> 8) & 0xff)
-      out.write((~len) & 0xff); out.write(((~len) >>> 8) & 0xff)
-      out.write(data, i, len)
+      out.u8(if (i + len >= data.length) 1 else 0) // BFINAL, BTYPE=00
+        .le16(len).le16(~len).bytes(data, i, len)
       i += len
     }
     val ad = new java.util.zip.Adler32()
     ad.update(data, 0, data.length)
-    val a = ad.getValue
-    out.write(((a >>> 24) & 0xff).toInt); out.write(((a >>> 16) & 0xff).toInt)
-    out.write(((a >>> 8) & 0xff).toInt); out.write((a & 0xff).toInt)
-    out.toByteArray
+    out.be32(ad.getValue).result
   }
 
   /** Complete well-formed PNG for doc `id`: 8-bit grayscale w×h with the
@@ -1057,12 +1046,12 @@ object Multimodal {
   private[graft] def pngFullBytes(id: Long): Array[Byte] = {
     val w = (8 + id % 9).toInt
     val h = (4 + id % 7).toInt
-    val raw = new java.io.ByteArrayOutputStream()
+    val raw = new Bin.Writer
     val prevRow = new Array[Int](w)
     var r = 0
     while (r < h) {
       val ft = ((id + r) % 5).toInt
-      raw.write(ft)
+      raw.u8(ft)
       val cur = Array.tabulate(w)(c => pxOf(id, r, c))
       var c = 0
       while (c < w) {
@@ -1076,53 +1065,25 @@ object Multimodal {
           case 3 => cur(c) - (left + up) / 2
           case _ => cur(c) - paeth(left, up, ul)
         }
-        raw.write(f & 0xff)
+        raw.u8(f)
         c += 1
       }
       Array.copy(cur, 0, prevRow, 0, w)
       r += 1
     }
-    val data = raw.toByteArray
-    val z: Array[Byte] =
-      if (id % 2 == 0) storedZlib(data)
-      else {
-        val d = new java.util.zip.Deflater()
-        d.setInput(data); d.finish()
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-        d.end()
-        out.toByteArray
-      }
-    val png = new java.io.ByteArrayOutputStream()
-    png.write(PngSignature, 0, 8)
-    def chunk(typ: String, payload: Array[Byte]): Unit = {
-      def be(v: Long): Array[Byte] = Array(
-        ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-        ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-      png.write(be(payload.length.toLong), 0, 4)
-      val tb = typ.getBytes("US-ASCII")
-      png.write(tb, 0, 4)
-      png.write(payload, 0, payload.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb, 0, 4); crc.update(payload, 0, payload.length)
-      png.write(be(crc.getValue), 0, 4)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = ((w >>> 24) & 0xff).toByte; ihdr(1) = ((w >>> 16) & 0xff).toByte
-    ihdr(2) = ((w >>> 8) & 0xff).toByte; ihdr(3) = (w & 0xff).toByte
-    ihdr(4) = ((h >>> 24) & 0xff).toByte; ihdr(5) = ((h >>> 16) & 0xff).toByte
-    ihdr(6) = ((h >>> 8) & 0xff).toByte; ihdr(7) = (h & 0xff).toByte
-    ihdr(8) = 8 // bit depth; color/compression/filter/interlace stay 0
-    chunk("IHDR", ihdr)
-    if (id % 3 == 0) chunk("tEXt", "k v".getBytes("US-ASCII"))
+    val data = raw.result
+    val z = if (id % 2 == 0) storedZlib(data) else Bin.deflate(data)
+    val png = new Bin.Writer
+    png.bytes(PngSignature)
+    // bit depth 8; color/compression/filter/interlace stay 0
+    png.pngChunk("IHDR", Bin.bytes(_.be32(w.toLong).be32(h.toLong).u8(8).zeros(4)))
+    if (id % 3 == 0) png.pngChunk("tEXt", "k\u0000v".getBytes("US-ASCII")) // keyword "k", NUL, text "v"
     if (id % 2 == 0) {
       val cut = z.length / 2
-      chunk("IDAT", java.util.Arrays.copyOfRange(z, 0, cut))
-      chunk("IDAT", java.util.Arrays.copyOfRange(z, cut, z.length))
-    } else chunk("IDAT", z)
-    chunk("IEND", Array.emptyByteArray)
-    png.toByteArray
+      png.pngChunk("IDAT", java.util.Arrays.copyOfRange(z, 0, cut))
+      png.pngChunk("IDAT", java.util.Arrays.copyOfRange(z, cut, z.length))
+    } else png.pngChunk("IDAT", z)
+    png.pngChunk("IEND", Array.emptyByteArray).result
   }
 
   /** REAL pixel-level PNG decode: signature, chunk walk with CRC32
@@ -1142,19 +1103,16 @@ object Multimodal {
     val idat = new java.io.ByteArrayOutputStream()
     var nIdat = 0L
     var sawEnd = false
-    val crc = new java.util.zip.CRC32()
     while (!sawEnd) {
       if (i + 12 > b.length) return None
-      val len = beInt(b, i)
+      val len = Bin.u32be(b, i)
       if (len < 0 || len > Int.MaxValue - 12 || i + 12 + len > b.length) return None
       val l = len.toInt
-      crc.reset(); crc.update(b, i + 4, 4 + l)
-      if (crc.getValue != beInt(b, i + 8 + l)) return None
-      val typ = new String(b, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      typ match {
+      if (Bin.crc32(b, i + 4, 4 + l) != Bin.u32be(b, i + 8 + l)) return None
+      Bin.fourcc(b, i + 4) match {
         case "IHDR" =>
           if (l != 13) return None
-          w = beInt(b, i + 8); h = beInt(b, i + 12)
+          w = Bin.u32be(b, i + 8); h = Bin.u32be(b, i + 12)
           // this pixel decoder handles 8-bit grayscale, no interlace
           if (b(i + 16) != 8 || b(i + 17) != 0 || b(i + 20) != 0) return None
         case "IDAT" => idat.write(b, i + 8, l); nIdat += 1
@@ -1358,11 +1316,11 @@ object Multimodal {
     val clear = 1 << mcs; val eoi = clear + 1
     var width = mcs + 1
     var next = eoi + 1
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new Bin.Writer
     var acc = 0L; var nb = 0
     def put(code: Int): Unit = {
       acc |= code.toLong << nb; nb += width
-      while (nb >= 8) { out.write((acc & 0xff).toInt); acc >>>= 8; nb -= 8 }
+      while (nb >= 8) { out.u8((acc & 0xff).toInt); acc >>>= 8; nb -= 8 }
     }
     val dict = scala.collection.mutable.Map.empty[(Int, Int), Int]
     put(clear)
@@ -1388,8 +1346,8 @@ object Multimodal {
       i += 1
     }
     put(cur); put(eoi)
-    if (nb > 0) out.write((acc & 0xff).toInt)
-    out.toByteArray
+    if (nb > 0) out.u8((acc & 0xff).toInt)
+    out.result
   }
 
   /** GIF-variant LZW decode: string table seeded with the roots, KwKwK
@@ -1468,27 +1426,24 @@ object Multimodal {
   private[graft] def gifFullBytes(id: Long): Array[Byte] = {
     val w = (6 + id % 8).toInt
     val h = (4 + id % 5).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes("US-ASCII"), 0, 6)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    le16(w); le16(h)
-    out.write(0x91) // GCT present, 4 entries (size field 1), cr 1
-    out.write(0); out.write(0) // bg index, aspect
+    val out = new Bin.Writer
+    out.ascii("GIF89a").le16(w).le16(h)
+    out.u8(0x91) // GCT present, 4 entries (size field 1), cr 1
+    out.u8(0).u8(0) // bg index, aspect
     for (i <- 0 until 4; j <- 0 until 3)
-      out.write(((id * 7 + i * 85 + j * 11) % 256).toInt)
-    out.write(0x2c) // image descriptor
-    le16(0); le16(0); le16(w); le16(h); out.write(0) // no LCT, no interlace
-    out.write(2) // LZW min code size (4-color palette)
+      out.u8(((id * 7 + i * 85 + j * 11) % 256).toInt)
+    out.u8(0x2c) // image descriptor
+    out.le16(0).le16(0).le16(w).le16(h).u8(0) // no LCT, no interlace
+    out.u8(2) // LZW min code size (4-color palette)
     val z = lzwEncode(Array.tabulate(w * h)(gifPxOf(id, _)), 2)
     var i = 0
     while (i < z.length) {
       val n = math.min(16, z.length - i)
-      out.write(n); out.write(z, i, n)
+      out.u8(n).bytes(z, i, n)
       i += n
     }
-    out.write(0) // sub-block terminator
-    out.write(0x3b) // trailer
-    out.toByteArray
+    out.u8(0) // sub-block terminator
+    out.u8(0x3b).result // trailer
   }
 
   /** REAL GIF pixel decode: signature, LSD, GCT read (palette byte sum is
@@ -1501,7 +1456,6 @@ object Multimodal {
     if (b.length < 13) return None
     val sig = new String(b, 0, 6, java.nio.charset.StandardCharsets.US_ASCII)
     if (sig != "GIF89a" && sig != "GIF87a") return None
-    def le16(off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
     var i = 13
     var paletteSum = 0L
     val packed = b(10) & 0xff
@@ -1516,7 +1470,7 @@ object Multimodal {
       (b(i) & 0xff) match {
         case 0x2c =>
           if (i + 10 > b.length) return None
-          val w = le16(i + 5); val h = le16(i + 7)
+          val w = Bin.u16le(b, i + 5); val h = Bin.u16le(b, i + 7)
           val ipacked = b(i + 9) & 0xff
           i += 10
           if ((ipacked & 0x80) != 0) i += 3 * (2 << (ipacked & 7)) // skip LCT
@@ -1915,20 +1869,11 @@ object Multimodal {
   // ---------------------------------------------------------------- q315
   // Real ZIP container: stored entries, central directory, EOCD, CRC32.
 
-  private def crc32Of(b: Array[Byte]): Long = {
-    val c = new java.util.zip.CRC32(); c.update(b); c.getValue
-  }
-
   /** Complete two-entry STORED zip for one doc (same planted-corruption
     * contract as [[tarFullBytes]], on the % 41 lane).
     */
   private[graft] def zipFullBytes(t: TarIn): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
+    val out = new Bin.Writer
     val entries = Seq(
       (s"d${t.doc_id}.txt",
         t.text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -1940,33 +1885,32 @@ object Multimodal {
     var i = 0
     entries.foreach { case (name, p, corrupt) =>
       offs(i) = out.size.toLong
-      val crc = crc32Of(p) ^ (if (corrupt) 1L else 0L)
-      le32(0x04034b50L); le16(20); le16(0); le16(0) // LFH, v2.0, no flags
-      le16(0); le16(0x21) // mod time 0, mod date 1980-01-01
-      le32(crc); le32(p.length.toLong); le32(p.length.toLong)
-      le16(name.length); le16(0)
-      out.write(name.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-      out.write(p)
+      val crc = Bin.crc32(p) ^ (if (corrupt) 1L else 0L)
+      out.le32(0x04034b50L).le16(20).le16(0).le16(0) // LFH, v2.0, no flags
+        .le16(0).le16(0x21) // mod time 0, mod date 1980-01-01
+        .le32(crc).le32(p.length.toLong).le32(p.length.toLong)
+        .le16(name.length).le16(0)
+        .ascii(name).bytes(p)
       i += 1
     }
     val cdStart = out.size.toLong
     i = 0
     entries.foreach { case (name, p, corrupt) =>
-      val crc = crc32Of(p) ^ (if (corrupt) 1L else 0L)
-      le32(0x02014b50L); le16(20); le16(20); le16(0); le16(0) // CDH
-      le16(0); le16(0x21)
-      le32(crc); le32(p.length.toLong); le32(p.length.toLong)
-      le16(name.length); le16(0); le16(0) // name/extra/comment len
-      le16(0); le16(0); le32(0L) // disk, int attrs, ext attrs
-      le32(offs(i))
-      out.write(name.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      val crc = Bin.crc32(p) ^ (if (corrupt) 1L else 0L)
+      out.le32(0x02014b50L).le16(20).le16(20).le16(0).le16(0) // CDH
+        .le16(0).le16(0x21)
+        .le32(crc).le32(p.length.toLong).le32(p.length.toLong)
+        .le16(name.length).le16(0).le16(0) // name/extra/comment len
+        .le16(0).le16(0).le32(0L) // disk, int attrs, ext attrs
+        .le32(offs(i))
+        .ascii(name)
       i += 1
     }
     val cdSize = out.size.toLong - cdStart
-    le32(0x06054b50L); le16(0); le16(0) // EOCD, disk numbers
-    le16(2); le16(2) // entries this disk / total
-    le32(cdSize); le32(cdStart); le16(0) // cd size, cd offset, comment len
-    out.toByteArray
+    out.le32(0x06054b50L).le16(0).le16(0) // EOCD, disk numbers
+      .le16(2).le16(2) // entries this disk / total
+      .le32(cdSize).le32(cdStart).le16(0) // cd size, cd offset, comment len
+      .result
   }
 
   /** Walk a zip via EOCD → central directory → local headers: per entry
@@ -1974,43 +1918,37 @@ object Multimodal {
     */
   private[graft] def parseZipEntries(
       b: Array[Byte]): Option[Seq[(String, Long, Boolean)]] = {
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     if (b.length < 22) return None
     val eocd = b.length - 22 // no-comment archives only: EOCD is the tail
-    if (u32(eocd) != 0x06054b50L || u16(eocd + 20) != 0) return None
-    val n = u16(eocd + 10)
-    val cdOff = u32(eocd + 16)
+    if (Bin.u32le(b, eocd) != 0x06054b50L || Bin.u16le(b, eocd + 20) != 0) return None
+    val n = Bin.u16le(b, eocd + 10)
+    val cdOff = Bin.u32le(b, eocd + 16)
     if (cdOff < 0 || cdOff > eocd) return None
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Boolean)]
     var c = cdOff.toInt
     var k = 0
     while (k < n) {
-      if (c + 46 > eocd || u32(c) != 0x02014b50L) return None
-      val crcRec = u32(c + 16)
-      val size = u32(c + 24)
-      if (u32(c + 20) != size) return None // stored: csize == size
-      val nameLen = u16(c + 28)
-      val extraLen = u16(c + 30); val cmtLen = u16(c + 32)
-      val lfh = u32(c + 42)
+      if (c + 46 > eocd || Bin.u32le(b, c) != 0x02014b50L) return None
+      val crcRec = Bin.u32le(b, c + 16)
+      val size = Bin.u32le(b, c + 24)
+      if (Bin.u32le(b, c + 20) != size) return None // stored: csize == size
+      val nameLen = Bin.u16le(b, c + 28)
+      val extraLen = Bin.u16le(b, c + 30); val cmtLen = Bin.u16le(b, c + 32)
+      val lfh = Bin.u32le(b, c + 42)
       if (c + 46 + nameLen > eocd) return None
       val name = new String(b, c + 46, nameLen,
         java.nio.charset.StandardCharsets.US_ASCII)
       // local header cross-check
       val l = lfh.toInt
-      if (l < 0 || l + 30 > b.length || u32(l) != 0x04034b50L) return None
-      if (u16(l + 26) != nameLen) return None
+      if (l < 0 || l + 30 > b.length || Bin.u32le(b, l) != 0x04034b50L) return None
+      if (Bin.u16le(b, l + 26) != nameLen) return None
       val lname = new String(b, l + 30, nameLen,
         java.nio.charset.StandardCharsets.US_ASCII)
-      if (lname != name || u32(l + 14) != crcRec || u32(l + 18) != size)
+      if (lname != name || Bin.u32le(b, l + 14) != crcRec || Bin.u32le(b, l + 18) != size)
         return None
-      val dataOff = l + 30 + nameLen + u16(l + 28)
+      val dataOff = l + 30 + nameLen + Bin.u16le(b, l + 28)
       if (dataOff + size > b.length) return None
-      val crc = new java.util.zip.CRC32()
-      crc.update(b, dataOff, size.toInt)
-      out += ((name, size, crc.getValue == crcRec))
+      out += ((name, size, Bin.crc32(b, dataOff, size.toInt) == crcRec))
       c += 46 + nameLen + extraLen + cmtLen
       k += 1
     }
@@ -2036,34 +1974,15 @@ object Multimodal {
       n_blocks: Long, dc_digest: Long)
 
   /** Annex-K (ITU T.81 K.3.1) DC luminance table: BITS then HUFFVAL. */
-  private val JpegDcBits: Array[Int] =
-    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val JpegDcVals: Array[Int] = (0 to 11).toArray
+  private val JpegDcTab = new Bin.Huffman(
+    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0), (0 to 11).toArray)
 
   /** Minimal spec-valid AC table: the one emitted symbol (EOB 0x00) at
     * code length 2 — the decoder builds whatever the DHT declares, so the
     * general run/size grammar is still exercised on the decode side.
     */
-  private val JpegAcBits: Array[Int] =
-    Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val JpegAcVals: Array[Int] = Array(0x00)
-
-  /** Canonical code assignment (T.81 C.2): (code, length) per symbol. */
-  private def canonicalCodes(
-      bits: Array[Int], vals: Array[Int]): Map[Int, (Int, Int)] = {
-    var code = 0
-    var k = 0
-    val out = scala.collection.mutable.Map.empty[Int, (Int, Int)]
-    for (len <- 1 to 16) {
-      var i = 0
-      while (i < bits(len - 1)) {
-        out(vals(k)) = (code, len)
-        code += 1; k += 1; i += 1
-      }
-      code <<= 1
-    }
-    out.toMap
-  }
+  private val JpegAcTab = new Bin.Huffman(
+    Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), Array(0x00))
 
   /** Planted quantized DC coefficient of block b. */
   private def jpegDcOf(id: Long, b: Int): Int =
@@ -2072,56 +1991,18 @@ object Multimodal {
   /** Complete baseline grayscale JFIF with DC-only blocks. */
   private[graft] def jpegDcBytes(id: Long): Array[Byte] = {
     val bw = (1 + id % 4).toInt; val bh = (1 + id % 3).toInt
-    val w = 8 * bw; val h = 8 * bh
-    val out = new java.io.ByteArrayOutputStream()
-    def b8(v: Int): Unit = out.write(v & 0xff)
-    def b16(v: Int): Unit = { b8(v >> 8); b8(v) }
-    b16(0xFFD8)
-    b16(0xFFE0); b16(16) // APP0/JFIF v1.1, no thumbnail
-    "JFIF".foreach(c => b8(c)); b8(0); b8(1); b8(1); b8(0)
-    b16(1); b16(1); b8(0); b8(0)
-    b16(0xFFDB); b16(67); b8(0x00) // DQT, Pq=0 Tq=0
-    for (_ <- 0 until 64) b8(8) // flat Q table: Q0 = 8 ⇒ recon = 128+dc
-    b16(0xFFC0); b16(11); b8(8); b16(h); b16(w); b8(1) // SOF0, 1 component
-    b8(1); b8(0x11); b8(0) // id 1, 1x1 sampling, Tq 0
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegDcVals.length); b8(0x00)
-    JpegDcBits.foreach(b8); JpegDcVals.foreach(b8)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegAcVals.length); b8(0x10)
-    JpegAcBits.foreach(b8); JpegAcVals.foreach(b8)
-    b16(0xFFDA); b16(8); b8(1); b8(1); b8(0x00) // SOS: comp 1, Td=Ta=0
-    b8(0); b8(63); b8(0) // Ss, Se, AhAl
-    // entropy-coded scan: MSB-first bit writer with 0xFF00 stuffing
-    val dcCodes = canonicalCodes(JpegDcBits, JpegDcVals)
-    val acCodes = canonicalCodes(JpegAcBits, JpegAcVals)
-    var acc = 0L; var nb = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nb += len
-      while (nb >= 8) {
-        val byte = ((acc >> (nb - 8)) & 0xff).toInt
-        b8(byte); if (byte == 0xff) b8(0x00)
-        nb -= 8
-      }
-    }
+    // flat Q table: Q0 = 8 ⇒ recon = 128+dc
+    val out = jpegGrayHead(0xc0, _ => 8, 8 * bh, 8 * bw, JpegAcTab)
+    sos(out, Seq((1, 0x00)), 0, 63, 0) // comp 1, Td=Ta=0
+    val bits = new Bin.BitWriter(out)
     var pred = 0
     for (b <- 0 until bw * bh) {
       val dc = jpegDcOf(id, b)
-      val diff = dc - pred; pred = dc
-      val cat = 32 - Integer.numberOfLeadingZeros(math.abs(diff)) // 0 for 0
-      val (hc, hl) = dcCodes(cat)
-      putBits(hc, hl)
-      if (cat > 0) {
-        val v = if (diff > 0) diff else diff + (1 << cat) - 1
-        putBits(v, cat)
-      }
-      val (ac, al) = acCodes(0x00) // EOB immediately: DC-only block
-      putBits(ac, al)
+      bits.dc(JpegDcTab, dc - pred); pred = dc
+      bits.huff(JpegAcTab, 0x00) // EOB immediately: DC-only block
     }
-    if (nb > 0) { // pad final byte with 1s (T.81 F.1.2.3)
-      val pad = 8 - nb
-      putBits((1 << pad) - 1, pad)
-    }
-    b16(0xFFD9)
-    out.toByteArray
+    bits.pad()
+    out.be16(0xffd9).result
   }
 
   /** Decode: marker walk + canonical Huffman + DC reconstruction.
@@ -2135,136 +2016,71 @@ object Multimodal {
     var i = 2
     var w = -1; var h = -1
     var q0 = -1
-    // canonical decode tables per (class, id): here Td=Ta=0 only
-    var dcTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    var acTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    def buildTab(bits: Array[Int], vals: Array[Int]) = {
-      val minC = new Array[Int](17); val maxC = new Array[Int](17)
-      val valP = new Array[Int](17)
-      var code = 0; var k = 0
-      for (len <- 1 to 16) {
-        valP(len) = k
-        minC(len) = code
-        code += bits(len - 1); k += bits(len - 1)
-        maxC(len) = code - 1 // -1 when empty: code == minC
-        code <<= 1
-      }
-      (minC, maxC, valP, vals)
-    }
-    var scan: Array[Byte] = null
+    // decode tables per (class, id): here Td=Ta=0 only
+    var dcTab: Bin.Huffman = null
+    var acTab: Bin.Huffman = null
+    var scan: Bin.Entropy = null
     while (scan == null) {
-      if (i + 4 > b.length) return None
-      if ((b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (i + 2 + len > b.length) return None
+      val (m, len) = Bin.segmentAt(b, i).getOrElse(return None)
       m match {
         case 0xdb =>
           if (len != 67 || (b(i + 4) & 0xff) != 0x00) return None
           q0 = b(i + 5) & 0xff
         case 0xc0 =>
           if (len != 11 || (b(i + 4) & 0xff) != 8) return None
-          h = ((b(i + 5) & 0xff) << 8) | (b(i + 6) & 0xff)
-          w = ((b(i + 7) & 0xff) << 8) | (b(i + 8) & 0xff)
+          h = Bin.u16be(b, i + 5); w = Bin.u16be(b, i + 7)
           if ((b(i + 9) & 0xff) != 1) return None // grayscale only
           if ((b(i + 11) & 0xff) != 0x11) return None
         case 0xc4 =>
           // a DHT segment may carry several tables
-          var j = i + 4
-          while (j < i + 2 + len) {
-            val tcth = b(j) & 0xff
-            val bits = Array.tabulate(16)(t => b(j + 1 + t) & 0xff)
-            val n = bits.sum
-            if (j + 17 + n > i + 2 + len) return None
-            val vals = Array.tabulate(n)(t => b(j + 17 + t) & 0xff)
-            val tab = buildTab(bits, vals)
-            if (tcth == 0x00) dcTab = tab
-            else if (tcth == 0x10) acTab = tab
-            else return None
-            j += 17 + n
-          }
+          for ((tcth, t) <- Bin.dhtTables(b, i + 4, i + 2 + len).getOrElse(return None))
+            tcth match {
+              case 0x00 => dcTab = t
+              case 0x10 => acTab = t
+              case _ => return None
+            }
         case 0xda =>
           if (len != 8 || (b(i + 4) & 0xff) != 1) return None
           if ((b(i + 6) & 0xff) != 0x00) return None // Td=Ta=0
-          // unstuff entropy data up to EOI
-          val buf = new java.io.ByteArrayOutputStream()
-          var k = i + 2 + len
-          var done = false
-          while (!done) {
-            if (k >= b.length) return None
-            val c = b(k) & 0xff
-            if (c == 0xff) {
-              if (k + 1 >= b.length) return None
-              val nxt = b(k + 1) & 0xff
-              if (nxt == 0x00) { buf.write(0xff); k += 2 }
-              else if (nxt == 0xd9) done = true
-              else return None // restarts/other markers unsupported
-            } else { buf.write(c); k += 1 }
-          }
-          scan = buf.toByteArray
+          scan = Bin.unstuff(b, i + 2 + len).getOrElse(return None)
         case mm if mm >= 0xe0 && mm <= 0xef => // APPn: skip
         case 0xfe => // COM: skip
         case _ => return None
       }
-      if (scan == null) i += 2 + len
+      i += 2 + len
     }
+    // restarts/other markers unsupported: one segment, ended by EOI
+    if (scan.segments.length != 1 || (b(scan.end + 1) & 0xff) != 0xd9) return None
     if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0) return None
     if (q0 < 1 || dcTab == null || acTab == null) return None
     val nBlocks = (w / 8) * (h / 8)
-    var pos = 0
-    def readBit(): Int = {
-      if (pos >= scan.length * 8) return -1
-      val bit = (scan(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      bit
-    }
-    def decode(tab: (Array[Int], Array[Int], Array[Int], Array[Int])): Int = {
-      val (minC, maxC, valP, vals) = tab
-      var code = 0
-      var len = 0
-      while (len < 16) {
-        val bit = readBit(); if (bit < 0) return -1
-        code = (code << 1) | bit
-        len += 1
-        if (maxC(len) >= minC(len) && code >= minC(len) && code <= maxC(len))
-          return vals(valP(len) + code - minC(len))
-      }
-      -1
-    }
-    def extend(v: Int, cat: Int): Int =
-      if (v < (1 << (cat - 1))) v - (1 << cat) + 1 else v
+    val r = new Bin.BitReader(scan.segments(0))
     var dc = 0
     var dg = 0L
     var blk = 0
     while (blk < nBlocks) {
-      val cat = decode(dcTab)
+      val cat = r.decode(dcTab)
       if (cat < 0 || cat > 11) return None
       val diff =
         if (cat == 0) 0
         else {
-          var v = 0
-          var t = 0
-          while (t < cat) {
-            val bit = readBit(); if (bit < 0) return None
-            v = (v << 1) | bit; t += 1
-          }
-          extend(v, cat)
+          val v = r.bits(cat); if (v < 0) return None
+          Bin.extend(v, cat)
         }
       dc += diff
       // general AC run/size walk (our streams EOB immediately)
       var k = 1
       var eob = false
       while (k <= 63 && !eob) {
-        val sym = decode(acTab)
+        val sym = r.decode(acTab)
         if (sym < 0) return None
         if (sym == 0x00) eob = true
         else {
-          val r = sym >> 4; val sz = sym & 15
-          if (sz == 0) { if (r == 15) k += 16 else return None }
+          val run = sym >> 4; val sz = sym & 15
+          if (sz == 0) { if (run == 15) k += 16 else return None }
           else {
-            k += r
-            var t = 0
-            while (t < sz) { if (readBit() < 0) return None; t += 1 }
+            k += run
+            if (r.bits(sz) < 0) return None
             k += 1
           }
         }
@@ -2374,71 +2190,51 @@ object Multimodal {
     * the 16 length-4 codes — the all-ones code stays unused, the T.81
     * canonical-table requirement).
     */
-  private val JpegFullAcBits: Array[Int] =
-    Array(0, 0, 0, 10, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val JpegFullAcVals: Array[Int] =
-    Array(0x00, 0x01, 0x02, 0x03, 0x41, 0x42, 0x43, 0xd1, 0xd2, 0xd3)
+  private val JpegFullAcTab = new Bin.Huffman(
+    Array(0, 0, 0, 10, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0),
+    Array(0x00, 0x01, 0x02, 0x03, 0x41, 0x42, 0x43, 0xd1, 0xd2, 0xd3))
 
   /** Complete baseline grayscale JFIF with DC + three planted ACs per
     * block, non-flat zigzag-stored quant table. doc_id % 61 gets the tail
     * TRUNCATED (EOI + final scan bytes) — the structural honest-negative
     * lane; the unstuffer can never find EOI, so decode refuses.
     */
-  private[graft] def jpegFullBytes(id: Long): Array[Byte] = {
+  private[graft] def jpegFullBytes(id: Long): Array[Byte] =
+    jpegBaselineBytes(id, seed = id, restartEvery = 0, laneMod = 61L)
+
+  /** Baseline grayscale JFIF of (1 + id % 4)×(1 + id % 3) blocks with DC +
+    * three planted ACs per block (coefficients at `seed`) and a non-flat
+    * zigzag-stored quant table. With `restartEvery` > 0: DRI and an RSTn
+    * marker every that many MCUs. doc_id % `laneMod` gets the tail
+    * truncated (EOI + final scan bytes).
+    */
+  private def jpegBaselineBytes(id: Long, seed: Long, restartEvery: Int,
+      laneMod: Long): Array[Byte] = {
     val bw = (1 + id % 4).toInt; val bh = (1 + id % 3).toInt
-    val w = 8 * bw; val h = 8 * bh
-    val out = new java.io.ByteArrayOutputStream()
-    def b8(v: Int): Unit = out.write(v & 0xff)
-    def b16(v: Int): Unit = { b8(v >> 8); b8(v) }
-    b16(0xFFD8)
-    b16(0xFFE0); b16(16)
-    "JFIF".foreach(c => b8(c)); b8(0); b8(1); b8(1); b8(0)
-    b16(1); b16(1); b8(0); b8(0)
-    b16(0xFFDB); b16(67); b8(0x00) // DQT in ZIGZAG order (T.81 B.2.4.1)
-    for (k <- 0 until 64) b8(jpegQOf(JpegZigzag(k)))
-    b16(0xFFC0); b16(11); b8(8); b16(h); b16(w); b8(1)
-    b8(1); b8(0x11); b8(0)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegDcVals.length); b8(0x00)
-    JpegDcBits.foreach(b8); JpegDcVals.foreach(b8)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegFullAcVals.length); b8(0x10)
-    JpegFullAcBits.foreach(b8); JpegFullAcVals.foreach(b8)
-    b16(0xFFDA); b16(8); b8(1); b8(1); b8(0x00)
-    b8(0); b8(63); b8(0)
-    val dcCodes = canonicalCodes(JpegDcBits, JpegDcVals)
-    val acCodes = canonicalCodes(JpegFullAcBits, JpegFullAcVals)
-    var acc = 0L; var nb = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nb += len
-      while (nb >= 8) {
-        val byte = ((acc >> (nb - 8)) & 0xff).toInt
-        b8(byte); if (byte == 0xff) b8(0x00)
-        nb -= 8
-      }
-    }
-    def size(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putMag(v: Int, sz: Int): Unit =
-      putBits(if (v > 0) v else v + (1 << sz) - 1, sz)
+    val out = jpegGrayHead(0xc0, jpegQOf, 8 * bh, 8 * bw, JpegFullAcTab)
+    if (restartEvery > 0) out.segment(0xdd)(_.be16(restartEvery)) // DRI
+    sos(out, Seq((1, 0x00)), 0, 63, 0)
+    val bits = new Bin.BitWriter(out)
     var pred = 0
-    for (b <- 0 until bw * bh) {
-      val dc = jpegDcOf(id, b)
-      val diff = dc - pred; pred = dc
-      val cat = size(diff)
-      val (hc, hl) = dcCodes(cat)
-      putBits(hc, hl)
-      if (cat > 0) putMag(diff, cat)
-      for ((run, v) <- Seq((0, jpegAc1Of(id, b)), (4, jpegAc2Of(id, b)),
-        (13, jpegAc3Of(id, b)))) {
-        val sz = size(v)
-        val (ac, al) = acCodes((run << 4) | sz)
-        putBits(ac, al); putMag(v, sz)
+    var rst = 0
+    val n = bw * bh
+    for (b <- 0 until n) {
+      val dc = jpegDcOf(seed, b)
+      bits.dc(JpegDcTab, dc - pred); pred = dc
+      bits.ac(JpegFullAcTab, 0, jpegAc1Of(seed, b))
+      bits.ac(JpegFullAcTab, 4, jpegAc2Of(seed, b))
+      bits.ac(JpegFullAcTab, 13, jpegAc3Of(seed, b))
+      bits.huff(JpegFullAcTab, 0x00)
+      if (restartEvery > 0 && b < n - 1 && (b + 1) % restartEvery == 0) {
+        bits.pad()
+        out.u8(0xff).u8(0xd0 + rst % 8)
+        rst += 1
+        pred = 0 // the decoder's predictor resets; so must the encoder's
       }
-      val (ec, el) = acCodes(0x00)
-      putBits(ec, el)
     }
-    if (nb > 0) { val pad = 8 - nb; putBits((1 << pad) - 1, pad) }
-    b16(0xFFD9)
-    val bytes = out.toByteArray
-    if (id % 61L == 0L) bytes.dropRight(6) else bytes
+    bits.pad()
+    val bytes = out.be16(0xffd9).result
+    if (id % laneMod == 0L) bytes.dropRight(6) else bytes
   }
 
   /** Full baseline decode: marker walk, zigzag DQT, canonical Huffman
@@ -2455,92 +2251,44 @@ object Multimodal {
     var w = -1; var h = -1
     var ri = 0 // restart interval in MCUs (DRI; 0 = no restarts)
     var qnat: Array[Int] = null
-    var dcTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    var acTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    def buildTab(bits: Array[Int], vals: Array[Int]) = {
-      val minC = new Array[Int](17); val maxC = new Array[Int](17)
-      val valP = new Array[Int](17)
-      var code = 0; var k = 0
-      for (len <- 1 to 16) {
-        valP(len) = k
-        minC(len) = code
-        code += bits(len - 1); k += bits(len - 1)
-        maxC(len) = code - 1
-        code <<= 1
-      }
-      (minC, maxC, valP, vals)
-    }
+    var dcTab: Bin.Huffman = null
+    var acTab: Bin.Huffman = null
     // entropy data split at restart markers: segments + the RSTn indices
-    // seen between them (empty rstSeq when the stream has no restarts)
-    var segs: Array[Array[Byte]] = null
-    val rstSeq = scala.collection.mutable.ArrayBuffer.empty[Int]
-    while (segs == null) {
-      if (i + 4 > b.length) return None
-      if ((b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (i + 2 + len > b.length) return None
+    // seen between them (empty when the stream has no restarts)
+    var scan: Bin.Entropy = null
+    while (scan == null) {
+      val (m, len) = Bin.segmentAt(b, i).getOrElse(return None)
       m match {
         case 0xdb =>
           if (len != 67 || (b(i + 4) & 0xff) != 0x00) return None
-          qnat = new Array[Int](64)
-          for (k <- 0 until 64) qnat(JpegZigzag(k)) = b(i + 5 + k) & 0xff
-          if (qnat.exists(_ < 1)) return None
+          qnat = naturalQ(b, i + 5).getOrElse(return None)
         case 0xc0 =>
           if (len != 11 || (b(i + 4) & 0xff) != 8) return None
-          h = ((b(i + 5) & 0xff) << 8) | (b(i + 6) & 0xff)
-          w = ((b(i + 7) & 0xff) << 8) | (b(i + 8) & 0xff)
+          h = Bin.u16be(b, i + 5); w = Bin.u16be(b, i + 7)
           if ((b(i + 9) & 0xff) != 1) return None
           if ((b(i + 11) & 0xff) != 0x11) return None
         case 0xc4 =>
-          var j = i + 4
-          while (j < i + 2 + len) {
-            val tcth = b(j) & 0xff
-            val bits = Array.tabulate(16)(t => b(j + 1 + t) & 0xff)
-            val n = bits.sum
-            if (j + 17 + n > i + 2 + len) return None
-            val vals = Array.tabulate(n)(t => b(j + 17 + t) & 0xff)
-            val tab = buildTab(bits, vals)
-            if (tcth == 0x00) dcTab = tab
-            else if (tcth == 0x10) acTab = tab
-            else return None
-            j += 17 + n
-          }
+          for ((tcth, t) <- Bin.dhtTables(b, i + 4, i + 2 + len).getOrElse(return None))
+            tcth match {
+              case 0x00 => dcTab = t
+              case 0x10 => acTab = t
+              case _ => return None
+            }
         case 0xdd => // DRI
           if (len != 4) return None
-          ri = ((b(i + 4) & 0xff) << 8) | (b(i + 5) & 0xff)
+          ri = Bin.u16be(b, i + 4)
         case 0xda =>
           if (len != 8 || (b(i + 4) & 0xff) != 1) return None
           if ((b(i + 6) & 0xff) != 0x00) return None
-          val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-          var buf = new java.io.ByteArrayOutputStream()
-          var k = i + 2 + len
-          var done = false
-          while (!done) {
-            if (k >= b.length) return None
-            val c = b(k) & 0xff
-            if (c == 0xff) {
-              if (k + 1 >= b.length) return None
-              val nxt = b(k + 1) & 0xff
-              if (nxt == 0x00) { buf.write(0xff); k += 2 }
-              else if (nxt == 0xd9) done = true
-              else if (nxt >= 0xd0 && nxt <= 0xd7) { // RSTn: segment cut
-                out += buf.toByteArray
-                buf = new java.io.ByteArrayOutputStream()
-                rstSeq += (nxt - 0xd0)
-                k += 2
-              }
-              else return None
-            } else { buf.write(c); k += 1 }
-          }
-          out += buf.toByteArray
-          segs = out.toArray
+          scan = Bin.unstuff(b, i + 2 + len).getOrElse(return None)
+          if ((b(scan.end + 1) & 0xff) != 0xd9) return None
         case mm if mm >= 0xe0 && mm <= 0xef =>
         case 0xfe =>
         case _ => return None
       }
-      if (segs == null) i += 2 + len
+      i += 2 + len
     }
+    val segs = scan.segments
     if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0) return None
     if (qnat == null || dcTab == null || acTab == null) return None
     val nBlocks = (w / 8) * (h / 8)
@@ -2550,43 +2298,11 @@ object Multimodal {
     if (ri == 0 && segs.length != 1) return None
     if (ri > 0) {
       if (segs.length != (nBlocks + ri - 1) / ri) return None
-      for (k <- rstSeq.indices) if (rstSeq(k) != k % 8) return None
+      for (k <- scan.rst.indices) if (scan.rst(k) != k % 8) return None
     }
-    var seg = segs(0)
     var segIdx = 0
-    var pos = 0
-    def readBit(): Int = {
-      if (pos >= seg.length * 8) return -1
-      val bit = (seg(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      bit
-    }
-    def decode(tab: (Array[Int], Array[Int], Array[Int], Array[Int])): Int = {
-      val (minC, maxC, valP, vals) = tab
-      var code = 0
-      var len = 0
-      while (len < 16) {
-        val bit = readBit(); if (bit < 0) return -1
-        code = (code << 1) | bit
-        len += 1
-        if (maxC(len) >= minC(len) && code >= minC(len) && code <= maxC(len))
-          return vals(valP(len) + code - minC(len))
-      }
-      -1
-    }
-    def extend(v: Int, cat: Int): Int =
-      if (v < (1 << (cat - 1))) v - (1 << cat) + 1 else v
-    def readMag(cat: Int): Option[Int] = {
-      var v = 0
-      var t = 0
-      while (t < cat) {
-        val bit = readBit(); if (bit < 0) return None
-        v = (v << 1) | bit; t += 1
-      }
-      Some(extend(v, cat))
-    }
+    var r = new Bin.BitReader(segs(0))
     val pixels = new Array[Int](nBlocks * 64)
-    val coef = new Array[Int](64)
     var pred = 0
     var blk = 0
     while (blk < nBlocks) {
@@ -2594,39 +2310,56 @@ object Multimodal {
       // DC predictor (T.81 F.2.1.3.1)
       if (ri > 0 && blk > 0 && blk % ri == 0) {
         segIdx += 1
-        seg = segs(segIdx)
-        pos = 0
+        r = new Bin.BitReader(segs(segIdx))
         pred = 0
       }
-      java.util.Arrays.fill(coef, 0)
-      val cat = decode(dcTab)
-      if (cat < 0 || cat > 11) return None
-      val diff = if (cat == 0) 0 else readMag(cat).getOrElse(return None)
-      pred += diff
-      coef(0) = pred * qnat(0)
-      var k = 1
-      var eob = false
-      while (k <= 63 && !eob) {
-        val sym = decode(acTab)
-        if (sym < 0) return None
-        if (sym == 0x00) eob = true
-        else {
-          val r = sym >> 4; val sz = sym & 15
-          if (sz == 0) { if (r == 15) k += 16 else return None }
-          else {
-            k += r
-            if (k > 63) return None
-            val n = JpegZigzag(k)
-            coef(n) = readMag(sz).getOrElse(return None) * qnat(n)
-            k += 1
-          }
-        }
-      }
-      // sparse fixed-point IDCT over the nonzero coefficients
-      System.arraycopy(idctBlock(coef), 0, pixels, blk * 64, 64)
+      val (px, dc) = decodeBlock(r, dcTab, acTab, pred, qnat).getOrElse(return None)
+      pred = dc
+      System.arraycopy(px, 0, pixels, blk * 64, 64)
       blk += 1
     }
     Some((w, h, pixels))
+  }
+
+  /** One baseline block through the full DC + AC run/size grammar (DC
+    * category, AC run/size with ZRL and mid-block EOB), dequantized by the
+    * natural-order table `q`, then the fixed-point IDCT: (clamped samples,
+    * the new DC predictor), or None.
+    */
+  private def decodeBlock(r: Bin.BitReader, dcTab: Bin.Huffman,
+      acTab: Bin.Huffman, pred: Int, q: Array[Int]): Option[(Array[Int], Int)] = {
+    val coef = new Array[Int](64)
+    val cat = r.decode(dcTab)
+    if (cat < 0 || cat > 11) return None
+    val diff =
+      if (cat == 0) 0
+      else {
+        val v = r.bits(cat); if (v < 0) return None
+        Bin.extend(v, cat)
+      }
+    val dc = pred + diff
+    coef(0) = dc * q(0)
+    var k = 1
+    var eob = false
+    while (k <= 63 && !eob) {
+      val sym = r.decode(acTab)
+      if (sym < 0) return None
+      if (sym == 0x00) eob = true
+      else {
+        val run = sym >> 4; val sz = sym & 15
+        if (sz == 0) { if (run == 15) k += 16 else return None }
+        else {
+          k += run
+          if (k > 63) return None
+          val v = r.bits(sz); if (v < 0) return None
+          val n = JpegZigzag(k)
+          coef(n) = Bin.extend(v, sz) * q(n)
+          k += 1
+        }
+      }
+    }
+    // sparse fixed-point IDCT over the nonzero coefficients
+    Some((idctBlock(coef), dc))
   }
 
   def jpegFullPartition(rows: Iterator[(Long, String)]): Iterator[JpegPix] =
@@ -2707,74 +2440,8 @@ object Multimodal {
     * Coefficients planted at seed id + 7 (distinct from q329 so a
     * cross-wired decode path can't pass both). doc_id % 73 truncated.
     */
-  private[graft] def jpegRstBytes(id: Long): Array[Byte] = {
-    val seed = id + 7
-    val bw = (1 + id % 4).toInt; val bh = (1 + id % 3).toInt
-    val w = 8 * bw; val h = 8 * bh
-    val out = new java.io.ByteArrayOutputStream()
-    def b8(v: Int): Unit = out.write(v & 0xff)
-    def b16(v: Int): Unit = { b8(v >> 8); b8(v) }
-    b16(0xFFD8)
-    b16(0xFFE0); b16(16)
-    "JFIF".foreach(c => b8(c)); b8(0); b8(1); b8(1); b8(0)
-    b16(1); b16(1); b8(0); b8(0)
-    b16(0xFFDB); b16(67); b8(0x00)
-    for (k <- 0 until 64) b8(jpegQOf(JpegZigzag(k)))
-    b16(0xFFC0); b16(11); b8(8); b16(h); b16(w); b8(1)
-    b8(1); b8(0x11); b8(0)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegDcVals.length); b8(0x00)
-    JpegDcBits.foreach(b8); JpegDcVals.foreach(b8)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegFullAcVals.length); b8(0x10)
-    JpegFullAcBits.foreach(b8); JpegFullAcVals.foreach(b8)
-    b16(0xFFDD); b16(4); b16(2) // DRI: restart interval 2 MCUs
-    b16(0xFFDA); b16(8); b8(1); b8(1); b8(0x00)
-    b8(0); b8(63); b8(0)
-    val dcCodes = canonicalCodes(JpegDcBits, JpegDcVals)
-    val acCodes = canonicalCodes(JpegFullAcBits, JpegFullAcVals)
-    var acc = 0L; var nb = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nb += len
-      while (nb >= 8) {
-        val byte = ((acc >> (nb - 8)) & 0xff).toInt
-        b8(byte); if (byte == 0xff) b8(0x00)
-        nb -= 8
-      }
-    }
-    def pad(): Unit =
-      if (nb > 0) { val p = 8 - nb; putBits((1 << p) - 1, p) }
-    def size(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putMag(v: Int, sz: Int): Unit =
-      putBits(if (v > 0) v else v + (1 << sz) - 1, sz)
-    var pred = 0
-    var rst = 0
-    val n = bw * bh
-    for (b <- 0 until n) {
-      val dc = jpegDcOf(seed, b)
-      val diff = dc - pred; pred = dc
-      val cat = size(diff)
-      val (hc, hl) = dcCodes(cat)
-      putBits(hc, hl)
-      if (cat > 0) putMag(diff, cat)
-      for ((run, v) <- Seq((0, jpegAc1Of(seed, b)), (4, jpegAc2Of(seed, b)),
-        (13, jpegAc3Of(seed, b)))) {
-        val sz = size(v)
-        val (ac, al) = acCodes((run << 4) | sz)
-        putBits(ac, al); putMag(v, sz)
-      }
-      val (ec, el) = acCodes(0x00)
-      putBits(ec, el)
-      if (b < n - 1 && (b + 1) % 2 == 0) { // restart boundary
-        pad()
-        b8(0xFF); b8(0xD0 + rst % 8)
-        rst += 1
-        pred = 0 // the decoder's predictor resets; so must the encoder's
-      }
-    }
-    pad()
-    b16(0xFFD9)
-    val bytes = out.toByteArray
-    if (id % 73L == 0L) bytes.dropRight(6) else bytes
-  }
+  private[graft] def jpegRstBytes(id: Long): Array[Byte] =
+    jpegBaselineBytes(id, seed = id + 7, restartEvery = 2, laneMod = 73L)
 
   def jpegRstPartition(rows: Iterator[(Long, String)]): Iterator[JpegPix] =
     rows.grouped(decodeBatchSize).flatMap(_.iterator.map { case (id, src) =>
@@ -2831,70 +2498,31 @@ object Multimodal {
     */
   private[graft] def jpegYccBytes(id: Long): Array[Byte] = {
     val mw = (1 + id % 2).toInt
-    val w = 16 * mw; val h = 16
-    val out = new java.io.ByteArrayOutputStream()
-    def b8(v: Int): Unit = out.write(v & 0xff)
-    def b16(v: Int): Unit = { b8(v >> 8); b8(v) }
-    b16(0xFFD8)
-    b16(0xFFE0); b16(16)
-    "JFIF".foreach(c => b8(c)); b8(0); b8(1); b8(1); b8(0)
-    b16(1); b16(1); b8(0); b8(0)
-    b16(0xFFDB); b16(67); b8(0x00) // luma table, zigzag order
-    for (k <- 0 until 64) b8(jpegQOf(JpegZigzag(k)))
-    b16(0xFFDB); b16(67); b8(0x01) // chroma table, flat
-    for (_ <- 0 until 64) b8(8)
-    b16(0xFFC0); b16(17); b8(8); b16(h); b16(w); b8(3)
-    b8(1); b8(0x22); b8(0) // Y: 2x2 sampling, luma table
-    b8(2); b8(0x11); b8(1) // Cb
-    b8(3); b8(0x11); b8(1) // Cr
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegDcVals.length); b8(0x00)
-    JpegDcBits.foreach(b8); JpegDcVals.foreach(b8)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegFullAcVals.length); b8(0x10)
-    JpegFullAcBits.foreach(b8); JpegFullAcVals.foreach(b8)
-    b16(0xFFDA); b16(12); b8(3)
-    b8(1); b8(0x00); b8(2); b8(0x00); b8(3); b8(0x00)
-    b8(0); b8(63); b8(0)
-    val dcCodes = canonicalCodes(JpegDcBits, JpegDcVals)
-    val acCodes = canonicalCodes(JpegFullAcBits, JpegFullAcVals)
-    var acc = 0L; var nb = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nb += len
-      while (nb >= 8) {
-        val byte = ((acc >> (nb - 8)) & 0xff).toInt
-        b8(byte); if (byte == 0xff) b8(0x00)
-        nb -= 8
-      }
-    }
-    def size(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putMag(v: Int, sz: Int): Unit =
-      putBits(if (v > 0) v else v + (1 << sz) - 1, sz)
-    def putDc(diff: Int): Unit = {
-      val cat = size(diff)
-      val (hc, hl) = dcCodes(cat)
-      putBits(hc, hl)
-      if (cat > 0) putMag(diff, cat)
-    }
-    def putEob(): Unit = { val (c, l) = acCodes(0x00); putBits(c, l) }
+    val out = jfifHead(new Bin.Writer)
+    dqt(out, 0, jpegQOf) // luma table, non-flat
+    dqt(out, 1, _ => 8) // chroma table, flat
+    // Y: 2x2 sampling on the luma table; Cb, Cr: 1x1 on the chroma table
+    sof(out, 0xc0, 16, 16 * mw, Seq((1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)))
+    dht(dht(out, 0x00, JpegDcTab), 0x10, JpegFullAcTab)
+    sos(out, Seq((1, 0x00), (2, 0x00), (3, 0x00)), 0, 63, 0)
+    val bits = new Bin.BitWriter(out)
+    def eob(): Unit = bits.huff(JpegFullAcTab, 0x00)
     var (predY, predCb, predCr) = (0, 0, 0)
     for (m <- 0 until mw) {
       for (yb <- 0 until 4) {
         val b = m * 4 + yb
         val dc = jpegYDcOf(id, b)
-        putDc(dc - predY); predY = dc
-        val a1 = jpegYAcOf(id, b)
-        val sz = size(a1)
-        val (ac, al) = acCodes(sz) // run 0
-        putBits(ac, al); putMag(a1, sz)
-        putEob()
+        bits.dc(JpegDcTab, dc - predY); predY = dc
+        bits.ac(JpegFullAcTab, 0, jpegYAcOf(id, b))
+        eob()
       }
       val cb = jpegCbOf(id)
-      putDc(cb - predCb); predCb = cb; putEob()
+      bits.dc(JpegDcTab, cb - predCb); predCb = cb; eob()
       val cr = jpegCrOf(id)
-      putDc(cr - predCr); predCr = cr; putEob()
+      bits.dc(JpegDcTab, cr - predCr); predCr = cr; eob()
     }
-    if (nb > 0) { val pad = 8 - nb; putBits((1 << pad) - 1, pad) }
-    b16(0xFFD9)
-    val bytes = out.toByteArray
+    bits.pad()
+    val bytes = out.be16(0xffd9).result
     if (id % 71L == 0L) bytes.dropRight(6) else bytes
   }
 
@@ -2913,41 +2541,20 @@ object Multimodal {
     var i = 2
     var w = -1; var h = -1
     val qtabs = new Array[Array[Int]](2)
-    var dcTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    var acTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    def buildTab(bits: Array[Int], vals: Array[Int]) = {
-      val minC = new Array[Int](17); val maxC = new Array[Int](17)
-      val valP = new Array[Int](17)
-      var code = 0; var k = 0
-      for (len <- 1 to 16) {
-        valP(len) = k
-        minC(len) = code
-        code += bits(len - 1); k += bits(len - 1)
-        maxC(len) = code - 1
-        code <<= 1
-      }
-      (minC, maxC, valP, vals)
-    }
-    var scan: Array[Byte] = null
+    var dcTab: Bin.Huffman = null
+    var acTab: Bin.Huffman = null
+    var scan: Bin.Entropy = null
     while (scan == null) {
-      if (i + 4 > b.length) return None
-      if ((b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (i + 2 + len > b.length) return None
+      val (m, len) = Bin.segmentAt(b, i).getOrElse(return None)
       m match {
         case 0xdb =>
           if (len != 67) return None
           val pqtq = b(i + 4) & 0xff
           if ((pqtq >> 4) != 0 || (pqtq & 15) > 1) return None
-          val q = new Array[Int](64)
-          for (k <- 0 until 64) q(JpegZigzag(k)) = b(i + 5 + k) & 0xff
-          if (q.exists(_ < 1)) return None
-          qtabs(pqtq & 15) = q
+          qtabs(pqtq & 15) = naturalQ(b, i + 5).getOrElse(return None)
         case 0xc0 =>
           if (len != 17 || (b(i + 4) & 0xff) != 8) return None
-          h = ((b(i + 5) & 0xff) << 8) | (b(i + 6) & 0xff)
-          w = ((b(i + 7) & 0xff) << 8) | (b(i + 8) & 0xff)
+          h = Bin.u16be(b, i + 5); w = Bin.u16be(b, i + 7)
           if ((b(i + 9) & 0xff) != 3) return None
           // Y 2x2 on table 0; Cb/Cr 1x1 on table 1
           if ((b(i + 11) & 0xff) != 0x22 || (b(i + 12) & 0xff) != 0)
@@ -2957,107 +2564,29 @@ object Multimodal {
           if ((b(i + 17) & 0xff) != 0x11 || (b(i + 18) & 0xff) != 1)
             return None
         case 0xc4 =>
-          var j = i + 4
-          while (j < i + 2 + len) {
-            val tcth = b(j) & 0xff
-            val bits = Array.tabulate(16)(t => b(j + 1 + t) & 0xff)
-            val n = bits.sum
-            if (j + 17 + n > i + 2 + len) return None
-            val vals = Array.tabulate(n)(t => b(j + 17 + t) & 0xff)
-            val tab = buildTab(bits, vals)
-            if (tcth == 0x00) dcTab = tab
-            else if (tcth == 0x10) acTab = tab
-            else return None
-            j += 17 + n
-          }
+          for ((tcth, t) <- Bin.dhtTables(b, i + 4, i + 2 + len).getOrElse(return None))
+            tcth match {
+              case 0x00 => dcTab = t
+              case 0x10 => acTab = t
+              case _ => return None
+            }
         case 0xda =>
           if (len != 12 || (b(i + 4) & 0xff) != 3) return None
           if ((b(i + 6) & 0xff) != 0 || (b(i + 8) & 0xff) != 0 ||
             (b(i + 10) & 0xff) != 0) return None
-          val buf = new java.io.ByteArrayOutputStream()
-          var k = i + 2 + len
-          var done = false
-          while (!done) {
-            if (k >= b.length) return None
-            val c = b(k) & 0xff
-            if (c == 0xff) {
-              if (k + 1 >= b.length) return None
-              val nxt = b(k + 1) & 0xff
-              if (nxt == 0x00) { buf.write(0xff); k += 2 }
-              else if (nxt == 0xd9) done = true
-              else return None
-            } else { buf.write(c); k += 1 }
-          }
-          scan = buf.toByteArray
+          scan = Bin.unstuff(b, i + 2 + len).getOrElse(return None)
         case mm if mm >= 0xe0 && mm <= 0xef =>
         case 0xfe =>
         case _ => return None
       }
-      if (scan == null) i += 2 + len
+      i += 2 + len
     }
+    // no restart markers: one segment, ended by EOI
+    if (scan.segments.length != 1 || (b(scan.end + 1) & 0xff) != 0xd9) return None
     if (w <= 0 || h <= 0 || w % 16 != 0 || h % 16 != 0) return None
     if (qtabs(0) == null || qtabs(1) == null ||
       dcTab == null || acTab == null) return None
-    var pos = 0
-    def readBit(): Int = {
-      if (pos >= scan.length * 8) return -1
-      val bit = (scan(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      bit
-    }
-    def decode(tab: (Array[Int], Array[Int], Array[Int], Array[Int])): Int = {
-      val (minC, maxC, valP, vals) = tab
-      var code = 0
-      var len = 0
-      while (len < 16) {
-        val bit = readBit(); if (bit < 0) return -1
-        code = (code << 1) | bit
-        len += 1
-        if (maxC(len) >= minC(len) && code >= minC(len) && code <= maxC(len))
-          return vals(valP(len) + code - minC(len))
-      }
-      -1
-    }
-    def extend(v: Int, cat: Int): Int =
-      if (v < (1 << (cat - 1))) v - (1 << cat) + 1 else v
-    def readMag(cat: Int): Option[Int] = {
-      var v = 0
-      var t = 0
-      while (t < cat) {
-        val bit = readBit(); if (bit < 0) return None
-        v = (v << 1) | bit; t += 1
-      }
-      Some(extend(v, cat))
-    }
-    // one entropy-coded block through the full grammar; returns the
-    // clamped IDCT samples and the new predictor, or None
-    def decodeBlock(pred: Int, q: Array[Int]): Option[(Array[Int], Int)] = {
-      val coef = new Array[Int](64)
-      val cat = decode(dcTab)
-      if (cat < 0 || cat > 11) return None
-      val diff = if (cat == 0) 0 else readMag(cat).getOrElse(return None)
-      val dc = pred + diff
-      coef(0) = dc * q(0)
-      var k = 1
-      var eob = false
-      while (k <= 63 && !eob) {
-        val sym = decode(acTab)
-        if (sym < 0) return None
-        if (sym == 0x00) eob = true
-        else {
-          val r = sym >> 4; val sz = sym & 15
-          if (sz == 0) { if (r == 15) k += 16 else return None }
-          else {
-            k += r
-            if (k > 63) return None
-            val n = JpegZigzag(k)
-            coef(n) = readMag(sz).getOrElse(return None) * q(n)
-            k += 1
-          }
-        }
-      }
-      Some((idctBlock(coef), dc))
-    }
+    val r = new Bin.BitReader(scan.segments(0))
     val mw = w / 16; val mh = h / 16
     val out = new Array[Int](mw * mh * 4 * 64 * 3)
     var (predY, predCb, predCr) = (0, 0, 0)
@@ -3066,13 +2595,13 @@ object Multimodal {
       val lum = new Array[Array[Int]](4)
       var yb = 0
       while (yb < 4) {
-        val (px, p) = decodeBlock(predY, qtabs(0)).getOrElse(return None)
+        val (px, p) = decodeBlock(r, dcTab, acTab, predY, qtabs(0)).getOrElse(return None)
         lum(yb) = px; predY = p
         yb += 1
       }
-      val (cbA, pcb) = decodeBlock(predCb, qtabs(1)).getOrElse(return None)
+      val (cbA, pcb) = decodeBlock(r, dcTab, acTab, predCb, qtabs(1)).getOrElse(return None)
       predCb = pcb
-      val (crA, pcr) = decodeBlock(predCr, qtabs(1)).getOrElse(return None)
+      val (crA, pcr) = decodeBlock(r, dcTab, acTab, predCr, qtabs(1)).getOrElse(return None)
       predCr = pcr
       yb = 0
       while (yb < 4) {
@@ -3103,7 +2632,7 @@ object Multimodal {
   def jpegYccPartition(rows: Iterator[(Long, String)]): Iterator[JpegColor] =
     rows.grouped(decodeBatchSize).flatMap(_.iterator.map { case (id, src) =>
       parseJpegYcc(jpegYccBytes(id)) match {
-        case Some((w, h, px)) =>
+        case Some((_, _, px)) =>
           var dg = 0L
           var i = 0
           while (i < px.length) {
@@ -3187,32 +2716,21 @@ object Multimodal {
       java.nio.charset.StandardCharsets.US_ASCII) :+ 0.toByte
     val dt = exifDateTime(id).getBytes(
       java.nio.charset.StandardCharsets.US_ASCII) :+ 0.toByte
-    val tiff = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { tiff.write(v & 0xff); tiff.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      tiff.write((v & 0xff).toInt); tiff.write(((v >> 8) & 0xff).toInt)
-      tiff.write(((v >> 16) & 0xff).toInt); tiff.write(((v >> 24) & 0xff).toInt)
-    }
-    tiff.write('I'); tiff.write('I'); le16(42); le32(8L) // header → IFD0
+    val tiff = new Bin.Writer
+    tiff.ascii("II").le16(42).le32(8L) // header → IFD0
     val valuesAt = 8 + 2 + 3 * 12 + 4 // after count, entries, next-IFD
-    le16(3) // three entries, tag-ascending (TIFF requirement)
-    le16(0x010e); le16(2); le32(desc.length.toLong) // ImageDescription
-    le32(valuesAt.toLong)
-    le16(0x0112); le16(3); le32(1L) // Orientation, SHORT, inline
-    le16(if (id % 89L == 0L) 0 else (1 + id % 8).toInt); le16(0)
-    le16(0x0132); le16(2); le32(dt.length.toLong) // DateTime
-    le32(valuesAt.toLong + desc.length)
-    le32(0L) // no next IFD
-    tiff.write(desc); tiff.write(dt)
-    val t = tiff.toByteArray
-    val app1 = new java.io.ByteArrayOutputStream()
-    app1.write(0xff); app1.write(0xe1)
-    val len = 2 + 6 + t.length
-    app1.write((len >> 8) & 0xff); app1.write(len & 0xff)
-    "Exif".foreach(c => app1.write(c)); app1.write(0); app1.write(0)
-    app1.write(t)
+    tiff.le16(3) // three entries, tag-ascending (TIFF requirement)
+    tiff.le16(0x010e).le16(2).le32(desc.length.toLong) // ImageDescription
+      .le32(valuesAt.toLong)
+    tiff.le16(0x0112).le16(3).le32(1L) // Orientation, SHORT, inline
+      .le16(if (id % 89L == 0L) 0 else (1 + id % 8).toInt).le16(0)
+    tiff.le16(0x0132).le16(2).le32(dt.length.toLong) // DateTime
+      .le32(valuesAt.toLong + desc.length)
+    tiff.le32(0L) // no next IFD
+    tiff.bytes(desc).bytes(dt)
+    val app1 = Bin.bytes(_.segment(0xe1)(_.ascii("Exif").u8(0).u8(0).bytes(tiff.result)))
     val body = jpegFullBytes(if (id % 61L == 0L) id + 1L else id) // decodable
-    body.take(2) ++ app1.toByteArray ++ body.drop(2)
+    body.take(2) ++ app1 ++ body.drop(2)
   }
 
   /** APP1/Exif walk: find the Exif APP1 before SOS, parse the TIFF
@@ -3229,30 +2747,20 @@ object Multimodal {
     var i = 2
     var tOff = -1; var tEnd = -1
     while (tOff < 0) {
-      if (i + 4 > b.length) return None
-      if ((b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
+      val (m, len) = Bin.segmentAt(b, i).getOrElse(return None)
       if (m == 0xda || m == 0xd9) return None // scan reached: no Exif
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (i + 2 + len > b.length) return None
-      if (m == 0xe1 && len >= 8 + 8 &&
-        new String(b, i + 4, 4,
-          java.nio.charset.StandardCharsets.US_ASCII) == "Exif" &&
+      if (m == 0xe1 && len >= 8 + 8 && Bin.fourcc(b, i + 4) == "Exif" &&
         b(i + 8) == 0 && b(i + 9) == 0) {
         tOff = i + 10; tEnd = i + 2 + len
       }
       i += 2 + len
     }
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     if (tOff + 8 > tEnd) return None
-    if (b(tOff) != 'I' || b(tOff + 1) != 'I' || u16(tOff + 2) != 42)
+    if (b(tOff) != 'I' || b(tOff + 1) != 'I' || Bin.u16le(b, tOff + 2) != 42)
       return None
-    val ifd = tOff + u32(tOff + 4).toInt
+    val ifd = tOff + Bin.u32le(b, tOff + 4).toInt
     if (ifd + 2 > tEnd) return None
-    val n = u16(ifd)
+    val n = Bin.u16le(b, ifd)
     if (ifd + 2 + 12 * n + 4 > tEnd) return None
     var orientation = -1L
     var descDg = -1L
@@ -3269,22 +2777,22 @@ object Multimodal {
     }
     for (e <- 0 until n) {
       val p = ifd + 2 + 12 * e
-      val tag = u16(p)
+      val tag = Bin.u16le(b, p)
       if (tag <= lastTag) return None // TIFF: ascending tag order
       lastTag = tag
-      val tpe = u16(p + 2)
-      val cnt = u32(p + 4)
+      val tpe = Bin.u16le(b, p + 2)
+      val cnt = Bin.u32le(b, p + 4)
       tag match {
         case 0x010e =>
           if (tpe != 2) return None
-          descDg = asciiDigest(u32(p + 8).toInt, cnt.toInt)
+          descDg = asciiDigest(Bin.u32le(b, p + 8).toInt, cnt.toInt)
             .getOrElse(return None)
         case 0x0112 =>
           if (tpe != 3 || cnt != 1L) return None
-          orientation = u16(p + 8).toLong // SHORT fits inline
+          orientation = Bin.u16le(b, p + 8).toLong // SHORT fits inline
         case 0x0132 =>
           if (tpe != 2) return None
-          dtDg = asciiDigest(u32(p + 8).toInt, cnt.toInt)
+          dtDg = asciiDigest(Bin.u32le(b, p + 8).toInt, cnt.toInt)
             .getOrElse(return None)
         case _ => // unknown tags skipped, the TIFF contract
       }
@@ -3351,52 +2859,19 @@ object Multimodal {
     * digests.
     */
   private[graft] def pngMetaBytes(id: Long): Array[Byte] = {
-    val png = new java.io.ByteArrayOutputStream()
-    png.write(PngSignature, 0, 8)
-    def chunk(typ: String, payload: Array[Byte]): Unit = {
-      def be(v: Long): Array[Byte] = Array(
-        ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-        ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-      png.write(be(payload.length.toLong), 0, 4)
-      val tb = typ.getBytes("US-ASCII")
-      png.write(tb, 0, 4)
-      png.write(payload, 0, payload.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb, 0, 4); crc.update(payload, 0, payload.length)
-      png.write(be(crc.getValue), 0, 4)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(3) = 1; ihdr(7) = 1; ihdr(8) = 8 // 1×1, 8-bit gray
-    chunk("IHDR", ihdr)
-    chunk("tEXt",
+    val png = new Bin.Writer
+    png.bytes(PngSignature)
+    png.pngChunk("IHDR", Bin.bytes(_.be32(1L).be32(1L).u8(8).zeros(4))) // 1×1, 8-bit gray
+    png.pngChunk("tEXt",
       ("Title".getBytes("US-ASCII") :+ 0.toByte) ++
         s"Doc $id".getBytes("US-ASCII"))
-    val d = new java.util.zip.Deflater()
-    val txt = pngMetaText(id).getBytes("US-ASCII")
-    d.setInput(txt); d.finish()
-    val zOut = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](256)
-    while (!d.finished()) zOut.write(buf, 0, d.deflate(buf))
-    d.end()
     val method: Byte = if (id % 97L == 0L) 1 else 0
-    chunk("zTXt",
+    png.pngChunk("zTXt",
       ("Comment".getBytes("US-ASCII") :+ 0.toByte) ++ (method +:
-        zOut.toByteArray))
-    chunk("IDAT", {
-      val raw = Array[Byte](0, ((id * 31) % 251).toByte) // filter 0 + pixel
-      // stored zlib, tiny: CMF/FLG, one final stored block, Adler-32
-      val z = new java.io.ByteArrayOutputStream()
-      z.write(0x78); z.write(0x01)
-      z.write(1); z.write(2); z.write(0); z.write(0xfd); z.write(0xff)
-      z.write(raw, 0, 2)
-      val ad = new java.util.zip.Adler32(); ad.update(raw, 0, 2)
-      val a = ad.getValue
-      z.write(((a >>> 24) & 0xff).toInt); z.write(((a >>> 16) & 0xff).toInt)
-      z.write(((a >>> 8) & 0xff).toInt); z.write((a & 0xff).toInt)
-      z.toByteArray
-    })
-    chunk("IEND", Array.emptyByteArray)
-    png.toByteArray
+        Bin.deflate(pngMetaText(id).getBytes("US-ASCII"))))
+    // filter 0 + one pixel, as a tiny stored zlib stream
+    png.pngChunk("IDAT", storedZlib(Array[Byte](0, ((id * 31) % 251).toByte)))
+    png.pngChunk("IEND", Array.emptyByteArray).result
   }
 
   /** Metadata walk with the full q298 container discipline — signature,
@@ -3410,9 +2885,6 @@ object Multimodal {
   private[graft] def parsePngMeta(
       b: Array[Byte]): Option[(Long, Long, Long, Long)] = {
     if (b.length < 8 || !b.take(8).sameElements(PngSignature)) return None
-    def u32(o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
     var i = 8
     var first = true
     var ended = false
@@ -3428,13 +2900,10 @@ object Multimodal {
     }
     while (i < b.length) {
       if (ended || i + 12 > b.length) return None
-      val len = u32(i)
+      val len = Bin.u32be(b, i)
       if (i + 12 + len > b.length) return None
-      val typ = new String(b, i + 4, 4,
-        java.nio.charset.StandardCharsets.US_ASCII)
-      val crc = new java.util.zip.CRC32()
-      crc.update(b, i + 4, 4 + len.toInt)
-      if (crc.getValue != u32(i + 8 + len.toInt)) return None
+      val typ = Bin.fourcc(b, i + 4)
+      if (Bin.crc32(b, i + 4, 4 + len.toInt) != Bin.u32be(b, i + 8 + len.toInt)) return None
       if (first && typ != "IHDR") return None
       first = false
       val ps = i + 8; val pe = ps + len.toInt
@@ -3542,11 +3011,10 @@ object Multimodal {
     * runs 0/4/5 in band one (position 1 may scale to zero), run 9 in
     * band two, sizes 1..2 — 13 symbols, all at code length 4.
     */
-  private val JpegProgAcBits: Array[Int] =
-    Array(0, 0, 0, 13, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val JpegProgAcVals: Array[Int] = Array(
-    0x00, 0x10, 0x20, 0x30, 0xf0,
-    0x01, 0x02, 0x41, 0x42, 0x51, 0x52, 0x91, 0x92)
+  private val JpegProgAcTab = new Bin.Huffman(
+    Array(0, 0, 0, 13, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0),
+    Array(0x00, 0x10, 0x20, 0x30, 0xf0,
+      0x01, 0x02, 0x41, 0x42, 0x51, 0x52, 0x91, 0x92))
 
   /** The two spectral bands: zigzag 1..10 carries the planted zigzag-1
     * and zigzag-6 coefficients, 11..63 the zigzag-20 one.
@@ -3559,7 +3027,6 @@ object Multimodal {
   private[graft] def jpegProgBytes(id: Long): Array[Byte] = {
     val seed = id + 11
     val bw = (1 + id % 4).toInt; val bh = (1 + id % 3).toInt
-    val w = 8 * bw; val h = 8 * bh
     val n = bw * bh
     val dc = Array.tabulate(n)(b => jpegDcOf(seed, b))
     // quantized AC values by ZIGZAG position
@@ -3570,67 +3037,34 @@ object Multimodal {
       a(20) = jpegAc3Of(seed, b)
       a
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def b8(v: Int): Unit = out.write(v & 0xff)
-    def b16(v: Int): Unit = { b8(v >> 8); b8(v) }
-    b16(0xFFD8)
-    b16(0xFFE0); b16(16)
-    "JFIF".foreach(c => b8(c)); b8(0); b8(1); b8(1); b8(0)
-    b16(1); b16(1); b8(0); b8(0)
-    b16(0xFFDB); b16(67); b8(0x00)
-    for (k <- 0 until 64) b8(jpegQOf(JpegZigzag(k)))
-    b16(0xFFC2); b16(11); b8(8); b16(h); b16(w); b8(1) // SOF2
-    b8(1); b8(0x11); b8(0)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegDcVals.length); b8(0x00)
-    JpegDcBits.foreach(b8); JpegDcVals.foreach(b8)
-    b16(0xFFC4); b16(2 + 1 + 16 + JpegProgAcVals.length); b8(0x10)
-    JpegProgAcBits.foreach(b8); JpegProgAcVals.foreach(b8)
-    val dcCodes = canonicalCodes(JpegDcBits, JpegDcVals)
-    val acCodes = canonicalCodes(JpegProgAcBits, JpegProgAcVals)
-    var acc = 0L; var nb = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nb += len
-      while (nb >= 8) {
-        val byte = ((acc >> (nb - 8)) & 0xff).toInt
-        b8(byte); if (byte == 0xff) b8(0x00)
-        nb -= 8
-      }
-    }
-    def pad(): Unit =
-      if (nb > 0) { val p = 8 - nb; putBits((1 << p) - 1, p) }
-    def size(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putMag(v: Int, sz: Int): Unit =
-      putBits(if (v > 0) v else v + (1 << sz) - 1, sz)
-    def sos(ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      b16(0xFFDA); b16(8); b8(1); b8(1); b8(0x00)
-      b8(ss); b8(se); b8((ah << 4) | al)
-    }
+    val out = jpegGrayHead(0xc2, jpegQOf, 8 * bh, 8 * bw, JpegProgAcTab) // SOF2
+    val bits = new Bin.BitWriter(out)
+    def scan(ss: Int, se: Int, ah: Int, al: Int): Unit =
+      sos(out, Seq((1, 0x00)), ss, se, (ah << 4) | al)
     // SCAN 1 — DC first, Al=1: diffs of the ARITHMETIC shift dc >> 1
     // (T.81 G.1.2.1; the refinement bit below restores the LSB exactly,
     // two's complement OR included)
-    sos(0, 0, 0, 1)
+    scan(0, 0, 0, 1)
     var pred = 0
     for (b <- 0 until n) {
       val v = dc(b) >> 1
-      val diff = v - pred; pred = v
-      val cat = size(diff)
-      val (hc, hl) = dcCodes(cat); putBits(hc, hl)
-      if (cat > 0) putMag(diff, cat)
+      bits.dc(JpegDcTab, v - pred); pred = v
     }
-    pad()
+    bits.pad()
     // SCANS 2-3 — AC first per band, Al=1: magnitudes shifted toward
     // zero (|v| = 1 scales to ZERO here and is inserted by refinement —
     // the newly-nonzero grammar is exercised for real), EOB runs
     // accumulated across blocks and coded as EOBn + extra bits
     var eobrun = 0
-    def emitEobrunFirst(): Unit = if (eobrun > 0) {
+    def emitEobrun(): Unit = {
       val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-      val (c, l) = acCodes(nbits << 4); putBits(c, l)
-      if (nbits > 0) putBits(eobrun & ((1 << nbits) - 1), nbits)
+      bits.huff(JpegProgAcTab, nbits << 4)
+      if (nbits > 0) bits.bits(eobrun & ((1 << nbits) - 1), nbits)
       eobrun = 0
     }
+    def emitEobrunFirst(): Unit = if (eobrun > 0) emitEobrun()
     for ((ss, se) <- JpegProgBands) {
-      sos(ss, se, 0, 1)
+      scan(ss, se, 0, 1)
       eobrun = 0
       for (b <- 0 until n) {
         val band = (ss to se).map { k =>
@@ -3646,12 +3080,8 @@ object Multimodal {
           for (sv <- band) {
             if (sv == 0) r += 1
             else {
-              while (r > 15) {
-                val (zc, zl) = acCodes(0xf0); putBits(zc, zl); r -= 16
-              }
-              val sz = size(sv)
-              val (c, l) = acCodes((r << 4) | sz)
-              putBits(c, l); putMag(sv, sz)
+              while (r > 15) { bits.huff(JpegProgAcTab, 0xf0); r -= 16 }
+              bits.ac(JpegProgAcTab, r, sv)
               r = 0
             }
           }
@@ -3659,25 +3089,22 @@ object Multimodal {
         }
       }
       emitEobrunFirst()
-      pad()
+      bits.pad()
     }
     // SCAN 4 — DC refinement, Ah=1 Al=0: one raw LSB per block
-    sos(0, 0, 1, 0)
-    for (b <- 0 until n) putBits(dc(b) & 1, 1)
-    pad()
+    scan(0, 0, 1, 0)
+    for (b <- 0 until n) bits.bits(dc(b) & 1, 1)
+    bits.pad()
     // SCANS 5-6 — AC refinement per band (G.1.2.3): correction bits for
     // previously-nonzero coefficients are BUFFERED while walking runs
     // and emitted after the next (run,1)+sign symbol or EOBn flush
     for ((ss, se) <- JpegProgBands) {
-      sos(ss, se, 1, 0)
+      scan(ss, se, 1, 0)
       eobrun = 0
       val be = scala.collection.mutable.ArrayBuffer.empty[Int]
       def emitEobrunRefine(): Unit = if (eobrun > 0) {
-        val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c, l) = acCodes(nbits << 4); putBits(c, l)
-        if (nbits > 0) putBits(eobrun & ((1 << nbits) - 1), nbits)
-        eobrun = 0
-        be.foreach(putBits(_, 1)); be.clear()
+        emitEobrun()
+        be.foreach(bits.bits(_, 1)); be.clear()
       }
       for (b <- 0 until n) {
         val band = (ss to se).map(k => ac(b)(k))
@@ -3692,16 +3119,16 @@ object Multimodal {
           else {
             while (r > 15 && i <= eobPos) {
               emitEobrunRefine()
-              val (zc, zl) = acCodes(0xf0); putBits(zc, zl)
+              bits.huff(JpegProgAcTab, 0xf0)
               r -= 16
-              br.foreach(putBits(_, 1)); br.clear()
+              br.foreach(bits.bits(_, 1)); br.clear()
             }
             if (temp > 1) br += (temp & 1) // history coefficient: buffer
             else { // newly nonzero: flush EOB run, emit (run,1) + sign
               emitEobrunRefine()
-              val (c, l) = acCodes((r << 4) | 1); putBits(c, l)
-              putBits(if (band(i) < 0) 0 else 1, 1)
-              br.foreach(putBits(_, 1)); br.clear()
+              bits.huff(JpegProgAcTab, (r << 4) | 1)
+              bits.bits(if (band(i) < 0) 0 else 1, 1)
+              br.foreach(bits.bits(_, 1)); br.clear()
               r = 0
             }
           }
@@ -3713,10 +3140,9 @@ object Multimodal {
         }
       }
       emitEobrunRefine()
-      pad()
+      bits.pad()
     }
-    b16(0xFFD9)
-    val bytes = out.toByteArray
+    val bytes = out.be16(0xffd9).result
     if (id % 67L == 0L) bytes.dropRight(6) else bytes
   }
 
@@ -3736,56 +3162,29 @@ object Multimodal {
     var i = 2
     var w = -1; var h = -1
     var qnat: Array[Int] = null
-    var dcTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    var acTab: (Array[Int], Array[Int], Array[Int], Array[Int]) = null
-    def buildTab(bits: Array[Int], vals: Array[Int]) = {
-      val minC = new Array[Int](17); val maxC = new Array[Int](17)
-      val valP = new Array[Int](17)
-      var code = 0; var k = 0
-      for (len <- 1 to 16) {
-        valP(len) = k
-        minC(len) = code
-        code += bits(len - 1); k += bits(len - 1)
-        maxC(len) = code - 1
-        code <<= 1
-      }
-      (minC, maxC, valP, vals)
-    }
+    var dcTab: Bin.Huffman = null
+    var acTab: Bin.Huffman = null
     // header walk to the first SOS
     var atScan = false
     while (!atScan) {
-      if (i + 4 > b.length) return None
-      if ((b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (i + 2 + len > b.length) return None
+      val (m, len) = Bin.segmentAt(b, i).getOrElse(return None)
       m match {
         case 0xdb =>
           if (len != 67 || (b(i + 4) & 0xff) != 0x00) return None
-          qnat = new Array[Int](64)
-          for (k <- 0 until 64) qnat(JpegZigzag(k)) = b(i + 5 + k) & 0xff
-          if (qnat.exists(_ < 1)) return None
+          qnat = naturalQ(b, i + 5).getOrElse(return None)
         case 0xc2 => // SOF2: progressive
           if (len != 11 || (b(i + 4) & 0xff) != 8) return None
-          h = ((b(i + 5) & 0xff) << 8) | (b(i + 6) & 0xff)
-          w = ((b(i + 7) & 0xff) << 8) | (b(i + 8) & 0xff)
+          h = Bin.u16be(b, i + 5); w = Bin.u16be(b, i + 7)
           if ((b(i + 9) & 0xff) != 1) return None
           if ((b(i + 11) & 0xff) != 0x11) return None
         case 0xc0 => return None // baseline stream: wrong decoder
         case 0xc4 =>
-          var j = i + 4
-          while (j < i + 2 + len) {
-            val tcth = b(j) & 0xff
-            val bits = Array.tabulate(16)(t => b(j + 1 + t) & 0xff)
-            val nv = bits.sum
-            if (j + 17 + nv > i + 2 + len) return None
-            val vals = Array.tabulate(nv)(t => b(j + 17 + t) & 0xff)
-            val tab = buildTab(bits, vals)
-            if (tcth == 0x00) dcTab = tab
-            else if (tcth == 0x10) acTab = tab
-            else return None
-            j += 17 + nv
-          }
+          for ((tcth, t) <- Bin.dhtTables(b, i + 4, i + 2 + len).getOrElse(return None))
+            tcth match {
+              case 0x00 => dcTab = t
+              case 0x10 => acTab = t
+              case _ => return None
+            }
         case 0xda => atScan = true
         case mm if mm >= 0xe0 && mm <= 0xef =>
         case 0xfe =>
@@ -3804,10 +3203,8 @@ object Multimodal {
     var sawEoi = false
     while (!sawEoi) {
       // scan header
-      if (i + 4 > b.length) return None
-      if ((b(i) & 0xff) != 0xff || (b(i + 1) & 0xff) != 0xda) return None
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      if (len != 8 || i + 2 + len > b.length) return None
+      val (m, len) = Bin.segmentAt(b, i).getOrElse(return None)
+      if (m != 0xda || len != 8) return None
       if ((b(i + 4) & 0xff) != 1 || (b(i + 5) & 0xff) != 1) return None
       val ss = b(i + 7) & 0xff
       val se = b(i + 8) & 0xff
@@ -3821,63 +3218,21 @@ object Multimodal {
         else if (alState(k) != ah || al != ah - 1) return None
         alState(k) = al
       }
-      // entropy data: unstuff to the next marker
-      val data = new java.io.ByteArrayOutputStream()
-      var k2 = i + 2 + len
-      var endMarker = -1
-      while (endMarker < 0) {
-        if (k2 >= b.length) return None
-        val c = b(k2) & 0xff
-        if (c == 0xff) {
-          if (k2 + 1 >= b.length) return None
-          val nxt = b(k2 + 1) & 0xff
-          if (nxt == 0x00) { data.write(0xff); k2 += 2 }
-          else { endMarker = nxt }
-        } else { data.write(c); k2 += 1 }
-      }
-      val seg = data.toByteArray
-      var pos = 0
-      def readBit(): Int = {
-        if (pos >= seg.length * 8) return -1
-        val bit = (seg(pos >> 3) >> (7 - (pos & 7))) & 1
-        pos += 1
-        bit
-      }
-      def decode(
-          tab: (Array[Int], Array[Int], Array[Int], Array[Int])): Int = {
-        val (minC, maxC, valP, vals) = tab
-        var code = 0
-        var l = 0
-        while (l < 16) {
-          val bit = readBit(); if (bit < 0) return -1
-          code = (code << 1) | bit
-          l += 1
-          if (maxC(l) >= minC(l) && code >= minC(l) && code <= maxC(l))
-            return vals(valP(l) + code - minC(l))
-        }
-        -1
-      }
-      def extend(v: Int, cat: Int): Int =
-        if (v < (1 << (cat - 1))) v - (1 << cat) + 1 else v
-      def readBits(cnt: Int): Int = {
-        var v = 0
-        var t = 0
-        while (t < cnt) {
-          val bit = readBit(); if (bit < 0) return -1
-          v = (v << 1) | bit; t += 1
-        }
-        v
-      }
+      // entropy data up to the next marker; RSTn has no place in this
+      // stream's progression
+      val data = Bin.unstuff(b, i + 2 + len).getOrElse(return None)
+      if (data.segments.length != 1) return None
+      val in = new Bin.BitReader(data.segments(0))
       if (ss == 0 && ah == 0) { // DC first
         pred = 0
         for (blk <- 0 until nBlocks) {
-          val cat = decode(dcTab)
+          val cat = in.decode(dcTab)
           if (cat < 0 || cat > 11) return None
           val diff =
             if (cat == 0) 0
             else {
-              val v = readBits(cat); if (v < 0) return None
-              extend(v, cat)
+              val v = in.bits(cat); if (v < 0) return None
+              Bin.extend(v, cat)
             }
           pred += diff
           coef(blk)(0) = pred << al
@@ -3885,7 +3240,7 @@ object Multimodal {
       } else if (ss == 0) { // DC refinement: one raw bit per block
         val p1 = 1 << al
         for (blk <- 0 until nBlocks) {
-          val bit = readBit(); if (bit < 0) return None
+          val bit = in.bit(); if (bit < 0) return None
           if (bit == 1) coef(blk)(0) |= p1
         }
       } else if (ah == 0) { // AC first with EOBRUN
@@ -3896,19 +3251,19 @@ object Multimodal {
             var k = ss
             var break = false
             while (k <= se && !break) {
-              val sym = decode(acTab); if (sym < 0) return None
+              val sym = in.decode(acTab); if (sym < 0) return None
               val r = sym >> 4; val s = sym & 15
               if (s > 0) {
                 k += r
                 if (k > se) return None
-                val v = readBits(s); if (v < 0) return None
-                coef(blk)(k) = extend(v, s) << al
+                val v = in.bits(s); if (v < 0) return None
+                coef(blk)(k) = Bin.extend(v, s) << al
                 k += 1
               } else if (r == 15) k += 16 // ZRL
               else {
                 eobrun = (1 << r) - 1
                 if (r > 0) {
-                  val ex = readBits(r); if (ex < 0) return None
+                  val ex = in.bits(r); if (ex < 0) return None
                   eobrun += ex
                 }
                 break = true
@@ -3925,17 +3280,17 @@ object Multimodal {
           if (eobrun == 0) {
             var break = false
             while (k <= se && !break) {
-              val sym = decode(acTab); if (sym < 0) return None
+              val sym = in.decode(acTab); if (sym < 0) return None
               var r = sym >> 4; val s = sym & 15
               var newval = 0
               if (s != 0) {
                 if (s != 1) return None // only size 1 legal here
-                val bit = readBit(); if (bit < 0) return None
+                val bit = in.bit(); if (bit < 0) return None
                 newval = if (bit == 1) p1 else m1
               } else if (r != 15) {
                 eobrun = 1 << r
                 if (r > 0) {
-                  val ex = readBits(r); if (ex < 0) return None
+                  val ex = in.bits(r); if (ex < 0) return None
                   eobrun += ex
                 }
                 break = true // EOB completion below finishes this block
@@ -3945,7 +3300,7 @@ object Multimodal {
                 var done = false
                 while (k <= se && !done) {
                   if (coef(blk)(k) != 0) {
-                    val bit = readBit(); if (bit < 0) return None
+                    val bit = in.bit(); if (bit < 0) return None
                     if (bit == 1 && (math.abs(coef(blk)(k)) & p1) == 0)
                       coef(blk)(k) += (if (coef(blk)(k) >= 0) p1 else m1)
                   } else {
@@ -3966,7 +3321,7 @@ object Multimodal {
             // EOB completion: correction bits for the rest of the block
             while (k <= se) {
               if (coef(blk)(k) != 0) {
-                val bit = readBit(); if (bit < 0) return None
+                val bit = in.bit(); if (bit < 0) return None
                 if (bit == 1 && (math.abs(coef(blk)(k)) & p1) == 0)
                   coef(blk)(k) += (if (coef(blk)(k) >= 0) p1 else m1)
               }
@@ -3977,10 +3332,10 @@ object Multimodal {
         }
         if (eobrun != 0) return None
       }
-      i = k2
-      if (endMarker == 0xd9) sawEoi = true
-      else if (endMarker != 0xda) return None
-      if (!sawEoi) { /* next scan header parsed at loop top */ }
+      i = data.end
+      val next = b(i + 1) & 0xff
+      if (next == 0xd9) sawEoi = true
+      else if (next != 0xda) return None // the next scan header is parsed at the loop top
     }
     // progression complete: every position refined down to Al = 0
     if (alState.exists(_ != 0)) return None
