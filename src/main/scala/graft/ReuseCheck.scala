@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.functions._
 object ReuseCheck {
   def main(args: Array[String]): Unit = {
     val spark = Tables.localSession(8)

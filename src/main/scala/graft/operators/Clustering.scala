@@ -164,6 +164,18 @@ object Clustering {
       .select(col("cid"), coalesce(col("nv"), col("v")).as("v"))
   }
 
+  /** vec_id re-keys of the scored batch in q202 (serve), q204 (update) and
+    * q205 (stream). Constants, so `entries` can read them while the
+    * object initializes: a plain val declared below `entries` still reads
+    * 0 there, which the oracle SQL would embed. The offset cannot reach
+    * any of the three outputs: vec_id only keys the per-vector argmin
+    * (every id stays distinct) and q205's parity split (the offsets are
+    * even), and no output column carries it.
+    */
+  private[graft] final val batchIdOffset = 10000000L
+  private[graft] final val updBatchIdOffset = 20000000L
+  private[graft] final val streamBatchIdOffset = 30000000L
+
   val entries: Seq[Entry] = Seq(
     // q196: K-MEANS (Lloyd, k=8, 3 rounds) over the embedding corpus in
     // exact fixed-point. Init = the k lowest vec_ids (deterministic, the
@@ -990,9 +1002,6 @@ object Clustering {
              |GROUP BY 1, 2, 3, bm.mc ORDER BY bm.block""".stripMargin))
   )
 
-  private[graft] val updBatchIdOffset = 20000000L
-  private[graft] val streamBatchIdOffset = 30000000L
-
   /** q205's streaming body: arrivals land as files (the q139 discipline),
     * `maxFilesPerTrigger=1` makes each a micro-batch, and every epoch runs
     * the same broadcast-model argmin as q202's batch serve, writing its
@@ -1046,8 +1055,6 @@ object Clustering {
     Dedup.minLabelLoop(s,
       nodes.select(col("id").as("node")),
       edges.select(col("src").as("a_id"), col("dst").as("b_id")))
-
-  private[graft] val batchIdOffset = 10000000L
 
   private[graft] def modelRoot(d: String): String =
     graft.sources.Sources.scratch(d, "kmeans_model")

@@ -550,7 +550,7 @@ object Integrity {
   private def allStrings(
       df: org.apache.spark.sql.DataFrame, key: String)
       : org.apache.spark.sql.DataFrame =
-    df.select(df.columns.map(c => col(c).cast("string").as(c)): _*)
+    df.select(df.columns.toIndexedSeq.map(c => col(c).cast("string").as(c)): _*)
       .orderBy(col(key))
 
   /** q221's body over ANY two table versions: structural statuses from

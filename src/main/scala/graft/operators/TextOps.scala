@@ -27,10 +27,10 @@ object TextOps {
     * corpus instead of the whole merge history. Before r22 the pure
     * declarative form re-executed the cumulative replace chain O(N²)
     * times across training and the per-round checkpoint sat behind the
-    * `graft.bpe.perRoundCheckpoint` conf (default off); with the
-    * serialization HOFs now native kernels that chain recomputation was
-    * the remaining learn cost, and the checkpoint is unconditional
-    * (measured at sf0.1: BPE family 10.4 s → 9.5 s under a worsening
+    * `graft.bpe.perRoundCheckpoint` conf (default off, no longer read);
+    * with the serialization HOFs now native kernels that chain
+    * recomputation was the remaining learn cost, and the checkpoint is
+    * unconditional (measured at sf0.1: BPE family 10.4 s → 9.5 s under a worsening
     * canary). Output is bit-identical — the checkpoint only changes where
     * the plan is cut; TextOpsSuite asserts the flag identity and that
     * N=16 completes in bounded time, and the DuckDB oracle (which unrolls
@@ -40,14 +40,12 @@ object TextOps {
       s: org.apache.spark.sql.SparkSession,
       d: String,
       rounds: Int): org.apache.spark.sql.DataFrame = {
-    val checkpointPerRound =
-      s.conf.get("graft.bpe.perRoundCheckpoint", "false").toBoolean
     val cur0 = Tables.documents(s, d).select(
       concat(
         lit(" "),
         concat_ws("  ", regexp_extract_all(col("text"), lit("[a-z]{1,4}"), lit(0))),
         lit(" ")).as("s"))
-    bpeLearn(cur0, rounds, checkpointPerRound)
+    bpeLearn(cur0, rounds)
   }
 
   /** The learn loop over ANY pre-serialized `s` frame (double-space
@@ -57,8 +55,7 @@ object TextOps {
     */
   private[graft] def bpeLearn(
       cur0: org.apache.spark.sql.DataFrame,
-      rounds: Int,
-      checkpointPerRound: Boolean): org.apache.spark.sql.DataFrame = {
+      rounds: Int): org.apache.spark.sql.DataFrame = {
     // r21: materialize the SERIALIZED corpus once — round 1's pair count
     // and every downstream consumer start from materialized strings
     // instead of re-running the upstream serialization (regex tokenize /
@@ -107,9 +104,8 @@ object TextOps {
         .select(
           lit(r.toLong).as("round"),
           col("x"), col("y"), col("pair_cnt"), col("toks_after"))
-      // the stepped checkpoint above subsumes graft.bpe.perRoundCheckpoint
-      // (kept in the signature for API/conf compatibility): cur already
-      // reads the materialized round output
+      // the stepped checkpoint above: cur already reads the materialized
+      // round output
       cur = stepped.select(col("s"))
       row
     }
@@ -757,7 +753,7 @@ object TextOps {
     // same column. Scale shape per round: one partial-agged pair-count
     // groupBy + a 1-row broadcast top pair + a linear re-segment scan. The
     // lineage of round r embeds rounds 1..r-1, so the pure N-round plan
-    // recomputes the corpus O(N²) times — `graft.bpe.perRoundCheckpoint`
+    // recomputes the corpus O(N²) times — the per-round checkpoint
     // (see bpeVocab) cuts the lineage per round for tokenizer-scale N; at
     // N=4 on the fixtures the default pure plan is cheap and keeps the
     // query a single declarative tree the oracle can unroll as CTEs.

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -1118,9 +1117,7 @@ object Transforms {
         // kernels, which removed the interpreted HOF cost that masked the
         // replace-chain recomputation (q297: 8.9 → 2.0 s at sf0.1)
         val ml = TextOps.bpeLearn(
-          byteDocs(s, d).select(col("s")), rounds = 4,
-          checkpointPerRound =
-            s.conf.get("graft.bpe.perRoundCheckpoint", "false").toBoolean)
+          byteDocs(s, d).select(col("s")), rounds = 4)
           .select(col("round"), col("x"), col("y"))
           .localCheckpoint() // learn ONCE; the apply scan below never re-learns
         byteEncodeRollup(byteDocs(s, d), mergeArray(ml))

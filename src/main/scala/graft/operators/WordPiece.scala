@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
 
 import graft.queries.Entry
 import graft.{Tables => T}
@@ -107,7 +106,7 @@ object WordPiece {
         // word's length (1-row agg over the vocab-bounded table — the
         // walk advances ≥ 1 char per round, so this always terminates
         // every word regardless of corpus)
-        val maxWl = Option(dw.agg(max(length(col("word")))).head.get(0))
+        val maxWl = Option(dw.agg(max(length(col("word")))).head().get(0))
           .map(_.asInstanceOf[Number].intValue).getOrElse(1)
         var g = dw
           .select(col("word"), expr("length(word)").as("wl"),

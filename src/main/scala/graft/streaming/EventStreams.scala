@@ -661,7 +661,7 @@ object EventStreams {
             Transforms.byteSerialize(Tables.documents(s, d)
               .select(col("doc_id"), col("source"), col("text")))
               .select(col("s")),
-            rounds = 4, checkpointPerRound = false)
+            rounds = 4)
             .select(col("round"), col("x"), col("y"))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$root/gen-build/merges")

@@ -482,7 +482,6 @@ class DedupSimilaritySuite extends SparkTestBase {
   }
 
   test("q142 segment append is O(delta) and re-runs converge") {
-    import org.apache.spark.sql.functions._
     import graft.operators.Similarity
     val root = Similarity.pqSegRoot(sf)
     val r1 = Registry.byName("q142_ann_segment_append").q(spark, sf).collect()(0)
@@ -865,7 +864,6 @@ class DedupSimilaritySuite extends SparkTestBase {
   }
 
   test("q211 source matrix: cells tie to the labeled pair set; ppm identity") {
-    import org.apache.spark.sql.functions._
     val rows = Registry.byName("q211_dup_source_matrix").q(spark, sf).collect()
     assert(rows.nonEmpty)
     // cells sum to the confirmed q37 pair count

@@ -215,8 +215,6 @@ class EventOpsSuite extends SparkTestBase {
   }
 
   test("q159 sweep: two-phase day-blocked concurrency equals the global window") {
-    val s = spark
-    import s.implicits._
     val rows = Registry.byName("q159_concurrency_sweep").q(spark, sf).collect()
     assert(rows.nonEmpty)
     // direct global-window recomputation (test-only collect is fine)

@@ -234,23 +234,25 @@ class FeedbackSuite extends SparkTestBase {
   // ----------------------------------------------------------------- q308
 
   test("q308 tar: GNU tar reads the synthesized shards (conformance)") {
-    import scala.sys.process._
-    val doc = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-      .filter(col("doc_id") === 3L).head()
-    val t = Multimodal.TarIn(doc.getLong(0), doc.getString(1),
-      doc.getString(2), doc.getLong(3))
-    val f = java.io.File.createTempFile("graft_tar", ".tar")
-    java.nio.file.Files.write(f.toPath, Multimodal.tarFullBytes(t))
-    val listed = Seq("tar", "-tf", f.getPath).!!.trim.split("\n").toSeq
-    assert(listed == Seq("d3.txt", "d3.json"),
-      "member walk must agree with GNU tar")
-    // and GNU tar must extract the exact payload back
-    val dir = java.nio.file.Files.createTempDirectory("graft_tar_x")
-    assert(Seq("tar", "-xf", f.getPath, "-C", dir.toString).! == 0)
-    val back = new String(java.nio.file.Files.readAllBytes(
-      dir.resolve("d3.txt")), java.nio.charset.StandardCharsets.UTF_8)
-    assert(back == doc.getString(2), "payload round-trip through GNU tar")
+    assertNoTmpdirLeak {
+      import scala.sys.process._
+      val doc = spark.read.parquet(s"$sf/documents.parquet")
+        .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
+        .filter(col("doc_id") === 3L).head()
+      val t = Multimodal.TarIn(doc.getLong(0), doc.getString(1),
+        doc.getString(2), doc.getLong(3))
+      val f = tempFile("graft_tar", ".tar")
+      java.nio.file.Files.write(f.toPath, Multimodal.tarFullBytes(t))
+      val listed = Seq("tar", "-tf", f.getPath).!!.trim.split("\n").toSeq
+      assert(listed == Seq("d3.txt", "d3.json"),
+        "member walk must agree with GNU tar")
+      // and GNU tar must extract the exact payload back
+      val dir = tempDir("graft_tar_x")
+      assert(Seq("tar", "-xf", f.getPath, "-C", dir.toString).! == 0)
+      val back = new String(java.nio.file.Files.readAllBytes(
+        dir.resolve("d3.txt")), java.nio.charset.StandardCharsets.UTF_8)
+      assert(back == doc.getString(2), "payload round-trip through GNU tar")
+    }
   }
 
   test("q308 tar: planted corruption is flagged; parser rejects malformation") {
@@ -306,42 +308,44 @@ class FeedbackSuite extends SparkTestBase {
   }
 
   test("q315 zip: the JDK's own ZipFile agrees; CRC corruption rejected") {
-    val doc = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-      .filter(col("doc_id") === 3L).head()
-    val t = Multimodal.TarIn(doc.getLong(0), doc.getString(1),
-      doc.getString(2), doc.getLong(3))
-    val f = java.io.File.createTempFile("graft_zip", ".zip")
-    java.nio.file.Files.write(f.toPath, Multimodal.zipFullBytes(t))
-    val zf = new java.util.zip.ZipFile(f)
-    try {
-      import scala.jdk.CollectionConverters._
-      val names = zf.entries().asScala.map(_.getName).toSeq
-      assert(names == Seq("d3.txt", "d3.json"),
-        "entry walk must agree with java.util.zip.ZipFile")
-      val in = zf.getInputStream(zf.getEntry("d3.txt"))
-      val back = new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      assert(back == doc.getString(2), "payload round-trip through ZipFile")
-    } finally zf.close()
-    // the planted % 41 corruption: OUR parser flags it, and the JDK's
-    // CRC-checking stream REJECTS it — independent conformance both ways
-    val bad = Multimodal.TarIn(0L, "s", "hello graft", 11L)
-    val ms = Multimodal.parseZipEntries(Multimodal.zipFullBytes(bad)).get
-    assert(!ms(0)._3 && ms(1)._3, "exactly the corrupted entry flagged")
-    val zis = new java.util.zip.ZipInputStream(
-      new java.io.ByteArrayInputStream(Multimodal.zipFullBytes(bad)))
-    zis.getNextEntry()
-    assert(
-      try { zis.readAllBytes(); zis.closeEntry(); false }
-      catch { case _: java.util.zip.ZipException => true },
-      "ZipInputStream must reject the falsified CRC")
-    // malformation battery
-    val good = Multimodal.zipFullBytes(Multimodal.TarIn(1L, "s", "x", 1L))
-    assert(Multimodal.parseZipEntries(good.dropRight(3)).isEmpty, "no EOCD")
-    val badSig = good.clone(); badSig(0) = 'Q'
-    assert(Multimodal.parseZipEntries(badSig).isEmpty, "bad LFH signature")
-    assert(Multimodal.parseZipEntries(good.take(40)).isEmpty, "truncated")
+    assertNoTmpdirLeak {
+      val doc = spark.read.parquet(s"$sf/documents.parquet")
+        .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
+        .filter(col("doc_id") === 3L).head()
+      val t = Multimodal.TarIn(doc.getLong(0), doc.getString(1),
+        doc.getString(2), doc.getLong(3))
+      val f = tempFile("graft_zip", ".zip")
+      java.nio.file.Files.write(f.toPath, Multimodal.zipFullBytes(t))
+      val zf = new java.util.zip.ZipFile(f)
+      try {
+        import scala.jdk.CollectionConverters._
+        val names = zf.entries().asScala.map(_.getName).toSeq
+        assert(names == Seq("d3.txt", "d3.json"),
+          "entry walk must agree with java.util.zip.ZipFile")
+        val in = zf.getInputStream(zf.getEntry("d3.txt"))
+        val back = new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8)
+        assert(back == doc.getString(2), "payload round-trip through ZipFile")
+      } finally zf.close()
+      // the planted % 41 corruption: OUR parser flags it, and the JDK's
+      // CRC-checking stream REJECTS it — independent conformance both ways
+      val bad = Multimodal.TarIn(0L, "s", "hello graft", 11L)
+      val ms = Multimodal.parseZipEntries(Multimodal.zipFullBytes(bad)).get
+      assert(!ms(0)._3 && ms(1)._3, "exactly the corrupted entry flagged")
+      val zis = new java.util.zip.ZipInputStream(
+        new java.io.ByteArrayInputStream(Multimodal.zipFullBytes(bad)))
+      zis.getNextEntry()
+      assert(
+        try { zis.readAllBytes(); zis.closeEntry(); false }
+        catch { case _: java.util.zip.ZipException => true },
+        "ZipInputStream must reject the falsified CRC")
+      // malformation battery
+      val good = Multimodal.zipFullBytes(Multimodal.TarIn(1L, "s", "x", 1L))
+      assert(Multimodal.parseZipEntries(good.dropRight(3)).isEmpty, "no EOCD")
+      val badSig = good.clone(); badSig(0) = 'Q'
+      assert(Multimodal.parseZipEntries(badSig).isEmpty, "bad LFH signature")
+      assert(Multimodal.parseZipEntries(good.take(40)).isEmpty, "truncated")
+    }
   }
 
   test("q315 rollup ties to the synthesis closed form") {

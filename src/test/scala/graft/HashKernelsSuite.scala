@@ -247,8 +247,7 @@ class HashKernelsSuite extends AnyFunSuite {
 
   test("winnowFps: detection guarantee, density, determinism, short-string degenerate") {
     val w = 16
-    val t = 8
-    val l = w + t - 1 // 23
+    val t = 8 // guarantee threshold L = w + t - 1 = 23
     def fps(s: String) = HashKernels.winnowFps(u(s), w, t).toLongArray().toSet
     // GUARANTEE: any two strings sharing a common substring of length >= L
     // share at least one selected fingerprint, regardless of its position

@@ -22,7 +22,7 @@ class LearnSuite extends SparkTestBase {
       .collect()
       .map(r => Array(1L, r.getLong(0), r.getLong(1), r.getLong(2)))
     val ys = feats.map(x => if ((x(1) - x(2)) * 5 > x(1)) 1L else -1L)
-    var w = Array(0L, 0L, 0L, 0L)
+    val w = Array(0L, 0L, 0L, 0L)
     for (k <- 1 to 6) {
       val mis = feats.indices.filter { i =>
         ys(i) * feats(i).zip(w).map { case (a, b) => a * b }.sum <= 0

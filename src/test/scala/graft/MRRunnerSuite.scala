@@ -59,93 +59,101 @@ class MRRunnerSuite extends SparkTestBase {
   }
 
   test("full run writes exactly R text files in 'key value' format") {
-    val out = Files.createTempDirectory("mr_out").toString
-    val spec = MRSpec(
-      nWorkers = 4,
-      workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
-      inputFiles = corpus,
-      outputDir = out,
-      nOutputFiles = 8,
-      mapKilobytes = 500,
-      userId = "cs6210")
-    MRRunner.run(spark, spec)
-    val parts = Files.list(Paths.get(out)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
-    assert(parts.size == 8, s"expected 8 part files, got $parts")
-    val lines = parts.flatMap(p =>
-      Files.readAllLines(Paths.get(out, p)).asScala)
-    assert(lines.nonEmpty)
-    assert(lines.forall(_.matches("\\S+ \\S+")), "sink lines must be 'key value'")
+    assertNoTmpdirLeak {
+      val out = tempDir("mr_out").toString
+      val spec = MRSpec(
+        nWorkers = 4,
+        workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
+        inputFiles = corpus,
+        outputDir = out,
+        nOutputFiles = 8,
+        mapKilobytes = 500,
+        userId = "cs6210")
+      MRRunner.run(spark, spec)
+      val parts = Files.list(Paths.get(out)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("part-")).toSeq
+      assert(parts.size == 8, s"expected 8 part files, got $parts")
+      val lines = parts.flatMap(p =>
+        Files.readAllLines(Paths.get(out, p)).asScala)
+      assert(lines.nonEmpty)
+      assert(lines.forall(_.matches("\\S+ \\S+")), "sink lines must be 'key value'")
+    }
   }
 
   test("spec INI parse + validation mirrors the reference's checks") {
-    val outDir = Files.createTempDirectory("mr_spec_out").toString
-    val ini =
-      s"""n_workers=2
-        |worker_ipaddr_ports=localhost:5000,localhost:5001
-        |input_files=${corpus.head}
-        |output_dir=$outDir
-        |n_output_files=4
-        |map_kilobytes=500
-        |user_id=cs6210""".stripMargin
-    val spec = MRSpec.fromIni(ini)
-    assert(spec.nWorkers == 2 && spec.nOutputFiles == 4)
-    assert(MRSpec.validate(spec).isEmpty)
+    assertNoTmpdirLeak {
+      val outDir = tempDir("mr_spec_out").toString
+      val ini =
+        s"""n_workers=2
+          |worker_ipaddr_ports=localhost:5000,localhost:5001
+          |input_files=${corpus.head}
+          |output_dir=$outDir
+          |n_output_files=4
+          |map_kilobytes=500
+          |user_id=cs6210""".stripMargin
+      val spec = MRSpec.fromIni(ini)
+      assert(spec.nWorkers == 2 && spec.nOutputFiles == 4)
+      assert(MRSpec.validate(spec).isEmpty)
 
-    assert(MRSpec.validate(spec.copy(nWorkers = 3)).exists(_.contains("n_workers")))
-    assert(MRSpec.validate(spec.copy(workerAddrs = Seq("localhost:99999", "x")))
-      .exists(_.contains("port")))
-    assert(MRSpec.validate(spec.copy(inputFiles = Seq("/no/such/file")))
-      .exists(_.contains("missing")))
-    assert(MRSpec.validate(spec.copy(mapKilobytes = 0)).nonEmpty)
-    assert(MRSpec.validate(spec.copy(userId = "")).nonEmpty)
+      assert(MRSpec.validate(spec.copy(nWorkers = 3)).exists(_.contains("n_workers")))
+      assert(MRSpec.validate(spec.copy(workerAddrs = Seq("localhost:99999", "x")))
+        .exists(_.contains("port")))
+      assert(MRSpec.validate(spec.copy(inputFiles = Seq("/no/such/file")))
+        .exists(_.contains("missing")))
+      assert(MRSpec.validate(spec.copy(mapKilobytes = 0)).nonEmpty)
+      assert(MRSpec.validate(spec.copy(userId = "")).nonEmpty)
+    }
   }
 
   test("spec validation probes output-dir writability (mapreduce_spec.h:147-155)") {
-    val spec = MRSpec(
-      nWorkers = 1,
-      workerAddrs = Seq("localhost:5000"),
-      inputFiles = corpus.take(1),
-      outputDir = "/proc/graft_no_such_writable_dir",
-      nOutputFiles = 1,
-      mapKilobytes = 500,
-      userId = "cs6210")
-    // /proc: exists-as-dir check passes for /proc itself? use both shapes —
-    // a missing dir and an unwritable existing dir must each be rejected
-    assert(MRSpec.validate(spec).exists(e =>
-      e.contains("not writable") || e.contains("missing or not a directory")))
-    assert(MRSpec.validate(spec.copy(outputDir = "/proc"))
-      .exists(_.contains("not writable")))
-    val ok = Files.createTempDirectory("mr_probe").toString
-    assert(!MRSpec.validate(spec.copy(outputDir = ok))
-      .exists(e => e.contains("not writable") || e.contains("missing")))
+    assertNoTmpdirLeak {
+      val spec = MRSpec(
+        nWorkers = 1,
+        workerAddrs = Seq("localhost:5000"),
+        inputFiles = corpus.take(1),
+        outputDir = "/proc/graft_no_such_writable_dir",
+        nOutputFiles = 1,
+        mapKilobytes = 500,
+        userId = "cs6210")
+      // /proc: exists-as-dir check passes for /proc itself? use both shapes —
+      // a missing dir and an unwritable existing dir must each be rejected
+      assert(MRSpec.validate(spec).exists(e =>
+        e.contains("not writable") || e.contains("missing or not a directory")))
+      assert(MRSpec.validate(spec.copy(outputDir = "/proc"))
+        .exists(_.contains("not writable")))
+      val ok = tempDir("mr_probe").toString
+      assert(!MRSpec.validate(spec.copy(outputDir = ok))
+        .exists(e => e.contains("not writable") || e.contains("missing")))
+    }
   }
 
   test("run() restores the session split-size conf it scoped to the job") {
-    // the job's 64 KB split size must actually cut the input file
-    assert(Files.size(Paths.get(corpus.head)) > 64 * 1024)
-    val key = "spark.sql.files.maxPartitionBytes"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "134217728")
-    try {
-      val out = Files.createTempDirectory("mr_conf_out").toString
-      val spec = MRSpec(
-        nWorkers = 2,
-        workerAddrs = Seq("localhost:5000", "localhost:5001"),
-        inputFiles = corpus.take(1),
-        outputDir = out,
-        nOutputFiles = 2,
-        mapKilobytes = 64,
-        userId = "cs6210")
-      MRRunner.run(spark, spec)
-      // the MR job ran with its own 64 KB split size, but the session conf
-      // must come back exactly as it was — later queries in the same session
-      // must not inherit the job's split size
-      assert(spark.conf.get(key) == "134217728",
-        s"run() leaked its split-size override: ${spark.conf.get(key)}")
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    assertNoTmpdirLeak {
+      // the job's 64 KB split size must actually cut the input file
+      assert(Files.size(Paths.get(corpus.head)) > 64 * 1024)
+      val key = "spark.sql.files.maxPartitionBytes"
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, "134217728")
+      try {
+        val out = tempDir("mr_conf_out").toString
+        val spec = MRSpec(
+          nWorkers = 2,
+          workerAddrs = Seq("localhost:5000", "localhost:5001"),
+          inputFiles = corpus.take(1),
+          outputDir = out,
+          nOutputFiles = 2,
+          mapKilobytes = 64,
+          userId = "cs6210")
+        MRRunner.run(spark, spec)
+        // the MR job ran with its own 64 KB split size, but the session conf
+        // must come back exactly as it was — later queries in the same session
+        // must not inherit the job's split size
+        assert(spark.conf.get(key) == "134217728",
+          s"run() leaked its split-size override: ${spark.conf.get(key)}")
+      } finally before match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
     }
   }
 
@@ -187,7 +195,7 @@ class MRRunnerSuite extends SparkTestBase {
     * shuffle records that the job's successful tasks wrote.
     */
   private def runCountingShuffle(userId: String): (Path, Long) = {
-    val out = Files.createTempDirectory("mr_combiner")
+    val out = tempDir("mr_combiner")
     val spec = MRSpec(
       nWorkers = 4,
       workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
@@ -224,37 +232,41 @@ class MRRunnerSuite extends SparkTestBase {
       .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.getFileName.toString)
 
   test("combiner: word count writes the same R part files, byte for byte, as the uncombined job") {
-    val (combined, _) = runCountingShuffle("wordcount")
-    val (plain, _) = runCountingShuffle("wordcount-uncombined")
-    val (a, b) = (partFiles(combined), partFiles(plain))
-    assert(a.size == 8 && b.size == 8, s"expected 8 part files each, got ${a.size} and ${b.size}")
-    a.zip(b).foreach { case (x, y) =>
-      assert(Files.size(x) > 0, s"$x is empty")
-      assert(java.util.Arrays.equals(Files.readAllBytes(x), Files.readAllBytes(y)),
-        s"${x.getFileName} differs from ${y.getFileName}")
+    assertNoTmpdirLeak {
+      val (combined, _) = runCountingShuffle("wordcount")
+      val (plain, _) = runCountingShuffle("wordcount-uncombined")
+      val (a, b) = (partFiles(combined), partFiles(plain))
+      assert(a.size == 8 && b.size == 8, s"expected 8 part files each, got ${a.size} and ${b.size}")
+      a.zip(b).foreach { case (x, y) =>
+        assert(Files.size(x) > 0, s"$x is empty")
+        assert(java.util.Arrays.equals(Files.readAllBytes(x), Files.readAllBytes(y)),
+          s"${x.getFileName} differs from ${y.getFileName}")
+      }
     }
   }
 
   test("combiner: word count shuffles one record per (map task, word), the uncombined job one per token") {
-    val (_, combined) = runCountingShuffle("wordcount")
-    val (_, plain) = runCountingShuffle("wordcount-uncombined")
-    // the same 64 KB splits as the job's map tasks, counted independently
-    val key = "spark.sql.files.maxPartitionBytes"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, 64L * 1024)
-    val lines =
-      try spark.read.textFile(corpus: _*).rdd
-      finally before match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    val tasks = lines.getNumPartitions
-    val taskWords = lines.mapPartitions(it => it.flatMap(WordCount.tokenize).distinct).count()
-    val tokens = lines.flatMap(WordCount.tokenize).count()
-    assert(tasks > 1, s"expected several map tasks, got $tasks")
-    assert(combined == taskWords, s"combined job shuffled $combined records, expected $taskWords")
-    assert(plain == tokens, s"uncombined job shuffled $plain records, expected $tokens")
-    assert(combined < plain)
+    assertNoTmpdirLeak {
+      val (_, combined) = runCountingShuffle("wordcount")
+      val (_, plain) = runCountingShuffle("wordcount-uncombined")
+      // the same 64 KB splits as the job's map tasks, counted independently
+      val key = "spark.sql.files.maxPartitionBytes"
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, 64L * 1024)
+      val lines =
+        try spark.read.textFile(corpus: _*).rdd
+        finally before match {
+          case Some(v) => spark.conf.set(key, v)
+          case None    => spark.conf.unset(key)
+        }
+      val tasks = lines.getNumPartitions
+      val taskWords = lines.mapPartitions(it => it.flatMap(WordCount.tokenize).distinct).count()
+      val tokens = lines.flatMap(WordCount.tokenize).count()
+      assert(tasks > 1, s"expected several map tasks, got $tasks")
+      assert(combined == taskWords, s"combined job shuffled $combined records, expected $taskWords")
+      assert(plain == tokens, s"uncombined job shuffled $plain records, expected $tokens")
+      assert(combined < plain)
+    }
   }
 }
 

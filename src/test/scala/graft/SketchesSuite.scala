@@ -74,7 +74,7 @@ class SketchesSuite extends SparkTestBase {
       .select(expr("CAST(l_orderkey * 10 + l_linenumber AS STRING)").as("k"),
         col("l_partkey"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    def registers(ks: Seq[String]): Array[Long] = {
+    def registers(ks: Array[String]): Array[Long] = {
       val reg = new Array[Long](1024)
       ks.foreach { k =>
         val h = md5hex("hll:v1:" + k)

@@ -151,32 +151,34 @@ class SourcesSuite extends SparkTestBase {
   }
 
   test("compactEpochs: rows preserved, idempotent, later commits append on top") {
-    import graft.sources.Sources
-    val root = java.nio.file.Files.createTempDirectory("graft_ec").toString + "/tbl"
-    val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
-    val n = ev.count()
-    (0 until 3).foreach { b =>
-      Sources.commitEpoch(spark, root, ev.filter(pmod(col("event_id"), lit(3)) === b),
-        f"epoch-$b%09d")
+    assertNoTmpdirLeak {
+      import graft.sources.Sources
+      val root = tempDir("graft_ec").toString + "/tbl"
+      val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
+      val n = ev.count()
+      (0 until 3).foreach { b =>
+        Sources.commitEpoch(spark, root, ev.filter(pmod(col("event_id"), lit(3)) === b),
+          f"epoch-$b%09d")
+      }
+      assert(Sources.committedEpochs(spark, root).size == 3)
+      Sources.compactEpochs(spark, root, parts = 2)
+      val after = Sources.committedEpochs(spark, root)
+      assert(after.size == 1, s"expected single compacted epoch, got $after")
+      assert(Sources.readEpochs(spark, root).count() == n, "compaction lost/duplicated rows")
+      // idempotent: a second compaction of an already-compact list is a no-op
+      // (same manifest content — the single epoch name is unchanged)
+      Sources.compactEpochs(spark, root, parts = 2)
+      assert(Sources.committedEpochs(spark, root) == after)
+      // the stream keeps running after a compaction: a new epoch appends
+      // beside the compacted one and both resolve through one manifest read
+      Sources.commitEpoch(spark, root, ev.limit(9), "epoch-000000099")
+      assert(Sources.committedEpochs(spark, root).size == 2)
+      assert(Sources.readEpochs(spark, root).count() == n + 9)
+      // and compacting again folds both into one fresh dir, rows intact
+      Sources.compactEpochs(spark, root, parts = 1)
+      assert(Sources.committedEpochs(spark, root).size == 1)
+      assert(Sources.readEpochs(spark, root).count() == n + 9)
     }
-    assert(Sources.committedEpochs(spark, root).size == 3)
-    Sources.compactEpochs(spark, root, parts = 2)
-    val after = Sources.committedEpochs(spark, root)
-    assert(after.size == 1, s"expected single compacted epoch, got $after")
-    assert(Sources.readEpochs(spark, root).count() == n, "compaction lost/duplicated rows")
-    // idempotent: a second compaction of an already-compact list is a no-op
-    // (same manifest content — the single epoch name is unchanged)
-    Sources.compactEpochs(spark, root, parts = 2)
-    assert(Sources.committedEpochs(spark, root) == after)
-    // the stream keeps running after a compaction: a new epoch appends
-    // beside the compacted one and both resolve through one manifest read
-    Sources.commitEpoch(spark, root, ev.limit(9), "epoch-000000099")
-    assert(Sources.committedEpochs(spark, root).size == 2)
-    assert(Sources.readEpochs(spark, root).count() == n + 9)
-    // and compacting again folds both into one fresh dir, rows intact
-    Sources.compactEpochs(spark, root, parts = 1)
-    assert(Sources.committedEpochs(spark, root).size == 1)
-    assert(Sources.readEpochs(spark, root).count() == n + 9)
   }
 
   test("q242 compaction plan equals a sequential per-source packing replay") {

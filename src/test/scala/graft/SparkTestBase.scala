@@ -14,11 +14,53 @@ object SparkTestBase {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  private def tmpdir = new java.io.File(System.getProperty("java.io.tmpdir"))
+
+  private def scratchDir: java.nio.file.Path =
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(graft.sources.Sources.scratchRoot))
+
+  /** Runs once before any listing, so that what the JVM puts in
+    * java.io.tmpdir once (the session's dirs, native codec libraries) is
+    * there already: a shuffle, and a parquet write and read under the
+    * scratch root.
+    */
+  private lazy val warmed: Unit = {
+    val dir = s"${scratchDir}/tmpdir_warmup"
+    spark.range(8).repartition(2).write.mode("overwrite").parquet(dir)
+    assert(spark.read.parquet(dir).count() == 8L)
+  }
 }
 
 trait SparkTestBase extends AnyFunSuite {
+  import SparkTestBase.{scratchDir, tmpdir, warmed}
+
   def spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
+
+  /** A fresh temp directory under the JVM's scratch root, which
+    * `Tables.deleteOnExit` removes at exit: a test's temp paths never
+    * outlive the JVM as entries of java.io.tmpdir.
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchDir, prefix)
+
+  /** A fresh temp file under the JVM's scratch root (see [[tempDir]]). */
+  def tempFile(prefix: String, suffix: String): java.io.File =
+    java.nio.file.Files.createTempFile(scratchDir, prefix, suffix).toFile
+
+  /** Runs `body`, then fails if it added an entry to java.io.tmpdir other
+    * than the scratch root.
+    */
+  def assertNoTmpdirLeak(body: => Unit): Unit = {
+    warmed
+    val before = tmpdir.list().toSet
+    body
+    val added = tmpdir.list().toSet -- before -
+      new java.io.File(graft.sources.Sources.scratchRoot).getName
+    assert(added.isEmpty, s"new entries in $tmpdir: $added")
+  }
 
   /** Flatten an executed plan across AQE wrappers (AdaptiveSparkPlanExec,
     * query stages, reused stages) into every physical node — the typed

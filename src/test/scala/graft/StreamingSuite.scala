@@ -148,48 +148,47 @@ class StreamingSuite extends SparkTestBase {
   }
 
   test("interval-state sessionize handles a hot user and out-of-order arrival") {
-    val s = spark
-    import s.implicits._
-    val gapNs = 30L * 60 * 1000 * 1000 * 1000
-    // 100k events for ONE user: runs of 1000 events 1s apart, then a jump
-    // past the gap → 100 sessions. Shuffled order: interval state must not
-    // depend on arrival order (and must never buffer/sort the batch).
-    val nRuns = 100
-    val perRun = 1000
-    val ts = for {
-      r <- 0 until nRuns
-      i <- 0 until perRun
-    } yield r.toLong * (perRun * 1000000000L + 2 * gapNs) + i * 1000000000L
-    val shuffled = new scala.util.Random(7).shuffle(ts.toVector)
-    import scala.collection.mutable.ArrayBuffer
-    val buf = ArrayBuffer.empty[EventStreams.SessionInterval]
-    shuffled.foreach(t => EventStreams.mergeEvent(buf, t, gapNs))
-    assert(buf.length == nRuns, s"expected $nRuns sessions, got ${buf.length}")
-    assert(buf.iterator.map(_.n).sum == nRuns.toLong * perRun)
-    // and through the real streaming operator (single AvailableNow batch)
-    val dir = java.nio.file.Files.createTempDirectory("hot_events").toString
-    shuffled.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, 42L, "view", 1.0) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .coalesce(4).write.parquet(s"$dir/e")
-    val src = spark.readStream
-      .schema(spark.read.parquet(s"$dir/e").schema)
-      .parquet(s"$dir/e")
-      .as[EventStreams.EventRow]
-    val row = BoundedStreams.toMemory(
-      EventStreams.sessionize(src), "test_hot_sessionize", OutputMode.Append)
-      .groupBy(col("user_id"))
-      .agg(max(col("n_sessions")).as("s"), max(col("n_events")).as("n"))
-      .head()
-    assert(row.getLong(1) == nRuns.toLong && row.getLong(2) == nRuns.toLong * perRun)
+    assertNoTmpdirLeak {
+      val s = spark
+      import s.implicits._
+      val gapNs = 30L * 60 * 1000 * 1000 * 1000
+      // 100k events for ONE user: runs of 1000 events 1s apart, then a jump
+      // past the gap → 100 sessions. Shuffled order: interval state must not
+      // depend on arrival order (and must never buffer/sort the batch).
+      val nRuns = 100
+      val perRun = 1000
+      val ts = for {
+        r <- 0 until nRuns
+        i <- 0 until perRun
+      } yield r.toLong * (perRun * 1000000000L + 2 * gapNs) + i * 1000000000L
+      val shuffled = new scala.util.Random(7).shuffle(ts.toVector)
+      import scala.collection.mutable.ArrayBuffer
+      val buf = ArrayBuffer.empty[EventStreams.SessionInterval]
+      shuffled.foreach(t => EventStreams.mergeEvent(buf, t, gapNs))
+      assert(buf.length == nRuns, s"expected $nRuns sessions, got ${buf.length}")
+      assert(buf.iterator.map(_.n).sum == nRuns.toLong * perRun)
+      // and through the real streaming operator (single AvailableNow batch)
+      val dir = tempDir("hot_events").toString
+      shuffled.zipWithIndex
+        .map { case (t, i) => (i.toLong, t, 42L, "view", 1.0) }
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(4).write.parquet(s"$dir/e")
+      val src = spark.readStream
+        .schema(spark.read.parquet(s"$dir/e").schema)
+        .parquet(s"$dir/e")
+        .as[EventStreams.EventRow]
+      val row = BoundedStreams.toMemory(
+        EventStreams.sessionize(src), "test_hot_sessionize", OutputMode.Append)
+        .groupBy(col("user_id"))
+        .agg(max(col("n_sessions")).as("s"), max(col("n_events")).as("n"))
+        .head()
+      assert(row.getLong(1) == nRuns.toLong && row.getLong(2) == nRuns.toLong * perRun)
+    }
   }
 
   test("flatMapGroupsWithState sessionize == batch window sessionize (q26)") {
     val s = spark
     import s.implicits._
-    val events = Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[EventStreams.EventRow]
     // run the stateful function through a memory-sink stream over the same
     // data. Read with the RAW file schema, then normalize — declaring the
     // normalized Long schema over a TIMESTAMP(MICROS) file would silently
@@ -233,38 +232,38 @@ class StreamingSuite extends SparkTestBase {
   }
 
   test("multi-epoch exactly-once publish: ≥2 epochs, retry no-ops, crash dir invisible") {
-    import graft.sources.Sources
-    val s = spark
-    import s.implicits._
-    // two arrival chunks (even/odd event ids), so exactly two micro-batches
-    val ev = Tables.events(spark, sf)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val src = BoundedStreams.arrivals(spark, "pub_src",
-      Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1)))
-    val root = java.nio.file.Files.createTempDirectory("graft_pub_root").toString + "/tbl"
-    BoundedStreams.forEachBatch(src, "test_epoch_publish") { (batch, batchId) =>
-      Sources.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
+    assertNoTmpdirLeak {
+      import graft.sources.Sources
+      // two arrival chunks (even/odd event ids), so exactly two micro-batches
+      val ev = Tables.events(spark, sf)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      val src = BoundedStreams.arrivals(spark, "pub_src",
+        Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1)))
+      val root = tempDir("graft_pub_root").toString + "/tbl"
+      BoundedStreams.forEachBatch(src, "test_epoch_publish") { (batch, batchId) =>
+        Sources.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
+      }
+      val nEvents = ev.count()
+      assert(Sources.committedEpochs(spark, root).size == 2,
+        "maxFilesPerTrigger=1 over two files must commit two epochs")
+      assert(Sources.readEpochs(spark, root).count() == nEvents)
+      // SIMULATED RETRY of a committed epoch (redelivery after the manifest
+      // swap landed but before the checkpoint recorded it): must NO-OP —
+      // no double-append, and the already-published dir is not rewritten
+      // (we pass a deliberately DIFFERENT batch; any rewrite would change
+      // the union count).
+      Sources.commitEpoch(spark, root, ev, "epoch-000000000")
+      assert(Sources.committedEpochs(spark, root).size == 2, "retry must not add an epoch")
+      assert(Sources.readEpochs(spark, root).count() == nEvents, "retry must not change data")
+      // CRASH-BEFORE-SWAP: a dir written but never listed is invisible
+      ev.limit(5).write.parquet(s"$root/epoch-000000099")
+      assert(Sources.readEpochs(spark, root).count() == nEvents,
+        "unlisted epoch dir must be invisible to readers")
+      // a genuinely new epoch appends exactly its own rows
+      Sources.commitEpoch(spark, root, ev.limit(7), "epoch-000000002")
+      assert(Sources.committedEpochs(spark, root).size == 3)
+      assert(Sources.readEpochs(spark, root).count() == nEvents + 7)
     }
-    val nEvents = ev.count()
-    assert(Sources.committedEpochs(spark, root).size == 2,
-      "maxFilesPerTrigger=1 over two files must commit two epochs")
-    assert(Sources.readEpochs(spark, root).count() == nEvents)
-    // SIMULATED RETRY of a committed epoch (redelivery after the manifest
-    // swap landed but before the checkpoint recorded it): must NO-OP —
-    // no double-append, and the already-published dir is not rewritten
-    // (we pass a deliberately DIFFERENT batch; any rewrite would change
-    // the union count).
-    Sources.commitEpoch(spark, root, ev, "epoch-000000000")
-    assert(Sources.committedEpochs(spark, root).size == 2, "retry must not add an epoch")
-    assert(Sources.readEpochs(spark, root).count() == nEvents, "retry must not change data")
-    // CRASH-BEFORE-SWAP: a dir written but never listed is invisible
-    ev.limit(5).write.parquet(s"$root/epoch-000000099")
-    assert(Sources.readEpochs(spark, root).count() == nEvents,
-      "unlisted epoch dir must be invisible to readers")
-    // a genuinely new epoch appends exactly its own rows
-    Sources.commitEpoch(spark, root, ev.limit(7), "epoch-000000002")
-    assert(Sources.committedEpochs(spark, root).size == 3)
-    assert(Sources.readEpochs(spark, root).count() == nEvents + 7)
   }
 
   test("q176 streaming anomaly monitor emits exactly the batch q153 alerts") {
@@ -357,17 +356,12 @@ class StreamingSuite extends SparkTestBase {
     // exit; a per-run temp dir of their own would outlive the JVM. The
     // first run also extracts what the JVM puts in tmpdir once (native
     // codec libraries, the session's artifact dir), so list around a re-run.
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def runAll(): Unit =
       for (name <- Seq("q139_stream_ingest", "q205_stream_cluster_assign",
           "q220_stream_dead_letter"))
         assert(Registry.byName(name).q(spark, sf).collect().nonEmpty, name)
     runAll()
-    val before = tmp.list().toSet
-    runAll()
-    val added = tmp.list().toSet -- before
-    val scratchRoot = new java.io.File(graft.sources.Sources.scratchRoot).getName
-    assert(added.subsetOf(Set(scratchRoot)), s"new entries in $tmp: $added")
+    assertNoTmpdirLeak(runAll())
   }
 
   test("a bounded stream gives the same rows when it runs twice in one session") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.Registry
 
 /** q327 WordPiece: the fit (count-thresholded substring vocab + char
