@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -533,7 +534,7 @@ object Clustering {
       (s, d) => {
         val root = graft.sources.Sources.scratch(d, "kmeans_model_upd")
         val cur = modelEnsureAt(s, d, root)
-        if (cur.endsWith("gen-base")) {
+        val upd = if (!cur.endsWith("gen-base")) cur else {
           val model = s.read.parquet(s"$cur/model").localCheckpoint()
           val batch = quantized(s, d)
             .select((col("vec_id") + updBatchIdOffset).as("vec_id"), col("v"))
@@ -545,7 +546,7 @@ object Clustering {
             .groupBy(col("cid"), col("i")).agg(sum(col("x")).as("sx"))
             .groupBy(col("cid"))
             .agg(expr("transform(array_sort(collect_list(struct(i, sx))), s -> s.sx)").as("bs"))
-          model
+          Artifacts.publish(s, root, "gen-upd-1")("model" -> model
             .join(bn, Seq("cid"), "left_outer")
             .join(bs, Seq("cid"), "left_outer")
             .withColumn("nn", col("n") + coalesce(col("bn"), lit(0L)))
@@ -554,19 +555,13 @@ object Clustering {
               when(col("bn").isNull || col("nn") === 0L, col("v"))
                 .otherwise(expr("zip_with(v, bs, (a, b) -> (a * n + b) div nn)"))
                 .as("v"),
-              col("nn").as("n"))
-            .write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/gen-upd-1/model")
-          graft.sources.Sources.publishGeneration(s, root, "gen-upd-1")
+              col("nn").as("n")))
         }
         val base = s.read.parquet(s"$root/gen-base/model")
           .select(col("cid"), col("v").as("v_old"), col("n").as("n_old"))
-        val upd = s.read
-          .parquet(s"${graft.sources.Sources.currentGeneration(s, root)}/model")
-          .select(col("cid"), col("v").as("v_new"), col("n").as("n_new"))
         base
-          .join(upd, Seq("cid"))
+          .join(s.read.parquet(s"$upd/model")
+            .select(col("cid"), col("v").as("v_new"), col("n").as("n_new")), Seq("cid"))
           .select(
             col("cid"),
             col("n_old"),
@@ -1061,8 +1056,8 @@ object Clustering {
 
   /** Train-once / publish-once: if the model root has no manifest, run the
     * q196 recursion and publish the centroid table as generation `gen-base`
-    * behind the atomic manifest swap ([[graft.sources.Sources
-    * .publishGeneration]]). Deterministic content → idempotent by
+    * behind the atomic manifest swap ([[Artifacts.ensure]]).
+    * Deterministic content → idempotent by
     * construction (a re-run writes identical bytes); the Overwrite mode
     * also heals a half-written dir from a crashed earlier attempt.
     */
@@ -1075,20 +1070,12 @@ object Clustering {
     * model carries per-cluster sizes (final-assignment counts) alongside
     * the centroids — the weights the incremental update verb needs.
     */
-  private[graft] def modelEnsureAt(s: SparkSession, d: String, root: String): String = {
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) {
+  private[graft] def modelEnsureAt(s: SparkSession, d: String, root: String): String =
+    Artifacts.ensure(s, root, "gen-base") {
       val (lastAssign, centroids) = run(s, d, Rounds)
       val sizes = lastAssign.groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      centroids
+      Seq("model" -> centroids
         .join(sizes, Seq("cid"), "left_outer")
-        .select(col("cid"), col("v"), coalesce(col("n"), lit(0L)).as("n"))
-        .write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/gen-base/model")
-      graft.sources.Sources.publishGeneration(s, root, "gen-base")
+        .select(col("cid"), col("v"), coalesce(col("n"), lit(0L)).as("n")))
     }
-    graft.sources.Sources.currentGeneration(s, root)
-  }
 }

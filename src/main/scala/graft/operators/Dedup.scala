@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.sources.Artifacts
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -689,8 +690,8 @@ object Dedup {
     * ≥ 2^k − 1 hops (neighbor-min extends the frontier, the jump composes
     * the mapping with itself), so rounds are logarithmic in component
     * diameter: the fixtures (max observed diameter 13 at sf0.1) converge
-    * in ≤ ~5 rounds; the `graft.dedup.ccMaxRounds` cap (default 20 ⇒
-    * reach ≥ 2^20 hops) fails loudly rather than return an unconverged
+    * in ≤ ~5 rounds; the [[CcMaxRounds]] cap (20 ⇒ reach ≥ 2^20 hops)
+    * fails loudly rather than return an unconverged
     * labeling, and the DuckDB oracle (TRUE transitive closure via
     * recursive CTE) would catch one anyway.
     *
@@ -742,10 +743,10 @@ object Dedup {
     * representatives instead of expanded doc pairs. Semantics unchanged:
     * label = min node id of the connected component.
     */
+  private val CcMaxRounds = 20
+
   private[graft] def minLabelLoop(
       s: SparkSession, nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val maxRounds = s.conf.get("graft.dedup.ccMaxRounds", "20").toInt
-    require(maxRounds >= 1, s"graft.dedup.ccMaxRounds must be >= 1, got $maxRounds")
     val edgesRaw = pairs
       .unionByName(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .toDF("src", "dst")
@@ -781,15 +782,13 @@ object Dedup {
       .localCheckpoint()
     var converged = false
     var r = 0
-    while (!converged && r < maxRounds) {
+    while (!converged && r < CcMaxRounds) {
       val next = minLabelRound(labels, edges, k).localCheckpoint()
       converged = next.filter(col("label") =!= col("prev")).isEmpty
       labels = next.select(col("node"), col("label"))
       r += 1
     }
-    require(converged,
-      s"neardup clustering did not converge in $maxRounds rounds " +
-        "(raise graft.dedup.ccMaxRounds)")
+    require(converged, s"neardup clustering did not converge in $CcMaxRounds rounds")
     labels
   }
 
@@ -938,29 +937,23 @@ object Dedup {
         lit(2)).as("bands"),
       array_sort(shingleFeat(col("text"))).as("hf"))
 
-  /** Train-free build: ONE corpus scan computes the index rows; codebookless
-    * (the hash family is the frozen parameter set), published atomically via
-    * Sources.publishGeneration — readers see the old complete index or the
-    * new complete one, never a mix. */
-  private[graft] def dedupIndexBuild(
-      s: SparkSession, d: String, rootOverride: Option[String] = None): Unit = {
-    val root = rootOverride.getOrElse(dedupIndexRoot(d))
-    val gen = "gen-build"
-    dedupIndexRows(Tables.documents(s, d).select(col("doc_id"), col("text")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/index")
-    graft.sources.Sources.publishGeneration(s, root, gen)
-  }
+  /** The one part of an index generation (`<gen>/index`): ONE corpus scan
+    * computes the index rows; codebookless (the hash family is the frozen
+    * parameter set). */
+  private def dedupIndexParts(s: SparkSession, d: String): Seq[(String, DataFrame)] =
+    Seq("index" -> dedupIndexRows(Tables.documents(s, d).select(col("doc_id"), col("text"))))
+
+  /** Train-free build, published atomically as generation `gen-build` of
+    * the q131/q132 root — readers see the old complete index or the new
+    * complete one, never a mix. Returns the generation path. */
+  private[graft] def dedupIndexBuild(s: SparkSession, d: String): String =
+    Artifacts.publish(s, dedupIndexRoot(d), "gen-build")(dedupIndexParts(s, d): _*)
 
   /** Build-if-absent + manifest resolve (the q109/q122 setup pattern, so
     * the registered queries are self-contained in any driver order). */
   private[graft] def dedupIndexEnsure(
-      s: SparkSession, root: String, d: String): String = {
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) dedupIndexBuild(s, d, Some(root))
-    graft.sources.Sources.currentGeneration(s, root)
-  }
+      s: SparkSession, root: String, d: String): String =
+    Artifacts.ensure(s, root, "gen-build")(dedupIndexParts(s, d))
 
   /** The arriving batch (fixture fabrication, the q98/q122 pattern):
     * even-id docs re-ingested verbatim under +10M ids — every batch doc has
@@ -1088,16 +1081,13 @@ object Dedup {
   private[graft] def dedupIsDeleted(id: Column): Column =
     id >= dedupDelLo && id < dedupDelHi
 
-  private[graft] def dedupIndexDelete(s: SparkSession, d: String): Unit = {
+  private[graft] def dedupIndexDelete(s: SparkSession, d: String): String = {
     val root = dedupIndexDelRoot(d)
     val cur = dedupIndexEnsure(s, root, d)
     val survivors = s.read.parquet(s"$cur/index")
       .filter(!dedupIsDeleted(col("doc_id")))
       .localCheckpoint() // never read the dir being superseded mid-write
-    val gen = Similarity.nextGen(cur, "gen-del-")
-    survivors.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/index")
-    graft.sources.Sources.publishGeneration(s, root, gen)
+    Artifacts.publish(s, root, Artifacts.nextGen(cur, "gen-del-"))("index" -> survivors)
   }
 
   /** q138 INGEST LOOP — the production shape that composes the lifecycle
@@ -1146,7 +1136,7 @@ object Dedup {
     * O(index) bytes per chunk. Fine at the daily-compaction cadence this
     * models; a high-frequency ingest would instead append each chunk's
     * admitted rows as an epoch dir under the cumulative manifest
-    * (Sources.commitEpoch — exactly q123's machinery, with q129's
+    * (Artifacts.commitEpoch — exactly q123's machinery, with q129's
     * compaction as the maintenance verb) and read the index as the union
     * of epochs, making the per-chunk write O(chunk). */
   private[graft] def ingestChunk(
@@ -1166,11 +1156,8 @@ object Dedup {
       .localCheckpoint()
     val novelRows = batch.join(
       matched.select(col("new_id").as("doc_id")), Seq("doc_id"), "left_anti")
-    val gen = Similarity.nextGen(cur, "gen-ing-")
-    visible.unionByName(novelRows)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/index")
-    graft.sources.Sources.publishGeneration(s, root, gen)
+    Artifacts.publish(s, root, Artifacts.nextGen(cur, "gen-ing-"))(
+      "index" -> visible.unionByName(novelRows))
     // the disposition manifest (what a pipeline logs per chunk)
     batch.select(col("doc_id").as("new_id"))
       .join(matched, Seq("new_id"), "left")
@@ -1217,7 +1204,7 @@ object Dedup {
       // is the chunk's log — not needed for the final accounting
       ingestChunk(chunk.sparkSession, root, d, chunk)
     }
-    val gen = graft.sources.Sources.currentGeneration(s, root)
+    val gen = Artifacts.currentGeneration(s, root)
     s.read.parquet(s"$gen/index")
       .agg(
         count(lit(1)).as("n_index_rows"),
@@ -1233,22 +1220,20 @@ object Dedup {
     * generation — old rows ∪ batch rows under the FROZEN hash family (no
     * re-banding, no corpus re-scan; an append touches only the delta).
     * Idempotent by content (prior batch rows dropped before the union);
-    * each run publishes under a FRESH generation name (Similarity.nextGen)
+    * each run publishes under a FRESH generation name (Artifacts.nextGen)
     * so a re-run never Overwrites the directory `_current` points at while
     * a reader scans it. Runs on its own root so q132's serve path stays
-    * pristine (the q122 isolation pattern). */
+    * pristine (the q122 isolation pattern). Returns the published
+    * generation. */
   private[graft] def dedupIndexUpdate(
-      s: SparkSession, d: String, rootOverride: Option[String] = None): Unit = {
+      s: SparkSession, d: String, rootOverride: Option[String] = None): String = {
     val root = rootOverride.getOrElse(dedupIndexUpdRoot(d))
     val cur = dedupIndexEnsure(s, root, d)
     val old = s.read.parquet(s"$cur/index")
       .filter(col("doc_id") < dedupBatchIdOffset)
       .localCheckpoint() // never read the dir being superseded mid-write
-    val gen = Similarity.nextGen(cur, "gen-upd-")
-    old.unionByName(dedupIndexRows(dedupBatch(s, d)))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/index")
-    graft.sources.Sources.publishGeneration(s, root, gen)
+    Artifacts.publish(s, root, Artifacts.nextGen(cur, "gen-upd-"))(
+      "index" -> old.unionByName(dedupIndexRows(dedupBatch(s, d))))
   }
 
   // ---- q144: SEGMENTED dedup index — O(delta) append, multi-segment serve ----
@@ -1270,24 +1255,20 @@ object Dedup {
     * can only happen if the serve read both segments. The oracle replays
     * brute-force Jaccard of the probes against corpus ∪ appended batch.
     * q143's compaction verb applies to this root verbatim (shared
-    * Sources.compactEpochs machinery — segments are segments).
+    * Artifacts.compactEpochs machinery — segments are segments).
     */
   private[graft] def dedupSegServe(s: SparkSession, d: String): DataFrame = {
-    val root = dedupSegRoot(d)
-    val idxRoot = s"$root/index"
-    val manifest = new org.apache.hadoop.fs.Path(s"$idxRoot/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest))
-      graft.sources.Sources.commitEpoch(s, idxRoot,
-        dedupIndexRows(Tables.documents(s, d).select(col("doc_id"), col("text"))),
-        "seg-000-base")
-    graft.sources.Sources.commitEpoch(s, idxRoot,
-      dedupIndexRows(dedupBatch(s, d)), "seg-001")
+    val idxRoot = s"${dedupSegRoot(d)}/index"
+    // each commit is a no-op once its segment is listed
+    Artifacts.commitEpoch(s, idxRoot,
+      dedupIndexRows(Tables.documents(s, d).select(col("doc_id"), col("text"))),
+      "seg-000-base")
+    Artifacts.commitEpoch(s, idxRoot, dedupIndexRows(dedupBatch(s, d)), "seg-001")
     val probes = dedupIndexRows(
       Tables.documents(s, d).filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
       .localCheckpoint() // two consumers: bands → candidates, hf → confirm
-    dedupMatchesOn(graft.sources.Sources.readEpochs(s, idxRoot), probes)
+    dedupMatchesOn(Artifacts.readEpochs(s, idxRoot), probes)
       .groupBy(col("new_id"))
       .agg(count(lit(1)).as("n_dups"), min(col("old_id")).as("keep_id"),
         round(max(col("jac")), 4).as("best_jac"))
@@ -1299,7 +1280,7 @@ object Dedup {
     * (q142 append + q143 compaction) but the segmented dedup index had
     * only append (q144), so a day of batch ingests leaves N segment dirs
     * whose manifest list becomes the read-planning bottleneck — exactly
-    * the failure q129/q143 exist to prevent. Reuses Sources.compactEpochs
+    * the failure q129/q143 exist to prevent. Reuses Artifacts.compactEpochs
     * verbatim (segments are epochs): rewrite the union of listed segments
     * into ONE dir + one atomic manifest swap; superseded dirs await TTL GC.
     *
@@ -1314,32 +1295,29 @@ object Dedup {
     */
   private[graft] def dedupSegCompact(s: SparkSession, d: String): DataFrame = {
     val root = graft.sources.Sources.scratch(d, "dedup_index_seg_cmp")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    Artifacts.fresh(s, root)
     val idxRoot = s"$root/index"
-    graft.sources.Sources.commitEpoch(s, idxRoot,
+    Artifacts.commitEpoch(s, idxRoot,
       dedupIndexRows(Tables.documents(s, d).select(col("doc_id"), col("text"))),
       "seg-000-base")
-    graft.sources.Sources.commitEpoch(s, idxRoot,
-      dedupIndexRows(dedupBatch(s, d)), "seg-001")
+    Artifacts.commitEpoch(s, idxRoot, dedupIndexRows(dedupBatch(s, d)), "seg-001")
     val probes = dedupIndexRows(
       Tables.documents(s, d).filter(col("doc_id") % 2 === 0)
         .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
       .localCheckpoint() // two consumers: bands → candidates, hf → confirm
     def serve(): DataFrame =
-      dedupMatchesOn(graft.sources.Sources.readEpochs(s, idxRoot), probes)
-    val nBefore = graft.sources.Sources.committedEpochs(s, idxRoot).size
+      dedupMatchesOn(Artifacts.readEpochs(s, idxRoot), probes)
+    val nBefore = Artifacts.committedEpochs(s, idxRoot).size
     val before = serve().localCheckpoint() // manifest moves next
-    graft.sources.Sources.compactEpochs(s, idxRoot, 4)
-    val nAfter = graft.sources.Sources.committedEpochs(s, idxRoot).size
+    Artifacts.compactEpochs(s, idxRoot, 4)
+    val nAfter = Artifacts.committedEpochs(s, idxRoot).size
     before
       .select(col("new_id"), col("old_id"), col("jac").as("b_j"))
       .join(serve().select(col("new_id"), col("old_id"), col("jac").as("a_j")),
         Seq("new_id", "old_id"), "full_outer")
       .agg(count(lit(1)).as("n_match_rows"),
         sum(when(col("b_j") <=> col("a_j"), 0L).otherwise(1L)).as("n_mismatch"))
-      .crossJoin(broadcast(graft.sources.Sources.readEpochs(s, idxRoot)
+      .crossJoin(broadcast(Artifacts.readEpochs(s, idxRoot)
         .agg(count(lit(1)).as("n_index_rows"))))
       .select(
         lit(nBefore.toLong).as("n_segments_before"),
@@ -1724,8 +1702,7 @@ object Dedup {
     Entry(
       "q131_dedup_index_build",
       (s, d) => {
-        dedupIndexBuild(s, d)
-        val gen = graft.sources.Sources.currentGeneration(s, dedupIndexRoot(d))
+        val gen = dedupIndexBuild(s, d)
         val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
         val idx = s.read.parquet(s"$gen/index")
           .agg(
@@ -1771,8 +1748,7 @@ object Dedup {
     Entry(
       "q133_dedup_index_update",
       (s, d) => {
-        dedupIndexUpdate(s, d)
-        val gen = graft.sources.Sources.currentGeneration(s, dedupIndexUpdRoot(d))
+        val gen = dedupIndexUpdate(s, d)
         s.read.parquet(s"$gen/index")
           .agg(
             count(lit(1)).as("n_index_rows"),
@@ -1800,9 +1776,7 @@ object Dedup {
     Entry(
       "q136_dedup_index_delete",
       (s, d) => {
-        dedupIndexDelete(s, d)
-        val gen = graft.sources.Sources.currentGeneration(s, dedupIndexDelRoot(d))
-        dedupServeAgainst(s, gen, d)
+        dedupServeAgainst(s, dedupIndexDelete(s, d), d)
       },
       Some(s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
              |s AS (SELECT doc_id, list_distinct(list_transform(
@@ -1823,7 +1797,7 @@ object Dedup {
              |FROM m GROUP BY new_id ORDER BY new_id""".stripMargin)),
 
     // q137: DEDUP INDEX GENERATION GC — the retention verb (q130's sweep,
-    // shared machinery: Similarity.pqIndexGc is root-generic): two stacked
+    // shared machinery: Artifacts.gc is root-generic): two stacked
     // updates leave three generation dirs; the TTL sweep removes exactly
     // the manifest-unlisted two, and the served index re-proves intact
     // through the post-GC manifest.
@@ -1832,16 +1806,10 @@ object Dedup {
       (s, d) => {
         val root = dedupIndexGcRoot(d)
         dedupIndexUpdate(s, d, Some(root))
-        dedupIndexUpdate(s, d, Some(root))
-        def genDirs(): Long = {
-          val rp = new org.apache.hadoop.fs.Path(root)
-          rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .listStatus(rp).count(_.isDirectory).toLong
-        }
-        val before = genDirs()
-        val removed = Similarity.pqIndexGc(s, root, ttlMs = 0L)
-        val after = genDirs()
-        val gen = graft.sources.Sources.currentGeneration(s, root)
+        val gen = dedupIndexUpdate(s, d, Some(root))
+        val before = Artifacts.listing(s, root).dirs
+        val removed = Artifacts.gc(s, root, ttlMs = 0L)
+        val after = Artifacts.listing(s, root).dirs
         s.read.parquet(s"$gen/index")
           .agg(
             count(lit(1)).as("n_index_rows"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.sources.Artifacts
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -477,31 +478,31 @@ object Similarity {
   // ---- Persisted PQ index artifact (q108 build / q109 serve) ----
   // The production ANN lifecycle the in-query q94 stand-in names: train +
   // encode ONCE, publish codebook + codes atomically through the
-  // generational manifest machinery (Sources.publishGeneration — readers
+  // generational manifest machinery (Artifacts.publish — readers
   // see the old complete index or the new complete one, never a mix), then
   // serve every query from the artifact with NO training stage in the plan.
 
   private[graft] def pqIndexRoot(d: String): String =
     graft.sources.Sources.scratch(d, "pq_index")
 
-  /** Train the codebook, encode the corpus, and atomically publish both as
-    * one index generation (`<root>/<gen>/{codebook,codes}`). `rootOverride`
-    * lets q122's update lifecycle run against its OWN root so the serve
-    * queries (q109) keep reading the pristine build no matter the driver's
-    * execution order.
-    */
-  private[graft] def pqIndexBuild(
-      s: SparkSession, d: String, rootOverride: Option[String] = None): Unit = {
-    val root = rootOverride.getOrElse(pqIndexRoot(d))
-    val gen = "gen-build"
+  /** The two parts of one index generation (`<gen>/{codebook,codes}`):
+    * the trained codebook and the corpus encoded with it. */
+  private def pqIndexParts(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
     val codebook = pqCodebook(s, d).localCheckpoint()
-    codebook.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codebook")
-    pqEncode(vecs(s, d).select(col("vec_id"), col("v")), codebook)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codes")
-    graft.sources.Sources.publishGeneration(s, root, gen)
+    Seq("codebook" -> codebook,
+      "codes" -> pqEncode(vecs(s, d).select(col("vec_id"), col("v")), codebook))
   }
+
+  /** Train the codebook, encode the corpus, and atomically publish both as
+    * generation `gen-build` of the q108/q109 root; returns its path. */
+  private[graft] def pqIndexBuild(s: SparkSession, d: String): String =
+    Artifacts.publish(s, pqIndexRoot(d), "gen-build")(pqIndexParts(s, d): _*)
+
+  /** Build-if-absent of an index root; returns the current generation.
+    * q122/q126/q130/q141 each run on their OWN root so the serve queries
+    * (q109) keep reading the pristine build in any query order. */
+  private def pqIndexEnsure(s: SparkSession, d: String, root: String): String =
+    Artifacts.ensure(s, root, "gen-build")(pqIndexParts(s, d))
 
   private[graft] def pqIndexUpdRoot(d: String): String =
     graft.sources.Sources.scratch(d, "pq_index_upd")
@@ -523,30 +524,22 @@ object Similarity {
     * concurrent reader mid-scan could see a half-rewritten generation —
     * exactly the mix the manifest contract rules out. Superseded update
     * generations are left on disk (a reader holding the old resolved path
-    * may still be scanning it); production would age them out with the
-    * same TTL sweep publishGeneration applies to orphaned manifest tmps.
-    * Runs against its own root (see pqIndexBuild) so q109's serve path
-    * stays pristine.
+    * may still be scanning it); [[Artifacts.gc]] ages them out (q130).
+    * Runs against its own root (see pqIndexEnsure) so q109's serve path
+    * stays pristine. Returns the published generation.
     */
   private[graft] def pqIndexUpdate(
-      s: SparkSession, d: String, rootOverride: Option[String] = None): Unit = {
+      s: SparkSession, d: String, rootOverride: Option[String] = None): String = {
     val root = rootOverride.getOrElse(pqIndexUpdRoot(d))
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) pqIndexBuild(s, d, Some(root))
-    val cur = graft.sources.Sources.currentGeneration(s, root)
+    val cur = pqIndexEnsure(s, d, root)
     val codebook = s.read.parquet(s"$cur/codebook").localCheckpoint()
     val oldCodes = s.read.parquet(s"$cur/codes")
       .filter(col("vec_id") < 10000000L).localCheckpoint()
     val delta = vecs(s, d).filter(col("vec_id") < 100)
       .select((col("vec_id") + 10000000L).as("vec_id"), col("v"))
-    val gen = nextGen(cur, "gen-upd-")
-    codebook.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codebook")
-    oldCodes.unionByName(pqEncode(delta, codebook))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codes")
-    graft.sources.Sources.publishGeneration(s, root, gen)
+    Artifacts.publish(s, root, Artifacts.nextGen(cur, "gen-upd-"))(
+      "codebook" -> codebook,
+      "codes" -> oldCodes.unionByName(pqEncode(delta, codebook)))
   }
 
   private[graft] def pqIndexDelRoot(d: String): String =
@@ -570,76 +563,23 @@ object Similarity {
     * SURVIVORS only, published atomically through the manifest (readers
     * see the pre-delete index or the post-delete one, never a mix).
     * Idempotent by content (the filter is a pure predicate on vec_id);
-    * each run publishes under a fresh generation name (see [[nextGen]]).
-    * Runs against its own root so q109's serve path and q122's update
-    * lineage stay pristine regardless of driver execution order.
+    * each run publishes under a fresh generation name (see
+    * [[Artifacts.nextGen]]). Runs against its own root so q109's serve path
+    * and q122's update lineage stay pristine in any query order. Returns
+    * the published generation.
     */
-  private[graft] def pqIndexDelete(s: SparkSession, d: String): Unit = {
+  private[graft] def pqIndexDelete(s: SparkSession, d: String): String = {
     val root = pqIndexDelRoot(d)
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) pqIndexBuild(s, d, Some(root))
-    val cur = graft.sources.Sources.currentGeneration(s, root)
+    val cur = pqIndexEnsure(s, d, root)
     val codebook = s.read.parquet(s"$cur/codebook").localCheckpoint()
     val survivors = s.read.parquet(s"$cur/codes")
       .filter(!isDeleted(col("vec_id"))).localCheckpoint()
-    val gen = nextGen(cur, "gen-del-")
-    codebook.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codebook")
-    survivors.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codes")
-    graft.sources.Sources.publishGeneration(s, root, gen)
+    Artifacts.publish(s, root, Artifacts.nextGen(cur, "gen-del-"))(
+      "codebook" -> codebook, "codes" -> survivors)
   }
 
-  private[graft] def pqIndexGcRoot(d: String): String =
+  private[graft] def pqGcRoot(d: String): String =
     graft.sources.Sources.scratch(d, "pq_index_gc")
-
-  /** GENERATION GC — the retention half every publish verb here defers to
-    * ("superseded generations are left on disk … aged out with a TTL
-    * sweep"): delete every top-level dir under the index root that is NOT
-    * the manifest-named current generation and whose modification time is
-    * older than `ttlMs`. The TTL is the safety contract — it must exceed
-    * the longest reader scan, because a reader that resolved the OLD
-    * manifest may still be reading the old dir; with that bound, anything
-    * older and unlisted is provably unreachable (new readers resolve the
-    * manifest, which no longer names it). Returns the number of dirs
-    * removed. Sweep failures on individual dirs are non-fatal (same
-    * posture as the manifest-tmp GC in publishManifestText): retention
-    * must never block serving, and a half-deleted superseded dir is
-    * unlisted garbage the next sweep finishes.
-    */
-  private[graft] def pqIndexGc(s: SparkSession, root: String, ttlMs: Long): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val cur = graft.sources.Sources.currentGeneration(s, root)
-    val curName = cur.substring(cur.lastIndexOf('/') + 1)
-    val cutoff = System.currentTimeMillis() - ttlMs
-    fs.listStatus(rootPath).count { st =>
-      val name = st.getPath.getName
-      st.isDirectory && name != curName && st.getModificationTime < cutoff && {
-        try fs.delete(st.getPath, true)
-        catch { case scala.util.control.NonFatal(_) => false }
-      }
-    }.toLong
-  }
-
-  /** Fresh generation name: `<prefix><n+1>` where n is parsed from the
-    * CURRENT generation's basename (0 when current is the build or carries
-    * a different prefix). Never reuses an existing name, so a publish
-    * always writes a directory no reader can be pointed at yet — a re-run
-    * with a CONSTANT name would Overwrite the directory `_current` points
-    * at in place, letting a concurrent reader mid-scan see a half-written
-    * generation.
-    */
-  private[graft] def nextGen(currentGenPath: String, prefix: String): String = {
-    val base = currentGenPath.substring(currentGenPath.lastIndexOf('/') + 1)
-    val n =
-      if (base.startsWith(prefix))
-        scala.util.Try(base.stripPrefix(prefix).toInt).getOrElse(0)
-      else 0
-    s"$prefix${n + 1}"
-  }
 
   /** Serve PQ ANN from the published artifact. Build-if-absent is SETUP
     * (the q57/q75 write-then-read pattern, so the query is self-contained
@@ -648,11 +588,7 @@ object Similarity {
     * DedupSimilaritySuite asserts it contains no training-sample stage.
     */
   private[graft] def pqIndexServe(s: SparkSession, d: String): DataFrame = {
-    val root = pqIndexRoot(d)
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) pqIndexBuild(s, d)
-    val idx = graft.sources.Sources.currentGeneration(s, root)
+    val idx = pqIndexEnsure(s, d, pqIndexRoot(d))
     pqAdcTopK(s, d,
       s.read.parquet(s"$idx/codebook"),
       s.read.parquet(s"$idx/codes"))
@@ -706,10 +642,7 @@ object Similarity {
     */
   private[graft] def annIngest(s: SparkSession, d: String): DataFrame = {
     val root = pqIngestRoot(d)
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) pqIndexBuild(s, d, Some(root))
-    val cur = graft.sources.Sources.currentGeneration(s, root)
+    val cur = pqIndexEnsure(s, d, root)
     val e = vecs(s, d).select(col("vec_id"), col("v"))
     val batch = e.filter(col("vec_id") % 2 === 0)
       .select((col("vec_id") + 10000000L).as("new_id"), col("v"))
@@ -733,14 +666,9 @@ object Similarity {
     val codebook = s.read.parquet(s"$cur/codebook").localCheckpoint()
     val oldCodes = s.read.parquet(s"$cur/codes")
       .filter(col("vec_id") < 10000000L).localCheckpoint()
-    val gen = nextGen(cur, "gen-ing-")
-    codebook.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codebook")
-    oldCodes.unionByName(pqEncode(novel, codebook))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/$gen/codes")
-    graft.sources.Sources.publishGeneration(s, root, gen)
-    val idx = graft.sources.Sources.currentGeneration(s, root)
+    val idx = Artifacts.publish(s, root, Artifacts.nextGen(cur, "gen-ing-"))(
+      "codebook" -> codebook,
+      "codes" -> oldCodes.unionByName(pqEncode(novel, codebook)))
     val counts = s.read.parquet(s"$idx/codes").agg(
       count(lit(1)).as("n_code_rows"),
       countDistinct(when(col("vec_id") >= 10000000L, col("vec_id")))
@@ -767,7 +695,7 @@ object Similarity {
     * the write is O(corpus) PER APPEND. At 100 TB an append must cost
     * O(delta): here it encodes the delta with the frozen codebook and
     * commits ONLY those rows as a new segment dir plus one atomic manifest
-    * swap (Sources.commitEpoch — the q123 exactly-once machinery, so a
+    * swap (Artifacts.commitEpoch — the q123 exactly-once machinery, so a
     * redelivered batch is a no-op by committed-check, not by rewrite).
     * Readers resolve the manifest once and scan the union of listed
     * segments; ADC scoring is segment-invariant by construction (it
@@ -777,25 +705,17 @@ object Similarity {
     * ids never collide).
     */
   private[graft] def segEnsureAppends(s: SparkSession, d: String, root: String): Unit = {
-    val cbRoot = s"$root/codebook"
     val codesRoot = s"$root/codes"
-    val manifest = new org.apache.hadoop.fs.Path(s"$codesRoot/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) {
-      val cb = pqCodebook(s, d).localCheckpoint()
-      cb.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$cbRoot/gen-build")
-      graft.sources.Sources.publishGeneration(s, cbRoot, "gen-build")
-      graft.sources.Sources.commitEpoch(s, codesRoot,
-        pqEncode(vecs(s, d).select(col("vec_id"), col("v")), cb), "seg-000-base")
-    }
-    val cb = graft.sources.Sources.readCurrent(s, cbRoot).localCheckpoint()
+    val cb = s.read.parquet(Artifacts.ensure(s, s"$root/codebook", "gen-build")(
+      Seq(Artifacts.Whole -> pqCodebook(s, d).localCheckpoint()))).localCheckpoint()
     val e = vecs(s, d).select(col("vec_id"), col("v"))
     def delta(lo: Int, hi: Int): DataFrame =
       e.filter(col("vec_id") >= lo && col("vec_id") < hi)
         .select((col("vec_id") + 10000000L).as("vec_id"), col("v"))
-    graft.sources.Sources.commitEpoch(s, codesRoot, pqEncode(delta(0, 100), cb), "seg-001")
-    graft.sources.Sources.commitEpoch(s, codesRoot, pqEncode(delta(100, 200), cb), "seg-002")
+    // each commit is a no-op once its segment is listed
+    Artifacts.commitEpoch(s, codesRoot, pqEncode(e, cb), "seg-000-base")
+    Artifacts.commitEpoch(s, codesRoot, pqEncode(delta(0, 100), cb), "seg-001")
+    Artifacts.commitEpoch(s, codesRoot, pqEncode(delta(100, 200), cb), "seg-002")
   }
 
   /** Serve the segmented index's CORPUS view (production tags segments
@@ -805,8 +725,8 @@ object Similarity {
     */
   private def segServeCorpus(s: SparkSession, d: String, root: String): DataFrame =
     pqAdcTopK(s, d,
-      graft.sources.Sources.readCurrent(s, s"$root/codebook").localCheckpoint(),
-      graft.sources.Sources.readEpochs(s, s"$root/codes")
+      Artifacts.readCurrent(s, s"$root/codebook").localCheckpoint(),
+      Artifacts.readEpochs(s, s"$root/codes")
         .filter(col("vec_id") < 10000000L))
 
   /** Serve the base segmented root's corpus view ONCE per root and persist
@@ -814,15 +734,9 @@ object Similarity {
     * q143's compaction-invisibility proof compares against it instead of
     * paying a second full ADC serve (r16 verdict #7).
     */
-  private def segTopkEnsure(s: SparkSession, d: String, root: String): String = {
-    val path = s"$root/topk_precompact"
-    val ok = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-    val fs = ok.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(ok))
-      segServeCorpus(s, d, root).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-    path
-  }
+  private def segTopkEnsure(s: SparkSession, d: String, root: String): String =
+    Artifacts.ensure(s, s"$root/topk_precompact", "gen-build")(
+      Seq(Artifacts.Whole -> segServeCorpus(s, d, root)))
 
   /** q142 registered row: segment count, total code rows, NEWEST-segment
     * rows (the O(delta) write proof: m·100, never m·corpus), and the
@@ -831,8 +745,8 @@ object Similarity {
   private[graft] def annSegmentAppend(s: SparkSession, d: String): DataFrame = {
     val root = pqSegRoot(d)
     segEnsureAppends(s, d, root)
-    val segs = graft.sources.Sources.committedEpochs(s, s"$root/codes")
-    val counts = graft.sources.Sources.readEpochs(s, s"$root/codes")
+    val segs = Artifacts.committedEpochs(s, s"$root/codes")
+    val counts = Artifacts.readEpochs(s, s"$root/codes")
       .agg(count(lit(1)).as("n_code_rows"))
       .crossJoin(broadcast(
         s.read.parquet(s"$root/codes/${segs.last}")
@@ -872,21 +786,16 @@ object Similarity {
     // by construction, which is exactly the precondition of the
     // compaction-invisibility claim being proven
     val root = graft.sources.Sources.scratch(d, "pq_index_seg_cmp")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
-    graft.sources.Sources.readCurrent(s, s"$base/codebook")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$root/codebook/gen-build")
-    graft.sources.Sources.publishGeneration(s, s"$root/codebook", "gen-build")
+    Artifacts.fresh(s, root)
+    Artifacts.publish(s, s"$root/codebook", "gen-build")(
+      Artifacts.Whole -> Artifacts.readCurrent(s, s"$base/codebook"))
     val codesRoot = s"$root/codes"
-    graft.sources.Sources.committedEpochs(s, s"$base/codes").foreach { e =>
-      graft.sources.Sources.commitEpoch(s, codesRoot,
-        s.read.parquet(s"$base/codes/$e"), e)
+    Artifacts.committedEpochs(s, s"$base/codes").foreach { e =>
+      Artifacts.commitEpoch(s, codesRoot, s.read.parquet(s"$base/codes/$e"), e)
     }
-    val nBefore = graft.sources.Sources.committedEpochs(s, codesRoot).size
-    graft.sources.Sources.compactEpochs(s, codesRoot, 4)
-    val nAfter = graft.sources.Sources.committedEpochs(s, codesRoot).size
+    val nBefore = Artifacts.committedEpochs(s, codesRoot).size
+    Artifacts.compactEpochs(s, codesRoot, 4)
+    val nAfter = Artifacts.committedEpochs(s, codesRoot).size
     val cmp = servedBefore
       .select(col("q_id"), col("rank"), col("n_id").as("b_n"), col("cos").as("b_c"))
       .join(segServeCorpus(s, d, root)
@@ -896,7 +805,7 @@ object Similarity {
         sum(when(col("b_n") <=> col("a_n") && col("b_c") <=> col("a_c"), 0L)
           .otherwise(1L)).as("n_mismatch"))
     cmp
-      .crossJoin(broadcast(graft.sources.Sources.readEpochs(s, codesRoot)
+      .crossJoin(broadcast(Artifacts.readEpochs(s, codesRoot)
         .agg(count(lit(1)).as("n_code_rows"))))
       .select(lit(nBefore.toLong).as("n_segments_before"),
         lit(nAfter.toLong).as("n_segments_after"), col("n_code_rows"),
@@ -1070,8 +979,7 @@ object Similarity {
     Entry(
       "q108_ann_index_build",
       (s, d) => {
-        pqIndexBuild(s, d)
-        val idx = graft.sources.Sources.currentGeneration(s, pqIndexRoot(d))
+        val idx = pqIndexBuild(s, d)
         val nVec = vecs(s, d).agg(count(lit(1)).as("n_vecs"))
         val nCodes = s.read.parquet(s"$idx/codes")
           .agg(count(lit(1)).as("n_code_rows"))
@@ -1109,8 +1017,7 @@ object Similarity {
     Entry(
       "q122_ann_index_update",
       (s, d) => {
-        pqIndexUpdate(s, d)
-        val idx = graft.sources.Sources.currentGeneration(s, pqIndexUpdRoot(d))
+        val idx = pqIndexUpdate(s, d)
         val codes = s.read.parquet(s"$idx/codes")
         val counts = codes.agg(
           count(lit(1)).as("n_code_rows"),
@@ -1140,8 +1047,7 @@ object Similarity {
     Entry(
       "q126_ann_index_delete",
       (s, d) => {
-        pqIndexDelete(s, d)
-        val idx = graft.sources.Sources.currentGeneration(s, pqIndexDelRoot(d))
+        val idx = pqIndexDelete(s, d)
         val codes = s.read.parquet(s"$idx/codes")
         val counts = codes.agg(
           count(lit(1)).as("n_code_rows"),
@@ -1163,7 +1069,7 @@ object Similarity {
               |  TRUE AS recall_ok
               |FROM embeddings""".stripMargin)),
 
-    // q130: ANN INDEX GENERATION GC (see pqIndexGc) — the retention verb
+    // q130: ANN INDEX GENERATION GC (see Artifacts.gc) — the retention verb
     // closing the artifact lifecycle: two updates stack three generation
     // dirs on disk (one current, two superseded); the TTL sweep removes
     // exactly the unlisted ones, the served index is untouched (code-row
@@ -1173,18 +1079,12 @@ object Similarity {
     Entry(
       "q130_ann_index_gc",
       (s, d) => {
-        val root = pqIndexGcRoot(d)
+        val root = pqGcRoot(d)
         pqIndexUpdate(s, d, Some(root))
-        pqIndexUpdate(s, d, Some(root))
-        def genDirs(): Long = {
-          val rp = new org.apache.hadoop.fs.Path(root)
-          rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .listStatus(rp).count(_.isDirectory).toLong
-        }
-        val before = genDirs()
-        val removed = pqIndexGc(s, root, ttlMs = 0L)
-        val after = genDirs()
-        val idx = graft.sources.Sources.currentGeneration(s, root)
+        val idx = pqIndexUpdate(s, d, Some(root))
+        val before = Artifacts.listing(s, root).dirs
+        val removed = Artifacts.gc(s, root, ttlMs = 0L)
+        val after = Artifacts.listing(s, root).dirs
         s.read.parquet(s"$idx/codes")
           .agg(
             count(lit(1)).as("n_code_rows"),
@@ -1469,18 +1369,7 @@ object Similarity {
   private[graft] def annCrossCorpus(s: SparkSession, d: String): DataFrame = {
     val old = Transforms.siblingBuildCorpus(d)
     val root = graft.sources.Sources.scratch(d, "cross_gen_ann")
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifest)) {
-      val cb = pqCodebook(s, old).localCheckpoint()
-      cb.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/gen-build/codebook")
-      pqEncode(vecs(s, old).select(col("vec_id"), col("v")), cb)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/gen-build/codes")
-      graft.sources.Sources.publishGeneration(s, root, "gen-build")
-    }
-    val cur = graft.sources.Sources.currentGeneration(s, root)
+    val cur = Artifacts.ensure(s, root, "gen-build")(pqIndexParts(s, old))
     val cb = s.read.parquet(s"$cur/codebook").localCheckpoint()
     val codes = s.read.parquet(s"$cur/codes")
     val served = pqAdcTopKCross(s, d, old, cb, codes)

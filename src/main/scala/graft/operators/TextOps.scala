@@ -32,9 +32,9 @@ object TextOps {
     * recomputation was the remaining learn cost, and the checkpoint is
     * unconditional (measured at sf0.1: BPE family 10.4 s → 9.5 s under a worsening
     * canary). Output is bit-identical — the checkpoint only changes where
-    * the plan is cut; TextOpsSuite asserts the flag identity and that
-    * N=16 completes in bounded time, and the DuckDB oracle (which unrolls
-    * the pure plan as CTEs) re-adjudicates every value.
+    * the plan is cut; TextOpsSuite asserts that two 6-round runs agree and
+    * that N=16 completes in bounded time, and the DuckDB oracle (which
+    * unrolls the pure plan as CTEs) re-adjudicates every value.
     */
   private[graft] def bpeVocab(
       s: org.apache.spark.sql.SparkSession,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.queries.Entry
+import graft.sources.Artifacts
 import graft.{Tables => T}
 
 /** Corpus REWRITE transforms — the operators that emit (or digest) a
@@ -396,13 +397,8 @@ object Transforms {
       "q289_tokenizer_publish_serve",
       (s, d) => {
         val root = graft.sources.Sources.scratch(d, "bpe_merges")
-        val gen = "gen-build"
-        TextOps.bpeVocab(s, d, rounds = 4)
-          .select(col("round"), col("x"), col("y"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$root/$gen/merges")
-        graft.sources.Sources.publishGeneration(s, root, gen)
-        val cur = graft.sources.Sources.currentGeneration(s, root)
+        val cur = Artifacts.publish(s, root, "gen-build")(
+          "merges" -> TextOps.bpeVocab(s, d, rounds = 4).select(col("round"), col("x"), col("y")))
         bpeFoldEncode(s, d, s.read.parquet(s"$cur/merges"))
       },
       Some(BpeEncodeOracle)),
@@ -423,23 +419,14 @@ object Transforms {
       "q290_span_index_delta",
       (s, d) => {
         val root = graft.sources.Sources.scratch(d, "span_index")
-        val gen = "gen-build"
         // build ONCE (the q122/annIngest lifecycle guard): the index is a
         // property of the corpus, and the delta path must not pay the
         // corpus scan per batch — that asymmetry IS the operator
-        val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-        val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(manifest)) {
-          spanBlocks(
-            T.documents(s, d).select(col("doc_id"), col("source"), col("text")))
-            .select(posexplode(col("bharr")).as(Seq("p", "bh")))
-            .select(col("bh")).distinct()
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/$gen/spans")
-          graft.sources.Sources.publishGeneration(s, root, gen)
-        }
-        val idx = s.read.parquet(
-          s"${graft.sources.Sources.currentGeneration(s, root)}/spans")
+        val cur = Artifacts.ensure(s, root, "gen-build")(Seq("spans" -> spanBlocks(
+          T.documents(s, d).select(col("doc_id"), col("source"), col("text")))
+          .select(posexplode(col("bharr")).as(Seq("p", "bh")))
+          .select(col("bh")).distinct()))
+        val idx = s.read.parquet(s"$cur/spans")
         val delta = T.documents(s, d)
           .filter(col("doc_id") % 5 === 2)
           .select((col("doc_id") + 10000000L).as("doc_id"), col("source"),
@@ -1150,25 +1137,18 @@ object Transforms {
       (s, d) => {
         val old = siblingBuildCorpus(d)
         val root = graft.sources.Sources.scratch(d, "cross_corpus_index")
-        val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-        val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(manifest)) {
+        val cur = Artifacts.ensure(s, root, "gen-build") {
           val docs0 = T.documents(s, old)
             .select(col("doc_id"), col("source"), col("text"))
             .localCheckpoint() // consumers: exact keys + span blocks
-          docs0
-            .select(expr(DocDigestExpr).as("dg"),
-              length(col("text")).cast("long").as("len"))
-            .distinct()
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/gen-build/exact")
-          spanBlocks(docs0)
-            .select(explode(col("bharr")).as("bh")).distinct()
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/gen-build/spans")
-          graft.sources.Sources.publishGeneration(s, root, "gen-build")
+          Seq(
+            "exact" -> docs0
+              .select(expr(DocDigestExpr).as("dg"),
+                length(col("text")).cast("long").as("len"))
+              .distinct(),
+            "spans" -> spanBlocks(docs0)
+              .select(explode(col("bharr")).as("bh")).distinct())
         }
-        val cur = graft.sources.Sources.currentGeneration(s, root)
         val exactIdx = s.read.parquet(s"$cur/exact").withColumn("xhit", lit(1L))
         val spanIdx = s.read.parquet(s"$cur/spans").withColumn("shit", lit(1L))
         // ONE char-HOF pass computes digest, length AND block hashes; the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.Entry
+import graft.sources.Artifacts
 import graft.{Tables => T}
 
 /** Unigram-LM (SentencePiece-style) tokenizer — the third tokenizer family
@@ -277,15 +278,10 @@ pc$tag AS MATERIALIZED (SELECT w, cnt, t.t,
       "q310_unigram_publish_serve",
       (s, d) => {
         val root = graft.sources.Sources.scratch(d, "unigram_vocab")
-        val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-        val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(manifest)) {
+        val cur = Artifacts.ensure(s, root, "gen-build") {
           val (_, c2, _, _) = fit(s, d)
-          c2.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/gen-build/pieces")
-          graft.sources.Sources.publishGeneration(s, root, "gen-build")
+          Seq("pieces" -> c2)
         }
-        val cur = graft.sources.Sources.currentGeneration(s, root)
         val costs = s.read.parquet(s"$cur/pieces")
         val bySrc = T.documents(s, d)
           .select(col("source"), explode(split(col("text"), " ")).as("w"))

@@ -229,194 +229,6 @@ object Sources {
         sum(coalesce(col("n_regionkey"), lit(0L))).cast("long").as("region_sum"))
   }
 
-  /** ATOMIC dataset publish: a dataset root holds immutable generation
-    * directories plus a one-line `_current` manifest naming the active one.
-    * Publishing = write the new manifest to a temp file and swap it over
-    * `_current` with `FileContext.rename(OVERWRITE)` — a single-file rename,
-    * atomic on HDFS and POSIX — so a reader that resolves the manifest sees
-    * the old complete generation or the new complete one, never a mix and
-    * never a half-written directory. (Directory renames can't give this: a
-    * two-rename dir swap has a window with no readable dataset at all; this
-    * manifest-pointer shape is how transactional table formats publish.)
-    */
-  private[graft] def publishGeneration(s: SparkSession, root: String, gen: String): Unit =
-    publishManifestText(s, root, gen, gen)
-
-  /** The atomic-manifest primitive behind [[publishGeneration]] (one line,
-    * one generation) and [[commitEpoch]] (many lines, cumulative epoch
-    * list): write `text` to a nonce tmp and swap it over `_current` with a
-    * single-file rename. `tag` only names the tmp for debuggability.
-    */
-  private[graft] def publishManifestText(
-      s: SparkSession, root: String, text: String, tag: String): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val conf = s.sparkContext.hadoopConfiguration
-    val manifest = new Path(s"$root/_current")
-    // Unique tmp name PER PUBLISH ATTEMPT, never shared: two attempts
-    // sharing a tmp path race even when they'd write identical bytes,
-    // because fs.create(tmp, overwrite=true) TRUNCATES — racer B's create
-    // can zero the file between racer A's write-close and A's rename, so A
-    // would atomically publish an empty/partial manifest (which the
-    // fail-fast reader in currentGeneration then turns into crashes). The
-    // nonce makes every attempt's tmp private; the rename consumes it.
-    val tmp = new Path(
-      s"$root/_current.tmp.$tag.${java.util.UUID.randomUUID().toString}")
-    val fs = manifest.getFileSystem(conf)
-    // GC SWEEP: a publisher hard-killed between create and rename/delete
-    // orphans its nonce tmp forever (no later attempt reuses the path), so
-    // without a sweep they accumulate unboundedly on a long-lived dataset
-    // root. Age-based: a live publish holds its tmp for seconds (one-line
-    // write + rename), so anything matching `_current.tmp.*` older than the
-    // TTL (default 1 h, conf-overridable) is provably abandoned. Sweep
-    // failures are non-fatal — GC must never block a publish.
-    val ttlMs = s.conf.get("graft.publish.tmpTtlMs", "3600000").toLong
-    val cutoff = System.currentTimeMillis() - ttlMs
-    try Option(fs.globStatus(new Path(s"$root/_current.tmp.*")))
-      .getOrElse(Array.empty).foreach { st =>
-        if (st.getModificationTime < cutoff)
-          // NonFatal: swallowing an OOM/interrupt here would also clear the
-          // thread's interrupt state — only IO-ish failures are ignorable
-          try fs.delete(st.getPath, false)
-          catch { case scala.util.control.NonFatal(_) => () }
-      }
-    catch { case scala.util.control.NonFatal(_) => () }
-    val out = fs.create(tmp, false)
-    try {
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-      FileContext.getFileContext(manifest.toUri, conf)
-        .rename(tmp, manifest, Options.Rename.OVERWRITE)
-    } catch {
-      case e: Throwable =>
-        // failed attempt: remove our own tmp so crashed publishes don't
-        // accumulate (tmps of OTHER in-flight publishers are untouchable —
-        // indistinguishable from live ones — but they are never read and
-        // each failed attempt now cleans up after itself).
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw e
-    }
-  }
-
-  /** Resolve the active generation dir of a dataset root via its manifest.
-    * Fails fast on a corrupt manifest (empty, or naming a missing directory)
-    * instead of silently resolving to the dataset root / a bad path — a
-    * reader must never scan a half-published or deleted generation.
-    */
-  private[graft] def currentGeneration(s: SparkSession, root: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(conf)
-    val in = fs.open(manifest)
-    val gen = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-    if (gen.isEmpty)
-      throw new IllegalStateException(s"empty generation manifest at $manifest")
-    val genPath = new org.apache.hadoop.fs.Path(s"$root/$gen")
-    if (!fs.exists(genPath))
-      throw new IllegalStateException(
-        s"manifest $manifest names missing generation dir $genPath")
-    s"$root/$gen"
-  }
-
-  private[graft] def readCurrent(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(currentGeneration(s, root))
-
-  // ---- Cumulative epoch manifest (multi-batch exactly-once publish) ----
-  // A streaming sink delivers MANY epochs over a table's lifetime; the
-  // single-generation manifest above fits rewrite-style publishes
-  // (compaction, index build) where the new generation REPLACES the old.
-  // Append-style streaming needs the cumulative shape: each epoch lands in
-  // its own immutable `epoch-<id>` dir, and `_current` holds the
-  // newline-separated list of ALL committed epochs — one atomic swap per
-  // commit, so a reader resolving the manifest sees a complete prefix of
-  // the stream (every listed dir fully written before it was listed),
-  // never a half-appended epoch.
-
-  /** Committed epoch names from the cumulative manifest; empty when the
-    * root has never published. Fails fast on a manifest naming a missing
-    * directory — a listed epoch must be durably present.
-    */
-  private[graft] def committedEpochs(s: SparkSession, root: String): Seq[String] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-    val fs = manifest.getFileSystem(conf)
-    if (!fs.exists(manifest)) return Seq.empty
-    val in = fs.open(manifest)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val epochs = text.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    epochs.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/$e")
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"epoch manifest $manifest lists missing dir $p")
-    }
-    epochs
-  }
-
-  /** EXACTLY-ONCE epoch commit — the foreachBatch body of a streaming
-    * publish. Idempotent by the committed-check, not by blind overwrite:
-    *
-    *   1. already committed (a retry AFTER the manifest swap landed but
-    *      before the checkpoint recorded it) → NO-OP. The retry must not
-    *      rewrite the epoch dir in place — a reader could be mid-scan on
-    *      it; the data is already durable and listed.
-    *   2. not committed → Overwrite the epoch dir (clobbering any
-    *      half-written attempt from a crash BEFORE the swap — unreadable
-    *      garbage, since unlisted dirs are invisible to readers), then
-    *      atomically swap in a manifest listing old epochs + this one.
-    *
-    * A crash between dir-write and swap leaves the manifest on the old
-    * complete prefix; the epoch re-lands on retry. Exactly-once downstream
-    * with no sink-side dedup state — the manifest IS the commit log.
-    */
-  private[graft] def commitEpoch(
-      s: SparkSession, root: String, batch: DataFrame, epoch: String): Unit = {
-    val committed = committedEpochs(s, root)
-    if (committed.contains(epoch)) return
-    batch.write.mode(SaveMode.Overwrite).parquet(s"$root/$epoch")
-    publishManifestText(s, root, (committed :+ epoch).sorted.mkString("\n"), epoch)
-  }
-
-  /** Read the full published stream table: the union of every committed
-    * epoch dir, resolved through one manifest read.
-    */
-  private[graft] def readEpochs(s: SparkSession, root: String): DataFrame = {
-    val epochs = committedEpochs(s, root)
-    require(epochs.nonEmpty, s"no committed epochs under $root")
-    s.read.parquet(epochs.map(e => s"$root/$e"): _*)
-  }
-
-  /** EPOCH COMPACTION — the maintenance verb the cumulative manifest
-    * needs: a long-lived streaming table accumulates one dir (and one
-    * manifest line, and one per-file read-planning cost) per micro-batch;
-    * unchecked, a day of 1-minute epochs is 1440 dirs and the epoch list
-    * itself becomes the bottleneck. Compaction rewrites the union of every
-    * committed epoch into ONE fresh dir and atomically swaps in a
-    * manifest listing only it — the q75 generational-compaction shape
-    * applied to the epoch list. A crash before the swap leaves the full
-    * epoch list readable (the target dir is unlisted garbage, clobbered
-    * by the next attempt's Overwrite); after the swap readers resolve the
-    * single compacted epoch. Superseded epoch dirs are left for TTL GC —
-    * a reader that resolved the old manifest may still be mid-scan.
-    *
-    * Single-writer-per-root, like every publish verb here: foreachBatch
-    * serializes the stream's own commits; run compaction from the same
-    * maintenance lane (a commitEpoch racing this read-modify-write could
-    * lose its epoch from the list).
-    */
-  private[graft] def compactEpochs(s: SparkSession, root: String, parts: Int): Unit = {
-    val epochs = committedEpochs(s, root)
-    require(epochs.nonEmpty, s"no committed epochs under $root")
-    if (epochs.size == 1) return // already compact — idempotent no-op
-    // fresh name: newest epoch + suffix — never produced by commitEpoch,
-    // never the current single epoch (size-1 returned above)
-    val target = s"${epochs.last}-compacted"
-    s.read.parquet(epochs.map(e => s"$root/$e"): _*)
-      .repartition(parts)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$target")
-    publishManifestText(s, root, target, target)
-  }
-
   /** q129: the epoch-compaction verb end-to-end — four epochs committed
     * through the exactly-once machinery, compacted to one, read back
     * through the manifest proving no row lost or duplicated.
@@ -425,45 +237,24 @@ object Sources {
     val root = scratch(d, "epoch_compact")
     // fresh root per run: the query demonstrates commit→compact from
     // epoch zero (the q123 rationale)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    Artifacts.fresh(s, root)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     (0 until 4).foreach { b =>
-      commitEpoch(s, root, ev.filter(pmod(col("event_id"), lit(4)) === b),
+      Artifacts.commitEpoch(s, root, ev.filter(pmod(col("event_id"), lit(4)) === b),
         f"epoch-$b%09d")
     }
-    val nBefore = committedEpochs(s, root).size
-    compactEpochs(s, root, parts = 2)
-    val after = committedEpochs(s, root)
-    def nFiles(p: String): Long = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .listStatus(hp).count(_.getPath.getName.endsWith(".parquet")).toLong
-    }
-    readEpochs(s, root)
+    val nBefore = Artifacts.committedEpochs(s, root).size
+    Artifacts.compactEpochs(s, root, parts = 2)
+    val after = Artifacts.committedEpochs(s, root)
+    Artifacts.readEpochs(s, root)
       .agg(count(lit(1)).as("n_events"),
         sum(round(col("value") * 100).cast("long")).as("value_cents"))
       .select(
         lit(nBefore.toLong).as("n_epochs_before"),
         lit(after.size.toLong).as("n_epochs_after"),
-        lit(nFiles(s"$root/${after.head}")).as("n_files_after"),
+        lit(Artifacts.listing(s, s"$root/${after.head}").parquetFiles).as("n_files_after"),
         col("n_events"), col("value_cents"))
-  }
-
-  /** Compact the active generation into `parts` files: write a NEW
-    * generation dir in full, then atomically repoint the manifest. A crash
-    * anywhere before the final rename leaves `_current` on the old complete
-    * generation (the orphan dir is garbage-collected by the next attempt's
-    * Overwrite); a crash after it leaves the new complete one.
-    */
-  private[graft] def compactDataset(
-      s: SparkSession, root: String, gen: String, parts: Int): Unit = {
-    s.read.parquet(currentGeneration(s, root))
-      .repartition(parts)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$gen")
-    publishGeneration(s, root, gen)
   }
 
   /** Small-files compaction: the 64-file write is the pathology (a day of
@@ -471,27 +262,18 @@ object Sources {
     * atomic manifest swap is the cure; the query proves the file counts AND
     * that no row was lost or duplicated, reading back through the manifest.
     * At 100 TB compaction is a standing background job — readers must never
-    * observe the half-compacted state, hence [[publishGeneration]].
+    * observe the half-compacted state, hence [[Artifacts.compactDataset]].
     */
   private def compaction(s: SparkSession, d: String): DataFrame = {
     val root = scratch(d, "orders_generational")
-    Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
-      .repartition(64)
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/gen-small")
-    publishGeneration(s, root, "gen-small")
-    compactDataset(s, root, "gen-compact", 4)
-    // Hadoop FileSystem, not java.io.File: at 100 TB the compacted dataset
-    // lives on HDFS/S3, where only the fs.Path API resolves.
-    def nFiles(p: String): Long = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(hp).count(_.getPath.getName.endsWith(".parquet")).toLong
-    }
-    val counts = readCurrent(s, root)
+    Artifacts.publish(s, root, "gen-small")(Artifacts.Whole ->
+      Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice")).repartition(64))
+    Artifacts.compactDataset(s, root, "gen-compact", 4)
+    val counts = Artifacts.readCurrent(s, root)
       .agg(count(lit(1)).as("n_rows"), sum(col("o_totalprice")).as("total"))
     counts.select(
-      lit(nFiles(s"$root/gen-small")).as("files_before"),
-      lit(nFiles(s"$root/gen-compact")).as("files_after"),
+      lit(Artifacts.listing(s, s"$root/gen-small").parquetFiles).as("files_before"),
+      lit(Artifacts.listing(s, s"$root/gen-compact").parquetFiles).as("files_after"),
       col("n_rows"),
       round(col("total"), 2).as("total"))
   }
@@ -615,20 +397,18 @@ object Sources {
           .select(col("n_nationkey").cast("long").as("k"),
             col("n_name").as("v"))
           .localCheckpoint() // consumers: gen-1 write, digest, v2 build ×2
-        v1.write.mode(SaveMode.Overwrite).parquet(s"$root/gen-1")
-        publishGeneration(s, root, "gen-1")
+        Artifacts.publish(s, root, "gen-1")(Artifacts.Whole -> v1)
         val v2 = v1.select(col("k"),
             expr("CASE WHEN k % 3 = 0 THEN concat(v, '_v2') ELSE v END")
               .as("v"))
           .unionByName(v1.agg(max(col("k")).as("mk"))
             .select((col("mk") + 1L).as("k"), lit("NEWROW").as("v")))
           .localCheckpoint() // consumers: gen-2 write, digest
-        v2.write.mode(SaveMode.Overwrite).parquet(s"$root/gen-2")
-        publishGeneration(s, root, "gen-2")
+        Artifacts.publish(s, root, "gen-2")(Artifacts.Whole -> v2)
         def dig(df: DataFrame, n: String, g: String) = df.agg(
           count(lit(1)).as(n), sum(expr(dg)).as(g))
         val asof = s.read.parquet(s"$root/gen-1") // AS OF: named generation
-        val cur = readCurrent(s, root) // manifest-resolved latest
+        val cur = Artifacts.readCurrent(s, root) // manifest-resolved latest
         val changed = asof.select(col("k"), col("v").as("v_old"))
           .join(cur, Seq("k"), "full_outer")
           .agg(

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.queries.Entry
+import graft.sources.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -419,7 +420,7 @@ object EventStreams {
     // way a transactional table commits: each micro-batch lands in its own
     // immutable `epoch-<batchId>` dir and the CUMULATIVE manifest (the
     // newline list of every committed epoch) swaps atomically per commit
-    // (Sources.commitEpoch). A retried batch whose swap already landed
+    // (Artifacts.commitEpoch). A retried batch whose swap already landed
     // NO-OPs on the committed-check — it neither double-appends nor
     // rewrites a dir a reader may be scanning — and a crash between
     // dir-write and swap leaves readers on the old complete prefix
@@ -440,17 +441,14 @@ object EventStreams {
         // against a stale manifest the committed-check would no-op real
         // batches). Retry idempotency against a LIVE manifest is what
         // StreamingSuite exercises, on its own root, without this reset.
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(rootPath)) fs.delete(rootPath, true)
+        Artifacts.fresh(s, root)
         val src = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$d/events*")
         BoundedStreams.forEachBatch(src, "graft_stream_publish") { (batch, batchId) =>
-          graft.sources.Sources.commitEpoch(
-            batch.sparkSession, root, batch, f"epoch-$batchId%09d")
+          Artifacts.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
         }
-        graft.sources.Sources.readEpochs(s, root).agg(
+        Artifacts.readEpochs(s, root).agg(
           count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("value_cents"))
       },
@@ -654,21 +652,13 @@ object EventStreams {
       (s, d) => {
         import graft.operators.{TextOps, Transforms}
         val root = graft.sources.Sources.scratch(d, "byte_bpe_merges")
-        val manifest = new org.apache.hadoop.fs.Path(s"$root/_current")
-        val fs = manifest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(manifest)) {
-          TextOps.bpeLearn(
-            Transforms.byteSerialize(Tables.documents(s, d)
-              .select(col("doc_id"), col("source"), col("text")))
-              .select(col("s")),
-            rounds = 4)
-            .select(col("round"), col("x"), col("y"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/gen-build/merges")
-          graft.sources.Sources.publishGeneration(s, root, "gen-build")
-        }
-        val marr = Transforms.mergeArray(s.read.parquet(
-          s"${graft.sources.Sources.currentGeneration(s, root)}/merges"))
+        val cur = Artifacts.ensure(s, root, "gen-build")(Seq("merges" -> TextOps.bpeLearn(
+          Transforms.byteSerialize(Tables.documents(s, d)
+            .select(col("doc_id"), col("source"), col("text")))
+            .select(col("s")),
+          rounds = 4)
+          .select(col("round"), col("x"), col("y"))))
+        val marr = Transforms.mergeArray(s.read.parquet(s"$cur/merges"))
         val src = BoundedStreams.table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("text"))
         val agg = Transforms.byteEncodeRollup(Transforms.byteSerialize(src), marr)

@@ -107,7 +107,7 @@ class ClusteringSuite extends SparkTestBase {
     val again = Registry.byName("q204_kmeans_update").q(spark, sf).collect()
     assert(first.map(_.toString).toSeq == again.map(_.toString).toSeq)
     val root = graft.sources.Sources.scratch(sf, "kmeans_model_upd")
-    assert(graft.sources.Sources.currentGeneration(spark, root).endsWith("gen-upd-1"),
+    assert(graft.sources.Artifacts.currentGeneration(spark, root).endsWith("gen-upd-1"),
       "redelivered update must not publish further generations")
   }
 

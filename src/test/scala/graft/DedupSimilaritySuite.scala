@@ -390,10 +390,10 @@ class DedupSimilaritySuite extends SparkTestBase {
   test("index generation names are never reused; delete is idempotent; GC spares current") {
     import graft.operators.Similarity
     // nextGen: monotone fresh names from any current-generation basename
-    assert(Similarity.nextGen("/r/gen-build", "gen-upd-") == "gen-upd-1")
-    assert(Similarity.nextGen("/r/gen-upd-7", "gen-upd-") == "gen-upd-8")
-    assert(Similarity.nextGen("/r/gen-upd-7", "gen-del-") == "gen-del-1")
-    assert(Similarity.nextGen("/r/gen-del-3", "gen-del-") == "gen-del-4")
+    assert(graft.sources.Artifacts.nextGen("/r/gen-build", "gen-upd-") == "gen-upd-1")
+    assert(graft.sources.Artifacts.nextGen("/r/gen-upd-7", "gen-upd-") == "gen-upd-8")
+    assert(graft.sources.Artifacts.nextGen("/r/gen-upd-7", "gen-del-") == "gen-del-1")
+    assert(graft.sources.Artifacts.nextGen("/r/gen-del-3", "gen-del-") == "gen-del-4")
     // delete lifecycle on its own root: two runs converge to the same
     // artifact CONTENT under fresh generation names (never an in-place
     // rewrite of the published dir)
@@ -402,17 +402,17 @@ class DedupSimilaritySuite extends SparkTestBase {
     val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(rp)) fs.delete(rp, true)
     Similarity.pqIndexDelete(spark, sf)
-    val gen1 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen1 = graft.sources.Artifacts.currentGeneration(spark, root)
     val rows1 = spark.read.parquet(s"$gen1/codes").count()
     Similarity.pqIndexDelete(spark, sf)
-    val gen2 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen2 = graft.sources.Artifacts.currentGeneration(spark, root)
     assert(gen1 != gen2, "re-delete must publish a FRESH generation name")
     assert(fs.exists(new org.apache.hadoop.fs.Path(gen1)),
       "previous generation must survive until GC (readers may be mid-scan)")
     assert(spark.read.parquet(s"$gen2/codes").count() == rows1,
       "delete must be idempotent by content")
     // GC with ttl 0 removes every superseded dir, never the current one
-    val removed = Similarity.pqIndexGc(spark, root, ttlMs = 0L)
+    val removed = graft.sources.Artifacts.gc(spark, root, ttlMs = 0L)
     assert(removed >= 1, "expected at least the superseded generation swept")
     assert(fs.exists(new org.apache.hadoop.fs.Path(gen2)), "GC removed the CURRENT generation")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(gen1)), "superseded generation not swept")
@@ -464,7 +464,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     import graft.operators.Similarity
     val root = Similarity.pqIngestRoot(sf)
     val r1 = Registry.byName("q141_ann_ingest").q(spark, sf).collect()(0)
-    val gen1 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen1 = graft.sources.Artifacts.currentGeneration(spark, root)
     val nOdds = Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 2 === 1).count()
     assert(r1.getLong(1) == nOdds,
@@ -475,7 +475,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     assert(dupAdmitted == 0, s"$dupAdmitted duplicate code rows admitted")
     // retry: same accounting, fresh generation, converged content
     val r2 = Registry.byName("q141_ann_ingest").q(spark, sf).collect()(0)
-    val gen2 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen2 = graft.sources.Artifacts.currentGeneration(spark, root)
     assert(gen1 != gen2, "retry must publish a FRESH generation name")
     assert(r2.getLong(0) == r1.getLong(0) && r2.getLong(1) == r1.getLong(1),
       "retry must converge to the same artifact accounting")
@@ -489,13 +489,13 @@ class DedupSimilaritySuite extends SparkTestBase {
     // write contract (m·100, never m·corpus)
     assert(r1.getLong(2) == 8 * 100L,
       s"newest segment has ${r1.getLong(2)} rows — not the m*|delta| contract")
-    val segs1 = graft.sources.Sources.committedEpochs(spark, s"$root/codes")
+    val segs1 = graft.sources.Artifacts.committedEpochs(spark, s"$root/codes")
     assert(segs1.size == 3, s"expected 3 segments, got ${segs1.mkString(",")}")
     // a redelivered append is a no-op by committed-check: same segments,
     // same accounting, and the base segment's files are untouched
     val baseFiles = spark.read.parquet(s"$root/codes/${segs1.head}").inputFiles.sorted
     val r2 = Registry.byName("q142_ann_segment_append").q(spark, sf).collect()(0)
-    val segs2 = graft.sources.Sources.committedEpochs(spark, s"$root/codes")
+    val segs2 = graft.sources.Artifacts.committedEpochs(spark, s"$root/codes")
     assert(segs1 == segs2, "re-run must not add or rename segments")
     assert(r2.getLong(1) == r1.getLong(1), "re-run must not change row accounting")
     assert(spark.read.parquet(s"$root/codes/${segs2.head}").inputFiles.sorted
@@ -512,7 +512,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     // (r16 verdict #7: one serve, not a rebuild plus two serves) and its
     // row count is exactly the n_topk the equality proof joined over
     val base = Similarity.pqSegRoot(sf)
-    assert(spark.read.parquet(s"$base/topk_precompact").count() == r.getLong(3),
+    assert(graft.sources.Artifacts.readCurrent(spark, s"$base/topk_precompact").count() == r.getLong(3),
       "persisted pre-compaction top-k must back the equality proof")
     // re-run converges bit-identically (fresh compaction root per run)
     val r2 = Registry.byName("q143_ann_segment_compact").q(spark, sf).collect()(0)
@@ -548,7 +548,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     val idxRoot = s"${Dedup.dedupSegRoot(sf)}/index"
     val r1 = Registry.byName("q144_dedup_segment_append").q(spark, sf)
       .collect()
-    val segs = graft.sources.Sources.committedEpochs(spark, idxRoot)
+    val segs = graft.sources.Artifacts.committedEpochs(spark, idxRoot)
     assert(segs.size == 2, s"expected 2 segments, got ${segs.mkString(",")}")
     // O(delta): the appended segment carries exactly the batch's rows
     val nBatch = Tables.documents(spark, sf).filter(col("doc_id") % 2 === 0).count()
@@ -562,7 +562,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     // redelivery: converged accounting, no new segments
     Registry.byName("q144_dedup_segment_append").q(spark, sf).write
       .format("noop").mode("overwrite").save()
-    assert(graft.sources.Sources.committedEpochs(spark, idxRoot) == segs,
+    assert(graft.sources.Artifacts.committedEpochs(spark, idxRoot) == segs,
       "re-run must not add segments")
   }
 
@@ -571,7 +571,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     import graft.operators.Dedup
     val root = Dedup.dedupIndexDelRoot(sf)
     Dedup.dedupIndexDelete(spark, sf)
-    val gen1 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen1 = graft.sources.Artifacts.currentGeneration(spark, root)
     val idx1 = spark.read.parquet(s"$gen1/index")
     assert(idx1.filter(Dedup.dedupIsDeleted(col("doc_id"))).count() == 0,
       "deleted doc_ids still present in the post-delete index")
@@ -581,7 +581,7 @@ class DedupSimilaritySuite extends SparkTestBase {
       s"survivor count ${idx1.count()} != $expectSurvivors")
     // re-run converges to identical content under a fresh generation name
     Dedup.dedupIndexDelete(spark, sf)
-    val gen2 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen2 = graft.sources.Artifacts.currentGeneration(spark, root)
     assert(gen1 != gen2, "re-run must publish a FRESH generation name")
     assert(spark.read.parquet(s"$gen2/index").count() == expectSurvivors,
       "delete must be idempotent by content")
@@ -593,7 +593,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     val root = Dedup.dedupIngestRoot(sf)
     val disp1 = Dedup.ingestDedup(spark, sf)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
-    val gen1 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen1 = graft.sources.Artifacts.currentGeneration(spark, root)
     val idx1 = spark.read.parquet(s"$gen1/index")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val nCorpus = Tables.documents(spark, sf).count()
@@ -611,7 +611,7 @@ class DedupSimilaritySuite extends SparkTestBase {
     // fixed point, under a fresh generation name
     val disp2 = Dedup.ingestDedup(spark, sf)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
-    val gen2 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen2 = graft.sources.Artifacts.currentGeneration(spark, root)
     assert(gen1 != gen2, "re-run must publish a FRESH generation name")
     assert(disp2 == disp1, "retried chunk must reproduce its disposition")
     val idx2 = spark.read.parquet(s"$gen2/index")
@@ -624,11 +624,11 @@ class DedupSimilaritySuite extends SparkTestBase {
     import graft.operators.Dedup
     val root = Dedup.dedupIndexUpdRoot(sf)
     Dedup.dedupIndexUpdate(spark, sf)
-    val gen1 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen1 = graft.sources.Artifacts.currentGeneration(spark, root)
     val ids1 = spark.read.parquet(s"$gen1/index")
       .select(col("doc_id")).collect().map(_.getLong(0)).sorted
     Dedup.dedupIndexUpdate(spark, sf)
-    val gen2 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen2 = graft.sources.Artifacts.currentGeneration(spark, root)
     assert(gen1 != gen2, "re-run must publish a FRESH generation name")
     val ids2 = spark.read.parquet(s"$gen2/index")
       .select(col("doc_id")).collect().map(_.getLong(0)).sorted

@@ -92,16 +92,16 @@ class SourcesSuite extends SparkTestBase {
   }
 
   test("compaction publish is atomic: readers see old-complete or new-complete") {
-    import graft.sources.Sources
+    import graft.sources.{Artifacts, Sources}
     val root = Sources.scratch(sf, "atomic_publish_case")
     val base = Tables.nation(spark, sf).select(col("n_nationkey"), col("n_name"))
     val nRows = base.count()
 
     // generation 1 published: the manifest resolves it, fully readable
     base.repartition(8).write.mode("overwrite").parquet(s"$root/gen-1")
-    Sources.publishGeneration(spark, root, "gen-1")
-    assert(Sources.currentGeneration(spark, root).endsWith("/gen-1"))
-    assert(Sources.readCurrent(spark, root).count() == nRows)
+    Artifacts.publish(spark, root, "gen-1")()
+    assert(Artifacts.currentGeneration(spark, root).endsWith("/gen-1"))
+    assert(Artifacts.readCurrent(spark, root).count() == nRows)
 
     // a compaction attempt that DIES before publish: a half-written next
     // generation exists on disk, but the manifest still points at gen-1 —
@@ -109,15 +109,15 @@ class SourcesSuite extends SparkTestBase {
     val partial = new java.io.File(s"$root/gen-2")
     partial.mkdirs()
     new java.io.File(partial, "part-00000-halfwritten.parquet").createNewFile()
-    assert(Sources.currentGeneration(spark, root).endsWith("/gen-1"))
-    assert(Sources.readCurrent(spark, root).count() == nRows)
+    assert(Artifacts.currentGeneration(spark, root).endsWith("/gen-1"))
+    assert(Artifacts.readCurrent(spark, root).count() == nRows)
 
     // the retried compaction overwrites the orphan and republishes: the
     // manifest swap is one FileContext.rename(OVERWRITE) — after it, readers
     // resolve the new complete generation (same rows, fewer files)
-    Sources.compactDataset(spark, root, "gen-2", 2)
-    assert(Sources.currentGeneration(spark, root).endsWith("/gen-2"))
-    val after = Sources.readCurrent(spark, root)
+    Artifacts.compactDataset(spark, root, "gen-2", 2)
+    assert(Artifacts.currentGeneration(spark, root).endsWith("/gen-2"))
+    val after = Artifacts.readCurrent(spark, root)
     assert(after.count() == nRows)
     assert(after.inputFiles.length == 2, s"expected 2 compacted files, got ${after.inputFiles.length}")
     // no leftover temp manifest: the swap consumed it
@@ -128,12 +128,12 @@ class SourcesSuite extends SparkTestBase {
   }
 
   test("publish GC-sweeps abandoned tmp manifests past the TTL, spares fresh ones") {
-    import graft.sources.Sources
+    import graft.sources.{Artifacts, Sources}
     import org.apache.hadoop.fs.Path
     val root = Sources.scratch(sf, "tmp_gc_case")
     Tables.nation(spark, sf).select(col("n_nationkey"))
       .write.mode("overwrite").parquet(s"$root/gen-1")
-    Sources.publishGeneration(spark, root, "gen-1")
+    Artifacts.publish(spark, root, "gen-1")()
     // plant one ABANDONED tmp (hard-killed publisher: mtime past the TTL)
     // and one FRESH tmp (indistinguishable from a live concurrent publish)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -144,40 +144,40 @@ class SourcesSuite extends SparkTestBase {
       try o.write("gen-x".getBytes("UTF-8")) finally o.close()
     }
     fs.setTimes(stale, System.currentTimeMillis() - 2L * 3600 * 1000, -1)
-    Sources.publishGeneration(spark, root, "gen-1")
+    Artifacts.publish(spark, root, "gen-1")()
     assert(!fs.exists(stale), "tmp older than the TTL must be swept at publish time")
     assert(fs.exists(fresh), "a fresh tmp may belong to a live publisher — must survive")
-    assert(Sources.currentGeneration(spark, root).endsWith("/gen-1"))
+    assert(Artifacts.currentGeneration(spark, root).endsWith("/gen-1"))
   }
 
   test("compactEpochs: rows preserved, idempotent, later commits append on top") {
     assertNoTmpdirLeak {
-      import graft.sources.Sources
+      import graft.sources.Artifacts
       val root = tempDir("graft_ec").toString + "/tbl"
       val ev = Tables.events(spark, sf).select(col("event_id"), col("value"))
       val n = ev.count()
       (0 until 3).foreach { b =>
-        Sources.commitEpoch(spark, root, ev.filter(pmod(col("event_id"), lit(3)) === b),
+        Artifacts.commitEpoch(spark, root, ev.filter(pmod(col("event_id"), lit(3)) === b),
           f"epoch-$b%09d")
       }
-      assert(Sources.committedEpochs(spark, root).size == 3)
-      Sources.compactEpochs(spark, root, parts = 2)
-      val after = Sources.committedEpochs(spark, root)
+      assert(Artifacts.committedEpochs(spark, root).size == 3)
+      Artifacts.compactEpochs(spark, root, parts = 2)
+      val after = Artifacts.committedEpochs(spark, root)
       assert(after.size == 1, s"expected single compacted epoch, got $after")
-      assert(Sources.readEpochs(spark, root).count() == n, "compaction lost/duplicated rows")
+      assert(Artifacts.readEpochs(spark, root).count() == n, "compaction lost/duplicated rows")
       // idempotent: a second compaction of an already-compact list is a no-op
       // (same manifest content — the single epoch name is unchanged)
-      Sources.compactEpochs(spark, root, parts = 2)
-      assert(Sources.committedEpochs(spark, root) == after)
+      Artifacts.compactEpochs(spark, root, parts = 2)
+      assert(Artifacts.committedEpochs(spark, root) == after)
       // the stream keeps running after a compaction: a new epoch appends
       // beside the compacted one and both resolve through one manifest read
-      Sources.commitEpoch(spark, root, ev.limit(9), "epoch-000000099")
-      assert(Sources.committedEpochs(spark, root).size == 2)
-      assert(Sources.readEpochs(spark, root).count() == n + 9)
+      Artifacts.commitEpoch(spark, root, ev.limit(9), "epoch-000000099")
+      assert(Artifacts.committedEpochs(spark, root).size == 2)
+      assert(Artifacts.readEpochs(spark, root).count() == n + 9)
       // and compacting again folds both into one fresh dir, rows intact
-      Sources.compactEpochs(spark, root, parts = 1)
-      assert(Sources.committedEpochs(spark, root).size == 1)
-      assert(Sources.readEpochs(spark, root).count() == n + 9)
+      Artifacts.compactEpochs(spark, root, parts = 1)
+      assert(Artifacts.committedEpochs(spark, root).size == 1)
+      assert(Artifacts.readEpochs(spark, root).count() == n + 9)
     }
   }
 
@@ -395,7 +395,7 @@ class SourcesSuite extends SparkTestBase {
     val root = graft.sources.Sources.scratch(sf, "time_travel")
     val dirs = new java.io.File(root).listFiles().map(_.getName)
     assert(dirs.contains("gen-1") && dirs.contains("gen-2"))
-    assert(graft.sources.Sources.currentGeneration(spark, root).endsWith("/gen-2"))
+    assert(graft.sources.Artifacts.currentGeneration(spark, root).endsWith("/gen-2"))
   }
 
   test("q324 hilbert code is a bijection with grid-adjacent consecutives") {

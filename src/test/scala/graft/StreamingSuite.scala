@@ -216,7 +216,7 @@ class StreamingSuite extends SparkTestBase {
     val acct1 = Registry.byName("q139_stream_ingest").q(spark, sf)
       .collect()(0)
     assert(acct1.getBoolean(0), "expected >= 2 micro-batches")
-    val gen1 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen1 = graft.sources.Artifacts.currentGeneration(spark, root)
     val ids1 = spark.read.parquet(s"$gen1/index")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     // REDELIVERY of one already-processed chunk (the novel-parity half):
@@ -224,7 +224,7 @@ class StreamingSuite extends SparkTestBase {
     // under a fresh generation, earlier admissions untouched
     val redelivered = Dedup.mixedBatch(spark, sf).filter(col("doc_id") % 2 === 1)
     Dedup.ingestChunk(spark, root, sf, redelivered)
-    val gen2 = graft.sources.Sources.currentGeneration(spark, root)
+    val gen2 = graft.sources.Artifacts.currentGeneration(spark, root)
     assert(gen1 != gen2, "retry must publish a FRESH generation name")
     val ids2 = spark.read.parquet(s"$gen2/index")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -233,7 +233,7 @@ class StreamingSuite extends SparkTestBase {
 
   test("multi-epoch exactly-once publish: ≥2 epochs, retry no-ops, crash dir invisible") {
     assertNoTmpdirLeak {
-      import graft.sources.Sources
+      import graft.sources.Artifacts
       // two arrival chunks (even/odd event ids), so exactly two micro-batches
       val ev = Tables.events(spark, sf)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -241,28 +241,28 @@ class StreamingSuite extends SparkTestBase {
         Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1)))
       val root = tempDir("graft_pub_root").toString + "/tbl"
       BoundedStreams.forEachBatch(src, "test_epoch_publish") { (batch, batchId) =>
-        Sources.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
+        Artifacts.commitEpoch(batch.sparkSession, root, batch, f"epoch-$batchId%09d")
       }
       val nEvents = ev.count()
-      assert(Sources.committedEpochs(spark, root).size == 2,
+      assert(Artifacts.committedEpochs(spark, root).size == 2,
         "maxFilesPerTrigger=1 over two files must commit two epochs")
-      assert(Sources.readEpochs(spark, root).count() == nEvents)
+      assert(Artifacts.readEpochs(spark, root).count() == nEvents)
       // SIMULATED RETRY of a committed epoch (redelivery after the manifest
       // swap landed but before the checkpoint recorded it): must NO-OP —
       // no double-append, and the already-published dir is not rewritten
       // (we pass a deliberately DIFFERENT batch; any rewrite would change
       // the union count).
-      Sources.commitEpoch(spark, root, ev, "epoch-000000000")
-      assert(Sources.committedEpochs(spark, root).size == 2, "retry must not add an epoch")
-      assert(Sources.readEpochs(spark, root).count() == nEvents, "retry must not change data")
+      Artifacts.commitEpoch(spark, root, ev, "epoch-000000000")
+      assert(Artifacts.committedEpochs(spark, root).size == 2, "retry must not add an epoch")
+      assert(Artifacts.readEpochs(spark, root).count() == nEvents, "retry must not change data")
       // CRASH-BEFORE-SWAP: a dir written but never listed is invisible
       ev.limit(5).write.parquet(s"$root/epoch-000000099")
-      assert(Sources.readEpochs(spark, root).count() == nEvents,
+      assert(Artifacts.readEpochs(spark, root).count() == nEvents,
         "unlisted epoch dir must be invisible to readers")
       // a genuinely new epoch appends exactly its own rows
-      Sources.commitEpoch(spark, root, ev.limit(7), "epoch-000000002")
-      assert(Sources.committedEpochs(spark, root).size == 3)
-      assert(Sources.readEpochs(spark, root).count() == nEvents + 7)
+      Artifacts.commitEpoch(spark, root, ev.limit(7), "epoch-000000002")
+      assert(Artifacts.committedEpochs(spark, root).size == 3)
+      assert(Artifacts.readEpochs(spark, root).count() == nEvents + 7)
     }
   }
 
@@ -342,7 +342,7 @@ class StreamingSuite extends SparkTestBase {
     // the merge artifact published once; a re-run converges and neither
     // re-learns nor republishes (generation dir untouched)
     val root = graft.sources.Sources.scratch(sf, "byte_bpe_merges")
-    val gen = graft.sources.Sources.currentGeneration(spark, root)
+    val gen = graft.sources.Artifacts.currentGeneration(spark, root)
     val files1 = spark.read.parquet(s"$gen/merges").inputFiles.sorted.toSeq
     val again = Registry.byName("q304_stream_byte_bpe")
       .q(spark, sf).collect().map(_.toSeq).toSeq

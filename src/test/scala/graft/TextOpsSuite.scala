@@ -37,27 +37,24 @@ class TextOpsSuite extends SparkTestBase {
     }
   }
 
-  test("q83 per-round checkpoint: identical output, N=16 trains in bounded time") {
+  test("q83 BPE: two 6-round runs agree, N=16 trains in bounded time") {
     import graft.operators.TextOps
-    // the flag only changes where the plan is cut, never the result
+    // per-round checkpoints cut the plan, never change the result
     val off = TextOps.bpeVocab(spark, sf, rounds = 6).collect().map(_.toSeq).toSeq
-    spark.conf.set("graft.bpe.perRoundCheckpoint", "true")
-    try {
-      val on = TextOps.bpeVocab(spark, sf, rounds = 6).collect().map(_.toSeq).toSeq
-      assert(on == off, "checkpointed BPE training diverged from the pure plan")
-      // linear-lineage training at tokenizer-ish depth: each round plans
-      // against the materialized previous corpus, so N=16 stays bounded
-      // (the pure plan re-embeds all prior rounds per round — O(N²) corpus
-      // recomputations — and its planning alone blows up at this depth)
-      val t0 = System.nanoTime()
-      val deep = TextOps.bpeVocab(spark, sf, rounds = 16).collect()
-      val sec = (System.nanoTime() - t0) / 1e9
-      assert(deep.length == 16)
-      // every merge round shrinks (or holds) the corpus token count
-      val tokCounts = deep.map(_.getLong(4)).toSeq
-      assert(tokCounts == tokCounts.sorted.reverse, s"toks_after not non-increasing: $tokCounts")
-      assert(sec < 240.0, f"N=16 checkpointed training took $sec%.1f s")
-    } finally spark.conf.unset("graft.bpe.perRoundCheckpoint")
+    val on = TextOps.bpeVocab(spark, sf, rounds = 6).collect().map(_.toSeq).toSeq
+    assert(on == off, "two 6-round BPE trainings diverged")
+    // linear-lineage training at tokenizer-ish depth: each round plans
+    // against the materialized previous corpus, so N=16 stays bounded
+    // (the pure plan re-embeds all prior rounds per round — O(N²) corpus
+    // recomputations — and its planning alone blows up at this depth)
+    val t0 = System.nanoTime()
+    val deep = TextOps.bpeVocab(spark, sf, rounds = 16).collect()
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(deep.length == 16)
+    // every merge round shrinks (or holds) the corpus token count
+    val tokCounts = deep.map(_.getLong(4)).toSeq
+    assert(tokCounts == tokCounts.sorted.reverse, s"toks_after not non-increasing: $tokCounts")
+    assert(sec < 240.0, f"N=16 checkpointed training took $sec%.1f s")
   }
 
   test("q96 two-phase prefix scan equals the naive single-window packing") {

@@ -379,7 +379,7 @@ class TransformsSuite extends SparkTestBase {
       "both serve-plan scans must read the published artifact")
     // generation protocol survives re-serve: no rebuild, same artifact files
     val root = graft.sources.Sources.scratch(sf, "cross_corpus_index")
-    val gen = graft.sources.Sources.currentGeneration(spark, root)
+    val gen = graft.sources.Artifacts.currentGeneration(spark, root)
     val files1 = spark.read.parquet(s"$gen/exact").inputFiles.sorted.toSeq
     val again = Registry.byName("q299_cross_corpus_decon").q(spark, sf)
       .collect()

@@ -1,0 +1,89 @@
+"""Self-tests for tools/plan_diff.py (stdlib only, no JVM).
+
+    python3 -m unittest discover -s tools/tests
+"""
+import os
+import subprocess
+import sys
+import tempfile
+import unittest
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+TOOL = os.path.join(HERE, "..", "plan_diff.py")
+sys.path.insert(0, os.path.join(HERE, ".."))
+import plan_diff  # noqa: E402
+
+# The same two queries planned in two JVMs: every id, hash and token moves.
+DUMP_A = """[info] running (fork) graft.ExplainQ /data/sf0.001 q1_scan q2_agg
+[error] 26/10/19 04:56:55 INFO SparkContext: Running Spark version 4.1.2
+[info]
+[info] ========== q1_scan ==========
+[info] == Physical Plan ==
+[info] * Project (2)
+[info] +- Scan parquet  (1)
+[info] (1) Scan parquet
+[info] Location: InMemoryFileIndex [file:/tmp/graft_io_6422_vm/t/gen-build]
+[info] Arguments: posexplode(transform(UnsafeArrayData@7a50b5f7, lambdafunction(slice(v#482, (lambda s_3#484 * 8), 8), lambda s_3#484, false)))
+[info] ========== q2_agg ==========
+[info] HashAggregate (3)
+[info] +- Exchange (2)
+[info]    +- Scan ExistingRDD (1)
+[info] Arguments: [k#12L], MapPartitionsRDD[415] at localCheckpoint at Dedup.scala:1060
+[info] Arguments: hashpartitioning(k#12L, 4), ENSURE_REQUIREMENTS, [plan_id=7641]
+[warn] 26/10/19 04:56:58 WARN SomeLogger: noise
+"""
+
+DUMP_B_SAME = """[info] ========== q1_scan ==========
+[info] == Physical Plan ==
+[info] * Project (2)
+[info] +- Scan parquet  (1)
+[info] (1) Scan parquet
+[info] Location: InMemoryFileIndex [file:/tmp/graft_io_9001_other/t/gen-build]
+[info] Arguments: posexplode(transform(UnsafeArrayData@1c2d3e4f, lambdafunction(slice(v#9, (lambda s_17#11 * 8), 8), lambda s_17#11, false)))
+[info] ========== q2_agg ==========
+[info] HashAggregate (3)
+[info] +- Exchange (2)
+[info]    +- Scan ExistingRDD (1)
+[info] Arguments: [k#77L], MapPartitionsRDD[502] at localCheckpoint at Dedup.scala:1053
+[info] Arguments: hashpartitioning(k#77L, 4), ENSURE_REQUIREMENTS, [plan_id=12]
+"""
+
+# q2 gains an exchange: a real plan change.
+DUMP_B_EXCHANGE = DUMP_B_SAME.replace(
+    "[info] +- Exchange (2)\n[info]    +- Scan ExistingRDD (1)",
+    "[info] +- Exchange (2)\n[info]    +- Exchange (4)\n[info]       +- Scan ExistingRDD (1)")
+
+
+class PlanDiffTest(unittest.TestCase):
+    def run_tool(self, a, b):
+        with tempfile.TemporaryDirectory() as d:
+            pa, pb = os.path.join(d, "a.txt"), os.path.join(d, "b.txt")
+            with open(pa, "w") as f:
+                f.write(a)
+            with open(pb, "w") as f:
+                f.write(b)
+            return subprocess.run([sys.executable, TOOL, pa, pb],
+                                  capture_output=True, text=True)
+
+    def test_equal_after_masking(self):
+        self.assertEqual(plan_diff.diff(DUMP_A, DUMP_B_SAME), [])
+        r = self.run_tool(DUMP_A, DUMP_B_SAME)
+        self.assertEqual(r.returncode, 0, r.stdout + r.stderr)
+        self.assertEqual(r.stdout, "")
+
+    def test_different_exchange_is_reported(self):
+        found = plan_diff.diff(DUMP_A, DUMP_B_EXCHANGE)
+        self.assertEqual([name for name, _ in found], ["q2_agg"])
+        self.assertTrue(any("+   +- Exchange (4)" in line for line in found[0][1]))
+        r = self.run_tool(DUMP_A, DUMP_B_EXCHANGE)
+        self.assertEqual(r.returncode, 1)
+        self.assertIn("== q2_agg", r.stdout)
+        self.assertNotIn("== q1_scan", r.stdout)
+
+    def test_query_missing_from_one_dump(self):
+        only_q1 = DUMP_B_SAME[:DUMP_B_SAME.index("[info] ========== q2_agg")]
+        self.assertEqual(plan_diff.diff(DUMP_A, only_q1), [("q2_agg", ["only in A"])])
+
+
+if __name__ == "__main__":
+    unittest.main()
