@@ -42,16 +42,17 @@ trait Combinable extends MRJob
   * atoi-parsed values. A sum is combinable: partial sums are valid counts.
   */
 object WordCount extends Combinable {
-  private val delims = Set(' ', ',', '.', '"', '\'')
+  private def delim(c: Char): Boolean =
+    c == ' ' || c == ',' || c == '.' || c == '"' || c == '\''
 
   def tokenize(line: String): Iterator[String] = new Iterator[String] {
     private var i = 0
-    private def skip(): Unit = { while (i < line.length && delims(line.charAt(i))) i += 1 }
+    private def skip(): Unit = { while (i < line.length && delim(line.charAt(i))) i += 1 }
     skip()
     def hasNext: Boolean = i < line.length
     def next(): String = {
       val start = i
-      while (i < line.length && !delims(line.charAt(i))) i += 1
+      while (i < line.length && !delim(line.charAt(i))) i += 1
       val tok = line.substring(start, i)
       skip()
       tok

@@ -13,6 +13,10 @@ import java.nio.file.{Files, Paths}
   *                        size; Spark's FilePartition planning replaces
   *                        file_shard.h:28-94 and is line-aligned natively)
   *   - `nOutputFiles`   → shuffle partition count R for the reduce stage
+  *   - `outputDir`      → an existing local directory; [[MRRunner.run]]
+  *                        deletes the `part-*` and `_SUCCESS` files an
+  *                        earlier job left there before it starts, and
+  *                        leaves every other file in it alone
   *   - `workerAddrs`    → not applicable (executors register themselves);
   *                        validated for spec-compat only
   */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.mr.{Combinable, MRJob, MRRunner}
+import graft.mr.{Combinable, MRJob, MRRunner, WordCount}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -22,6 +22,16 @@ class MRPropertySuite extends AnyFunSuite {
   private def hotCorpus(rnd: Random): List[String] =
     List.fill(40)(List.fill(rnd.nextInt(150))(
       if (rnd.nextDouble() < 0.6) "alpha" else vocab(rnd.nextInt(vocab.size))).mkString(" "))
+
+  test("WordCount.tokenize equals a regex split on the five delimiters (1000 random cases)") {
+    val alphabet = "abcXYZ ,.\"'\t-é"
+    val rnd = new Random(7)
+    for (_ <- 1 to 1000) {
+      val line = Seq.fill(rnd.nextInt(40))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      val want = line.split("[ ,.\"']+").filter(_.nonEmpty).toSeq
+      assert(WordCount.tokenize(line).toSeq == want, s"line: [$line]")
+    }
+  }
 
   test("sortedRuns groups a sorted iterator exactly (100 random cases)") {
     val rnd = new Random(42)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.mr.{JobRegistry, MRJob, MRRunner, MRSpec, WordCount}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
@@ -13,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * partition, counts exact.
   */
 class MRRunnerSuite extends SparkTestBase {
-  import MRRunnerSuite.UncombinedWordCount
+  import MRRunnerSuite.{FailingWordCount, TaskTotals, UncombinedWordCount}
 
   /** src/test/resources/mr/testdata_{1,2,3}.txt, written by
     * tools/gen_mr_testdata.py: every strtok delimiter, delimiter runs,
@@ -25,6 +26,24 @@ class MRRunnerSuite extends SparkTestBase {
     assert(url != null, s"mr/testdata_$i.txt is missing from the test classpath")
     Paths.get(url.toURI).toString
   }
+
+  private def spec(
+      out: Path,
+      inputs: Seq[String],
+      r: Int,
+      userId: String,
+      mapKilobytes: Int = 500): MRSpec =
+    MRSpec(
+      nWorkers = 4,
+      workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
+      inputFiles = inputs,
+      outputDir = out.toString,
+      nOutputFiles = r,
+      mapKilobytes = mapKilobytes,
+      userId = userId)
+
+  private def listing(dir: Path): Seq[String] =
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
 
   test("word count over the committed corpus matches a naive independent count") {
     val lines = spark.read.textFile(corpus: _*)
@@ -192,39 +211,34 @@ class MRRunnerSuite extends SparkTestBase {
 
   /** Runs `userId`'s job over the corpus with 64 KB splits (several map
     * tasks) and R = 8 into a fresh directory. Returns the directory and the
-    * shuffle records that the job's successful tasks wrote.
+    * totals of the job's successful tasks.
     */
-  private def runCountingShuffle(userId: String): (Path, Long) = {
+  private def runCountingShuffle(userId: String): (Path, TaskTotals) = {
     val out = tempDir("mr_combiner")
-    val spec = MRSpec(
-      nWorkers = 4,
-      workerAddrs = (0 until 4).map(i => s"localhost:500$i"),
-      inputFiles = corpus,
-      outputDir = out.toString,
-      nOutputFiles = 8,
-      mapKilobytes = 64,
-      userId = userId)
     val group = s"mr-combiner-$userId"
     val stages = ConcurrentHashMap.newKeySet[Int]()
-    val records = new AtomicLong
+    val totals = TaskTotals(new AtomicLong, new AtomicLong, new AtomicLong)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           e.stageIds.foreach(stages.add)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskInfo.successful && e.taskMetrics != null)
-          records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        if (stages.contains(e.stageId) && e.taskInfo.successful && e.taskMetrics != null) {
+          totals.shuffleRecords.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+          totals.outputRecords.addAndGet(e.taskMetrics.outputMetrics.recordsWritten)
+          totals.outputBytes.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+        }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup(group, userId)
-    try MRRunner.run(spark, spec)
+    try MRRunner.run(spark, spec(out, corpus, 8, userId, mapKilobytes = 64))
     finally {
       sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBus.drain(sc)
+      org.apache.spark.graft.SparkShim.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
-    out -> records.get
+    out -> totals
   }
 
   private def partFiles(dir: Path): Seq[Path] =
@@ -247,8 +261,8 @@ class MRRunnerSuite extends SparkTestBase {
 
   test("combiner: word count shuffles one record per (map task, word), the uncombined job one per token") {
     assertNoTmpdirLeak {
-      val (_, combined) = runCountingShuffle("wordcount")
-      val (_, plain) = runCountingShuffle("wordcount-uncombined")
+      val combined = runCountingShuffle("wordcount")._2.shuffleRecords.get
+      val plain = runCountingShuffle("wordcount-uncombined")._2.shuffleRecords.get
       // the same 64 KB splits as the job's map tasks, counted independently
       val key = "spark.sql.files.maxPartitionBytes"
       val before = spark.conf.getOption(key)
@@ -268,9 +282,77 @@ class MRRunnerSuite extends SparkTestBase {
       assert(combined < plain)
     }
   }
+
+  test("run writes exactly R part files, indexed by key-hash partition, then _SUCCESS") {
+    assertNoTmpdirLeak {
+      val in = tempFile("mr_abc", ".txt").toPath
+      Files.write(in, "a b c\n".getBytes(UTF_8))
+      val out = tempDir("mr_abc_out")
+      MRRunner.run(spark, spec(out, Seq(in.toString), 8, "wordcount"))
+      val parts = (0 until 8).map(r => f"part-$r%05d")
+      assert(listing(out) == (parts :+ "_SUCCESS").sorted)
+      // Spark's pmod(hash(k), 8): a → 2, b → 1, c → 2
+      val want = Map(1 -> "b 1\n", 2 -> "a 1\nc 1\n").withDefaultValue("")
+      parts.zipWithIndex.foreach { case (p, r) =>
+        assert(new String(Files.readAllBytes(out.resolve(p)), UTF_8) == want(r), s"$p")
+      }
+      assert(Files.size(out.resolve("_SUCCESS")) == 0)
+    }
+  }
+
+  JobRegistry.register("wordcount-fails", new FailingWordCount("worker"))
+
+  test("a failed job leaves no _SUCCESS and no temp file; a rerun replaces only stale output") {
+    assertNoTmpdirLeak {
+      val out = tempDir("mr_stale")
+      Files.write(out.resolve("notes.txt"), "kept\n".getBytes(UTF_8))
+      assert(WordCount.tokenize(Files.readString(Paths.get(corpus.head))).contains("worker"))
+      val e = intercept[Exception](MRRunner.run(spark, spec(out, corpus, 8, "wordcount-fails")))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("reduce fails on worker")), e)
+      assert(!listing(out).contains("_SUCCESS"), listing(out))
+      assert(!listing(out).exists(n => n.startsWith(".part-") && n.endsWith(".tmp")), listing(out))
+
+      MRRunner.run(spark, spec(out, corpus, 8, "wordcount"))
+      assert(listing(out).count(_.startsWith("part-")) == 8)
+      MRRunner.run(spark, spec(out, corpus, 4, "wordcount"))
+      assert(listing(out) ==
+        ((0 until 4).map(r => f"part-$r%05d") ++ Seq("_SUCCESS", "notes.txt")).sorted)
+      assert(Files.readString(out.resolve("notes.txt")) == "kept\n")
+    }
+  }
+
+  test("the reduce tasks report the part files' lines and bytes as their output metrics") {
+    assertNoTmpdirLeak {
+      val (out, totals) = runCountingShuffle("wordcount")
+      val parts = partFiles(out)
+      assert(parts.size == 8)
+      val lines = parts.map(p => Files.readAllLines(p, UTF_8).size.toLong).sum
+      val bytes = parts.map(Files.size).sum
+      assert(lines > 0)
+      assert(totals.outputRecords.get == lines)
+      assert(totals.outputBytes.get == bytes)
+    }
+  }
 }
 
 object MRRunnerSuite {
+
+  /** What the tasks of one job reported to Spark's listeners. */
+  final case class TaskTotals(
+      shuffleRecords: AtomicLong,
+      outputRecords: AtomicLong,
+      outputBytes: AtomicLong)
+
+  /** Word count whose reduce fails on the key `bad`. Not Combinable, so the
+    * failure happens in the reduce stage, where the part files are written.
+    */
+  final class FailingWordCount(bad: String) extends MRJob {
+    def map(line: String): IterableOnce[(String, String)] = WordCount.map(line)
+    def reduce(key: String, values: Seq[String]): IterableOnce[(String, String)] =
+      if (key == bad) throw new IllegalStateException(s"reduce fails on $bad")
+      else WordCount.reduce(key, values)
+  }
 
   /** Word count without the [[graft.mr.Combinable]] marker: same map and
     * reduce, so it takes the plain shuffle-every-pair plan.

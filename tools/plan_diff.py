@@ -6,7 +6,9 @@
 Each dump is split at its `========== <query> ==========` headers. Before
 comparing, the parts of a plan that change from run to run are masked:
 expression ids (`#123`), lambda-variable suffixes (`lambda x_3`), object
-hashes (`@7a50b5f7`), the per-JVM scratch token (`graft_io_<token>`),
+hashes (`@7a50b5f7`), the JVM's names for lambda classes
+(`MRRunner$$$Lambda$2800/0x00007fec94da8e00`, which a typed Dataset
+operator prints as its argument), the per-JVM scratch token (`graft_io_<token>`),
 exchange plan ids (`plan_id=7641`), RDD ids (`MapPartitionsRDD[415]`) and
 the source line of a checkpoint's call site (`Dedup.scala:1060`).
 Output captured through `sbt runMain` works as is: the `[info] ` prefix is
@@ -26,6 +28,7 @@ MASKS = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
+    (re.compile(r"\$Lambda(\$\d+)?/0x[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"graft_io_[A-Za-z0-9_]+"), "graft_io_T"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),

@@ -30,6 +30,7 @@ DUMP_A = """[info] running (fork) graft.ExplainQ /data/sf0.001 q1_scan q2_agg
 [info]    +- Scan ExistingRDD (1)
 [info] Arguments: [k#12L], MapPartitionsRDD[415] at localCheckpoint at Dedup.scala:1060
 [info] Arguments: hashpartitioning(k#12L, 4), ENSURE_REQUIREMENTS, [plan_id=7641]
+[info] Arguments: graft.mr.MRRunner$$$Lambda$2800/0x00007fec94da8e00@1b2c3d4e, obj#70: scala.Tuple2
 [warn] 26/10/19 04:56:58 WARN SomeLogger: noise
 """
 
@@ -46,6 +47,7 @@ DUMP_B_SAME = """[info] ========== q1_scan ==========
 [info]    +- Scan ExistingRDD (1)
 [info] Arguments: [k#77L], MapPartitionsRDD[502] at localCheckpoint at Dedup.scala:1053
 [info] Arguments: hashpartitioning(k#77L, 4), ENSURE_REQUIREMENTS, [plan_id=12]
+[info] Arguments: graft.mr.MRRunner$$$Lambda$2801/0x00007fd6a8da4b50@5e6f7a8b, obj#93: scala.Tuple2
 """
 
 # q2 gains an exchange: a real plan change.
