@@ -29,25 +29,7 @@ object BpeKernels {
   /** Count of non-empty double-space-separated tokens:
     * `size(filter(split(trim(s), "  "), t -> t != ''))` as a long.
     */
-  def dsTokenCount(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    var st = 0
-    var en = bytes.length
-    while (st < en && bytes(st) == ' ') st += 1
-    while (en > st && bytes(en - 1) == ' ') en -= 1
-    var cnt = 0L
-    var tokStart = st
-    var i = st
-    while (i < en) {
-      if (bytes(i) == ' ' && i + 1 < en && bytes(i + 1) == ' ') {
-        if (i > tokStart) cnt += 1
-        i += 2
-        tokStart = i
-      } else i += 1
-    }
-    if (en > tokStart) cnt += 1
-    cnt
-  }
+  def dsTokenCount(s: UTF8String): Long = Spans.dsTokens(s.getBytes, null, null).toLong
 
   /** Adjacent-token pairs "x y" over the non-empty double-space-separated
     * tokens — identical to the learn loop's
@@ -58,34 +40,11 @@ object BpeKernels {
     */
   def dsPairs(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    var st = 0
-    var en = bytes.length
-    while (st < en && bytes(st) == ' ') st += 1
-    while (en > st && bytes(en - 1) == ' ') en -= 1
-    // collect non-empty token byte ranges
-    var nTok = 0
-    var starts = new Array[Int](16)
-    var ends = new Array[Int](16)
-    def push(a: Int, b: Int): Unit = {
-      if (nTok == starts.length) {
-        starts = java.util.Arrays.copyOf(starts, nTok * 2)
-        ends = java.util.Arrays.copyOf(ends, nTok * 2)
-      }
-      starts(nTok) = a
-      ends(nTok) = b
-      nTok += 1
-    }
-    var tokStart = st
-    var i = st
-    while (i < en) {
-      if (bytes(i) == ' ' && i + 1 < en && bytes(i + 1) == ' ') {
-        if (i > tokStart) push(tokStart, i)
-        i += 2
-        tokStart = i
-      } else i += 1
-    }
-    if (en > tokStart) push(tokStart, en)
+    val nTok = Spans.dsTokens(bytes, null, null)
     if (nTok < 2) return new GenericArrayData(Array.empty[Any])
+    val starts = new Array[Int](nTok)
+    val ends = new Array[Int](nTok)
+    Spans.dsTokens(bytes, starts, ends)
     val out = new Array[Any](nTok - 1)
     var k = 0
     while (k < nTok - 1) {
@@ -111,13 +70,10 @@ object BpeKernels {
   def dsFromHex(h: UTF8String): UTF8String = {
     val bytes = h.getBytes
     val n = bytes.length
-    var ascii = true
-    var i = 0
-    while (i < n && ascii) { if ((bytes(i) & 0x80) != 0) ascii = false; i += 1 }
-    if (ascii) {
+    if (Spans.isAscii(bytes)) {
       // fast path: no line terminators (the hex alphabet) -> simple pairing
       var clean = true
-      i = 0
+      var i = 0
       while (i < n && clean) {
         if (bytes(i) == '\n' || bytes(i) == '\r') clean = false
         i += 1

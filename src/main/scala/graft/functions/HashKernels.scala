@@ -34,46 +34,13 @@ object HashKernels {
     splitmix64(h)
   }
 
-  /** Tokenize on single spaces without regex; skips empty tokens.
-    * Returns (startOffsets, endOffsets) into the byte array. Two primitive
-    * passes (count tokens, then fill fixed-size arrays) — same no-boxing
-    * rule as [[codepointStarts]]: this runs per row inside the minhash /
-    * simhash hot kernels.
-    */
-  private def tokenSpans(bytes: Array[Byte]): (Array[Int], Array[Int]) = {
-    val n = bytes.length
-    var nTok = 0
-    var i = 0
-    while (i < n) {
-      while (i < n && bytes(i) == ' ') i += 1
-      if (i < n) {
-        nTok += 1
-        while (i < n && bytes(i) != ' ') i += 1
-      }
-    }
-    val starts = new Array[Int](nTok)
-    val ends = new Array[Int](nTok)
-    var j = 0
-    i = 0
-    while (i < n) {
-      while (i < n && bytes(i) == ' ') i += 1
-      if (i < n) {
-        starts(j) = i
-        while (i < n && bytes(i) != ' ') i += 1
-        ends(j) = i
-        j += 1
-      }
-    }
-    (starts, ends)
-  }
-
   /** 64-bit SimHash over space-separated tokens: each token votes its hash's
     * bits up/down; the sign of each bit's tally forms the signature. Documents
     * with similar token multisets land at small Hamming distance.
     */
   def simhash64(s: UTF8String): Long = {
     val bytes = s.getBytes
-    val (starts, ends) = tokenSpans(bytes)
+    val (starts, ends) = Spans.wordSpans(bytes)
     val tally = new Array[Int](64)
     var t = 0
     while (t < starts.length) {
@@ -128,55 +95,32 @@ object HashKernels {
     */
   def minhashSig(s: UTF8String, k: Int, shingle: Int): Array[Long] = {
     val bytes = s.getBytes
-    val (starts, ends) = tokenSpans(bytes)
+    val (starts, ends) = Spans.wordSpans(bytes)
     val nShingles = math.max(1, starts.length - shingle + 1)
     val (pa, pb) = permCoeffs(k)
     val sig = Array.fill(k)(Long.MaxValue)
     var t = 0
     while (t < nShingles) {
-      val h =
+      minUpdate(sig, pa, pb,
         if (starts.isEmpty) hashBytes(bytes, 0, bytes.length)
-        else shingleHash(bytes, starts, ends, t, shingle)
-      var i = 0
-      while (i < k) {
-        val p = pa(i) * h + pb(i)
-        if (p < sig(i)) sig(i) = p
-        i += 1
-      }
+        else shingleHash(bytes, starts, ends, t, shingle))
       t += 1
     }
     sig
   }
 
+  /** sig(i) = min(sig(i), a_i * h + b_i) for every permutation i. */
+  private def minUpdate(sig: Array[Long], pa: Array[Long], pb: Array[Long], h: Long): Unit = {
+    var i = 0
+    while (i < sig.length) {
+      val p = pa(i) * h + pb(i)
+      if (p < sig(i)) sig(i) = p
+      i += 1
+    }
+  }
+
   def minhashArray(s: UTF8String, k: Int, shingle: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(minhashSig(s, k, shingle))
-
-  /** Byte start offsets of UTF-8 codepoints: a byte begins a codepoint iff
-    * it is not a continuation byte (10xxxxxx). Two primitive passes (count,
-    * then fill) — no growable buffer, no boxing: this runs per row in the
-    * q55 hot kernel, and a boxed `ArrayBuffer[Int]` append per input byte
-    * was a measured 2.4× driver-bench regression (BENCH_r08 q55 36.9 s vs
-    * the 15.1 s anchor). Returns null for pure-ASCII input so the caller
-    * can skip the offsets entirely (every byte is a start).
-    */
-  private def codepointStarts(bytes: Array[Byte]): Array[Int] = {
-    val n = bytes.length
-    var cont = 0
-    var i = 0
-    while (i < n) {
-      if ((bytes(i) & 0xc0) == 0x80) cont += 1
-      i += 1
-    }
-    if (cont == 0) return null // ASCII / single-byte: starts(i) == i
-    val starts = new Array[Int](n - cont)
-    var j = 0
-    i = 0
-    while (i < n) {
-      if ((bytes(i) & 0xc0) != 0x80) { starts(j) = i; j += 1 }
-      i += 1
-    }
-    starts
-  }
 
   /** MinHash signature over character n-grams instead of token shingles —
     * the similarity measure behind char-n-gram Jaccard (q55). Windows are
@@ -188,31 +132,22 @@ object HashKernels {
     * semantics, matching `array_distinct` of the substring n-grams.
     *
     * ASCII fast path: when the input has no UTF-8 continuation bytes
-    * (`codepointStarts` returns null), window offsets are the byte offsets
-    * themselves and the loop runs with zero per-call allocation beyond the
-    * signature array — identical output to the general path by definition.
+    * (`Spans.codepointStarts` returns null), window offsets are the byte
+    * offsets themselves and the loop runs with zero per-call allocation
+    * beyond the signature array — identical output to the general path by
+    * definition.
     */
   def minhashSigChars(s: UTF8String, k: Int, n: Int): Array[Long] = {
     val bytes = s.getBytes
-    val starts = codepointStarts(bytes)
+    val starts = Spans.codepointStarts(bytes)
     val nc = if (starts == null) bytes.length else starts.length
     val (pa, pb) = permCoeffs(k)
     val sig = Array.fill(k)(Long.MaxValue)
     val nGrams = math.max(1, nc - n + 1)
     var t = 0
     while (t < nGrams) {
-      val from = if (nc == 0) 0 else if (starts == null) t else starts(t)
-      val until =
-        if (t + n >= nc) bytes.length
-        else if (starts == null) t + n
-        else starts(t + n)
-      val h = hashBytes(bytes, from, until)
-      var i = 0
-      while (i < k) {
-        val p = pa(i) * h + pb(i)
-        if (p < sig(i)) sig(i) = p
-        i += 1
-      }
+      minUpdate(sig, pa, pb, hashBytes(bytes,
+        Spans.windowFrom(starts, nc, t), Spans.windowUntil(bytes, starts, nc, t, n)))
       t += 1
     }
     sig
@@ -269,60 +204,35 @@ object HashKernels {
     splitmix64(h)
   }
 
-  /** The merge itself, over primitive arrays: one monomorphic loop the JIT
-    * always inlines and unrolls — no `ArrayData.getLong` virtual dispatch in
-    * the loop body. All kernels funnel through the SAME static HashKernels
-    * methods from every generated plan, so a per-element `ArrayData` accessor
-    * call site accumulates receiver types from every query in the JVM
-    * (UnsafeArrayData post-shuffle, GenericArrayData from fresh
-    * `array_sort`/`transform` output, ColumnarArray straight off vectorized
-    * parquet) and goes MEGAMORPHIC — whether the JIT's early profile window
-    * happens to be monomorphic decides between an inlined loop and a
-    * virtual-dispatch-per-element one, which is run-to-run bimodal. Copying
-    * once per call via the specialized bulk `toLongArray` (Platform.copyMemory
-    * on unsafe rows) then merging primitives is profile-independent.
+  /** Intersection count of two sorted arrays, dispatched on their kind:
+    * one `isInstanceOf` test per CALL (bimorphic, JIT-predictable) selects
+    * the copy-free merge over the concrete `UnsafeArrayData` class when both
+    * sides are post-shuffle unsafe rows — the always case in the confirm
+    * joins. `getLong` on that statically typed receiver is devirtualized,
+    * so the merge is one inlined primitive loop with ZERO per-pair
+    * allocation; the r10 `toLongArray`-per-call form allocated two multi-KB
+    * long arrays per candidate pair × millions of pairs, and q36/q55/q76
+    * regressed 1.5-5× for it.
+    *
+    * Any other ArrayData kind is bulk-copied once (`toLongArray`,
+    * Platform.copyMemory on unsafe rows) and merged over primitives. A
+    * per-element `ArrayData.getLong` would not do: every plan funnels
+    * through the SAME static kernels, so that call site accumulates
+    * receiver types from every query in the JVM (UnsafeArrayData
+    * post-shuffle, GenericArrayData from fresh `array_sort`/`transform`
+    * output, ColumnarArray straight off vectorized parquet) and goes
+    * MEGAMORPHIC — whether the JIT's early profile window happens to be
+    * monomorphic decides between an inlined loop and a
+    * virtual-dispatch-per-element one, which is run-to-run bimodal.
     */
-  private def mergeJaccard(a: Array[Long], b: Array[Long]): Double = {
-    val na = a.length
-    val nb = b.length
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val x = a(i)
-      val y = b(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    inter.toDouble / (na + nb - inter).toDouble
-  }
+  private def intersectCount(a: ArrayData, b: ArrayData): Int =
+    if (a.isInstanceOf[UnsafeArrayData] && b.isInstanceOf[UnsafeArrayData])
+      Spans.intersectCount(a.asInstanceOf[UnsafeArrayData], b.asInstanceOf[UnsafeArrayData])
+    else Spans.intersectCount(a.toLongArray(), b.toLongArray())
 
-  /** Copy-free merge over the CONCRETE `UnsafeArrayData` class — the
-    * dominant case in every confirm join, whose inputs arrive off a shuffle
-    * as unsafe rows. `getLong` on a statically-typed `UnsafeArrayData`
-    * receiver is a concrete-class call (devirtualized by CHA, unlike the
-    * megamorphic `ArrayData` accessor [[mergeJaccard]]'s doc describes), so
-    * this runs one inlined primitive loop with ZERO per-pair allocation —
-    * the r10 `toLongArray`-per-call form allocated two multi-KB long arrays
-    * per candidate pair × millions of pairs, and q36/q55/q76 regressed
-    * 1.5-5× for it.
-    */
-  private def mergeJaccardUnsafe(a: UnsafeArrayData, b: UnsafeArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
+  /** Jaccard of two sets of sizes na and nb that share `inter` elements. */
+  private def jaccard(inter: Int, na: Int, nb: Int): Double =
     inter.toDouble / (na + nb - inter).toDouble
-  }
 
   /** UNCHECKED internal entry point — exact Jaccard over two strictly-
     * ascending duplicate-free long arrays, no precondition verification.
@@ -336,11 +246,9 @@ object HashKernels {
     * [[GraftColumns.kernel]]; the SQL surface gets the checked
     * [[jaccardSorted]].
     *
-    * Dispatch: one `isInstanceOf` test per CALL (bimorphic, JIT-predictable)
-    * selects the zero-allocation [[mergeJaccardUnsafe]] when both sides are
-    * post-shuffle `UnsafeArrayData` — the always case in the confirm joins —
-    * and falls back to bulk-copy + primitive merge for any other ArrayData
-    * kind. This replaces `size(array_intersect(a,b)) / (|a|+|b|-inter)` in
+    * Dispatch is [[intersectCount]]'s: copy-free over two post-shuffle
+    * `UnsafeArrayData` sides, bulk-copy + primitive merge otherwise. This
+    * replaces `size(array_intersect(a,b)) / (|a|+|b|-inter)` in
     * the near-dup confirm joins: the built-in intersect builds a hash set
     * PER PAIR through generic per-element type dispatch and closure calls —
     * measured as the dominant (and JIT-unstable: 15×+ run-to-run swings at a
@@ -348,11 +256,7 @@ object HashKernels {
     * IEEE double semantics exactly like the Column formulation it replaces.
     */
   def jaccardSortedUnchecked(a: ArrayData, b: ArrayData): Double =
-    if (a.isInstanceOf[UnsafeArrayData] && b.isInstanceOf[UnsafeArrayData])
-      mergeJaccardUnsafe(
-        a.asInstanceOf[UnsafeArrayData],
-        b.asInstanceOf[UnsafeArrayData])
-    else mergeJaccard(a.toLongArray(), b.toLongArray())
+    jaccard(intersectCount(a, b), a.numElements(), b.numElements())
 
   /** Exact Jaccard over two SORTED long arrays (each strictly ascending —
     * the caller sorts `array_sort(array of 64-bit feature hashes)`).
@@ -380,9 +284,9 @@ object HashKernels {
       }
       arr
     }
-    mergeJaccard(
-      validated("left", a.toLongArray()),
-      validated("right", b.toLongArray()))
+    val xs = validated("left", a.toLongArray())
+    val ys = validated("right", b.toLongArray())
+    jaccard(Spans.intersectCount(xs, ys), xs.length, ys.length)
   }
 
   /** Fraction of positions where two equal-length signature arrays agree —
@@ -391,7 +295,7 @@ object HashKernels {
     * `aggregate(zip_with(...))` lambda chain (same motivation as
     * [[jaccardSortedUnchecked]]: the HOF form was a measured JIT-unstable
     * CPU sink, and the bulk `toLongArray` copy keeps the loop free of
-    * megamorphic per-element `ArrayData` dispatch — see [[mergeJaccard]]).
+    * megamorphic per-element `ArrayData` dispatch — see [[intersectCount]]).
     *
     * Both signatures must have the same k — a mismatched call would
     * otherwise compare garbage positions, and the function is registered in
@@ -547,37 +451,7 @@ object HashKernels {
     * `intersect_count_sorted` kernel via [[GraftColumns.kernel]].
     */
   def intersectCountSorted(a: ArrayData, b: ArrayData): Long =
-    if (a.isInstanceOf[UnsafeArrayData] && b.isInstanceOf[UnsafeArrayData]) {
-      val ua = a.asInstanceOf[UnsafeArrayData]
-      val ub = b.asInstanceOf[UnsafeArrayData]
-      val na = ua.numElements()
-      val nb = ub.numElements()
-      var i = 0
-      var j = 0
-      var inter = 0L
-      while (i < na && j < nb) {
-        val x = ua.getLong(i)
-        val y = ub.getLong(j)
-        if (x == y) { inter += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
-      }
-      inter
-    } else {
-      val xs = a.toLongArray()
-      val ys = b.toLongArray()
-      var i = 0
-      var j = 0
-      var inter = 0L
-      while (i < xs.length && j < ys.length) {
-        val x = xs(i)
-        val y = ys(j)
-        if (x == y) { inter += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
-      }
-      inter
-    }
+    intersectCount(a, b).toLong
 
   /** Distinct xxhash64 (Spark's seed-42 XXH64 over UTF-8 bytes) of every
     * `n`-token shingle — identical values to the former interpreted HOF
@@ -592,36 +466,15 @@ object HashKernels {
     */
   def tokenShingleHashes(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
-    val nb = bytes.length
-    // token spans WITH empties: boundaries at every space
-    var nTok = 1
-    var i = 0
-    while (i < nb) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    val starts = new Array[Int](nTok)
-    val ends = new Array[Int](nTok)
-    var tIdx = 0
-    starts(0) = 0
-    i = 0
-    while (i < nb) {
-      if (bytes(i) == ' ') {
-        ends(tIdx) = i
-        tIdx += 1
-        starts(tIdx) = i + 1
-      }
-      i += 1
-    }
-    ends(tIdx) = nb
+    val b = Spans.splitBounds(bytes)
+    val nTok = b.length - 1
     val nSh = math.max(nTok - n, 0) + 1
     val out = new Array[Long](nSh)
     val seen = new LongDedup(nSh)
     var k = 0
     var t = 0
     while (t < nSh) {
-      val from = starts(t)
-      val until = ends(math.min(t + n - 1, nTok - 1))
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from,
-          until - from, 42L)
+      val h = Spans.xxh64(bytes, b(t) + 1, b(math.min(t + n, nTok)))
       if (seen.add(h)) { out(k) = h; k += 1 }
       t += 1
     }
@@ -662,7 +515,7 @@ object HashKernels {
     */
   def charGramHashes(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
-    val starts = codepointStarts(bytes)
+    val starts = Spans.codepointStarts(bytes)
     val nc = if (starts == null) bytes.length else starts.length
     val nG = math.max(nc - n + 1, 1)
     val out = new Array[Long](nG)
@@ -670,14 +523,8 @@ object HashKernels {
     var k = 0
     var t = 0
     while (t < nG) {
-      val from = if (nc == 0) 0 else if (starts == null) t else starts(t)
-      val until =
-        if (t + n >= nc) bytes.length
-        else if (starts == null) t + n
-        else starts(t + n)
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from,
-          until - from, 42L)
+      val h = Spans.xxh64(bytes,
+        Spans.windowFrom(starts, nc, t), Spans.windowUntil(bytes, starts, nc, t, n))
       if (seen.add(h)) { out(k) = h; k += 1 }
       t += 1
     }
@@ -704,24 +551,8 @@ object HashKernels {
     */
   def tokenShingles(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
-    val nb = bytes.length
-    var nTok = 1
-    var i = 0
-    while (i < nb) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    val starts = new Array[Int](nTok)
-    val ends = new Array[Int](nTok)
-    var tIdx = 0
-    starts(0) = 0
-    i = 0
-    while (i < nb) {
-      if (bytes(i) == ' ') {
-        ends(tIdx) = i
-        tIdx += 1
-        starts(tIdx) = i + 1
-      }
-      i += 1
-    }
-    ends(tIdx) = nb
+    val b = Spans.splitBounds(bytes)
+    val nTok = b.length - 1
     val nSh = math.max(nTok - n, 0) + 1
     // open addressing keyed on the span hash, byte-compared on collision:
     // slot value = output index of the shingle occupying it
@@ -735,13 +566,9 @@ object HashKernels {
     var k = 0
     var t = 0
     while (t < nSh) {
-      val from = starts(t)
-      val until = ends(math.min(t + n - 1, nTok - 1))
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(bytes,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from,
-          until - from, 42L)
-      var slot = (splitmix64(h) & 0x7fffffffffffffffL).toInt & mask
+      val from = b(t) + 1
+      val until = b(math.min(t + n, nTok))
+      var slot = (splitmix64(Spans.xxh64(bytes, from, until)) & 0x7fffffffffffffffL).toInt & mask
       var dup = false
       var done = false
       while (!done) {
@@ -771,7 +598,7 @@ object HashKernels {
       t += 1
     }
     val out = new Array[Any](k)
-    i = 0
+    var i = 0
     while (i < k) {
       out(i) = UTF8String.fromBytes(
         java.util.Arrays.copyOfRange(bytes, outFrom(i), outUntil(i)))

@@ -20,8 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `split(s, '')`/`ascii(c)` pipeline yields the sequence of Unicode code
   * points (Spark's Ascii takes the first codepoint of its input), and the
   * oracles use DuckDB `unicode(text[i])` — also codepoints. These kernels
-  * fold `String.codePointAt` directly, with a zero-allocation ASCII byte
-  * fast path (the fixture corpus alphabet).
+  * read codepoints through `Spans.codepoints`/`Spans.cp`: on ASCII input
+  * (the fixture corpus alphabet) that is the bytes themselves, with no
+  * allocation.
   */
 object PolyKernels {
 
@@ -32,31 +33,30 @@ object PolyKernels {
     * Identical to `aggregate(filter(split(s, ''), ch -> ch != ''), 0L,
     * (a, c) -> (a * 131 + ascii(c)) % 2147483647)`.
     */
-  def charPoly(s: UTF8String): Long = {
+  def charPoly(s: UTF8String): Long = fold(s, 0L, 131L, P)
+
+  /** a = (a * mul + cp) % mod over the codepoints cp of s, from `start`:
+    * the digest of [[charPoly]] (×131 mod P) and of [[clsScore]]'s features
+    * (×31 mod 4096). On ASCII input it reads the bytes and allocates nothing.
+    */
+  private def fold(s: UTF8String, start: Long, mul: Long, mod: Long): Long = {
     val bytes = s.getBytes
-    val n = bytes.length
-    // ASCII fast path: every byte is a codepoint
-    var ascii = true
-    var i = 0
-    while (i < n && ascii) { if ((bytes(i) & 0x80) != 0) ascii = false; i += 1 }
-    var a = 0L
-    if (ascii) {
-      i = 0
-      while (i < n) {
-        a = (a * 131L + (bytes(i) & 0xffL)) % P
-        i += 1
-      }
-      a
-    } else {
-      val str = s.toString
-      var j = 0
-      while (j < str.length) {
-        val cp = str.codePointAt(j)
-        a = (a * 131L + cp) % P
-        j += Character.charCount(cp)
-      }
-      a
+    val cps = Spans.codepoints(s, bytes)
+    foldRange(bytes, cps, 0, Spans.cpCount(bytes, cps), start, mul, mod)
+  }
+
+  /** [[fold]] over codepoints [from, until), given the `Spans.codepoints`
+    * result `cps`.
+    */
+  private def foldRange(bytes: Array[Byte], cps: Array[Int], from: Int, until: Int,
+      start: Long, mul: Long, mod: Long): Long = {
+    var a = start
+    var i = from
+    while (i < until) {
+      a = (a * mul + Spans.cp(bytes, cps, i)) % mod
+      i += 1
     }
+    a
   }
 
   /** Char-poly digest per single-space-separated token, EMPTY TOKENS KEPT
@@ -67,49 +67,24 @@ object PolyKernels {
     */
   def tokenPolys(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    val n = bytes.length
-    var ascii = true
+    val cps = Spans.codepoints(s, bytes)
+    val n = Spans.cpCount(bytes, cps)
+    // token count = spaces + 1 (split limit -1 keeps trailing empties)
+    var nTok = 1
     var i = 0
-    while (i < n && ascii) { if ((bytes(i) & 0x80) != 0) ascii = false; i += 1 }
-    if (ascii) {
-      // token count = spaces + 1 (split limit -1 keeps trailing empties)
-      var nTok = 1
-      i = 0
-      while (i < n) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-      val out = new Array[Long](nTok)
-      var j = 0
-      var a = 0L
-      i = 0
-      while (i < n) {
-        val b = bytes(i)
-        if (b == ' ') { out(j) = a; j += 1; a = 0L }
-        else a = (a * 131L + (b & 0xffL)) % P
-        i += 1
-      }
-      out(j) = a
-      UnsafeArrayData.fromPrimitiveArray(out)
-    } else {
-      val str = s.toString
-      val m = str.length
-      var nTok = 1
-      i = 0
-      while (i < m) { if (str.charAt(i) == ' ') nTok += 1; i += 1 }
-      val out = new Array[Long](nTok)
-      var j = 0
-      var a = 0L
-      i = 0
-      while (i < m) {
-        val c = str.charAt(i)
-        if (c == ' ') { out(j) = a; j += 1; a = 0L; i += 1 }
-        else {
-          val cp = str.codePointAt(i)
-          a = (a * 131L + cp) % P
-          i += Character.charCount(cp)
-        }
-      }
-      out(j) = a
-      UnsafeArrayData.fromPrimitiveArray(out)
+    while (i < n) { if (Spans.cp(bytes, cps, i) == ' ') nTok += 1; i += 1 }
+    val out = new Array[Long](nTok)
+    var j = 0
+    var a = 0L
+    i = 0
+    while (i < n) {
+      val c = Spans.cp(bytes, cps, i)
+      if (c == ' ') { out(j) = a; j += 1; a = 0L }
+      else a = (a * 131L + c) % P
+      i += 1
     }
+    out(j) = a
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Sliding L-window char-poly fold over a long array, each window hash
@@ -180,41 +155,15 @@ object PolyKernels {
     var i = 0
     while (i < n) {
       val t = u.getUTF8String(i)
-      val h = fold31(t, 0L)
+      val h = fold(t, 0L, 31L, 4096L)
       acc += (h * 2654435761L) % 2003L - 1001L
       if (i + 1 < n) {
-        val hb = fold31(u.getUTF8String(i + 1), (h * 31L + 32L) % 4096L)
+        val hb = fold(u.getUTF8String(i + 1), (h * 31L + 32L) % 4096L, 31L, 4096L)
         acc += (hb * 2654435761L) % 2003L - 1001L
       }
       i += 1
     }
     acc
-  }
-
-  private def fold31(s: UTF8String, start: Long): Long = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    var ascii = true
-    var i = 0
-    while (i < n && ascii) { if ((bytes(i) & 0x80) != 0) ascii = false; i += 1 }
-    var a = start
-    if (ascii) {
-      i = 0
-      while (i < n) {
-        a = (a * 31L + (bytes(i) & 0xffL)) % 4096L
-        i += 1
-      }
-      a
-    } else {
-      val str = s.toString
-      var j = 0
-      while (j < str.length) {
-        val cp = str.codePointAt(j)
-        a = (a * 31L + cp) % 4096L
-        j += Character.charCount(cp)
-      }
-      a
-    }
   }
 
   /** Content-defined chunking (the q229 cut rule) in one native pass:
@@ -230,55 +179,21 @@ object PolyKernels {
     */
   def cdcChunks(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
-    val nb = bytes.length
-    var ascii = true
-    var i = 0
-    while (i < nb && ascii) { if ((bytes(i) & 0x80) != 0) ascii = false; i += 1 }
-    val codes: Array[Int] =
-      if (ascii) {
-        val out = new Array[Int](nb)
-        i = 0
-        while (i < nb) { out(i) = bytes(i) & 0xff; i += 1 }
-        out
-      } else {
-        val str = s.toString
-        var cnt = 0
-        var j = 0
-        while (j < str.length) { cnt += 1; j += Character.charCount(str.codePointAt(j)) }
-        val out = new Array[Int](cnt)
-        var k = 0
-        j = 0
-        while (j < str.length) {
-          val cp = str.codePointAt(j)
-          out(k) = cp
-          k += 1
-          j += Character.charCount(cp)
-        }
-        out
-      }
-    val n = codes.length
+    val cps = Spans.codepoints(s, bytes)
+    val n = Spans.cpCount(bytes, cps)
     if (n == 0)
       return new GenericArrayData(Array.empty[Any])
     // cut positions (1-based end-exclusive boundaries), matching
     // `filter(transform(sequence(16, greatest(n,16)), i -> if(i <= n and
     //   fold16(i) % 64 = 0, i, -1)), x -> x != -1)`
+    val cuts = new Array[Int](math.max(n - 15, 0))
     var nCuts = 0
-    i = 16
+    var i = 16
     while (i <= n) {
-      var a = 0L
-      var k = i - 16
-      while (k < i) { a = (a * 131L + codes(k)) % P; k += 1 }
-      if (a % 64L == 0L) nCuts += 1
-      i += 1
-    }
-    val cuts = new Array[Int](nCuts)
-    var c = 0
-    i = 16
-    while (i <= n) {
-      var a = 0L
-      var k = i - 16
-      while (k < i) { a = (a * 131L + codes(k)) % P; k += 1 }
-      if (a % 64L == 0L) { cuts(c) = i; c += 1 }
+      if (foldRange(bytes, cps, i - 16, i, 0L, 131L, P) % 64L == 0L) {
+        cuts(nCuts) = i
+        nCuts += 1
+      }
       i += 1
     }
     // spans: starts = 0 :: cuts, ends = cuts :: n; keep en > st
@@ -288,11 +203,8 @@ object PolyKernels {
     while (ci <= nCuts) {
       val en = if (ci < nCuts) cuts(ci) else n
       if (en > st) {
-        var a = 0L
-        var k = st
-        while (k < en) { a = (a * 131L + codes(k)) % P; k += 1 }
         val clen = (en - st).toLong
-        val chash = (a * 131L + clen) % P
+        val chash = (foldRange(bytes, cps, st, en, 0L, 131L, P) * 131L + clen) % P
         rows.add(new GenericInternalRow(Array[Any](clen, chash)))
       }
       st = en

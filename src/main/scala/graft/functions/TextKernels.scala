@@ -114,42 +114,17 @@ object TextKernels {
   // per-pair concat materialize. PolyKernelsSuite pins each against the
   // original HOF on adversarial inputs + the fixture corpus.
 
-  /** Token start/end boundaries of the single-space split (empties kept). */
-  private def tokenBounds(bytes: Array[Byte]): (Array[Int], Array[Int]) = {
-    val nb = bytes.length
-    var nTok = 1
-    var i = 0
-    while (i < nb) { if (bytes(i) == ' ') nTok += 1; i += 1 }
-    val starts = new Array[Int](nTok)
-    val ends = new Array[Int](nTok)
-    var tIdx = 0
-    starts(0) = 0
-    i = 0
-    while (i < nb) {
-      if (bytes(i) == ' ') {
-        ends(tIdx) = i
-        tIdx += 1
-        starts(tIdx) = i + 1
-      }
-      i += 1
-    }
-    ends(tIdx) = nb
-    (starts, ends)
-  }
-
   /** Adjacent-token bigram STRINGS "a b" — identical to the zip_with form
     * with `(a, b) -> concat(a, ' ', b)`.
     */
   def tokenBigrams(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val bytes = s.getBytes
-    val (starts, ends) = tokenBounds(bytes)
-    val nTok = starts.length
-    val nBg = math.max(nTok - 1, 0)
+    val b = Spans.splitBounds(bytes)
+    val nBg = b.length - 2
     val out = new Array[Any](nBg)
     var i = 0
     while (i < nBg) {
-      out(i) = UTF8String.fromBytes(
-        java.util.Arrays.copyOfRange(bytes, starts(i), ends(i + 1)))
+      out(i) = UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, b(i) + 1, b(i + 2)))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -160,18 +135,15 @@ object TextKernels {
     */
   def tokenBigramStructs(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val bytes = s.getBytes
-    val (starts, ends) = tokenBounds(bytes)
-    val nTok = starts.length
-    val nBg = math.max(nTok - 1, 0)
+    val b = Spans.splitBounds(bytes)
+    val nBg = b.length - 2
     val out = new Array[Any](nBg)
     var i = 0
     while (i < nBg) {
-      val a = UTF8String.fromBytes(
-        java.util.Arrays.copyOfRange(bytes, starts(i), ends(i)))
-      val b = UTF8String.fromBytes(
-        java.util.Arrays.copyOfRange(bytes, starts(i + 1), ends(i + 1)))
+      val x = UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, b(i) + 1, b(i + 1)))
+      val y = UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, b(i + 1) + 1, b(i + 2)))
       out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](a, b))
+        Array[Any](x, y))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)

@@ -109,18 +109,12 @@ object Dedup {
     * band parameters are wrong for the corpus, not that S is too small).
     * The cost side caps S: the replicated join side ships S× the 16-byte
     * banded rows, so S is NOT derived from cluster parallelism (a 1000-
-    * executor cluster would otherwise replicate the corpus 250×). For a
-    * pathological corpus, override via `graft.dedup.bandJoinSalt` on the
-    * session conf — output is identical for any S ≥ 1.
+    * executor cluster would otherwise replicate the corpus 250×). A
+    * pathological corpus takes a larger S through the `salt` parameter of
+    * [[bandCandidatesNoDistinct]], as q192 passes its [[adaptiveBandSalt]]
+    * — output is identical for any S ≥ 1.
     */
   private val DefaultBandJoinSalt = 8
-
-  private def bandJoinSalt(df: DataFrame): Int = {
-    val s = df.sparkSession.conf
-      .get("graft.dedup.bandJoinSalt", DefaultBandJoinSalt.toString).toInt
-    require(s >= 1, s"graft.dedup.bandJoinSalt must be >= 1, got $s")
-    s
-  }
 
   /** PROFILE-DRIVEN SALT SIZING — the q164 skew histogram finally CONSUMED
     * (the r13 verdict's "diagnostic nothing consumes" gap): instead of the
@@ -164,7 +158,7 @@ object Dedup {
     // Spark would otherwise keep whole band cells in single tasks, which is
     // exactly the serialization the salt exists to break. All three
     // exchanges move 16–24-byte id/key rows, never features.
-    val salt = bandJoinSalt(banded)
+    val salt = DefaultBandJoinSalt
     val exchanged = banded.repartition(col("band"))
     val a = exchanged.select(col("doc_id").as("a_id"), col("band"))
       .withColumn("salt", pmod(xxhash64(col("a_id")), lit(salt.toLong)).cast("int"))
@@ -206,13 +200,13 @@ object Dedup {
     * dropped here where the distinct form would have passed it to the
     * confirm as a spurious candidate.
     *
-    * Salting is unchanged ([[bandJoinSalt]] — same sizing law, same hot-cell
-    * motivation): the left side pins slice hash(a_id) mod S, the right side
-    * replicates per slice, so each (pair, shared band) still joins exactly
-    * once per order.
+    * Salting is unchanged ([[DefaultBandJoinSalt]] — same sizing law, same
+    * hot-cell motivation): the left side pins slice hash(a_id) mod S, the
+    * right side replicates per slice, so each (pair, shared band) still
+    * joins exactly once per order.
     */
-  private[graft] def bandCandidatesNoDistinct(withBands: DataFrame): DataFrame = {
-    val salt = bandJoinSalt(withBands)
+  private[graft] def bandCandidatesNoDistinct(
+      withBands: DataFrame, salt: Int = DefaultBandJoinSalt): DataFrame = {
     // one materialization of the exploded (doc_id, bands, idx, band) rows;
     // both salted sides read it (ReusedExchange) instead of recomputing the
     // signature/band expressions per side — the bandCandidates shape, with
@@ -308,7 +302,9 @@ object Dedup {
       // set true when featOf already emits 64-bit hashes (q36's shingles);
       // string feature sets are xxhash64-hashed before the confirm — see
       // the confirm comment below for why and for the collision trade
-      featHashed: Boolean = false): (DataFrame, DataFrame) = {
+      featHashed: Boolean = false,
+      // S of the salted band join (see DefaultBandJoinSalt)
+      salt: Int = DefaultBandJoinSalt): (DataFrame, DataFrame) = {
     val estBound = threshold - 5.0 * math.sqrt(threshold * (1 - threshold) / sigK)
     // Cluster stage (clusterFirst): group identical feature sets with a
     // partial-agged groupBy keyed on the 64-bit xxhash64 of the set — the
@@ -354,7 +350,7 @@ object Dedup {
     // (see bandCandidatesNoDistinct; the r11 q37 stage budget pinned that
     // distinct at ~75% of the query)
     val candidates = bandCandidatesNoDistinct(
-      reps.select(col("gid").as("doc_id"), col("bands")))
+      reps.select(col("gid").as("doc_id"), col("bands")), salt)
     val prefiltered =
       if (!estPrefilter) candidates
       else attachFeatures(candidates, reps.select(col("gid").as("doc_id"), col("sig")), "sig")
@@ -430,9 +426,10 @@ object Dedup {
       threshold: Double,
       estPrefilter: Boolean = false,
       clusterFirst: Boolean = false,
-      featHashed: Boolean = false): DataFrame = {
+      featHashed: Boolean = false,
+      salt: Int = DefaultBandJoinSalt): DataFrame = {
     val (confirmed, memberOf) = clusteredNeardupParts(
-      docs, featOf, sigOf, sigK, threshold, estPrefilter, clusterFirst, featHashed)
+      docs, featOf, sigOf, sigK, threshold, estPrefilter, clusterFirst, featHashed, salt)
     expandRepPairs(confirmed, memberOf, clusterFirst)
       .select(col("a_id"), col("b_id"), round(col("jac"), 4).as("jac"))
       .orderBy(col("a_id"), col("b_id"))
@@ -459,14 +456,16 @@ object Dedup {
     * of a k=32 signature, exact confirm ≥ 0.9 within candidates only.
     * Output equals brute force (miss prob ≤ 3.1e-12/pair at the threshold).
     */
-  private def minhashNeardup(s: SparkSession, d: String): DataFrame =
+  private def minhashNeardup(
+      s: SparkSession, d: String, salt: Int = DefaultBandJoinSalt): DataFrame =
     clusteredNeardup(
       Tables.documents(s, d).select(col("doc_id"), col("text")),
       shingleFeat,
       t => call_function("minhash_sig", t, lit(32), lit(3)),
       32,
       0.9, // shingle sets: order-sensitive → no clustering, cheap confirm
-      featHashed = true) // shingleFeat already emits xxhash64 longs
+      featHashed = true, // shingleFeat already emits xxhash64 longs
+      salt = salt)
 
   /** MinHash-LSH-pruned near-dup pairs by exact word-SET Jaccard (bag-of-
     * words similarity, complementary to q36's order-sensitive shingles).
@@ -976,13 +975,13 @@ object Dedup {
     * slice — it is the small side by definition, so S× its banded rows is
     * cheap — while the INDEX side pins its slice by id hash, so the big
     * side is never replicated and a hot band cell's index rows still split
-    * S ways across tasks. The [[bandJoinSalt]] sizing law applies
+    * S ways across tasks. The [[DefaultBandJoinSalt]] sizing law applies
     * unchanged. */
   private[graft] def bandCandidatesCross(
       batch: DataFrame, // (doc_id, bands)
       index: DataFrame // (doc_id, bands)
   ): DataFrame = {
-    val salt = bandJoinSalt(index)
+    val salt = DefaultBandJoinSalt
     val a = batch
       .select(col("doc_id").as("new_id"), col("bands").as("n_bands"),
         posexplode(col("bands")).as(Seq("idx", "band")))
@@ -1341,7 +1340,7 @@ object Dedup {
     // nothing at the declared threshold.
     Entry(
       "q36_minhash_lsh",
-      minhashNeardup,
+      minhashNeardup(_, _),
       Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
              |s AS (SELECT doc_id, list_distinct(list_transform(
              |    range(1, greatest(len(toks)-2, 1) + 1),
@@ -1370,18 +1369,7 @@ object Dedup {
         val banded = dedupIndexRows(
           Tables.documents(s, d).select(col("doc_id"), col("text")))
         val derived = adaptiveBandSalt(banded)
-        val key = "graft.dedup.bandJoinSalt"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, derived.toString)
-        // the salt is baked into the plan at construction (the explode
-        // literal), so building under the conf then restoring is exact
-        val adaptive =
-          try minhashNeardup(s, d)
-          finally prev match {
-            case Some(v) => s.conf.set(key, v)
-            case None => s.conf.unset(key)
-          }
-        adaptive.select(col("a_id"), col("b_id"), col("jac").as("aj"))
+        minhashNeardup(s, d, derived).select(col("a_id"), col("b_id"), col("jac").as("aj"))
           .join(
             minhashNeardup(s, d)
               .select(col("a_id"), col("b_id"), col("jac").as("sj")),
@@ -2397,7 +2385,8 @@ object Dedup {
     * alignment). Boundary rule: cut after position i when the 16-char
     * rolling hash ending at i ≡ 0 (mod 64).
     */
-  private[graft] def cdcChunkStats(docs: DataFrame): DataFrame = {
+  private[graft] def cdcChunkStats(
+      docs: DataFrame, hotChunk: Long = 1000000L): DataFrame = {
     // corpus-wide copy counts as an unordered full-partition window over
     // the chunk hash (the q110 idiom): ONE chash exchange, no aggregate
     // subtree + join-back that would re-plan the HOF chunking twice
@@ -2407,7 +2396,7 @@ object Dedup {
     // NO amount of parallelism can split, so the shape is now chosen by a
     // measured skew probe (the q192 adaptiveBandSalt discipline: a 1-row
     // driver-read statistic steering a plan knob, never a corpus collect):
-    // above `graft.dedup.cdcHotChunk` copies of the hottest chunk, switch
+    // above `hotChunk` copies of the hottest chunk, switch
     // to two-phase count (map-side partials absorb the universal chunk)
     // + join-back on chash, where AQE skew-split CAN divide the hot key
     // across tasks. Below it, the window form's single exchange wins.
@@ -2416,10 +2405,8 @@ object Dedup {
     val hottest = cc.groupBy(col("chash")).agg(count(lit(1)).as("cnt"))
       .agg(coalesce(max(col("cnt")), lit(0L)))
       .head().getLong(0) // bounded 1-row plan knob
-    val threshold = cc.sparkSession.conf
-      .get("graft.dedup.cdcHotChunk", "1000000").toLong
     val marked =
-      if (hottest <= threshold)
+      if (hottest <= hotChunk)
         cc.withColumn("n_copies",
           count(lit(1)).over(Window.partitionBy(col("chash"))))
       else

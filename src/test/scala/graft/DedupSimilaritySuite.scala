@@ -858,9 +858,6 @@ class DedupSimilaritySuite extends SparkTestBase {
     assert(r.getBoolean(1), "derived salt out of range")
     assert(r.getBoolean(2), "adaptive pair set diverges from static")
     assert(r.getLong(0) == q36, "pair-set union differs from q36's pair set")
-    // the conf knob is restored after the query builds
-    assert(!spark.conf.getOption("graft.dedup.bandJoinSalt").exists(_ != "8"),
-      "q192 leaked its salt override into the session")
   }
 
   test("q211 source matrix: cells tie to the labeled pair set; ppm identity") {
@@ -992,21 +989,12 @@ class DedupSimilaritySuite extends SparkTestBase {
     val ref = graft.operators.Dedup.cdcChunkStats(docs)
     val refRows = ref.collect().map(_.toString).toSeq
     assert(hasWindow(ref), "below threshold the single-exchange window wins")
-    val saved = spark.conf.getOption("graft.dedup.cdcHotChunk")
-    try {
-      spark.conf.set("graft.dedup.cdcHotChunk", "10")
-      val df = graft.operators.Dedup.cdcChunkStats(docs)
-      val got = df.collect().map(_.toString).toSeq
-      assert(got == refRows, "fallback shape must be output-identical")
-      assert(!hasWindow(df),
-        "above threshold the unsplittable hot-key window must be replaced " +
-          "by two-phase count + join-back (AQE can skew-split a join)")
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set("graft.dedup.cdcHotChunk", v)
-        case None => spark.conf.unset("graft.dedup.cdcHotChunk")
-      }
-    }
+    val df = graft.operators.Dedup.cdcChunkStats(docs, hotChunk = 10)
+    val got = df.collect().map(_.toString).toSeq
+    assert(got == refRows, "fallback shape must be output-identical")
+    assert(!hasWindow(df),
+      "above threshold the unsplittable hot-key window must be replaced " +
+        "by two-phase count + join-back (AQE can skew-split a join)")
   }
 
   test("q285 IVF-PQ: raw recall >= 0.75 AND routed fraction <= 0.25 vs brute") {

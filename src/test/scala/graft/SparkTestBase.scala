@@ -11,6 +11,10 @@ object SparkTestBase {
   lazy val spark: SparkSession = {
     val s = Tables.localSession(4)
     s.sparkContext.setLogLevel("ERROR")
+    // scan locations print in full (not cut at 100 characters), so a plan
+    // assertion that looks for an artifact's directory name finds it however
+    // long the java.io.tmpdir path above it is
+    s.conf.set("spark.sql.maxMetadataStringLength", "10000")
     s
   }
   val sf: String = "/root/testdata/sf0.001"
@@ -51,7 +55,8 @@ trait SparkTestBase extends AnyFunSuite {
     java.nio.file.Files.createTempFile(scratchDir, prefix, suffix).toFile
 
   /** Runs `body`, then fails if it added an entry to java.io.tmpdir other
-    * than the scratch root.
+    * than the scratch root. build.sbt gives the test JVM a java.io.tmpdir of
+    * its own (`target/test-tmpdir`), so no other process adds entries.
     */
   def assertNoTmpdirLeak(body: => Unit): Unit = {
     warmed
