@@ -45,20 +45,26 @@ object Tables {
     // default at an 8 GB heap) keep allocations in normal G1 regions at any
     // heap size; sorters just chain more pages. Same reasoning applies to
     // big-heap executors on a real cluster.
-    "spark.buffer.pageSize" -> (8L * 1024 * 1024).toString
+    "spark.buffer.pageSize" -> (8L * 1024 * 1024).toString,
+    // Stream checkpoints on the local file system are committed with
+    // java.nio (temp file + atomic rename), starting no process.
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName
   )
+
+  /** Deletes `f` and everything under it, in this process. */
+  def deleteTree(f: java.io.File): Unit = {
+    val children = f.listFiles()
+    if (children != null) children.foreach(deleteTree)
+    f.delete(): Unit
+  }
 
   /** Best-effort recursive delete of a per-JVM scratch path at exit; the
     * per-run token in these paths means nothing else ever reclaims them.
     */
   def deleteOnExit(path: String): Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val children = f.listFiles()
-        if (children != null) children.foreach(rm)
-        f.delete(): Unit
-      }
-      try rm(new java.io.File(path))
+      try deleteTree(new java.io.File(path))
       catch { case _: Exception => () } // never fail shutdown over tmp cleanup
     }))
 

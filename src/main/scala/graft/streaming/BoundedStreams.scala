@@ -30,8 +30,7 @@ object BoundedStreams {
     * per chunk, in order.
     */
   def arrivals(s: SparkSession, name: String, chunks: Seq[DataFrame]): DataFrame = {
-    val root = Files.createDirectories(Paths.get(graft.sources.Sources.scratchRoot))
-    val dir = Files.createTempDirectory(root, s"${name}_arrivals").toString
+    val dir = Files.createTempDirectory(scratchRoot(), s"${name}_arrivals").toString
     chunks.zipWithIndex.foreach { case (df, i) =>
       val stage = s"$dir/stage_$i"
       df.coalesce(1).write.parquet(stage)
@@ -58,9 +57,18 @@ object BoundedStreams {
       df.writeStream.queryName(name).outputMode(OutputMode.Append).foreachBatch(f))
 
   // A query of the same name left running (an earlier run that threw) would
-  // make `start` fail; stop it first.
+  // make `start` fail; stop it first. Each run checkpoints into a fresh dir
+  // under the scratch root, deleted in-process once the stream has drained
+  // (Spark's own temporary checkpoint is deleted by an `rm -rf` process); a
+  // failed run's dir goes with the scratch root at exit.
   private def run(s: SparkSession, name: String, w: DataStreamWriter[_]): Unit = {
     s.streams.active.filter(_.name == name).foreach(_.stop())
-    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val checkpoint = Files.createTempDirectory(scratchRoot(), s"${name}_checkpoint")
+    w.option("checkpointLocation", checkpoint.toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    graft.Tables.deleteTree(checkpoint.toFile)
   }
+
+  private def scratchRoot() =
+    Files.createDirectories(Paths.get(graft.sources.Sources.scratchRoot))
 }

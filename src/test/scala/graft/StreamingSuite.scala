@@ -1,9 +1,14 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import graft.queries.Registry
 import graft.streaming.{BoundedStreams, EventStreams}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Streaming surface vs the equivalent batch operators: the same events must
   * produce the same aggregates whether processed bounded-batch or as a
@@ -374,5 +379,72 @@ class StreamingSuite extends SparkTestBase {
       assert(first.nonEmpty && second == first, s"$name re-run diverged")
     }
     assert(spark.streams.active.isEmpty, "a drained stream is still active")
+  }
+
+  test("a bounded stateful stream starts no process") {
+    // Hadoop's local file system starts a readlink or chmod process for each
+    // rename, create and mkdirs when libhadoop is absent; the checkpoint
+    // manager and the in-process checkpoint delete must leave none
+    spark
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try assert(Registry.byName("q322_stream_hll").q(spark, sf).collect().nonEmpty)
+    finally rec.stop()
+    val jfr = tempFile("q322_forks", ".jfr").toPath
+    rec.dump(jfr)
+    rec.close()
+    // Spark's ArtifactManager removes a session's artifact dir with an
+    // `rm -rf` process when the JVM's Cleaner collects the session; earlier
+    // streams' cloned sessions reach it at times set by the GC, so those
+    // starts are not the stream's and are not counted
+    def gcCleanup(e: jdk.jfr.consumer.RecordedEvent) = e.getStackTrace.getFrames.asScala
+      .exists(_.getMethod.getType.getName.startsWith("org.apache.spark.sql.artifact.ArtifactManager"))
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(e => e.getEventType.getName == "jdk.ProcessStart" && !gcCleanup(e))
+      .map(_.getString("command")).toSeq
+    val byProgram = commands.groupBy(_.takeWhile(_ != ' ')).map { case (p, cs) => s"${cs.size} $p" }
+    assert(commands.size == 0, s"${commands.size} processes started (${byProgram.mkString(", ")}):\n" +
+      commands.mkString("\n"))
+  }
+
+  test("a stream resumes from a checkpoint the local manager wrote") {
+    val dir = tempDir("resume")
+    val src = Files.createDirectories(dir.resolve("src"))
+    val checkpoint = dir.resolve("checkpoint")
+    val ev = Tables.events(spark, sf).select(col("event_id"), col("event_type"))
+    val chunks = (0 until 3).map(i => ev.filter(col("event_id") % 3 === i))
+    // one parquet file per chunk, with increasing mod times, as arrivals lands them
+    def land(i: Int): Unit = {
+      val stage = s"$dir/stage_$i"
+      chunks(i).coalesce(1).write.parquet(stage)
+      val part = new File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      val target = src.resolve(f"chunk_$i%04d.parquet")
+      Files.move(part.toPath, target)
+      target.toFile.setLastModified(1000000L * (i + 1))
+    }
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy(col("event_type")).agg(count(lit(1)).as("n"), sum(col("event_id")).as("ids"))
+    // runs the stream to completion; returns the rows its batches read
+    def drain(): Long = {
+      val q = agg(spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
+          .parquet(s"$src/chunk_*.parquet"))
+        .writeStream.format("memory").queryName("test_resume").outputMode(OutputMode.Complete)
+        .option("checkpointLocation", checkpoint.toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    land(0)
+    land(1)
+    assert(drain() == chunks(0).count() + chunks(1).count())
+    assert(Files.exists(checkpoint.resolve("offsets/.1.crc")))
+    land(2)
+    assert(drain() == chunks(2).count(), "the restart must read only the new chunk")
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(rows(spark.table("test_resume")) == rows(agg(ev)))
+    assert(!scala.util.Using.resource(Files.walk(checkpoint))(
+      _.iterator.asScala.exists(_.toString.endsWith(".tmp"))))
   }
 }
