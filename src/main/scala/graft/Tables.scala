@@ -49,7 +49,16 @@ object Tables {
     // Stream checkpoints on the local file system are committed with
     // java.nio (temp file + atomic rename), starting no process.
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[graft.streaming.LocalCheckpointFileManager].getName
+      classOf[graft.streaming.LocalCheckpointFileManager].getName,
+    // Every session shares the executors' default class loader. With
+    // artifact isolation on (Spark's default) each session UUID gets a class
+    // loader of its own on the executor, and the codegen cache is keyed by
+    // that loader: a streaming query's cloned session, or any new session,
+    // recompiles every generated class its tasks run, and each name Janino
+    // does not find locally is fetched from the driver over RPC. No graft
+    // code adds a session artifact; the price is that an `addArtifact`
+    // (a jar, file or class) would be visible to every session.
+    "spark.sql.artifact.isolation.enabled" -> "false"
   )
 
   /** Deletes `f` and everything under it, in this process. */

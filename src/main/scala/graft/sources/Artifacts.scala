@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import graft.streaming.LocalCheckpointFileManager
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** The persisted-artifact protocol: every query that keeps an artifact
@@ -10,15 +11,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * A dataset root holds immutable data directories plus a `_current`
   * manifest naming the live ones. Publishing writes the new data in full,
   * then writes the new manifest to a nonce tmp file and swaps it over
-  * `_current` with `FileContext.rename(OVERWRITE)` — a single-file rename,
-  * atomic on HDFS and POSIX. A reader that resolves the manifest sees the
-  * old complete data or the new complete data, never a mix and never a
-  * half-written directory; a writer that dies before the swap leaves the
-  * manifest where it was (Dean & Ghemawat §3.3: re-executed work is safe
-  * because each output is committed by one atomic rename). Directory
-  * renames cannot give this: a two-rename dir swap has a window with no
-  * readable dataset at all; the manifest pointer is how transactional table
-  * formats publish.
+  * `_current` with one single-file rename (`LocalCheckpointFileManager`:
+  * java.nio on the local file system, `FileContext.rename(OVERWRITE)`
+  * elsewhere), atomic on HDFS and POSIX. A reader that resolves the
+  * manifest sees the old complete data or the new complete data, never a
+  * mix and never a half-written directory; a writer that dies before the
+  * swap leaves the manifest where it was (Dean & Ghemawat §3.3:
+  * re-executed work is safe because each output is committed by one atomic
+  * rename). Directory renames cannot give this: a two-rename dir swap has a
+  * window with no readable dataset at all; the manifest pointer is how
+  * transactional table formats publish.
   *
   * Two manifest shapes share the swap:
   *   - a GENERATION root (rewrite-style: index build, compaction, model
@@ -59,25 +61,16 @@ private[graft] object Artifacts {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
-  /** Write `text` to a nonce tmp and swap it over `_current`. `tag` only
-    * names the tmp for debuggability. */
-  private def swap(s: SparkSession, root: String, text: String, tag: String): Unit = {
+  /** Write `text` to a nonce tmp and swap it over `_current`. */
+  private def swap(s: SparkSession, root: String, text: String): Unit = {
     val manifest = manifestOf(root)
+    // GC SWEEP: a publisher hard-killed between create and rename orphans
+    // its nonce tmp forever (no later attempt reuses the path), so without
+    // a sweep they accumulate unboundedly on a long-lived dataset root.
+    // Sweep failures are non-fatal — GC must never block a publish.
     val fs = fsOf(s, manifest)
-    // Unique tmp name PER PUBLISH ATTEMPT, never shared: two attempts
-    // sharing a tmp path race even when they'd write identical bytes,
-    // because fs.create(tmp, overwrite=true) TRUNCATES — racer B's create
-    // can zero the file between racer A's write-close and A's rename, so A
-    // would atomically publish an empty/partial manifest (which the
-    // fail-fast reader in currentGeneration then turns into crashes). The
-    // nonce makes every attempt's tmp private; the rename consumes it.
-    val tmp = new Path(s"$root/_current.tmp.$tag.${java.util.UUID.randomUUID().toString}")
-    // GC SWEEP: a publisher hard-killed between create and rename/delete
-    // orphans its nonce tmp forever (no later attempt reuses the path), so
-    // without a sweep they accumulate unboundedly on a long-lived dataset
-    // root. Sweep failures are non-fatal — GC must never block a publish.
     val cutoff = System.currentTimeMillis() - TmpTtlMs
-    try Option(fs.globStatus(new Path(s"$root/_current.tmp.*")))
+    try Option(fs.globStatus(new Path(s"$root/._current.*.tmp")))
       .getOrElse(Array.empty).foreach { st =>
         if (st.getModificationTime < cutoff)
           // NonFatal: swallowing an OOM/interrupt here would also clear the
@@ -86,20 +79,19 @@ private[graft] object Artifacts {
           catch { case scala.util.control.NonFatal(_) => () }
       }
     catch { case scala.util.control.NonFatal(_) => () }
-    val out = fs.create(tmp, false)
-    try {
-      try out.write(text.getBytes("UTF-8")) finally out.close()
-      FileContext.getFileContext(manifest.toUri, s.sparkContext.hadoopConfiguration)
-        .rename(tmp, manifest, Options.Rename.OVERWRITE)
-    } catch {
+    // The checkpoint manager writes a private tmp `._current.<uuid>.tmp`
+    // (and Hadoop's `.crc` sidecar) and renames it over `_current` at close;
+    // a failed attempt removes its own tmp. On the local file system this
+    // is java.nio and starts no `chmod` or `readlink` process.
+    val out = new LocalCheckpointFileManager(new Path(root), s.sparkContext.hadoopConfiguration)
+      .createAtomic(manifest, overwriteIfPossible = true)
+    try out.write(text.getBytes("UTF-8"))
+    catch {
       case e: Throwable =>
-        // failed attempt: remove our own tmp so crashed publishes don't
-        // accumulate (tmps of OTHER in-flight publishers are untouchable —
-        // indistinguishable from live ones — but they are never read and
-        // each failed attempt cleans up after itself).
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
+        out.cancel()
         throw e
     }
+    out.close()
   }
 
   // ---- Generation roots ----
@@ -116,7 +108,7 @@ private[graft] object Artifacts {
       df.write.mode(SaveMode.Overwrite)
         .parquet(if (part == Whole) s"$root/$gen" else s"$root/$gen/$part")
     }
-    swap(s, root, gen, gen)
+    swap(s, root, gen)
     s"$root/$gen"
   }
 
@@ -268,7 +260,7 @@ private[graft] object Artifacts {
     val committed = committedEpochs(s, root)
     if (committed.contains(epoch)) return
     batch.write.mode(SaveMode.Overwrite).parquet(s"$root/$epoch")
-    swap(s, root, (committed :+ epoch).sorted.mkString("\n"), epoch)
+    swap(s, root, (committed :+ epoch).sorted.mkString("\n"))
   }
 
   /** Read the full published stream table: the union of every committed
@@ -306,6 +298,6 @@ private[graft] object Artifacts {
     s.read.parquet(epochs.map(e => s"$root/$e"): _*)
       .repartition(parts)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/$target")
-    swap(s, root, target, target)
+    swap(s, root, target)
   }
 }

@@ -296,9 +296,15 @@ object EventStreams {
       purchases,
       col("c_user") === col("p_user") &&
         col("p_time") >= col("c_time") &&
-        col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR") &&
-        col("p_ts") > col("c_ts"))
+        col("p_time") <= col("c_time") + expr("INTERVAL 1 HOUR"))
+    // The strict nano-order conjunct is applied to the drained rows, not in
+    // the join: StreamingJoinHelper cannot turn a non-event-time bound into
+    // a state watermark, and logs an INTERNAL_ERROR stack trace each time it
+    // plans a micro-batch. Filtering an inner join's output afterwards gives
+    // the same rows, and the memory table is read by a separate batch query,
+    // so the filter cannot be pushed back into the stream.
     BoundedStreams.toMemory(joined, "graft_stream_join", OutputMode.Append)
+      .filter(col("p_ts") > col("c_ts"))
       .groupBy(col("c_user").as("user_id"))
       .agg(
         count(lit(1)).as("n_conversions"),

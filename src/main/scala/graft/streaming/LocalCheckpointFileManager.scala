@@ -15,7 +15,8 @@ import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 
-/** The checkpoint file manager of every session (`Tables.sessionConf`).
+/** The checkpoint file manager of every session (`Tables.sessionConf`),
+  * and the writer of `graft.sources.Artifacts`' `_current` manifests.
   *
   * On the local file system it writes with java.nio: each file goes to a
   * private temp file `.<name>.<uuid>.tmp` beside its target and is published

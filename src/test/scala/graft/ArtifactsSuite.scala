@@ -16,8 +16,10 @@ class ArtifactsSuite extends SparkTestBase {
       .exists(t => String.valueOf(t.getMessage).contains("injected part failure")),
       s"unexpected failure: $e")
 
+  // a manifest tmp `._current.<uuid>.tmp` and its `.crc` sidecar
   private def tmps(root: String): Seq[String] =
-    Option(new java.io.File(root).list()).toSeq.flatten.filter(_.startsWith("_current.tmp."))
+    Option(new java.io.File(root).list()).toSeq.flatten
+      .filter(n => n.contains("_current.") && (n.endsWith(".tmp") || n.endsWith(".tmp.crc")))
 
   test("a publish whose second part fails keeps the previous generation live") {
     assertNoTmpdirLeak {
@@ -92,5 +94,18 @@ class ArtifactsSuite extends SparkTestBase {
       assert(Artifacts.committedEpochs(spark, root) == epochs :+ "epoch-000000001")
       assert(Artifacts.readEpochs(spark, root).count() == ev.count())
     }
+  }
+
+  test("a manifest swap starts no process") {
+    // Hadoop's local file system starts a chmod process for each create and
+    // a readlink process for each FileContext rename when libhadoop is absent
+    val root = tempDir("graft_art_swap").toString + "/idx"
+    val nation = Tables.nation(spark, sf).select(col("n_nationkey"), col("n_name"))
+    Artifacts.publish(spark, root, "gen-1")(Artifacts.Whole -> nation)
+    Artifacts.publish(spark, root, "gen-2")(Artifacts.Whole -> nation)
+    assertNoProcess(Artifacts.publish(spark, root, "gen-1")(): Unit)
+    assert(Artifacts.currentGeneration(spark, root).endsWith("/gen-1"))
+    assert(Artifacts.readCurrent(spark, root).collect().toSet == nation.collect().toSet)
+    assert(tmps(root).isEmpty, s"manifest tmps left behind: ${tmps(root)}")
   }
 }

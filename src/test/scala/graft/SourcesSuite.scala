@@ -113,7 +113,7 @@ class SourcesSuite extends SparkTestBase {
     assert(Artifacts.readCurrent(spark, root).count() == nRows)
 
     // the retried compaction overwrites the orphan and republishes: the
-    // manifest swap is one FileContext.rename(OVERWRITE) — after it, readers
+    // manifest swap is one atomic rename — after it, readers
     // resolve the new complete generation (same rows, fewer files)
     Artifacts.compactDataset(spark, root, "gen-2", 2)
     assert(Artifacts.currentGeneration(spark, root).endsWith("/gen-2"))
@@ -121,7 +121,7 @@ class SourcesSuite extends SparkTestBase {
     assert(after.count() == nRows)
     assert(after.inputFiles.length == 2, s"expected 2 compacted files, got ${after.inputFiles.length}")
     // no leftover temp manifest: the swap consumed it
-    assert(!new java.io.File(s"$root/_current.tmp").exists())
+    assert(!new java.io.File(root).list().exists(_.endsWith(".tmp")))
     // both generations intact on disk — the publish never deletes data a
     // concurrent reader may still be scanning
     assert(new java.io.File(s"$root/gen-1").list().exists(_.endsWith(".parquet")))
@@ -137,8 +137,8 @@ class SourcesSuite extends SparkTestBase {
     // plant one ABANDONED tmp (hard-killed publisher: mtime past the TTL)
     // and one FRESH tmp (indistinguishable from a live concurrent publish)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = new Path(s"$root/_current.tmp.gen-0.deadbeef")
-    val fresh = new Path(s"$root/_current.tmp.gen-9.cafebabe")
+    val stale = new Path(s"$root/._current.deadbeef.tmp")
+    val fresh = new Path(s"$root/._current.cafebabe.tmp")
     Seq(stale, fresh).foreach { p =>
       val o = fs.create(p, false)
       try o.write("gen-x".getBytes("UTF-8")) finally o.close()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,6 +67,31 @@ trait SparkTestBase extends AnyFunSuite {
     val added = tmpdir.list().toSet -- before -
       new java.io.File(graft.sources.Sources.scratchRoot).getName
     assert(added.isEmpty, s"new entries in $tmpdir: $added")
+  }
+
+  /** Runs `body` under a JFR recording and fails if it started a process.
+    * Spark's ArtifactManager removes a session's artifact dir with an
+    * `rm -rf` process when the JVM's Cleaner collects the session; earlier
+    * sessions (streams' clones among them) reach it at times set by the GC,
+    * so those starts are not `body`'s and are not counted.
+    */
+  def assertNoProcess(body: => Unit): Unit = {
+    spark
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val jfr = tempFile("process_starts", ".jfr").toPath
+    rec.dump(jfr)
+    rec.close()
+    def gcCleanup(e: jdk.jfr.consumer.RecordedEvent) = e.getStackTrace.getFrames.asScala
+      .exists(_.getMethod.getType.getName.startsWith("org.apache.spark.sql.artifact.ArtifactManager"))
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(e => e.getEventType.getName == "jdk.ProcessStart" && !gcCleanup(e))
+      .map(_.getString("command")).toSeq
+    val byProgram = commands.groupBy(_.takeWhile(_ != ' ')).map { case (p, cs) => s"${cs.size} $p" }
+    assert(commands.isEmpty, s"${commands.size} processes started (${byProgram.mkString(", ")}):\n" +
+      commands.mkString("\n"))
   }
 
   /** Flatten an executed plan across AQE wrappers (AdaptiveSparkPlanExec,

@@ -385,27 +385,57 @@ class StreamingSuite extends SparkTestBase {
     // Hadoop's local file system starts a readlink or chmod process for each
     // rename, create and mkdirs when libhadoop is absent; the checkpoint
     // manager and the in-process checkpoint delete must leave none
-    spark
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    try assert(Registry.byName("q322_stream_hll").q(spark, sf).collect().nonEmpty)
-    finally rec.stop()
-    val jfr = tempFile("q322_forks", ".jfr").toPath
-    rec.dump(jfr)
-    rec.close()
-    // Spark's ArtifactManager removes a session's artifact dir with an
-    // `rm -rf` process when the JVM's Cleaner collects the session; earlier
-    // streams' cloned sessions reach it at times set by the GC, so those
-    // starts are not the stream's and are not counted
-    def gcCleanup(e: jdk.jfr.consumer.RecordedEvent) = e.getStackTrace.getFrames.asScala
-      .exists(_.getMethod.getType.getName.startsWith("org.apache.spark.sql.artifact.ArtifactManager"))
-    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
-      .filter(e => e.getEventType.getName == "jdk.ProcessStart" && !gcCleanup(e))
-      .map(_.getString("command")).toSeq
-    val byProgram = commands.groupBy(_.takeWhile(_ != ' ')).map { case (p, cs) => s"${cs.size} $p" }
-    assert(commands.size == 0, s"${commands.size} processes started (${byProgram.mkString(", ")}):\n" +
-      commands.mkString("\n"))
+    assertNoProcess(
+      assert(Registry.byName("q322_stream_hll").q(spark, sf).collect().nonEmpty))
+  }
+
+  test("a bounded stream's second run compiles no generated class") {
+    // each run plans in a cloned session of its own; the generated classes
+    // of the first run must serve the second. Streaming micro-batches run
+    // without AQE, so their stage ids, which are part of the class text,
+    // are the same on both runs.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = BoundedStreams.toMemory(
+      BoundedStreams.table(spark, sf, "events").groupBy(col("event_type")).count(),
+      "test_recompile", OutputMode.Complete): Unit
+    run()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second run compiled $compiled generated classes")
+    assert(spark.table("test_recompile").count() > 0)
+  }
+
+  test("q72 plans its micro-batches without a StreamingJoinHelper error") {
+    // a join conjunct that is not an event-time bound makes Spark log an
+    // INTERNAL_ERROR stack trace each time it plans a micro-batch; capture
+    // every WARN of the run (the test session logs ERROR only)
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("q72_capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(
+        (e.getMessage.getFormattedMessage +: Iterator.iterate(e.getThrown)(_.getCause)
+          .takeWhile(_ != null).map(String.valueOf(_)).toSeq).mkString("\n"))
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val level = root.getLevel
+    root.addAppender(capture, Level.WARN, null)
+    root.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    try assert(Registry.byName("q72_stream_stream_join").q(spark, sf).collect().nonEmpty)
+    finally {
+      root.removeAppender(capture.getName)
+      root.setLevel(level)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val errors = logged.asScala.filter(_.contains("Cannot evaluate expression"))
+    assert(errors.isEmpty, s"${errors.size} warnings, the first:\n${errors.headOption.mkString}")
   }
 
   test("a stream resumes from a checkpoint the local manager wrote") {
