@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.sources.Artifacts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -922,7 +923,22 @@ object Clustering {
           .withColumn("recovered", col("purity_ppm") >= 900000L)
           .orderBy(col("block"))
       },
-      Some("""WITH nodes AS MATERIALIZED (SELECT DISTINCT
+      Some {
+        // one propagation round: each node takes its neighbours' most
+        // frequent label, ties to the label with the larger md5 lane
+        def round(r: Int): String =
+          sql"""c$r AS MATERIALIZED (SELECT d.u, l.l,
+             |    CAST(count(*) AS BIGINT) AS c,
+             |    CAST(count(*) AS BIGINT) * 4294967296
+             |      + ${md5Lane("'lt:v1:' || l.l::VARCHAR", keyBr = Br(0))} AS pk
+             |  FROM dir d JOIN l${r - 1} l ON l.node = d.v GROUP BY 1, 2),
+             |m$r AS (SELECT u, max(pk) AS mx FROM c$r GROUP BY 1),
+             |n$r AS (SELECT c$r.u, min(c$r.l) AS nl FROM c$r
+             |  JOIN m$r ON m$r.u = c$r.u AND c$r.pk = m$r.mx GROUP BY 1),
+             |l$r AS MATERIALIZED (SELECT l${r - 1}.node,
+             |    coalesce(n$r.nl, l${r - 1}.l) AS l
+             |  FROM l${r - 1} LEFT JOIN n$r ON n$r.u = l${r - 1}.node)"""
+        sql"""WITH nodes AS MATERIALIZED (SELECT DISTINCT
              |    CAST(doc_id % 120 AS BIGINT) AS u FROM documents),
              |pairs AS MATERIALIZED (SELECT n1.u, n2.u AS v
              |  FROM nodes n1 JOIN nodes n2 ON n1.u < n2.u
@@ -933,54 +949,7 @@ object Clustering {
              |dir AS MATERIALIZED (SELECT u, v FROM pairs
              |  UNION ALL SELECT v, u FROM pairs),
              |l0 AS (SELECT u AS node, u AS l FROM nodes),
-             |c1 AS MATERIALIZED (SELECT d.u, l.l,
-             |    CAST(count(*) AS BIGINT) AS c,
-             |    CAST(count(*) AS BIGINT) * 4294967296
-             |      + CAST(('0x' || substr(md5('lt:v1:' || l.l::VARCHAR),
-             |        1, 8)) AS BIGINT) AS pk
-             |  FROM dir d JOIN l0 l ON l.node = d.v GROUP BY 1, 2),
-             |m1 AS (SELECT u, max(pk) AS mx FROM c1 GROUP BY 1),
-             |n1 AS (SELECT c1.u, min(c1.l) AS nl FROM c1
-             |  JOIN m1 ON m1.u = c1.u AND c1.pk = m1.mx GROUP BY 1),
-             |l1 AS MATERIALIZED (SELECT l0.node,
-             |    coalesce(n1.nl, l0.l) AS l
-             |  FROM l0 LEFT JOIN n1 ON n1.u = l0.node),
-             |c2 AS MATERIALIZED (SELECT d.u, l.l,
-             |    CAST(count(*) AS BIGINT) AS c,
-             |    CAST(count(*) AS BIGINT) * 4294967296
-             |      + CAST(('0x' || substr(md5('lt:v1:' || l.l::VARCHAR),
-             |        1, 8)) AS BIGINT) AS pk
-             |  FROM dir d JOIN l1 l ON l.node = d.v GROUP BY 1, 2),
-             |m2 AS (SELECT u, max(pk) AS mx FROM c2 GROUP BY 1),
-             |n2 AS (SELECT c2.u, min(c2.l) AS nl FROM c2
-             |  JOIN m2 ON m2.u = c2.u AND c2.pk = m2.mx GROUP BY 1),
-             |l2 AS MATERIALIZED (SELECT l1.node,
-             |    coalesce(n2.nl, l1.l) AS l
-             |  FROM l1 LEFT JOIN n2 ON n2.u = l1.node),
-             |c3 AS MATERIALIZED (SELECT d.u, l.l,
-             |    CAST(count(*) AS BIGINT) AS c,
-             |    CAST(count(*) AS BIGINT) * 4294967296
-             |      + CAST(('0x' || substr(md5('lt:v1:' || l.l::VARCHAR),
-             |        1, 8)) AS BIGINT) AS pk
-             |  FROM dir d JOIN l2 l ON l.node = d.v GROUP BY 1, 2),
-             |m3 AS (SELECT u, max(pk) AS mx FROM c3 GROUP BY 1),
-             |n3 AS (SELECT c3.u, min(c3.l) AS nl FROM c3
-             |  JOIN m3 ON m3.u = c3.u AND c3.pk = m3.mx GROUP BY 1),
-             |l3 AS MATERIALIZED (SELECT l2.node,
-             |    coalesce(n3.nl, l2.l) AS l
-             |  FROM l2 LEFT JOIN n3 ON n3.u = l2.node),
-             |c4 AS MATERIALIZED (SELECT d.u, l.l,
-             |    CAST(count(*) AS BIGINT) AS c,
-             |    CAST(count(*) AS BIGINT) * 4294967296
-             |      + CAST(('0x' || substr(md5('lt:v1:' || l.l::VARCHAR),
-             |        1, 8)) AS BIGINT) AS pk
-             |  FROM dir d JOIN l3 l ON l.node = d.v GROUP BY 1, 2),
-             |m4 AS (SELECT u, max(pk) AS mx FROM c4 GROUP BY 1),
-             |n4 AS (SELECT c4.u, min(c4.l) AS nl FROM c4
-             |  JOIN m4 ON m4.u = c4.u AND c4.pk = m4.mx GROUP BY 1),
-             |l4 AS MATERIALIZED (SELECT l3.node,
-             |    coalesce(n4.nl, l3.l) AS l
-             |  FROM l3 LEFT JOIN n4 ON n4.u = l3.node),
+             |${(1 to 4).map(round).mkString(",\n")},
              |fb AS (SELECT node // 40 AS block, l FROM l4),
              |bc AS MATERIALIZED (SELECT block, l,
              |    CAST(count(*) AS BIGINT) AS c FROM fb GROUP BY 1, 2),
@@ -994,7 +963,8 @@ object Clustering {
              |  bm.mc * 1000000 // greatest(bm.n_nodes, 1) >= 900000
              |    AS recovered
              |FROM bm JOIN bc ON bc.block = bm.block AND bc.c = bm.mc
-             |GROUP BY 1, 2, 3, bm.mc ORDER BY bm.block""".stripMargin))
+             |GROUP BY 1, 2, 3, bm.mc ORDER BY bm.block"""
+      })
   )
 
   /** q205's streaming body: arrivals land as files (the q139 discipline),

@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
+import graft.Tables
 import graft.queries.Entry
-import graft.{Tables => T}
+import graft.queries.OracleSql._
 import graft.operators.Multimodal.TarIn
 import graft.sources.Bin
 
@@ -28,6 +29,16 @@ import graft.sources.Bin
   * would hand-roll inside map tasks, made first-class.
   */
 object Containers {
+
+  /** The documents as `TarIn` rows: the input of every container decoder
+    * here and of q308/q315 in `Multimodal`. */
+  private[graft] def tarInputs(s: SparkSession, d: String): Dataset[TarIn] = {
+    import s.implicits._
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
+      .as[(Long, String, String, Long)]
+      .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+  }
 
   private val DigP = 2147483647L
 
@@ -146,7 +157,7 @@ object Containers {
     })
 
   private[graft] val GzipOracle: String =
-    s"""WITH m AS (SELECT source, doc_id,
+    sql"""WITH m AS (SELECT source, doc_id,
        |    CAST(strlen(text) AS BIGINT) AS sz1,
        |    CAST(strlen('{"doc_id":' || doc_id || ',"n_chars":'
        |      || n_chars || '}') AS BIGINT) AS sz2,
@@ -163,10 +174,7 @@ object Containers {
        |      CASE WHEN bad1 THEN 0 ELSE sz1 END + sz2 END AS good_payload,
        |    CASE WHEN pfail THEN 0 ELSE
        |     (CASE WHEN bad1 THEN 0 ELSE
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_transform(range(1, length(n1) + 1),
-       |          i -> CAST(unicode(n1[i]) AS BIGINT))),
-       |        (a, c) -> (a * 131 + c) % $DigP) END
+       |      ${charPoly("n1")} END
        |     + list_reduce(list_prepend(CAST(0 AS BIGINT),
        |        list_transform(range(1, length(n2) + 1),
        |          i -> CAST(unicode(n2[i]) AS BIGINT))),
@@ -179,7 +187,7 @@ object Containers {
        |  CAST(sum(good_payload) AS BIGINT) AS payload_bytes,
        |  CAST(sum(dgs) % $DigP AS BIGINT) AS name_digest,
        |  CAST(sum(nf) AS BIGINT) AS n_parse_fail
-       |FROM dg GROUP BY source ORDER BY source""".stripMargin
+       |FROM dg GROUP BY source ORDER BY source"""
 
   // ---------------------------------------------------------------- q320
   // TIFF: the tag-directory raster format (scanned-document corpora, ML
@@ -607,14 +615,12 @@ object Containers {
     val SHAT = shat
     val ERR = s"(CASE WHEN $S - $SHAT < 0 THEN $SHAT - $S" +
       s" ELSE $S - $SHAT END)"
-    s"""WITH m AS (SELECT source, doc_id, 64 + doc_id % 64 AS n,
+    sql"""WITH m AS (SELECT source, doc_id, 64 + doc_id % 64 AS n,
        |    doc_id % 53 = 0 AS bad FROM documents),
        |p AS (SELECT source, bad,
        |    CASE WHEN bad THEN 0 ELSE n END AS ns,
        |    CASE WHEN bad THEN CAST(0 AS BIGINT) ELSE
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_transform(range(0, n), i -> CAST($CODE AS BIGINT))),
-       |        (a, c) -> (a * 131 + c) % $DigP) END AS dg,
+       |      ${polyFold(s"list_transform(range(0, n), i -> CAST($CODE AS BIGINT))")} END AS dg,
        |    CASE WHEN bad THEN 0 ELSE CAST(list_sum(list_transform(
        |      range(0, n), i -> $SHAT * $SHAT)) AS BIGINT) END AS eout,
        |    CASE WHEN bad THEN 0 ELSE CAST(list_sum(list_transform(
@@ -629,7 +635,7 @@ object Containers {
        |  CAST(sum(eout) AS BIGINT) AS energy_out,
        |  CAST(sum(err2) AS BIGINT) AS sum_err2,
        |  CAST(max(mx) AS BIGINT) AS max_abs_err
-       |FROM p GROUP BY source ORDER BY source""".stripMargin
+       |FROM p GROUP BY source ORDER BY source"""
   }
 
   private def imgRollup(df: DataFrame): DataFrame =
@@ -642,7 +648,7 @@ object Containers {
       .orderBy(col("source"))
 
   private[graft] val TiffOracle: String =
-    s"""WITH m AS (SELECT source, doc_id,
+    sql"""WITH m AS (SELECT source, doc_id,
        |    4 * (1 + doc_id % 5) AS w, 4 * (1 + doc_id % 3) AS h,
        |    doc_id % 47 = 0 AS bad
        |  FROM documents),
@@ -654,14 +660,10 @@ object Containers {
        |          i -> (doc_id * 7 + i * 13) % 251)),
        |        (a, v) -> (a * 131 + v) % $DigP) END AS dg
        |  FROM m)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_images,
-       |  CAST(sum(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-       |  CAST(sum(pix) AS BIGINT) AS pix_bytes,
-       |  CAST(sum(dg) % $DigP AS BIGINT) AS pix_digest
-       |FROM d GROUP BY source ORDER BY source""".stripMargin
+       |$imageRollup"""
 
   private[graft] val BmpOracle: String =
-    s"""WITH m AS (SELECT source, doc_id,
+    sql"""WITH m AS (SELECT source, doc_id,
        |    3 * (1 + doc_id % 4) AS w, 2 * (1 + doc_id % 3) AS h,
        |    doc_id % 31 = 0 AS bad
        |  FROM documents),
@@ -680,11 +682,7 @@ object Containers {
        |          END)),
        |        (a, v) -> (a * 131 + v) % $DigP) END AS dg
        |  FROM m)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_images,
-       |  CAST(sum(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-       |  CAST(sum(pix) AS BIGINT) AS pix_bytes,
-       |  CAST(sum(dg) % $DigP AS BIGINT) AS pix_digest
-       |FROM d GROUP BY source ORDER BY source""".stripMargin
+       |$imageRollup"""
 
   // ---------------------------------------------------------------- q330
   // MP4 / ISO-BMFF (ISO 14496-12): the box-tree container video crawl
@@ -1067,7 +1065,7 @@ object Containers {
     })
 
   private[graft] val Mp4ChunkOracle: String =
-    s"""WITH m AS (SELECT source, doc_id,
+    sql"""WITH m AS (SELECT source, doc_id,
        |    CAST(3 + doc_id % 5 AS BIGINT) AS n1,
        |    CAST(2 + doc_id % 4 AS BIGINT) AS n2,
        |    doc_id % 79 = 0 AS bad
@@ -1085,9 +1083,7 @@ object Containers {
        |    CASE WHEN bad THEN 0 ELSE 3 END AS nc,
        |    CASE WHEN bad THEN 0 ELSE len(b1) + len(b2) END AS pb,
        |    CASE WHEN bad THEN 0 ELSE
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_concat(b1, b2)),
-       |        (a, v) -> (a * 131 + v) % $DigP) END AS dg,
+       |      ${polyFold("list_concat(b1, b2)", v = "v")} END AS dg,
        |    CASE WHEN bad THEN 0 ELSE n1 * 1024 + n2 * 800 END AS dur
        |  FROM x)
        |SELECT source, CAST(count(*) AS BIGINT) AS n_files,
@@ -1098,10 +1094,10 @@ object Containers {
        |  CAST(sum(pb) AS BIGINT) AS payload_bytes,
        |  CAST(sum(dg) % $DigP AS BIGINT) AS payload_digest,
        |  CAST(sum(dur) AS BIGINT) AS dur_ticks
-       |FROM d GROUP BY source ORDER BY source""".stripMargin
+       |FROM d GROUP BY source ORDER BY source"""
 
   private[graft] val Mp4Oracle: String =
-    s"""WITH m AS (SELECT source, doc_id,
+    sql"""WITH m AS (SELECT source, doc_id,
        |    CAST(3 + doc_id % 5 AS BIGINT) AS n1,
        |    CAST(2 + doc_id % 4 AS BIGINT) AS n2,
        |    doc_id % 67 = 0 AS bad
@@ -1118,9 +1114,7 @@ object Containers {
        |    CASE WHEN bad THEN 0 ELSE n1 + n2 END AS ns,
        |    CASE WHEN bad THEN 0 ELSE len(b1) + len(b2) END AS pb,
        |    CASE WHEN bad THEN 0 ELSE
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_concat(b1, b2)),
-       |        (a, v) -> (a * 131 + v) % $DigP) END AS dg
+       |      ${polyFold("list_concat(b1, b2)", v = "v")} END AS dg
        |  FROM x)
        |SELECT source, CAST(count(*) AS BIGINT) AS n_files,
        |  CAST(sum(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT)
@@ -1128,7 +1122,7 @@ object Containers {
        |  CAST(sum(ns) AS BIGINT) AS n_samples,
        |  CAST(sum(pb) AS BIGINT) AS payload_bytes,
        |  CAST(sum(dg) % $DigP AS BIGINT) AS payload_digest
-       |FROM d GROUP BY source ORDER BY source""".stripMargin
+       |FROM d GROUP BY source ORDER BY source"""
 
   // ---------------------------------------------------------------- q331
   // Spectral bin energy over the decoded mu-law PCM — the audio-quality
@@ -1686,10 +1680,7 @@ object Containers {
       "q319_gzip_member_stream",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(gzipIndexPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1714,10 +1705,7 @@ object Containers {
       "q320_tiff_ifd_walk",
       (s, d) => {
         import s.implicits._
-        imgRollup(T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        imgRollup(tarInputs(s, d)
           .mapPartitions(tiffDecodePartition)
           .toDF())
       },
@@ -1732,10 +1720,7 @@ object Containers {
       "q321_bmp_decode",
       (s, d) => {
         import s.implicits._
-        imgRollup(T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        imgRollup(tarInputs(s, d)
           .mapPartitions(bmpDecodePartition)
           .toDF())
       },
@@ -1754,10 +1739,7 @@ object Containers {
       "q325_utf8_audit",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(utf8AuditPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1787,10 +1769,7 @@ object Containers {
       "q328_ulaw_codec",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(ulawAuditPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1818,10 +1797,7 @@ object Containers {
       "q330_mp4_box_index",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(mp4IndexPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1845,10 +1821,7 @@ object Containers {
       "q331_tone_bin_energy",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(toneProbePartition)
           .toDF()
           .groupBy(col("source"))
@@ -1880,10 +1853,7 @@ object Containers {
       "q335_mp4_chunk_offsets",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(mp4ChunkedPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1914,10 +1884,7 @@ object Containers {
       "q336_mp3_frame_walk",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(mp3IndexPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1946,10 +1913,7 @@ object Containers {
       "q343_webm_ebml_walk",
       (s, d) => {
         import s.implicits._
-        T.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(webmPartition)
           .toDF()
           .groupBy(col("source"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -332,11 +333,8 @@ object CorpusOps {
     Entry(
       "q110_boilerplate_scrub",
       boilerplateScrub,
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-7, 0)+1),
-             |    i -> array_to_string(list_slice(toks, i, i+7), ' ')))) AS gram
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |$eightGrams,
              |c AS (SELECT gram, count(*) AS nd FROM g GROUP BY gram),
              |p AS (SELECT g.doc_id, count(*) AS n_grams,
              |    sum(CASE WHEN c.nd >= 2 THEN 1 ELSE 0 END) AS n_boiler
@@ -347,7 +345,7 @@ object CorpusOps {
              |    AND 2 * coalesce(p.n_boiler, 0) >= coalesce(p.n_grams, 0))
              |    AS drop_doc
              |FROM documents d LEFT JOIN p USING (doc_id)
-             |ORDER BY d.doc_id""".stripMargin)),
+             |ORDER BY d.doc_id""")),
 
     // q127: the hash-only production variant of q110 (see
     // boilerplateScrubHash doc) — same oracle TEXT as q110, which computes
@@ -357,11 +355,8 @@ object CorpusOps {
     Entry(
       "q127_boilerplate_hash",
       boilerplateScrubHash,
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-7, 0)+1),
-             |    i -> array_to_string(list_slice(toks, i, i+7), ' ')))) AS gram
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |$eightGrams,
              |c AS (SELECT gram, count(*) AS nd FROM g GROUP BY gram),
              |p AS (SELECT g.doc_id, count(*) AS n_grams,
              |    sum(CASE WHEN c.nd >= 2 THEN 1 ELSE 0 END) AS n_boiler
@@ -372,7 +367,7 @@ object CorpusOps {
              |    AND 2 * coalesce(p.n_boiler, 0) >= coalesce(p.n_grams, 0))
              |    AS drop_doc
              |FROM documents d LEFT JOIN p USING (doc_id)
-             |ORDER BY d.doc_id""".stripMargin)),
+             |ORDER BY d.doc_id""")),
 
     // q111: PII redaction over fabricated raw-crawl payloads (see
     // piiRedaction doc); oracle uses DuckDB's RE2 on the same shared-subset
@@ -405,15 +400,14 @@ object CorpusOps {
     Entry(
       "q112_split_assign",
       splitAssign,
-      Some("""WITH b AS (SELECT doc_id,
-             |    CAST(('0x' || substr(md5('split:v1:' || doc_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 100 AS bucket
+      Some(sql"""WITH b AS (SELECT doc_id,
+             |    ${md5Lane("'split:v1:' || doc_id::VARCHAR", castBr = Br(2))} % 100 AS bucket
              |  FROM documents)
              |SELECT doc_id, bucket,
              |  CASE WHEN bucket < 80 THEN 'train'
              |       WHEN bucket < 90 THEN 'val'
              |       ELSE 'test' END AS split
-             |FROM b ORDER BY doc_id""".stripMargin)),
+             |FROM b ORDER BY doc_id""")),
 
     // q113: DSIR-shaped importance weighting over hashed unigram features
     // (see importanceWeights doc); oracle replays buckets, masses, and the
@@ -421,10 +415,10 @@ object CorpusOps {
     Entry(
       "q113_importance_weights",
       importanceWeights,
-      Some("""WITH t AS (SELECT doc_id, source = 'src13' AS tgt,
+      Some(sql"""WITH t AS (SELECT doc_id, source = 'src13' AS tgt,
              |    unnest(string_split(text,' ')) AS w FROM documents),
              |wc AS (SELECT doc_id, tgt,
-             |    CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 1024 AS b,
+             |    ${md5Lane("w")} % 1024 AS b,
              |    count(*) AS cnt
              |  FROM t GROUP BY doc_id, tgt, b),
              |f AS (SELECT b, sum(cnt) AS ccnt,
@@ -436,7 +430,7 @@ object CorpusOps {
              |SELECT doc_id, CAST(target_mass AS BIGINT) AS target_mass,
              |  CAST(corpus_mass AS BIGINT) AS corpus_mass,
              |  CAST(target_mass AS DOUBLE) / CAST(corpus_mass AS DOUBLE) AS score
-             |FROM s ORDER BY score DESC, doc_id LIMIT 100""".stripMargin)),
+             |FROM s ORDER BY score DESC, doc_id LIMIT 100""")),
 
     // q134: greedy token-budget selection (see tokenBudgetSelect doc) —
     // oracle replays the global quality-ordered cumsum with one window.
@@ -519,9 +513,8 @@ object CorpusOps {
             (col("ptv").cast("double") / 1.0e12).as("kl_train_val"),
             (col("pvt").cast("double") / 1.0e12).as("kl_val_train"))
       },
-      Some("""WITH b AS (SELECT doc_id, text,
-             |    CAST(('0x' || substr(md5('split:v1:' || doc_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 100 AS bucket
+      Some(sql"""WITH b AS (SELECT doc_id, text,
+             |    ${md5Lane("'split:v1:' || doc_id::VARCHAR", castBr = Br(2))} % 100 AS bucket
              |  FROM documents),
              |t AS (SELECT bucket < 80 AS is_train,
              |    unnest(string_split(text, ' ')) AS term
@@ -550,7 +543,7 @@ object CorpusOps {
              |    AS kl_train_val,
              |  CAST(CAST(sum(pvt) AS BIGINT) AS DOUBLE) / 1000000000000.0
              |    AS kl_val_train
-             |FROM p""".stripMargin)),
+             |FROM p""")),
 
     // q154: REPRODUCIBLE WEIGHTED SAMPLING without replacement
     // (Efraimidis/Spirakis'06): top-k docs by key ln(u)/w — equivalent to
@@ -581,15 +574,14 @@ object CorpusOps {
           .orderBy(col("key").desc, col("doc_id"))
           .limit(k)
       },
-      Some("""WITH b AS (SELECT doc_id, n_chars,
-             |    CAST(('0x' || substr(md5('wsample:v1:' || doc_id::VARCHAR), 1, 8))
-             |      AS BIGINT) AS h
+      Some(sql"""WITH b AS (SELECT doc_id, n_chars,
+             |    ${md5Lane("'wsample:v1:' || doc_id::VARCHAR", castBr = Br(2))} AS h
              |  FROM documents WHERE n_chars > 0),
              |u AS (SELECT doc_id, n_chars,
              |    round(ln((h + 0.5) / 4294967296.0) / n_chars, 12) AS key
              |  FROM b)
              |SELECT doc_id, n_chars, key FROM u
-             |ORDER BY key DESC, doc_id LIMIT 100""".stripMargin)),
+             |ORDER BY key DESC, doc_id LIMIT 100""")),
 
     // q155: FUZZY CATALOG MATCH — entity resolution of dirty strings
     // against a reference catalog by blocked edit distance (the
@@ -752,14 +744,13 @@ object CorpusOps {
           .select(col("doc_id"), col("shard"), (col("off") + col("rn")).as("pos"))
           .orderBy(col("shard"), col("pos"))
       },
-      Some("""WITH k AS (SELECT doc_id,
-             |    CAST(('0x' || substr(md5('shuffle:v1:' || doc_id::VARCHAR), 1, 8))
-             |      AS BIGINT) AS h
+      Some(sql"""WITH k AS (SELECT doc_id,
+             |    ${md5Lane("'shuffle:v1:' || doc_id::VARCHAR", castBr = Br(2))} AS h
              |  FROM documents)
              |SELECT doc_id, h % 8 AS shard,
              |  CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id)
              |    AS BIGINT) AS pos
-             |FROM k ORDER BY shard, pos""".stripMargin)),
+             |FROM k ORDER BY shard, pos""")),
 
     // q169: CORPUS NOVELTY CURVE — how much genuinely NEW content each
     // slice of the (doc_id-ordered) corpus contributes: a doc's trigram is
@@ -916,11 +907,9 @@ object CorpusOps {
             expr("abs(n_after - target) <= greatest(3L, target div 100)"))
           .orderBy(col("split"))
       },
-      Some("""WITH kept AS (SELECT doc_id,
-             |    CAST(('0x' || substr(md5('split:v1:' || doc_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 100 AS bucket,
-             |    CAST(('0x' || substr(md5('move:v1:' || doc_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 1000 AS mh
+      Some(sql"""WITH kept AS (SELECT doc_id,
+             |    ${md5Lane("'split:v1:' || doc_id::VARCHAR", castBr = Br(2))} % 100 AS bucket,
+             |    ${md5Lane("'move:v1:' || doc_id::VARCHAR", castBr = Br(2))} % 1000 AS mh
              |  FROM documents WHERE n_chars >= 250),
              |k2 AS (SELECT doc_id, mh,
              |    CASE WHEN bucket < 80 THEN 'train'
@@ -978,7 +967,7 @@ object CorpusOps {
              |FROM tg
              |LEFT JOIN mo ON mo.split0 = tg.split0
              |LEFT JOIN rt ON rt.dest = tg.split0
-             |ORDER BY split""".stripMargin))
+             |ORDER BY split"""))
   )
 
   /** Round-16 additions kept out of the primary Seq (JVM method-size). */

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -305,44 +306,8 @@ object CorpusStats {
               / (lit(2L) * col("n_pos") * col("n_neg")).cast("double"), 6).as("auc"))
           .withColumn("gini", round(lit(2.0) * col("auc") - 1.0, 6))
       },
-      Some("""WITH t AS (SELECT doc_id, lang,
-             |    list_filter(string_split(lower(text), ' '),
-             |      w -> regexp_matches(w, '^[a-z0-9]+$')) AS u
-             |  FROM documents),
-             |f AS (SELECT doc_id,
-             |    list_concat(u, list_transform(range(2, len(u)+1),
-             |      i -> u[i-1] || ' ' || u[i])) AS feats
-             |  FROM t),
-             |e AS (SELECT doc_id,
-             |    CAST(coalesce(list_sum(list_transform(feats, g ->
-             |      ((list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |          list_transform(range(1, length(g)+1),
-             |            i -> CAST(unicode(g[i]) AS BIGINT))),
-             |        (a, c) -> (a * 31 + c) % 4096) * 2654435761) % 2003)
-             |      - 1001)), 0) AS BIGINT) AS score
-             |  FROM f),
-             |tk AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM tk) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
-             |    CAST(max(cnt) AS BIGINT) AS max_w,
-             |    CAST(count(*) AS BIGINT) AS n_distinct FROM wc GROUP BY doc_id),
-             |bgc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM tk)
-             |  GROUP BY doc_id, bg),
-             |bs AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bg,
-             |    CAST(max(cnt) AS BIGINT) AS max_bg FROM bgc GROUP BY doc_id),
-             |lab AS (SELECT ws.doc_id,
-             |    NOT (ws.max_w * 25 > ws.n_words * 3
-             |      OR (ws.n_words - ws.n_distinct) * 20 > ws.n_words * 13
-             |      OR coalesce(bs.max_bg, 0) * 50
-             |         > greatest(coalesce(bs.n_bg, 0), 1) * 3) AS pos
-             |  FROM ws LEFT JOIN bs USING (doc_id)),
-             |j AS (SELECT e.score, lab.pos FROM e JOIN lab USING (doc_id)),
-             |ps AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS npos
-             |  FROM j GROUP BY score),
+      Some(sql"""$withScoredLabels,
+             |$labelsByScore,
              |rk AS (SELECT score, cnt, npos,
              |    CAST(coalesce(sum(cnt) OVER (ORDER BY score
              |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
@@ -355,7 +320,7 @@ object CorpusStats {
              |    / CAST(2 * n_pos * n_neg AS DOUBLE), 6) AS auc,
              |  round(2.0 * round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE)
              |    / CAST(2 * n_pos * n_neg AS DOUBLE), 6) - 1.0, 6) AS gini
-             |FROM agg""".stripMargin)),
+             |FROM agg""")),
 
     // q210: CONFUSION MATRIX + MCC at the production threshold — q209
     // ranks the scorer threshold-free; this evaluates the DEPLOYED
@@ -391,40 +356,7 @@ object CorpusStats {
               * (col("tn") + col("fp")) * (col("tn") + col("fn"))).cast("double")), 6)
             .as("mcc"))
       },
-      Some("""WITH t AS (SELECT doc_id, lang,
-             |    list_filter(string_split(lower(text), ' '),
-             |      w -> regexp_matches(w, '^[a-z0-9]+$')) AS u
-             |  FROM documents),
-             |f AS (SELECT doc_id,
-             |    list_concat(u, list_transform(range(2, len(u)+1),
-             |      i -> u[i-1] || ' ' || u[i])) AS feats
-             |  FROM t),
-             |e AS (SELECT doc_id,
-             |    CAST(coalesce(list_sum(list_transform(feats, g ->
-             |      ((list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |          list_transform(range(1, length(g)+1),
-             |            i -> CAST(unicode(g[i]) AS BIGINT))),
-             |        (a, c) -> (a * 31 + c) % 4096) * 2654435761) % 2003)
-             |      - 1001)), 0) AS BIGINT) AS score
-             |  FROM f),
-             |tk AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM tk) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
-             |    CAST(max(cnt) AS BIGINT) AS max_w,
-             |    CAST(count(*) AS BIGINT) AS n_distinct FROM wc GROUP BY doc_id),
-             |bgc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM tk)
-             |  GROUP BY doc_id, bg),
-             |bs AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bg,
-             |    CAST(max(cnt) AS BIGINT) AS max_bg FROM bgc GROUP BY doc_id),
-             |lab AS (SELECT ws.doc_id,
-             |    NOT (ws.max_w * 25 > ws.n_words * 3
-             |      OR (ws.n_words - ws.n_distinct) * 20 > ws.n_words * 13
-             |      OR coalesce(bs.max_bg, 0) * 50
-             |         > greatest(coalesce(bs.n_bg, 0), 1) * 3) AS pos
-             |  FROM ws LEFT JOIN bs USING (doc_id)),
+      Some(sql"""$withScoredLabels,
              |cm AS (SELECT
              |    CAST(sum(CASE WHEN pos AND score > 0 THEN 1 ELSE 0 END) AS BIGINT)
              |      AS tp,
@@ -442,7 +374,7 @@ object CorpusStats {
              |  round(CAST(tp * tn - fp * fn AS DOUBLE)
              |    / sqrt(CAST((tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)
              |        AS DOUBLE)), 6) AS mcc
-             |FROM cm""".stripMargin)),
+             |FROM cm""")),
 
     // q216: SUBSTRING-LEVEL DUPLICATION PROFILE — the Lee et al.
     // "Deduplicating Training Data" signal at 8-gram granularity: document-
@@ -491,18 +423,13 @@ object CorpusStats {
             expr("dup_grams * 1000000L div greatest(n_grams, 1L)"))
           .orderBy(col("source"))
       },
-      Some("""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
+      Some(sql"""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
              |  FROM documents),
              |tht AS (SELECT doc_id, source, list_transform(t, w ->
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(w) + 1),
-             |        i -> CAST(unicode(w[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % 2147483647)) AS th FROM tk),
+             |    ${charPoly("w")}) AS th FROM tk),
              |g AS (SELECT doc_id, source,
              |    unnest(list_transform(range(1, len(th) - 6), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(0, 8), k -> th[i + k])),
-             |        (a, c) -> (a * 131 + c) % 2147483647))) AS gh FROM tht),
+             |      ${polyFold("list_transform(range(0, 8), k -> th[i + k])")})) AS gh FROM tht),
              |c AS (SELECT gh, doc_id, source, CAST(count(*) AS BIGINT) AS npos
              |  FROM g GROUP BY 1, 2, 3),
              |gc AS (SELECT gh, CAST(count(*) AS BIGINT) AS ndocs
@@ -516,7 +443,7 @@ object CorpusStats {
              |  CAST(sum(dup) AS BIGINT) AS dup_grams,
              |  CAST(sum(dup) AS BIGINT) * 1000000
              |    // greatest(CAST(sum(total) AS BIGINT), 1) AS dup_ppm
-             |FROM p GROUP BY source ORDER BY source""".stripMargin)),
+             |FROM p GROUP BY source ORDER BY source""")),
 
     // q217: SIMPSON REPEAT-PROBABILITY DIVERSITY — the log-free lexical-
     // diversity quality score: the probability two DISTINCT token positions
@@ -1048,13 +975,10 @@ object CorpusStats {
             expr("dup_pos * 1000000L div greatest(n_pos, 1L)"))
           .orderBy(col("source"), col("l"))
       },
-      Some("""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
+      Some(sql"""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
              |  FROM documents),
              |tht AS (SELECT doc_id, source, list_transform(t, w ->
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(w) + 1),
-             |        i -> CAST(unicode(w[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % 2147483647)) AS th FROM tk),
+             |    ${charPoly("w")}) AS th FROM tk),
              |g AS (SELECT doc_id, source,
              |    unnest(flatten(list_transform([4, 8, 16, 32], L ->
              |      list_transform(range(1, greatest(len(th) - L + 2, 1)),
@@ -1074,7 +998,7 @@ object CorpusStats {
              |  CAST(sum(CASE WHEN ndocs >= 2 THEN npos ELSE 0 END) AS BIGINT)
              |    * 1000000 // greatest(CAST(sum(npos) AS BIGINT), 1) AS dup_ppm
              |FROM c JOIN gc USING (key)
-             |GROUP BY source, key % 64 ORDER BY source, l""".stripMargin))
+             |GROUP BY source, key % 64 ORDER BY source, l"""))
   )
 
   /** ONE-PASS (doc_id, score, pos) for the classifier-evaluation tier:

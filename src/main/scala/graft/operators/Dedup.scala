@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.sources.Artifacts
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -942,11 +943,15 @@ object Dedup {
   private def dedupIndexParts(s: SparkSession, d: String): Seq[(String, DataFrame)] =
     Seq("index" -> dedupIndexRows(Tables.documents(s, d).select(col("doc_id"), col("text"))))
 
-  /** Train-free build, published atomically as generation `gen-build` of
-    * the q131/q132 root — readers see the old complete index or the new
-    * complete one, never a mix. Returns the generation path. */
-  private[graft] def dedupIndexBuild(s: SparkSession, d: String): String =
-    Artifacts.publish(s, dedupIndexRoot(d), "gen-build")(dedupIndexParts(s, d): _*)
+  /** Train-free build, published atomically as a fresh generation
+    * `gen-build-<n>` of the q131/q132 root — readers see the old complete
+    * index or the new complete one, never a mix. Returns the generation
+    * path. q131 rebuilds on every run, so each run takes a new name: the
+    * live generation is never rewritten under a q132 reader. */
+  private[graft] def dedupIndexBuild(s: SparkSession, d: String): String = {
+    val root = dedupIndexRoot(d)
+    Artifacts.publish(s, root, Artifacts.nextGen(s, root, "gen-build-"))(dedupIndexParts(s, d): _*)
+  }
 
   /** Build-if-absent + manifest resolve (the q109/q122 setup pattern, so
     * the registered queries are self-contained in any driver order). */
@@ -1341,18 +1346,15 @@ object Dedup {
     Entry(
       "q36_minhash_lsh",
       minhashNeardup(_, _),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
              |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
              |  len(a.sh) AS la, len(b.sh) AS lb
              | FROM s a JOIN s b ON a.doc_id < b.doc_id)
              |SELECT a_id, b_id, round(inter/(la+lb-inter),4) AS jac
              |FROM p WHERE inter/(la+lb-inter) >= 0.9
-             |ORDER BY a_id, b_id""".stripMargin)),
+             |ORDER BY a_id, b_id""")),
 
     // q192: PROFILE-DRIVEN ADAPTIVE SALT (see adaptiveBandSalt) — the q36
     // band join re-run with its salt factor DERIVED from the measured
@@ -1382,17 +1384,14 @@ object Dedup {
             lit(derived >= 1 && derived <= 64).as("salt_in_range"),
             (col("nm") === 0L).as("matches_static"))
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |p AS (SELECT CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS inter,
              |  len(a.sh) AS la, len(b.sh) AS lb
              | FROM s a JOIN s b ON a.doc_id < b.doc_id)
              |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
              |  TRUE AS salt_in_range, TRUE AS matches_static
-             |FROM p WHERE inter/(la+lb-inter) >= 0.9""".stripMargin)),
+             |FROM p WHERE inter/(la+lb-inter) >= 0.9""")),
 
     // q37: LSH-pruned word-set Jaccard near-dup; brute-force oracle.
     Entry(
@@ -1519,18 +1518,15 @@ object Dedup {
     Entry(
       "q84_ngram_collision",
       ngramCollision,
-      Some("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-             |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-7, 0)+1),
-             |    i -> array_to_string(list_slice(toks, i, i+7), ' ')))) AS gram
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+             |$eightGrams,
              |c AS (SELECT doc_id, gram FROM g WHERE doc_id >= 50),
              |b AS (SELECT doc_id AS b_id, gram FROM g WHERE doc_id < 50)
              |SELECT c.doc_id,
              |  CAST(count(DISTINCT b.b_id) AS BIGINT) AS n_bench_docs,
              |  CAST(count(DISTINCT c.gram) AS BIGINT) AS n_shared_grams
              |FROM c JOIN b ON c.gram = b.gram
-             |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin)),
+             |GROUP BY c.doc_id ORDER BY c.doc_id""")),
 
     // q91: SimHash Hamming-radius near-dup pairs (see simhashPairs doc).
     // Signatures are engine-defined, so the registered form emits
@@ -1584,21 +1580,16 @@ object Dedup {
     Entry(
       "q87_neardup_clusters",
       neardupClusters,
-      Some("""WITH RECURSIVE s AS (
+      Some(sql"""WITH RECURSIVE s AS (
              |  SELECT doc_id, list_distinct(string_split(text,' ')) AS toks FROM documents),
              |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-             |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-             |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
+             |  $nearDupPairsFrom,
              |e AS (SELECT a_id AS src, b_id AS dst FROM p
              |      UNION ALL SELECT b_id, a_id FROM p),
-             |r(node, reach) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT r.node, e.dst FROM r JOIN e ON e.src = r.reach),
+             |$reachability,
              |lab AS (SELECT node, min(reach) AS cluster_id FROM r GROUP BY node)
              |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members
-             |FROM lab GROUP BY cluster_id ORDER BY cluster_id""".stripMargin)),
+             |FROM lab GROUP BY cluster_id ORDER BY cluster_id""")),
 
     // q86: winnowing shared-substring overlap (see winnowOverlap doc);
     // brute oracle unnests every 23-byte window of every doc and joins
@@ -1712,11 +1703,8 @@ object Dedup {
     Entry(
       "q132_dedup_index_query",
       dedupIndexQuery,
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |b AS (SELECT doc_id + 10000000 AS new_id, sh FROM s WHERE doc_id % 2 = 0),
              |p AS (SELECT b.new_id, s.doc_id AS old_id,
              |  CAST(len(list_intersect(b.sh, s.sh)) AS DOUBLE) AS inter,
@@ -1726,7 +1714,7 @@ object Dedup {
              |  WHERE inter/(la+lb-inter) >= 0.9)
              |SELECT new_id, count(*) AS n_dups, min(old_id) AS keep_id,
              |  round(max(jac),4) AS best_jac
-             |FROM m GROUP BY new_id ORDER BY new_id""".stripMargin)),
+             |FROM m GROUP BY new_id ORDER BY new_id""")),
 
     // q133: DEDUP INDEX UPDATE (see dedupIndexUpdate) — fold the batch into
     // the artifact under the frozen hash family. Read back THROUGH the
@@ -1766,11 +1754,8 @@ object Dedup {
       (s, d) => {
         dedupServeAgainst(s, dedupIndexDelete(s, d), d)
       },
-      Some(s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |b AS (SELECT doc_id + 10000000 AS new_id, sh FROM s WHERE doc_id % 2 = 0),
              |surv AS (SELECT * FROM s
              |  WHERE doc_id < $dedupDelLo OR doc_id >= $dedupDelHi),
@@ -1782,7 +1767,7 @@ object Dedup {
              |  WHERE inter/(la+lb-inter) >= 0.9)
              |SELECT new_id, count(*) AS n_dups, min(old_id) AS keep_id,
              |  round(max(jac),4) AS best_jac
-             |FROM m GROUP BY new_id ORDER BY new_id""".stripMargin)),
+             |FROM m GROUP BY new_id ORDER BY new_id""")),
 
     // q137: DEDUP INDEX GENERATION GC — the retention verb (q130's sweep,
     // shared machinery: Artifacts.gc is root-generic): two stacked
@@ -1822,20 +1807,14 @@ object Dedup {
     Entry(
       "q138_ingest_dedup",
       (s, d) => ingestDedup(s, d),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |bt AS (
              |  SELECT doc_id + 10000000 AS new_id, toks FROM t WHERE doc_id % 2 = 0
              |  UNION ALL
              |  SELECT doc_id + 20000000 AS new_id, list_reverse(toks) AS toks
              |  FROM t WHERE doc_id % 2 = 1),
-             |bs AS (SELECT new_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM bt),
+             |${tokenShingles("bs", "new_id", "bt")},
              |p AS (SELECT bs.new_id, s.doc_id AS old_id,
              |    CAST(len(list_intersect(bs.sh, s.sh)) AS DOUBLE) AS inter,
              |    len(bs.sh) AS la, len(s.sh) AS lb
@@ -1848,7 +1827,7 @@ object Dedup {
              |SELECT b.new_id, g.keep_id IS NOT NULL AS is_dup,
              |  g.keep_id, g.best_jac
              |FROM bs b LEFT JOIN g ON b.new_id = g.new_id
-             |ORDER BY b.new_id""".stripMargin)),
+             |ORDER BY b.new_id""")),
 
     // q139: STREAMING INGEST (see streamIngest) — the q138 loop as a
     // Structured Streaming deployment: one ingestChunk turn per
@@ -1858,20 +1837,14 @@ object Dedup {
     Entry(
       "q139_stream_ingest",
       (s, d) => streamIngest(s, d),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |bt AS (
              |  SELECT doc_id + 10000000 AS new_id, toks FROM t WHERE doc_id % 2 = 0
              |  UNION ALL
              |  SELECT doc_id + 20000000 AS new_id, list_reverse(toks) AS toks
              |  FROM t WHERE doc_id % 2 = 1),
-             |bs AS (SELECT new_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM bt),
+             |${tokenShingles("bs", "new_id", "bt")},
              |m AS (SELECT DISTINCT bs.new_id FROM bs CROSS JOIN s
              |  WHERE CAST(len(list_intersect(bs.sh, s.sh)) AS DOUBLE)
              |    / (len(bs.sh) + len(s.sh) - len(list_intersect(bs.sh, s.sh)))
@@ -1880,7 +1853,7 @@ object Dedup {
              |  CAST((SELECT count(*) FROM t) + (SELECT count(*) FROM bs)
              |    - (SELECT count(*) FROM m) AS BIGINT) AS n_index_rows,
              |  CAST((SELECT count(*) FROM bs) - (SELECT count(*) FROM m)
-             |    AS BIGINT) AS n_admitted""".stripMargin)),
+             |    AS BIGINT) AS n_admitted""")),
 
     // q144: SEGMENTED dedup index (see dedupSegServe) — O(delta) append +
     // a serve whose n_dups>=2 rows prove both segments were read. Oracle:
@@ -1893,11 +1866,8 @@ object Dedup {
     Entry(
       "q191_dedup_segment_compact",
       (s, d) => dedupSegCompact(s, d),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |sX AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("sX")},
              |u AS (SELECT doc_id, sh FROM sX
              |  UNION ALL
              |  SELECT doc_id + 10000000, sh FROM sX WHERE doc_id % 2 = 0),
@@ -1915,16 +1885,13 @@ object Dedup {
              |    + (SELECT count(*) FROM sX WHERE doc_id % 2 = 0)
              |    AS BIGINT) AS n_index_rows,
              |  CAST((SELECT count(*) FROM m) AS BIGINT) AS n_match_rows,
-             |  TRUE AS serve_equal""".stripMargin)),
+             |  TRUE AS serve_equal""")),
 
     Entry(
       "q144_dedup_segment_append",
       (s, d) => dedupSegServe(s, d),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |s AS (SELECT doc_id, list_distinct(list_transform(
-             |    range(1, greatest(len(toks)-2, 1) + 1),
-             |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-             |  FROM t),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |${tokenShingles("s")},
              |u AS (SELECT doc_id, sh FROM s
              |  UNION ALL
              |  SELECT doc_id + 10000000, sh FROM s WHERE doc_id % 2 = 0),
@@ -1937,7 +1904,7 @@ object Dedup {
              |  WHERE inter/(la+lb-inter) >= 0.9)
              |SELECT new_id, count(*) AS n_dups, min(old_id) AS keep_id,
              |  round(max(jac),4) AS best_jac
-             |FROM m GROUP BY new_id ORDER BY new_id""".stripMargin)),
+             |FROM m GROUP BY new_id ORDER BY new_id""")),
 
     // q149: RECURSIVE REACHABILITY (WITH RECURSIVE / UnionLoop) — BFS hop
     // distance through the embedding near-dup graph from every label-0
@@ -2180,25 +2147,20 @@ object Dedup {
             sum(col("n_members")).as("n_docs"),
             sum(col("n_members") - 1).as("docs_removable"))
           .orderBy(col("n_members")),
-      Some("""WITH RECURSIVE s AS (
+      Some(sql"""WITH RECURSIVE s AS (
              |  SELECT doc_id, list_distinct(string_split(text,' ')) AS toks FROM documents),
              |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-             |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-             |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
+             |  $nearDupPairsFrom,
              |e AS (SELECT a_id AS src, b_id AS dst FROM p
              |  UNION ALL SELECT b_id, a_id FROM p),
-             |r(node, reach) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT r.node, e.dst FROM r JOIN e ON e.src = r.reach),
+             |$reachability,
              |lab AS (SELECT node, min(reach) AS cluster_id FROM r GROUP BY node),
              |cl AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members
              |  FROM lab GROUP BY cluster_id)
              |SELECT n_members, CAST(count(*) AS BIGINT) AS n_clusters,
              |  CAST(sum(n_members) AS BIGINT) AS n_docs,
              |  CAST(sum(n_members - 1) AS BIGINT) AS docs_removable
-             |FROM cl GROUP BY n_members ORDER BY n_members""".stripMargin)),
+             |FROM cl GROUP BY n_members ORDER BY n_members""")),
 
     // q173: TRIANGLE COUNT + GLOBAL CLUSTERING COEFFICIENT of the
     // embedding near-dup graph — the graph-density diagnostic of a

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,6 +58,29 @@ object EventOps {
     (ht, bounds)
   }
   private val SessionGapNs = 30L * 60 * 1000 * 1000 * 1000
+
+  /** The robust-trend oracles' outlier lane: hour t of the planted series is
+    * an outlier (×20) when this md5 lane is 0 mod 24. */
+  private val RansacLane = md5Lane("'ransac:v1:' || gs.t::VARCHAR", keyBr = Br(2))
+
+  /** The planted series of the robust-trend oracles: hourly cents `y0`
+    * (`cn`), its hour span and planted slope (`bd`), and `ht`: the series
+    * plus the slope, with the [[RansacLane]] outliers. */
+  private val PlantedTrend: String =
+    sql"""WITH cn AS (SELECT (epoch_ns(ts) // 1000) // 3600000000 AS hr,
+         |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+         |      AS y0
+         |  FROM events GROUP BY 1),
+         |bd AS MATERIALIZED (SELECT h0, h1, h1 - h0 + 1 AS hh,
+         |    (ys // (h1 - h0 + 1)) // 10 AS slope_p
+         |  FROM (SELECT min(hr) AS h0, max(hr) AS h1,
+         |      CAST(sum(y0) AS BIGINT) AS ys FROM cn)),
+         |ht AS MATERIALIZED (SELECT gs.t,
+         |    (coalesce(cn.y0, 0) + bd.slope_p * gs.t) * (CASE WHEN
+         |      $RansacLane % 24 = 0 THEN 20 ELSE 1 END) AS y
+         |  FROM bd
+         |  CROSS JOIN LATERAL (SELECT unnest(range(0, bd.hh)) AS t) gs
+         |  LEFT JOIN cn ON cn.hr = bd.h0 + gs.t)"""
 
   /** Hot-key-safe sessionization: two phases keyed by (user_id, time-block)
     * then user_id. Phase 1 sessionizes within fixed time blocks — a hot user
@@ -242,15 +266,7 @@ object EventOps {
           .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
           .orderBy(col("user_id"))
       },
-      Some("""WITH g AS (
-             | SELECT user_id,
-             |  CASE WHEN lag(ts) OVER w IS NULL
-             |        OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-             |       THEN 1 ELSE 0 END AS new_session
-             | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-             |SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
-             | count(*) AS n_events
-             |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(sessionCounts)),
 
     // q212: NATIVE session_window SESSIONIZE — Spark's built-in session
     // aggregation (the streaming-capable form: state-store-mergeable
@@ -309,15 +325,7 @@ object EventOps {
     Entry(
       "q64_sessionize_salted",
       (s, d) => sessionizeSalted(Tables.events(s, d), SessionGapNs, 4 * HourNs),
-      Some("""WITH g AS (
-             | SELECT user_id,
-             |  CASE WHEN lag(ts) OVER w IS NULL
-             |        OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-             |       THEN 1 ELSE 0 END AS new_session
-             | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-             |SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
-             | count(*) AS n_events
-             |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(sessionCounts)),
 
     // q27: JSON prop extraction (multimodal metadata column pattern:
     // schema-on-read over a string column).
@@ -634,11 +642,7 @@ object EventOps {
               / (col("den").cast("double") * col("deny").cast("double"))).as("r2"))
           .orderBy(col("event_type"))
       },
-      Some("""WITH e AS (SELECT event_type,
-             |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS hr,
-             |    CAST(round(value*100) AS BIGINT) AS cents FROM events),
-             |h AS (SELECT event_type, hr, CAST(sum(cents) AS BIGINT) AS y
-             |  FROM e GROUP BY 1, 2),
+      Some(sql"""$withHourlyCents,
              |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              |    CAST(sum(hr) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
              |    CAST(sum(hr*y) AS BIGINT) AS sxy,
@@ -655,7 +659,7 @@ object EventOps {
              |    / CAST(n AS DOUBLE) AS intercept,
              |  (CAST(num AS DOUBLE) * CAST(num AS DOUBLE))
              |    / (CAST(den AS DOUBLE) * CAST(deny AS DOUBLE)) AS r2
-             |FROM s ORDER BY event_type""".stripMargin)),
+             |FROM s ORDER BY event_type""")),
 
     // q152: MERGEABLE HLL SKETCH ROLLUP (Datasketches HLL via the built-in
     // hll_sketch_agg / hll_union_agg) — distinct users per event_type
@@ -742,11 +746,7 @@ object EventOps {
               .as("z"))
           .orderBy(col("event_type"), col("hr"))
       },
-      Some("""WITH e AS (SELECT event_type,
-             |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS hr,
-             |    CAST(round(value*100) AS BIGINT) AS cents FROM events),
-             |h AS (SELECT event_type, hr, CAST(sum(cents) AS BIGINT) AS y
-             |  FROM e GROUP BY 1, 2),
+      Some(sql"""$withHourlyCents,
              |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              |    CAST(sum(y) AS BIGINT) AS sy,
              |    CAST(sum(y*y) AS BIGINT) AS syy FROM h GROUP BY 1),
@@ -756,7 +756,7 @@ object EventOps {
              |SELECT event_type, hr, CAST(y / 100.0 AS DOUBLE) AS sum_value,
              |  round(CAST(dev AS DOUBLE) / sqrt(CAST(mss AS DOUBLE)), 4) AS z
              |FROM j WHERE dev * dev >= 9 * mss
-             |ORDER BY event_type, hr""".stripMargin)),
+             |ORDER BY event_type, hr""")),
 
     // q156: MARKOV TRANSITION MATRIX — counts and probabilities of
     // consecutive event-type pairs per user (the behavioral-model /
@@ -988,12 +988,11 @@ object EventOps {
             col("p_a"), col("p_b"), col("z"),
             (abs(col("z")) >= 1.96).as("significant"))
       },
-      Some("""WITH u AS (SELECT user_id,
+      Some(sql"""WITH u AS (SELECT user_id,
              |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np
              |  FROM events GROUP BY user_id),
              |f AS (SELECT
-             |    CAST(('0x' || substr(md5('ab:v1:' || user_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 2 = 0 AS arm_a,
+             |    ${md5Lane("'ab:v1:' || user_id::VARCHAR", castBr = Br(2))} % 2 = 0 AS arm_a,
              |    np >= 14 AS conv FROM u),
              |a AS (SELECT
              |    CAST(sum(CASE WHEN arm_a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -1015,7 +1014,7 @@ object EventOps {
              |  FROM p),
              |z AS (SELECT *, (p_a - p_b) / se AS z FROM s)
              |SELECT n_a, n_b, x_a, x_b, p_a, p_b, z,
-             |  abs(z) >= 1.96 AS significant FROM z""".stripMargin)),
+             |  abs(z) >= 1.96 AS significant FROM z""")),
 
     // q163: EWMA SMOOTHING — exponentially-weighted moving average of
     // hourly revenue per event_type over an 11-bucket calendar window with
@@ -1348,9 +1347,8 @@ object EventOps {
             col("max_late_ns"))
           .orderBy(col("band"))
       },
-      Some("""WITH e AS (SELECT event_id, epoch_ns(ts) AS ts,
-             |    CAST(('0x' || substr(md5('arr:v1:' || event_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 10000 AS j
+      Some(sql"""WITH e AS (SELECT event_id, epoch_ns(ts) AS ts,
+             |    ${md5Lane("'arr:v1:' || event_id::VARCHAR", castBr = Br(2))} % 10000 AS j
              |  FROM events),
              |a AS (SELECT event_id, ts, ts + j * j * 1000000 AS arr FROM e),
              |h AS (SELECT event_id, ts,
@@ -1370,7 +1368,7 @@ object EventOps {
              |  CAST(count(*) AS BIGINT) * 1000000 // t.n_total AS share_ppm,
              |  CAST(max(late_ns) AS BIGINT) AS max_late_ns
              |FROM b CROSS JOIN t GROUP BY band, t.n_total
-             |ORDER BY band""".stripMargin)),
+             |ORDER BY band""")),
 
     // q183: POINT-IN-TIME SCD2 DIMENSION JOIN — the warehouse join q116's
     // history table exists FOR: each fact (order) joins the dimension
@@ -2149,7 +2147,7 @@ object EventOps {
                 (col("o1").cast("double") - col("e1s")) / col("vs") >=
                 lit(3.841459)).as("significant"))
       },
-      Some("""WITH e AS (SELECT user_id, event_type,
+      Some(sql"""WITH e AS (SELECT user_id, event_type,
              |    epoch_ns(ts) // 1000 AS us FROM events),
              |hz AS (SELECT max(us) AS t_end FROM e),
              |t0 AS (SELECT user_id,
@@ -2165,8 +2163,7 @@ object EventOps {
              |  WHERE t0.t0 IS NOT NULL
              |  GROUP BY e.user_id, t0.t0, hz.t_end),
              |dg AS (SELECT dur_day, died,
-             |    CAST(('0x' || substr(md5('ab:v1:' || user_id::VARCHAR), 1, 8))
-             |      AS BIGINT) % 2 = 0 AS g1 FROM du),
+             |    ${md5Lane("'ab:v1:' || user_id::VARCHAR", castBr = Br(2))} % 2 = 0 AS g1 FROM du),
              |bd AS (SELECT dur_day,
              |    CAST(sum(CASE WHEN g1 AND died THEN 1 ELSE 0 END) AS BIGINT)
              |      AS d1,
@@ -2214,7 +2211,7 @@ object EventOps {
              |    THEN (CAST(o1 AS DOUBLE) - e1s)
              |      * (CAST(o1 AS DOUBLE) - e1s) / vs >= 3.841459
              |    END AS significant
-             |FROM cu WHERE rn = 1""".stripMargin)),
+             |FROM cu WHERE rn = 1""")),
 
     // q261: BURST DETECTION via a TWO-STATE VITERBI AUTOMATON (Kleinberg
     // KDD'02 shape) — segment each event type's hourly series into
@@ -2959,7 +2956,7 @@ object EventOps {
                 > abs(${slopeExpr("r")} - CAST(slope_p AS DOUBLE))""")
               .as("recovered"))
       },
-      Some("""WITH cn AS (SELECT (epoch_ns(ts) // 1000) // 3600000000 AS hr,
+      Some(sql"""WITH cn AS (SELECT (epoch_ns(ts) // 1000) // 3600000000 AS hr,
              |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
              |      AS y0
              |  FROM events GROUP BY 1),
@@ -2970,10 +2967,8 @@ object EventOps {
              |      CAST(sum(y0) AS BIGINT) AS ys FROM cn)),
              |ht AS MATERIALIZED (SELECT gs.t,
              |    (coalesce(cn.y0, 0) + bd.slope_p * gs.t) * (CASE WHEN
-             |      CAST(('0x' || substr(md5('ransac:v1:' || gs.t::VARCHAR),
-             |        1, 8)) AS BIGINT) % 24 = 0 THEN 20 ELSE 1 END) AS y,
-             |    CAST(('0x' || substr(md5('ransac:v1:' || gs.t::VARCHAR),
-             |      1, 8)) AS BIGINT) % 24 = 0 AS outl
+             |      $RansacLane % 24 = 0 THEN 20 ELSE 1 END) AS y,
+             |    $RansacLane % 24 = 0 AS outl
              |  FROM bd
              |  CROSS JOIN LATERAL (SELECT unnest(range(0, bd.hh)) AS t) gs
              |  LEFT JOIN cn ON cn.hr = bd.h0 + gs.t),
@@ -2982,10 +2977,8 @@ object EventOps {
              |    CASE WHEN j0 = i THEN (j0 + 1) % hh ELSE j0 END AS j,
              |    tau, hh
              |  FROM (SELECT ks.k, tu.tau, tu.hh,
-             |      CAST(('0x' || substr(md5('ra:v1:' || ks.k::VARCHAR), 1, 8))
-             |        AS BIGINT) % tu.hh AS i,
-             |      CAST(('0x' || substr(md5('rb:v1:' || ks.k::VARCHAR), 1, 8))
-             |        AS BIGINT) % tu.hh AS j0
+             |      ${md5Lane("'ra:v1:' || ks.k::VARCHAR", castBr = Br(2))} % tu.hh AS i,
+             |      ${md5Lane("'rb:v1:' || ks.k::VARCHAR", castBr = Br(2))} % tu.hh AS j0
              |    FROM (SELECT unnest(range(0, 16)) AS k) ks CROSS JOIN tu)),
              |cd2 AS MATERIALIZED (SELECT cd.k, cd.i, cd.j, cd.tau,
              |    hi.y AS yi, hj.y AS yj
@@ -3044,7 +3037,7 @@ object EventOps {
              |      - CAST(sxr AS DOUBLE) * CAST(sxr AS DOUBLE))
              |    - CAST(bd.slope_p AS DOUBLE))
              |    AS recovered
-             |FROM oa CROSS JOIN sc CROSS JOIN rf CROSS JOIN bd""".stripMargin)),
+             |FROM oa CROSS JOIN sc CROSS JOIN rf CROSS JOIN bd""")),
 
     // q278: THEIL-SEN MEDIAN-SLOPE ESTIMATOR — the third member of the
     // robust-fit family (q150 OLS breaks at one outlier; q275 RANSAC is
@@ -3094,21 +3087,7 @@ object EventOps {
             (abs(col("ts_slope_milli") - col("slope_p") * 1000L) * 10L <
               col("slope_p") * 1000L).as("recovered"))
       },
-      Some("""WITH cn AS (SELECT (epoch_ns(ts) // 1000) // 3600000000 AS hr,
-             |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-             |      AS y0
-             |  FROM events GROUP BY 1),
-             |bd AS MATERIALIZED (SELECT h0, h1, h1 - h0 + 1 AS hh,
-             |    (ys // (h1 - h0 + 1)) // 10 AS slope_p
-             |  FROM (SELECT min(hr) AS h0, max(hr) AS h1,
-             |      CAST(sum(y0) AS BIGINT) AS ys FROM cn)),
-             |ht AS MATERIALIZED (SELECT gs.t,
-             |    (coalesce(cn.y0, 0) + bd.slope_p * gs.t) * (CASE WHEN
-             |      CAST(('0x' || substr(md5('ransac:v1:' || gs.t::VARCHAR),
-             |        1, 8)) AS BIGINT) % 24 = 0 THEN 20 ELSE 1 END) AS y
-             |  FROM bd
-             |  CROSS JOIN LATERAL (SELECT unnest(range(0, bd.hh)) AS t) gs
-             |  LEFT JOIN cn ON cn.hr = bd.h0 + gs.t),
+      Some(sql"""$PlantedTrend,
              |pr AS (SELECT ((h2.y - h1.y) * 1000) // (h2.t - h1.t) AS sm
              |  FROM ht h1 JOIN ht h2 ON h1.t < h2.t),
              |vc AS MATERIALIZED (SELECT sm, CAST(count(*) AS BIGINT) AS cnt
@@ -3125,7 +3104,7 @@ object EventOps {
              |  abs((SELECT min(CASE WHEN cum * 2 >= tt.n_pairs THEN sm END)
              |      FROM cm) - bd.slope_p * 1000) * 10
              |    < bd.slope_p * 1000 AS recovered
-             |FROM bd CROSS JOIN tt""".stripMargin)),
+             |FROM bd CROSS JOIN tt""")),
 
     // q279: MANN-KENDALL TREND TEST — the nonparametric "is there a
     // monotone trend AT ALL" significance test the fit family (q150 OLS,
@@ -3164,21 +3143,7 @@ object EventOps {
               WHEN $z <= -1.96D THEN 'decreasing'
               ELSE 'none' END""").as("trend"))
       },
-      Some("""WITH cn AS (SELECT (epoch_ns(ts) // 1000) // 3600000000 AS hr,
-             |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-             |      AS y0
-             |  FROM events GROUP BY 1),
-             |bd AS MATERIALIZED (SELECT h0, h1, h1 - h0 + 1 AS hh,
-             |    (ys // (h1 - h0 + 1)) // 10 AS slope_p
-             |  FROM (SELECT min(hr) AS h0, max(hr) AS h1,
-             |      CAST(sum(y0) AS BIGINT) AS ys FROM cn)),
-             |ht AS MATERIALIZED (SELECT gs.t,
-             |    (coalesce(cn.y0, 0) + bd.slope_p * gs.t) * (CASE WHEN
-             |      CAST(('0x' || substr(md5('ransac:v1:' || gs.t::VARCHAR),
-             |        1, 8)) AS BIGINT) % 24 = 0 THEN 20 ELSE 1 END) AS y
-             |  FROM bd
-             |  CROSS JOIN LATERAL (SELECT unnest(range(0, bd.hh)) AS t) gs
-             |  LEFT JOIN cn ON cn.hr = bd.h0 + gs.t),
+      Some(sql"""$PlantedTrend,
              |sa AS (SELECT CAST(sum(CASE WHEN h2.y > h1.y THEN 1
              |      WHEN h2.y < h1.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
              |  FROM ht h1 JOIN ht h2 ON h1.t < h2.t),
@@ -3200,7 +3165,7 @@ object EventOps {
              |    / sqrt(CAST(bd.hh * (bd.hh - 1) * (2 * bd.hh + 5) - tie_sum
              |      AS DOUBLE) / 18.0) <= -1.96 THEN 'decreasing'
              |    ELSE 'none' END AS trend
-             |FROM sa CROSS JOIN tie CROSS JOIN bd""".stripMargin)),
+             |FROM sa CROSS JOIN tie CROSS JOIN bd""")),
 
     // q281: SPLIT CONFORMAL PREDICTION INTERVALS — distribution-free
     // forecast bands with a FINITE-SAMPLE coverage guarantee (Vovk;

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.{Tables => T}
 
 /** Human-feedback data operators — the measurement layer a preference /
@@ -182,13 +183,10 @@ object Feedback {
     * itself the equivalence proof).
     */
   private[graft] val KappaOracle: String =
-    s"""WITH r AS (SELECT source,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      1, 8)) AS BIGINT) AS u0,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      9, 8)) AS BIGINT) AS ua,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      17, 8)) AS BIGINT) AS ub
+    sql"""WITH r AS (SELECT source,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", keyBr = Br(2))} AS u0,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", 9, keyBr = Br(2))} AS ua,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", 17, keyBr = Br(2))} AS ub
              |  FROM documents),
              |l AS (SELECT source,
              |    CASE WHEN ua < $AccThresh THEN u0 % 3
@@ -226,19 +224,16 @@ object Feedback {
              |    WHEN (po_ppm - pe_ppm) * 1000000
              |      // greatest(1000000 - pe_ppm, 1) < 800000 THEN 'substantial'
              |    ELSE 'almost_perfect' END AS strength
-             |FROM k ORDER BY source""".stripMargin
+             |FROM k ORDER BY source"""
 
   /** q307's oracle — shared VERBATIM by the q313 streaming sibling
     * (the q304/q294 batch/stream parity discipline).
     */
   private[graft] val BtOracle: String =
-    """WITH g AS (SELECT
-             |    CAST(('0x' || substr(md5('bt:v1:' || event_id::VARCHAR),
-             |      1, 8)) AS BIGINT) AS u0,
-             |    CAST(('0x' || substr(md5('bt:v1:' || event_id::VARCHAR),
-             |      9, 8)) AS BIGINT) AS u1,
-             |    CAST(('0x' || substr(md5('bt:v1:' || event_id::VARCHAR),
-             |      17, 8)) AS BIGINT) AS u2
+    sql"""WITH g AS (SELECT
+             |    ${md5Lane("'bt:v1:' || event_id::VARCHAR", keyBr = Br(2))} AS u0,
+             |    ${md5Lane("'bt:v1:' || event_id::VARCHAR", 9, keyBr = Br(2))} AS u1,
+             |    ${md5Lane("'bt:v1:' || event_id::VARCHAR", 17, keyBr = Br(2))} AS u2
              |  FROM events),
              |ab AS (SELECT u0 % 8 AS a,
              |    CASE WHEN u1 % 7 >= u0 % 8 THEN u1 % 7 + 1
@@ -301,7 +296,7 @@ object Feedback {
              |  JOIN gc ON gc.item = t3.item)
              |SELECT item, strength_true, games, wins, theta_ppm, rank_true,
              |  rank_hat, rank_hat = rank_true AS recovered
-             |FROM rk ORDER BY item""".stripMargin
+             |FROM rk ORDER BY item"""
 
   val entries: Seq[Entry] = Seq(
 
@@ -404,19 +399,13 @@ object Feedback {
               "ELSE 'almost_perfect' END"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH r AS (SELECT source,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      1, 8)) AS BIGINT) AS u0,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      9, 8)) AS BIGINT) AS u1,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      17, 8)) AS BIGINT) AS u2,
-             |    CAST(('0x' || substr(md5('rate:v1:' || doc_id::VARCHAR),
-             |      25, 8)) AS BIGINT) AS u3,
-             |    CAST(('0x' || substr(md5('rate:v2:' || doc_id::VARCHAR),
-             |      1, 8)) AS BIGINT) AS u4,
-             |    CAST(('0x' || substr(md5('rate:v2:' || doc_id::VARCHAR),
-             |      9, 8)) AS BIGINT) AS u5
+      Some(sql"""WITH r AS (SELECT source,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", keyBr = Br(2))} AS u0,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", 9, keyBr = Br(2))} AS u1,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", 17, keyBr = Br(2))} AS u2,
+             |    ${md5Lane("'rate:v1:' || doc_id::VARCHAR", 25, keyBr = Br(2))} AS u3,
+             |    ${md5Lane("'rate:v2:' || doc_id::VARCHAR", keyBr = Br(2))} AS u4,
+             |    ${md5Lane("'rate:v2:' || doc_id::VARCHAR", 9, keyBr = Br(2))} AS u5
              |  FROM documents),
              |l AS (SELECT source,
              |    CASE WHEN u1 < $AccThresh THEN u0 % 3
@@ -466,6 +455,6 @@ object Feedback {
              |    WHEN (pbar_ppm - pe_ppm) * 1000000
              |      // greatest(1000000 - pe_ppm, 1) < 800000 THEN 'substantial'
              |    ELSE 'almost_perfect' END AS strength
-             |FROM k ORDER BY source""".stripMargin))
+             |FROM k ORDER BY source"""))
   )
 }

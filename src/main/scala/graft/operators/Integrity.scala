@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.{Tables => T}
 
 /** Data-integrity / placement verbs a 100 TB lakehouse operation needs:
@@ -474,9 +475,8 @@ object Integrity {
               col("n_det_c1") === col("n_inj_c1"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, source, text,
-             |    CAST(('0x' || substr(md5('moji:v1:' || doc_id::VARCHAR),
-             |      1, 8)) AS BIGINT) % 10 AS cls FROM documents),
+      Some(sql"""WITH t AS (SELECT doc_id, source, text,
+             |    ${md5Lane("'moji:v1:' || doc_id::VARCHAR", keyBr = Br(2))} % 10 AS cls FROM documents),
              |m AS (SELECT source, cls,
              |    CASE WHEN cls = 0 THEN replace(text, 'e', 'Ã©') || ' Ã©'
              |      WHEN cls = 1 THEN replace(text, 'a', '�') || ' �'
@@ -504,7 +504,7 @@ object Integrity {
              |      = sum(CASE WHEN cls = 1 THEN 1 ELSE 0 END)
              |    AND sum(CASE WHEN contains(dirty, '') THEN 1 ELSE 0 END)
              |      = sum(CASE WHEN cls = 2 THEN 1 ELSE 0 END) AS all_detected
-             |FROM m GROUP BY 1 ORDER BY source""".stripMargin)),
+             |FROM m GROUP BY 1 ORDER BY source""")),
 
     // q300: ALL-STRINGS CANONICAL FORM of q214 (r16 verdict #1b) — the
     // same rows with EVERY column cast to string in both engines, ordered

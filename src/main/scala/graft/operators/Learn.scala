@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.{Tables => T}
 
 /** In-engine model training/evaluation verbs — the tier above q194's
@@ -206,7 +207,7 @@ object Learn {
              |  w.w2 + coalesce(s.d2, 0) AS w2, w.w3 + coalesce(s.d3, 0) AS w3
              |  FROM $prev w LEFT JOIN cs$k s USING (m))""".stripMargin
         }.mkString(",\n")
-        s"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS t, n_chars
+        sql"""WITH t0 AS (SELECT doc_id, string_split(text, ' ') AS t, n_chars
            |  FROM documents),
            |f AS (SELECT doc_id, CAST(1 AS BIGINT) AS x0,
            |    CAST(len(t) AS BIGINT) AS x1,
@@ -215,8 +216,7 @@ object Learn {
            |f2 AS MATERIALIZED (SELECT doc_id, x0, x1, x2, x3,
            |    CASE WHEN (x1 - x2) * 5 > x1 THEN CAST(1 AS BIGINT)
            |      ELSE CAST(-1 AS BIGINT) END AS y,
-           |    CAST(('0x' || substr(md5('cv:v1:' || doc_id::VARCHAR), 1, 8))
-           |      AS BIGINT) % 5 AS fold
+           |    ${md5Lane("'cv:v1:' || doc_id::VARCHAR", castBr = Br(2))} % 5 AS fold
            |  FROM f),
            |cw0 AS (SELECT CAST(unnest(range(0, 5)) AS BIGINT) AS m,
            |  CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,
@@ -233,7 +233,7 @@ object Learn {
            |    // 5 AS mean_err_ppm,
            |  CAST(max(test_mis * 1000000 // n_test) OVER () AS BIGINT)
            |    AS max_err_ppm
-           |FROM ev CROSS JOIN tt ORDER BY fold""".stripMargin
+           |FROM ev CROSS JOIN tt ORDER BY fold"""
       }),
 
     // q234: PRECISION-RECALL CURVE BY SCORE DECILE — turn q194's raw
@@ -301,44 +301,8 @@ object Learn {
                 "(2L * precision_ppm * recall_ppm) div (precision_ppm + recall_ppm)")))
           .orderBy(col("decile"))
       },
-      Some("""WITH t AS (SELECT doc_id, lang,
-             |    list_filter(string_split(lower(text), ' '),
-             |      w -> regexp_matches(w, '^[a-z0-9]+$')) AS u
-             |  FROM documents),
-             |f AS (SELECT doc_id,
-             |    list_concat(u, list_transform(range(2, len(u)+1),
-             |      i -> u[i-1] || ' ' || u[i])) AS feats
-             |  FROM t),
-             |e AS (SELECT doc_id,
-             |    CAST(coalesce(list_sum(list_transform(feats, g ->
-             |      ((list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |          list_transform(range(1, length(g)+1),
-             |            i -> CAST(unicode(g[i]) AS BIGINT))),
-             |        (a, c) -> (a * 31 + c) % 4096) * 2654435761) % 2003)
-             |      - 1001)), 0) AS BIGINT) AS score
-             |  FROM f),
-             |tk AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM tk) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
-             |    CAST(max(cnt) AS BIGINT) AS max_w,
-             |    CAST(count(*) AS BIGINT) AS n_distinct FROM wc GROUP BY doc_id),
-             |bgc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM tk)
-             |  GROUP BY doc_id, bg),
-             |bs AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bg,
-             |    CAST(max(cnt) AS BIGINT) AS max_bg FROM bgc GROUP BY doc_id),
-             |lab AS (SELECT ws.doc_id,
-             |    NOT (ws.max_w * 25 > ws.n_words * 3
-             |      OR (ws.n_words - ws.n_distinct) * 20 > ws.n_words * 13
-             |      OR coalesce(bs.max_bg, 0) * 50
-             |         > greatest(coalesce(bs.n_bg, 0), 1) * 3) AS pos
-             |  FROM ws LEFT JOIN bs USING (doc_id)),
-             |j AS (SELECT e.score, lab.pos FROM e JOIN lab USING (doc_id)),
-             |ps AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS npos
-             |  FROM j GROUP BY score),
+      Some(sql"""$withScoredLabels,
+             |$labelsByScore,
              |rk AS MATERIALIZED (SELECT score, cnt, npos,
              |    CAST(coalesce(sum(cnt) OVER wA, 0) AS BIGINT) AS below,
              |    CAST(coalesce(sum(npos) OVER wA, 0) AS BIGINT) AS below_pos
@@ -364,7 +328,7 @@ object Learn {
              |  CASE WHEN precision_ppm + recall_ppm = 0 THEN 0
              |    ELSE (2 * precision_ppm * recall_ppm)
              |      // (precision_ppm + recall_ppm) END AS f1_ppm
-             |FROM sel ORDER BY decile""".stripMargin)),
+             |FROM sel ORDER BY decile""")),
 
     // q236: NDCG@10 WITH EXACT HARMONIC DISCOUNT — ranking quality of the
     // q145 BM25 retrieval against graded relevance (rel(q,d) = how many of
@@ -583,44 +547,8 @@ object Learn {
             expr("pb * 1000000L div nb").as("raw_ppm"), col("fitted_ppm"))
           .orderBy(col("bin"))
       },
-      Some("""WITH t AS (SELECT doc_id, lang,
-             |    list_filter(string_split(lower(text), ' '),
-             |      w -> regexp_matches(w, '^[a-z0-9]+$')) AS u
-             |  FROM documents),
-             |f AS (SELECT doc_id,
-             |    list_concat(u, list_transform(range(2, len(u)+1),
-             |      i -> u[i-1] || ' ' || u[i])) AS feats
-             |  FROM t),
-             |e AS (SELECT doc_id,
-             |    CAST(coalesce(list_sum(list_transform(feats, g ->
-             |      ((list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |          list_transform(range(1, length(g)+1),
-             |            i -> CAST(unicode(g[i]) AS BIGINT))),
-             |        (a, c) -> (a * 31 + c) % 4096) * 2654435761) % 2003)
-             |      - 1001)), 0) AS BIGINT) AS score
-             |  FROM f),
-             |tk AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM tk) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_words,
-             |    CAST(max(cnt) AS BIGINT) AS max_w,
-             |    CAST(count(*) AS BIGINT) AS n_distinct FROM wc GROUP BY doc_id),
-             |bgc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM tk)
-             |  GROUP BY doc_id, bg),
-             |bs AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bg,
-             |    CAST(max(cnt) AS BIGINT) AS max_bg FROM bgc GROUP BY doc_id),
-             |lab AS (SELECT ws.doc_id,
-             |    NOT (ws.max_w * 25 > ws.n_words * 3
-             |      OR (ws.n_words - ws.n_distinct) * 20 > ws.n_words * 13
-             |      OR coalesce(bs.max_bg, 0) * 50
-             |         > greatest(coalesce(bs.n_bg, 0), 1) * 3) AS pos
-             |  FROM ws LEFT JOIN bs USING (doc_id)),
-             |j AS (SELECT e.score, lab.pos FROM e JOIN lab USING (doc_id)),
-             |ps AS (SELECT score, CAST(count(*) AS BIGINT) AS cnt,
-             |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS npos
-             |  FROM j GROUP BY score),
+      Some(sql"""$withScoredLabels,
+             |$labelsByScore,
              |rk AS (SELECT score, cnt, npos,
              |    CAST(coalesce(sum(cnt) OVER (ORDER BY score
              |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
@@ -649,7 +577,7 @@ object Learn {
              |  FROM mki GROUP BY 1)
              |SELECT pre.bin, pre.nb AS n, pre.pb AS npos,
              |  pre.pb * 1000000 // pre.nb AS raw_ppm, ft.fitted_ppm
-             |FROM pre JOIN ft ON ft.k = pre.r ORDER BY pre.bin""".stripMargin)),
+             |FROM pre JOIN ft ON ft.k = pre.r ORDER BY pre.bin""")),
 
     // q260: GAUSSIAN MIXTURE FIT BY QUANTIZED-RESPONSIBILITY EM — the
     // unsupervised counterpart to q233's perceptron: fit a 2-component
@@ -775,12 +703,9 @@ object Learn {
               AND abs(p.w2 - 0.25D) < 0.03D""").as("recovered"))
       },
       Some {
-        val lanes = ((0 until 8).map(j =>
-          "CAST(('0x' || substr(md5('gmma:v1:' || event_id::VARCHAR), " +
-            s"${1 + 4 * j}, 4)) AS BIGINT)") ++
-          (0 until 4).map(j =>
-            "CAST(('0x' || substr(md5('gmmb:v1:' || event_id::VARCHAR), " +
-              s"${1 + 4 * j}, 4)) AS BIGINT)")).mkString(" + ")
+        def lane(seed: String)(j: Int) =
+          md5Lane(s"'$seed:v1:' || event_id::VARCHAR", 1 + 4 * j, len = 4)
+        val lanes = ((0 until 8).map(lane("gmma")) ++ (0 until 4).map(lane("gmmb"))).mkString(" + ")
         val X = "(CAST(h.bin AS DOUBLE) + 0.5)"
         def e(k: Int) =
           s"(acc.w$k * exp(-(($X - acc.m$k) * ($X - acc.m$k)) / " +

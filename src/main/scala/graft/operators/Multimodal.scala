@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
+import graft.operators.Containers.tarInputs
 import graft.sources.Bin
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1563,11 +1565,17 @@ object Multimodal {
     * q304/q294 batch/stream parity discipline).
     */
   private[graft] val TarIndexOracle: String =
-    s"""WITH m AS (SELECT source, doc_id,
+    archiveIndexOracle(37, "n_members", "n_bad_checksum")
+
+  /** The oracle of a two-member archive index (q308 tar, q315 zip): member
+    * `n1` of the docs on the `% badMod` lane fails its checksum; the member
+    * count and bad-checksum columns are named `nMembers` and `nBad`. */
+  private def archiveIndexOracle(badMod: Int, nMembers: String, nBad: String): String =
+    sql"""WITH m AS (SELECT source, doc_id,
              |    CAST(strlen(text) AS BIGINT) AS sz1,
              |    CAST(strlen('{"doc_id":' || doc_id || ',"n_chars":'
              |      || n_chars || '}') AS BIGINT) AS sz2,
-             |    doc_id % 37 = 0 AS bad1,
+             |    doc_id % $badMod = 0 AS bad1,
              |    'd' || doc_id || '.txt' AS n1,
              |    'd' || doc_id || '.json' AS n2
              |  FROM documents),
@@ -1575,10 +1583,7 @@ object Multimodal {
              |    CASE WHEN bad1 THEN 1 ELSE 0 END AS nbad,
              |    CASE WHEN bad1 THEN 0 ELSE sz1 END + sz2 AS good_payload,
              |    (CASE WHEN bad1 THEN 0 ELSE
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(n1) + 1),
-             |          i -> CAST(unicode(n1[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $TarDigestP) END
+             |      ${charPoly("n1")} END
              |     + list_reduce(list_prepend(CAST(0 AS BIGINT),
              |        list_transform(range(1, length(n2) + 1),
              |          i -> CAST(unicode(n2[i]) AS BIGINT))),
@@ -1586,11 +1591,11 @@ object Multimodal {
              |      % $TarDigestP AS dgs
              |  FROM m)
              |SELECT source, CAST(count(*) AS BIGINT) AS n_archives,
-             |  CAST(count(*) * 2 AS BIGINT) AS n_members,
-             |  CAST(sum(nbad) AS BIGINT) AS n_bad_checksum,
+             |  CAST(count(*) * 2 AS BIGINT) AS $nMembers,
+             |  CAST(sum(nbad) AS BIGINT) AS $nBad,
              |  CAST(sum(good_payload) AS BIGINT) AS payload_bytes,
              |  CAST(sum(dgs) % $TarDigestP AS BIGINT) AS name_digest
-             |FROM dg GROUP BY source ORDER BY source""".stripMargin
+             |FROM dg GROUP BY source ORDER BY source"""
 
   private def tarOctal(h: Array[Byte], off: Int, v: Long, digits: Int): Unit = {
     val s = java.lang.Long.toOctalString(v)
@@ -1742,10 +1747,7 @@ object Multimodal {
       "q308_tar_member_index",
       (s, d) => {
         import s.implicits._
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(tarIndexPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1821,10 +1823,7 @@ object Multimodal {
       "q315_zip_entry_index",
       (s, d) => {
         import s.implicits._
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("source"), col("text"), col("n_chars"))
-          .as[(Long, String, String, Long)]
-          .map { case (id, src, txt, nc) => TarIn(id, src, txt, nc) }
+        tarInputs(s, d)
           .mapPartitions(zipIndexPartition)
           .toDF()
           .groupBy(col("source"))
@@ -1836,34 +1835,7 @@ object Multimodal {
             pmod(sum(col("name_digest")), lit(TarDigestP)).as("name_digest"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH m AS (SELECT source, doc_id,
-             |    CAST(strlen(text) AS BIGINT) AS sz1,
-             |    CAST(strlen('{"doc_id":' || doc_id || ',"n_chars":'
-             |      || n_chars || '}') AS BIGINT) AS sz2,
-             |    doc_id % 41 = 0 AS bad1,
-             |    'd' || doc_id || '.txt' AS n1,
-             |    'd' || doc_id || '.json' AS n2
-             |  FROM documents),
-             |dg AS (SELECT source,
-             |    CASE WHEN bad1 THEN 1 ELSE 0 END AS nbad,
-             |    CASE WHEN bad1 THEN 0 ELSE sz1 END + sz2 AS good_payload,
-             |    (CASE WHEN bad1 THEN 0 ELSE
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(n1) + 1),
-             |          i -> CAST(unicode(n1[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $TarDigestP) END
-             |     + list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(n2) + 1),
-             |          i -> CAST(unicode(n2[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $TarDigestP))
-             |      % $TarDigestP AS dgs
-             |  FROM m)
-             |SELECT source, CAST(count(*) AS BIGINT) AS n_archives,
-             |  CAST(count(*) * 2 AS BIGINT) AS n_entries,
-             |  CAST(sum(nbad) AS BIGINT) AS n_crc_bad,
-             |  CAST(sum(good_payload) AS BIGINT) AS payload_bytes,
-             |  CAST(sum(dgs) % $TarDigestP AS BIGINT) AS name_digest
-             |FROM dg GROUP BY source ORDER BY source""".stripMargin))
+      Some(archiveIndexOracle(41, "n_entries", "n_crc_bad")))
   )
 
   // ---------------------------------------------------------------- q315
@@ -2392,7 +2364,7 @@ object Multimodal {
       (0 until 8).map(k => JpegIdctT(k)(u)).mkString("[", ", ", "]")
     val (t1, t3, t5) = (column(1), column(3), column(5))
     val dc2 = t00 * t00
-    s"""WITH m AS (SELECT source, doc_id,
+    sql"""WITH m AS (SELECT source, doc_id,
        |    CAST((1 + doc_id % 4) * (1 + doc_id % 3) AS BIGINT) AS nb,
        |    doc_id % $laneMod = 0 AS bad
        |  FROM documents),
@@ -2417,11 +2389,7 @@ object Multimodal {
        |            + 8388608) / 16777216.0) AS BIGINT))))),
        |        (a, v) -> (a * 131 + v) % $TarDigestP) END AS dg
        |  FROM m)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_images,
-       |  CAST(sum(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-       |  CAST(sum(pix) AS BIGINT) AS pix_bytes,
-       |  CAST(sum(dg) % $TarDigestP AS BIGINT) AS pix_digest
-       |FROM d GROUP BY source ORDER BY source""".stripMargin
+       |$imageRollup"""
   }
 
   private[graft] val JpegFullOracle: String = jpegPixOracleSql("doc_id", 61)
@@ -2661,14 +2629,14 @@ object Multimodal {
     val GADJ = s"CAST(floor((-22554 * $CB - 46802 * $CR + 32768) / 65536.0)" +
       " AS BIGINT)"
     val BADJ = s"CAST(floor((116130 * $CB + 32768) / 65536.0) AS BIGINT)"
-    val YPIX = s"""least(255, greatest(0, 128 + CAST(floor((
-       |            ((doc_id * 5 + (i // 192) * 11) % 160 - 80) * 8 * $dc2
-       |            + (CASE WHEN (doc_id + (i // 192)) % 2 = 0
-       |                THEN 1 ELSE -1 END)
-       |              * (1 + (doc_id + 3 * (i // 192)) % 7) * 13
-       |              * $t00 * ($t1)[((i % 192) // 3) % 8 + 1]
-       |            + 8388608) / 16777216.0) AS BIGINT)))"""
-    s"""WITH m AS (SELECT source, doc_id,
+    val YPIX = sql"""least(255, greatest(0, 128 + CAST(floor((
+       |((doc_id * 5 + (i // 192) * 11) % 160 - 80) * 8 * $dc2
+       |+ (CASE WHEN (doc_id + (i // 192)) % 2 = 0
+       |    THEN 1 ELSE -1 END)
+       |  * (1 + (doc_id + 3 * (i // 192)) % 7) * 13
+       |  * $t00 * ($t1)[((i % 192) // 3) % 8 + 1]
+       |+ 8388608) / 16777216.0) AS BIGINT)))"""
+    sql"""WITH m AS (SELECT source, doc_id,
        |    CAST(4 * (1 + doc_id % 2) AS BIGINT) AS nyb,
        |    doc_id % 71 = 0 AS bad
        |  FROM documents),
@@ -2683,11 +2651,7 @@ object Multimodal {
        |              ELSE $BADJ END)))),
        |        (a, v) -> (a * 131 + v) % $TarDigestP) END AS dg
        |  FROM m)
-       |SELECT source, CAST(count(*) AS BIGINT) AS n_images,
-       |  CAST(sum(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-       |  CAST(sum(pix) AS BIGINT) AS pix_bytes,
-       |  CAST(sum(dg) % $TarDigestP AS BIGINT) AS pix_digest
-       |FROM d GROUP BY source ORDER BY source""".stripMargin
+       |$imageRollup"""
   }
 
   // ---------------------------------------------------------------- q337

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.sources.Artifacts
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -494,9 +495,14 @@ object Similarity {
   }
 
   /** Train the codebook, encode the corpus, and atomically publish both as
-    * generation `gen-build` of the q108/q109 root; returns its path. */
-  private[graft] def pqIndexBuild(s: SparkSession, d: String): String =
-    Artifacts.publish(s, pqIndexRoot(d), "gen-build")(pqIndexParts(s, d): _*)
+    * a fresh generation `gen-build-<n>` of the q108/q109 root; returns its
+    * path. q108 rebuilds on every run (the build is what it measures), so
+    * each run needs a new name: rewriting the live generation in place
+    * would delete files under a q109 reader mid-scan. */
+  private[graft] def pqIndexBuild(s: SparkSession, d: String): String = {
+    val root = pqIndexRoot(d)
+    Artifacts.publish(s, root, Artifacts.nextGen(s, root, "gen-build-"))(pqIndexParts(s, d): _*)
+  }
 
   /** Build-if-absent of an index root; returns the current generation.
     * q122/q126/q130/q141 each run on their OWN root so the serve queries
@@ -1452,7 +1458,7 @@ object Similarity {
             pmod(sum(col("dg")), lit(P)).as("q_digest"))
           .orderBy(col("label"))
       },
-      Some("""WITH e AS (SELECT label, vec_id, embedding FROM embeddings),
+      Some(sql"""WITH e AS (SELECT label, vec_id, embedding FROM embeddings),
              |v AS (SELECT label, vec_id, embedding,
              |    list_transform(range(1, 65), i ->
              |      CAST(floor(CAST(embedding[i] AS DOUBLE) * 256 + 0.5)
@@ -1463,9 +1469,7 @@ object Similarity {
              |  FROM v),
              |s AS (SELECT label,
              |    len(list_filter(qr, q -> q > 127 OR q < -127)) AS nclip,
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(qc, q -> q + 128)),
-             |      (a, x) -> (a * 131 + x) % 2147483647) AS dg,
+             |    ${polyFold("list_transform(qc, q -> q + 128)", v = "x")} AS dg,
              |    list_max(list_transform(range(1, 65), i ->
              |      CAST(floor(abs(CAST(embedding[i] AS DOUBLE)
              |        - CAST(qc[i] AS DOUBLE) / 256) * 1048576) AS BIGINT)))
@@ -1482,6 +1486,6 @@ object Similarity {
              |  CAST(max(maxe) AS BIGINT) AS max_err_q20,
              |  CAST(sum(se2) AS BIGINT) AS sum_err2,
              |  CAST(sum(dg) % 2147483647 AS BIGINT) AS q_digest
-             |FROM s GROUP BY label ORDER BY label""".stripMargin))
+             |FROM s GROUP BY label ORDER BY label"""))
   )
 }

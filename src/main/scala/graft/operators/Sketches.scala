@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.{Tables => T}
 
 /** Cardinality sketches — the distinct-count family beside the frequency
@@ -124,13 +125,13 @@ object Sketches {
       .orderBy(col("n_exact"))
 
   private[graft] val HllOracle: String =
-    s"""WITH k AS (SELECT CAST(l_orderkey * 10 + l_linenumber AS VARCHAR)
+    sql"""WITH k AS (SELECT CAST(l_orderkey * 10 + l_linenumber AS VARCHAR)
        |    AS k, l_suppkey FROM lineitem),
        |h AS (SELECT k, l_suppkey % 4 AS shard,
-       |    CAST(('0x' || substr(md5('hll:v1:' || k), 1, 8)) AS BIGINT)
+       |    ${md5Lane("'hll:v1:' || k")}
        |      % 1024 AS bucket,
        |    least(bit_count(
-       |        (CAST(('0x' || substr(md5('hll:v1:' || k), 9, 8)) AS BIGINT)
+       |        (${md5Lane("'hll:v1:' || k", 9)}
        |          - 1)
        |        & ~CAST(('0x' || substr(md5('hll:v1:' || k), 9, 8))
        |          AS BIGINT)) + 1, 32) AS rho
@@ -165,7 +166,7 @@ object Sketches {
        |    <= $HllErrBoundPpm AS BIGINT) AS within_bound,
        |  CAST(ddg = mdg AND ds = ms AND dv = mv AS BIGINT)
        |    AS merge_consistent
-       |FROM e ORDER BY n_exact""".stripMargin
+       |FROM e ORDER BY n_exact"""
 
   val entries: Seq[Entry] = Seq(
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.{Tables => T}
 
 /** Nonparametric two-sample drift tests — the statistically-grounded tier
@@ -905,11 +906,10 @@ object StatTests {
           4284041547L, 4288340494L, 4290947937L, 4292529432L, 4293488656L)
         val nExpr = "-15 + " + th.map(t =>
           s"(CASE WHEN u >= $t THEN 1 ELSE 0 END)").mkString(" + ")
-        s"""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS true_n
+        sql"""WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS true_n
            |  FROM documents GROUP BY 1),
            |uu AS (SELECT source, true_n,
-           |    CAST(('0x' || substr(md5('dp:v1:' || source), 1, 8))
-           |      AS BIGINT) AS u
+           |    ${md5Lane("'dp:v1:' || source", castBr = Br(2))} AS u
            |  FROM c),
            |nz AS (SELECT source, true_n,
            |    CAST($nExpr AS BIGINT) AS noise FROM uu)
@@ -918,7 +918,7 @@ object StatTests {
            |  abs(noise) AS abs_err,
            |  abs(noise) <= 7 AS within_95,
            |  CAST(500 AS BIGINT) AS epsilon_milli
-           |FROM nz ORDER BY source""".stripMargin
+           |FROM nz ORDER BY source"""
       }),
 
     // q280: SEEDED-HASH UNIFORMITY AUDIT — the chi-square goodness-of-fit

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.mr.{MRRunner, WordCount}
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -855,14 +856,8 @@ object TextOps {
             round(col("max_bg") / col("n_bg"), 4).as("top_bigram_frac"),
             lowQuality.as("low_quality"))
           .orderBy(col("doc_id")),
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM t) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, sum(cnt) AS n_words, max(cnt) AS max_w,
-             |    count(*) AS n_distinct FROM wc GROUP BY doc_id),
-             |bc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM t) GROUP BY doc_id, bg),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |$repetitionCtes,
              |bs AS (SELECT doc_id, max(cnt) AS max_bg, sum(cnt) AS n_bg FROM bc GROUP BY doc_id)
              |SELECT t.doc_id, CAST(ws.n_words AS BIGINT) AS n_words,
              |  round(ws.max_w * 1.0 / ws.n_words, 4) AS top_word_frac,
@@ -874,7 +869,7 @@ object TextOps {
              |   OR coalesce(bs.max_bg, 0) * 50 > greatest(coalesce(bs.n_bg, 0), 1) * 3)
              |    AS low_quality
              |FROM t JOIN ws USING (doc_id) LEFT JOIN bs USING (doc_id)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""")),
 
     // q85: content fingerprinting via the winnowing kernels — whole-string
     // polynomial rolling hash (`fingerprint64`, position-sensitive: the
@@ -1076,29 +1071,17 @@ object TextOps {
             sum(when(col("score") > 0L, 1L).otherwise(0L)).as("n_keep"))
           .orderBy(col("lang"))
       },
-      Some("""WITH t AS (SELECT doc_id, lang,
-             |    list_filter(string_split(lower(text), ' '),
-             |      w -> regexp_matches(w, '^[a-z0-9]+$')) AS u
-             |  FROM documents),
-             |f AS (SELECT doc_id, lang,
-             |    list_concat(u, list_transform(range(2, len(u)+1),
-             |      i -> u[i-1] || ' ' || u[i])) AS feats
-             |  FROM t),
+      Some(sql"""${withClsFeatures("doc_id, lang")},
              |e AS (SELECT doc_id, lang,
              |    CAST(len(feats) AS BIGINT) AS n_feats,
-             |    CAST(coalesce(list_sum(list_transform(feats, g ->
-             |      ((list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |          list_transform(range(1, length(g)+1),
-             |            i -> CAST(unicode(g[i]) AS BIGINT))),
-             |        (a, c) -> (a * 31 + c) % 4096) * 2654435761) % 2003)
-             |      - 1001)), 0) AS BIGINT) AS score
+             |    $clsScore
              |  FROM f)
              |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
              |  CAST(sum(n_feats) AS BIGINT) AS n_feats,
              |  CAST(sum(score) AS BIGINT) AS score_sum,
              |  CAST(sum(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT)
              |    AS n_keep
-             |FROM e GROUP BY lang ORDER BY lang""".stripMargin)),
+             |FROM e GROUP BY lang ORDER BY lang""")),
 
     // q96: SEQUENCE PACKING — the pretraining batch-assembly primitive:
     // concatenate the corpus in doc_id order and cut into fixed
@@ -1383,26 +1366,12 @@ object TextOps {
             col("n_raw"), col("n_dedup"), col("n_quality"), col("n_train"),
             col("n_bins"), col("n_tokens"), col("max_docs_per_bin"))
       },
-      Some("""WITH raw AS (
+      Some(sql"""WITH raw AS (
              |  SELECT doc_id, text FROM documents
              |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
              |ded AS (SELECT min(doc_id) AS doc_id, text FROM raw GROUP BY text),
              |t AS (SELECT doc_id, string_split(text,' ') AS toks FROM ded),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM t) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, sum(cnt) AS n_words, max(cnt) AS max_w,
-             |    count(*) AS n_distinct FROM wc GROUP BY doc_id),
-             |bc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM t) GROUP BY doc_id, bg),
-             |bs AS (SELECT doc_id, max(cnt) AS max_bg, sum(cnt) AS n_bg FROM bc
-             |    GROUP BY doc_id),
-             |q AS (SELECT t.doc_id, ws.n_words,
-             |    (ws.max_w * 25 > ws.n_words * 3
-             |     OR (ws.n_words - ws.n_distinct) * 20 > ws.n_words * 13
-             |     OR coalesce(bs.max_bg, 0) * 50 > greatest(coalesce(bs.n_bg, 0), 1) * 3)
-             |      AS low_quality
-             |  FROM t JOIN ws USING (doc_id) LEFT JOIN bs USING (doc_id)),
+             |$lowQualityDocs,
              |sets AS (SELECT doc_id, list_distinct(string_split(text,' ')) AS s FROM ded),
              |cont AS (SELECT DISTINCT c.doc_id
              |  FROM sets c CROSS JOIN (SELECT s FROM sets WHERE doc_id < 50) b
@@ -1428,8 +1397,7 @@ object TextOps {
              |  (SELECT count(*) FROM fin) AS n_train,
              |  (SELECT count(*) FROM pk) AS n_bins,
              |  CAST((SELECT sum(nt) FROM pk) AS BIGINT) AS n_tokens,
-             |  CAST((SELECT max(nd) FROM pk) AS BIGINT) AS max_docs_per_bin"""
-        .stripMargin)),
+             |  CAST((SELECT max(nd) FROM pk) AS BIGINT) AS max_docs_per_bin""")),
 
     // q121: PER-SPLIT PACKING MANIFEST — the batch-assembly step run the
     // way training actually consumes it: Gopher quality filter (q88's
@@ -1467,28 +1435,13 @@ object TextOps {
             Seq("split"))
           .orderBy(col("split"))
       },
-      Some("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-             |wc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(toks) AS w FROM t) GROUP BY doc_id, w),
-             |ws AS (SELECT doc_id, sum(cnt) AS n_words, max(cnt) AS max_w,
-             |    count(*) AS n_distinct FROM wc GROUP BY doc_id),
-             |bc AS (SELECT doc_id, count(*) AS cnt FROM (
-             |    SELECT doc_id, unnest(list_transform(range(2, len(toks)+1),
-             |      i -> toks[i-1] || ' ' || toks[i])) AS bg FROM t) GROUP BY doc_id, bg),
-             |bs AS (SELECT doc_id, max(cnt) AS max_bg, sum(cnt) AS n_bg FROM bc
-             |    GROUP BY doc_id),
-             |q AS (SELECT t.doc_id, ws.n_words,
-             |    (ws.max_w * 25 > ws.n_words * 3
-             |     OR (ws.n_words - ws.n_distinct) * 20 > ws.n_words * 13
-             |     OR coalesce(bs.max_bg, 0) * 50 > greatest(coalesce(bs.n_bg, 0), 1) * 3)
-             |      AS low_quality
-             |  FROM t JOIN ws USING (doc_id) LEFT JOIN bs USING (doc_id)),
+      Some(sql"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+             |$lowQualityDocs,
              |a AS (SELECT doc_id, n_words,
              |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
              |         ELSE 'test' END AS split
              |  FROM (SELECT doc_id, n_words,
-             |      CAST(('0x' || substr(md5('split:v1:' || doc_id::VARCHAR), 1, 8))
-             |        AS BIGINT) % 100 AS b
+             |      ${md5Lane("'split:v1:' || doc_id::VARCHAR", castBr = Br(2))} % 100 AS b
              |    FROM q WHERE NOT low_quality)),
              |c2 AS (SELECT split, doc_id, n_words AS n,
              |    sum(n_words) OVER (PARTITION BY split ORDER BY doc_id
@@ -1505,7 +1458,7 @@ object TextOps {
              |pa AS (SELECT split, count(*) AS n_bins, CAST(sum(nt) AS BIGINT)
              |    AS n_tokens FROM pk GROUP BY split)
              |SELECT m.split, m.n_docs, pa.n_bins, pa.n_tokens
-             |FROM m JOIN pa USING (split) ORDER BY m.split""".stripMargin)),
+             |FROM m JOIN pa USING (split) ORDER BY m.split""")),
 
     // q145: BM25 TOP-K RETRIEVAL — the keyword side of a RAG retrieval
     // stack (the ANN family q40/q56/q94 is the dense side). See

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.sources.Artifacts
 import graft.{Tables => T}
 
@@ -83,7 +84,7 @@ object Transforms {
     * deployment produce the IDENTICAL table.
     */
   private[graft] val PiiRedactOracle: String =
-    s"""WITH inj AS (SELECT source,
+    sql"""WITH inj AS (SELECT source,
              |    CASE CAST(doc_id % 101 AS INT)
              |      WHEN 3 THEN text || ' contact user' || doc_id || '@example.com now'
              |      WHEN 17 THEN text || ' from 10.' || (doc_id % 256) || '.0.42 logged'
@@ -105,10 +106,7 @@ object Transforms {
              |      '$KeyPat', '[KEY]', 'g') AS r
              |  FROM inj),
              |dgt AS (SELECT source, ce, ci, cp, ck,
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(r) + 1),
-             |        i -> CAST(unicode(r[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % $P) AS dg
+             |    ${charPoly("r")} AS dg
              |  FROM m)
              |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
              |  CAST(sum(ce) AS BIGINT) AS n_emails,
@@ -120,7 +118,7 @@ object Transforms {
              |  CAST(sum(CASE WHEN ce + ci + cp + ck > 0 THEN 1 ELSE 0 END)
              |    AS BIGINT) * 1000000 // greatest(count(*), 1) AS pii_ppm,
              |  CAST(sum(dg) AS BIGINT) AS redacted_digest
-             |FROM dgt GROUP BY source ORDER BY source""".stripMargin
+             |FROM dgt GROUP BY source ORDER BY source"""
 
   val entries: Seq[Entry] = Seq(
 
@@ -185,28 +183,21 @@ object Transforms {
       "q283_span_dedup",
       (s, d) => spanDedupStats(
         T.documents(s, d).select(col("doc_id"), col("source"), col("text"))),
-      Some(s"""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
+      Some(sql"""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
              |  FROM documents),
              |base AS MATERIALIZED (SELECT doc_id, source,
              |    CAST(len(th) AS BIGINT) AS n,
              |    CAST(len(th) // 8 AS BIGINT) AS nblk,
              |    CASE WHEN len(th) % 8 > 0 THEN
-             |      (list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |         th[(len(th) // 8) * 8 + 1 : len(th)]),
-             |         (a, c) -> (a * 131 + c) % $P)
+             |      (${polyFold("th[(len(th) // 8) * 8 + 1 : len(th)]")}
              |       * (len(th) // 8 + 1)) % $P
              |    ELSE 0 END AS tailterm, th
              |  FROM (SELECT doc_id, source, list_transform(t, w ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(w) + 1),
-             |          i -> CAST(unicode(w[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $P)) AS th FROM tk)),
+             |      ${charPoly("w")}) AS th FROM tk)),
              |blk0 AS (SELECT source, doc_id,
              |    unnest(range(1, nblk + 1)) AS bi,
              |    unnest(list_transform(range(1, nblk + 1), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        th[(i - 1) * 8 + 1 : i * 8]),
-             |        (a, c) -> (a * 131 + c) % $P))) AS bh
+             |      ${polyFold("th[(i - 1) * 8 + 1 : i * 8]")})) AS bh
              |  FROM base),
              |blk AS MATERIALIZED (SELECT source, doc_id,
              |    CAST(bi AS BIGINT) AS bi, bh,
@@ -232,7 +223,7 @@ object Transforms {
              |  coalesce(bs.dup_spans, 0) * 8 * 1000000
              |    // greatest(ds.toks_before, 1) AS removed_ppm,
              |  coalesce(bs.kept_digest, 0) + ds.tail_digest AS span_digest
-             |FROM ds LEFT JOIN bs USING (source) ORDER BY source""".stripMargin)),
+             |FROM ds LEFT JOIN bs USING (source) ORDER BY source""")),
 
     // q284: PII SCAN + REDACT — the regex-family curation stage every
     // production stack runs (emails, phone numbers, IPv4 literals,
@@ -397,7 +388,10 @@ object Transforms {
       "q289_tokenizer_publish_serve",
       (s, d) => {
         val root = graft.sources.Sources.scratch(d, "bpe_merges")
-        val cur = Artifacts.publish(s, root, "gen-build")(
+        // q289 learns and publishes on every run (the publish is what it
+        // proves), so each run takes a fresh generation name: rewriting the
+        // live one in place would delete files under a reader mid-scan
+        val cur = Artifacts.publish(s, root, Artifacts.nextGen(s, root, "gen-build-"))(
           "merges" -> TextOps.bpeVocab(s, d, rounds = 4).select(col("round"), col("x"), col("y")))
         bpeFoldEncode(s, d, s.read.parquet(s"$cur/merges"))
       },
@@ -451,19 +445,14 @@ object Transforms {
             expr("kept_spans * 1000000L div greatest(delta_spans, 1L)"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH d AS (SELECT doc_id, source, text FROM documents),
+      Some(sql"""WITH d AS (SELECT doc_id, source, text FROM documents),
              |tht AS MATERIALIZED (SELECT doc_id, source,
              |    list_transform(string_split(text, ' '), w ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(w) + 1),
-             |          i -> CAST(unicode(w[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $P)) AS th
+             |      ${charPoly("w")}) AS th
              |  FROM d),
              |idx AS MATERIALIZED (SELECT DISTINCT
              |    unnest(list_transform(range(1, len(th) // 8 + 1), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        th[(i - 1) * 8 + 1 : i * 8]),
-             |        (a, c) -> (a * 131 + c) % $P))) AS bh
+             |      ${polyFold("th[(i - 1) * 8 + 1 : i * 8]")})) AS bh
              |  FROM tht),
              |delta AS (SELECT doc_id + 10000000 AS doc_id, source,
              |    array_to_string(list_transform(range(0, 8), i ->
@@ -472,16 +461,11 @@ object Transforms {
              |  FROM d WHERE doc_id % 5 = 2),
              |dth AS (SELECT doc_id, source,
              |    list_transform(string_split(text, ' '), w ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(w) + 1),
-             |          i -> CAST(unicode(w[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $P)) AS th
+             |      ${charPoly("w")}) AS th
              |  FROM delta),
              |dblk AS (SELECT doc_id, source,
              |    unnest(list_transform(range(1, len(th) // 8 + 1), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        th[(i - 1) * 8 + 1 : i * 8]),
-             |        (a, c) -> (a * 131 + c) % $P))) AS bh
+             |      ${polyFold("th[(i - 1) * 8 + 1 : i * 8]")})) AS bh
              |  FROM dth)
              |SELECT b.source,
              |  CAST(count(DISTINCT b.doc_id) AS BIGINT) AS n_delta_docs,
@@ -494,7 +478,7 @@ object Transforms {
              |    AS BIGINT) * 1000000
              |    // greatest(CAST(count(*) AS BIGINT), 1) AS kept_ppm
              |FROM dblk b LEFT JOIN idx i ON i.bh = b.bh
-             |GROUP BY b.source ORDER BY b.source""".stripMargin)),
+             |GROUP BY b.source ORDER BY b.source""")),
 
     // q291: LEAKAGE-SAFE TRAIN/VAL/TEST SPLITS — the split assignment a
     // training pipeline actually needs: exact-duplicate CLUSTERS must
@@ -540,11 +524,8 @@ object Transforms {
             (col("max_splits_per_cluster") === 1L).as("leakage_free"))
           .orderBy(col("split"))
       },
-      Some(s"""WITH k AS MATERIALIZED (SELECT doc_id, source,
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(text) + 1),
-             |        i -> CAST(unicode(text[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % $P) AS dg,
+      Some(sql"""WITH k AS MATERIALIZED (SELECT doc_id, source,
+             |    ${charPoly("text")} AS dg,
              |    CAST(length(text) AS BIGINT) AS len
              |  FROM documents),
              |reps AS (SELECT dg, len, min(doc_id) AS rep
@@ -553,8 +534,7 @@ object Transforms {
              |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
              |      ELSE 'test' END AS split
              |  FROM (SELECT dg, len,
-             |      CAST(('0x' || substr(md5('split:v1:' || rep::VARCHAR),
-             |        1, 8)) AS BIGINT) % 100 AS b FROM reps)),
+             |      ${md5Lane("'split:v1:' || rep::VARCHAR", keyBr = Br(2))} % 100 AS b FROM reps)),
              |a AS MATERIALIZED (SELECT k.doc_id, k.dg, k.len, sp.split
              |  FROM k JOIN sp USING (dg, len)),
              |aud AS (SELECT max(nsp) AS mx FROM (
@@ -566,7 +546,7 @@ object Transforms {
              |    // greatest(tot.n_total, 1) AS doc_ppm,
              |  aud.mx = 1 AS leakage_free
              |FROM a CROSS JOIN tot CROSS JOIN aud
-             |GROUP BY a.split, tot.n_total, aud.mx ORDER BY a.split""".stripMargin)),
+             |GROUP BY a.split, tot.n_total, aud.mx ORDER BY a.split""")),
 
     // q293: NEAR-DUP-SAFE SPLITS — q291 upgraded to the cluster relation
     // that actually leaks: EXACT dups are the easy case; a paraphrase/
@@ -638,33 +618,26 @@ object Transforms {
             (col("mx") === 1L).as("leakage_free"))
           .orderBy(col("split"))
       },
-      Some("""WITH RECURSIVE s AS (
+      Some(sql"""WITH RECURSIVE s AS (
              |  SELECT doc_id, list_distinct(string_split(text,' ')) AS toks
              |  FROM documents),
              |p AS MATERIALIZED (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-             |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-             |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-             |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
+             |  $nearDupPairsFrom,
              |e AS (SELECT a_id AS src, b_id AS dst FROM p
              |      UNION ALL SELECT b_id, a_id FROM p),
-             |r(node, reach) AS (
-             |  SELECT doc_id, doc_id FROM documents
-             |  UNION
-             |  SELECT r.node, e.dst FROM r JOIN e ON e.src = r.reach),
+             |$reachability,
              |lab AS MATERIALIZED (SELECT node, min(reach) AS label
              |  FROM r GROUP BY node),
              |asg AS MATERIALIZED (SELECT node, label,
              |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
              |      ELSE 'test' END AS split
              |  FROM (SELECT node, label,
-             |      CAST(('0x' || substr(md5('nsplit:v1:' || label::VARCHAR),
-             |        1, 8)) AS BIGINT) % 100 AS b FROM lab)),
+             |      ${md5Lane("'nsplit:v1:' || label::VARCHAR", keyBr = Br(2))} % 100 AS b FROM lab)),
              |nv AS (SELECT node,
              |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
              |      ELSE 'test' END AS nsplit
              |  FROM (SELECT node,
-             |      CAST(('0x' || substr(md5('nsplit:v1:' || node::VARCHAR),
-             |        1, 8)) AS BIGINT) % 100 AS b FROM lab)),
+             |      ${md5Lane("'nsplit:v1:' || node::VARCHAR", keyBr = Br(2))} % 100 AS b FROM lab)),
              |lk AS (SELECT CAST(sum(CASE WHEN na.nsplit != nb.nsplit
              |      THEN 1 ELSE 0 END) AS BIGINT) AS naive_leaky_pairs
              |  FROM p JOIN nv na ON na.node = p.a_id
@@ -680,7 +653,7 @@ object Transforms {
              |  aud.mx = 1 AS leakage_free
              |FROM asg CROSS JOIN tot CROSS JOIN lk CROSS JOIN aud
              |GROUP BY asg.split, tot.n_total, lk.naive_leaky_pairs, aud.mx
-             |ORDER BY asg.split""".stripMargin)),
+             |ORDER BY asg.split""")),
 
     // q287: CURATION FUNNEL — the composed END-TO-END pipeline view over
     // the rewrite stages, per source: docs in → exact dedup (char-poly
@@ -702,12 +675,9 @@ object Transforms {
       "q287_curation_funnel",
       (s, d) => curationFunnel(
         T.documents(s, d).select(col("doc_id"), col("source"), col("text"))),
-      Some(s"""WITH d AS (SELECT doc_id, source, text FROM documents),
+      Some(sql"""WITH d AS (SELECT doc_id, source, text FROM documents),
              |k AS MATERIALIZED (SELECT doc_id, source, text,
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(text) + 1),
-             |        i -> CAST(unicode(text[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % $P) AS dg,
+             |    ${charPoly("text")} AS dg,
              |    CAST(length(text) AS BIGINT) AS len
              |  FROM d),
              |fe AS (SELECT dg, len, min(doc_id) AS mn FROM k GROUP BY 1, 2),
@@ -718,15 +688,10 @@ object Transforms {
              |    CAST(len(th) // 8 AS BIGINT) AS nblk
              |  FROM (SELECT doc_id, source,
              |      list_transform(string_split(text, ' '), w ->
-             |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |          list_transform(range(1, length(w) + 1),
-             |            i -> CAST(unicode(w[i]) AS BIGINT))),
-             |          (a, c) -> (a * 131 + c) % $P)) AS th FROM ex)),
+             |        ${charPoly("w")}) AS th FROM ex)),
              |blk0 AS (SELECT doc_id, unnest(range(1, nblk + 1)) AS bi,
              |    unnest(list_transform(range(1, nblk + 1), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        th[(i - 1) * 8 + 1 : i * 8]),
-             |        (a, c) -> (a * 131 + c) % $P))) AS bh
+             |      ${polyFold("th[(i - 1) * 8 + 1 : i * 8]")})) AS bh
              |  FROM base),
              |blk AS MATERIALIZED (SELECT doc_id, CAST(bi AS BIGINT) AS bi,
              |    bh, doc_id * 16777216 + bi AS packed FROM blk0),
@@ -769,7 +734,7 @@ object Transforms {
              |  coalesce(r.n_final, 0) AS n_final,
              |  coalesce(r.n_final, 0) * 1000000 // greatest(ni.n_in, 1)
              |    AS final_ppm
-             |FROM ni LEFT JOIN r USING (source) ORDER BY ni.source""".stripMargin))
+             |FROM ni LEFT JOIN r USING (source) ORDER BY ni.source"""))
   )
 
   /** q287's body over any (doc_id, source, text) table — the staged
@@ -1182,44 +1147,28 @@ object Transforms {
             expr("n_span_hit * 1000000L div greatest(n_docs, 1L)"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH old AS MATERIALIZED (SELECT doc_id, text
+      Some(sql"""WITH old AS MATERIALIZED (SELECT doc_id, text
              |    FROM '/root/testdata/sf0.001/documents.parquet'),
              |oldk AS (SELECT DISTINCT
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(text) + 1),
-             |        i -> CAST(unicode(text[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % $P) AS dg,
+             |    ${charPoly("text")} AS dg,
              |    CAST(length(text) AS BIGINT) AS len
              |  FROM old),
              |oldth AS (SELECT list_transform(string_split(text, ' '), w ->
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(w) + 1),
-             |        i -> CAST(unicode(w[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % $P)) AS th
+             |    ${charPoly("w")}) AS th
              |  FROM old),
              |olds AS MATERIALIZED (SELECT DISTINCT
              |    unnest(list_transform(range(1, len(th) // 8 + 1), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        th[(i - 1) * 8 + 1 : i * 8]),
-             |        (a, c) -> (a * 131 + c) % $P))) AS bh
+             |      ${polyFold("th[(i - 1) * 8 + 1 : i * 8]")})) AS bh
              |  FROM oldth),
              |newk AS MATERIALIZED (SELECT doc_id, source,
-             |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |      list_transform(range(1, length(text) + 1),
-             |        i -> CAST(unicode(text[i]) AS BIGINT))),
-             |      (a, c) -> (a * 131 + c) % $P) AS dg,
+             |    ${charPoly("text")} AS dg,
              |    CAST(length(text) AS BIGINT) AS len,
              |    list_transform(string_split(text, ' '), w ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        list_transform(range(1, length(w) + 1),
-             |          i -> CAST(unicode(w[i]) AS BIGINT))),
-             |        (a, c) -> (a * 131 + c) % $P)) AS th
+             |      ${charPoly("w")}) AS th
              |  FROM documents),
              |nblk AS (SELECT doc_id,
              |    unnest(list_transform(range(1, len(th) // 8 + 1), i ->
-             |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |        th[(i - 1) * 8 + 1 : i * 8]),
-             |        (a, c) -> (a * 131 + c) % $P))) AS bh
+             |      ${polyFold("th[(i - 1) * 8 + 1 : i * 8]")})) AS bh
              |  FROM newk),
              |hits AS (SELECT b.doc_id,
              |    max(CASE WHEN o.bh IS NOT NULL THEN 1 ELSE 0 END) AS span_hit
@@ -1233,7 +1182,7 @@ object Transforms {
              |FROM newk k
              |LEFT JOIN oldk ok ON ok.dg = k.dg AND ok.len = k.len
              |LEFT JOIN hits h ON h.doc_id = k.doc_id
-             |GROUP BY k.source ORDER BY k.source""".stripMargin))
+             |GROUP BY k.source ORDER BY k.source"""))
   )
 
   /** The build-corpus dir for q299/q302/q305: the sf0.001 fixture

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.{Tables => T}
 
 /** URL canonicalization — the FIRST dedup key a web-crawl pipeline
@@ -316,7 +317,7 @@ object UrlOps {
                 s"% ${P}L), 0L)")), lit(P)).as("blocked_digest"))
           .orderBy(col("source"))
       },
-      Some(s"""WITH p0 AS (SELECT source, ${pathExpr("VARCHAR", "//")} AS path
+      Some(sql"""WITH p0 AS (SELECT source, ${pathExpr("VARCHAR", "//")} AS path
          |  FROM documents),
          |p1 AS (SELECT source, path,
          |    greatest(CASE WHEN starts_with(path, '/private/pub/')
@@ -337,12 +338,9 @@ object UrlOps {
          |  CAST(sum(CASE WHEN allowed = 0 AND path LIKE '%.json'
          |    THEN 1 ELSE 0 END) AS BIGINT) AS n_json_blocked,
          |  CAST(sum(CASE WHEN allowed = 0 THEN
-         |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |        list_transform(range(1, length(path) + 1),
-         |          i -> CAST(unicode(path[i]) AS BIGINT))),
-         |        (a, c) -> (a * 131 + c) % $P)
+         |      ${charPoly("path")}
          |    ELSE 0 END) % $P AS BIGINT) AS blocked_digest
-         |FROM p2 GROUP BY source ORDER BY source""".stripMargin))
+         |FROM p2 GROUP BY source ORDER BY source"""))
   )
 
   /** q344 path synthesis: u = doc_id div 2 picks the subtree lane

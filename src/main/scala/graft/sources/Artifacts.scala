@@ -102,8 +102,16 @@ private[graft] object Artifacts {
     * Returns the generation path. With no parts it only swaps the manifest
     * to an already-written generation. A part that fails leaves the
     * manifest on the previous generation.
+    *
+    * Fails closed, before writing anything, when there are parts and `gen`
+    * is the generation `_current` already names: Overwrite would delete and
+    * rewrite the live directory in place, under any reader that resolved
+    * it. A re-run publishes a fresh name ([[nextGen]]).
     */
   def publish(s: SparkSession, root: String, gen: String)(parts: (String, DataFrame)*): String = {
+    if (parts.nonEmpty && published(s, root) && readManifest(s, root).trim == gen)
+      throw new IllegalStateException(
+        s"generation $gen is live at ${manifestOf(root)}; publish a fresh one (Artifacts.nextGen)")
     parts.foreach { case (part, df) =>
       df.write.mode(SaveMode.Overwrite)
         .parquet(if (part == Whole) s"$root/$gen" else s"$root/$gen/$part")
@@ -175,6 +183,11 @@ private[graft] object Artifacts {
       else 0
     s"$prefix${n + 1}"
   }
+
+  /** [[nextGen]] of the root's current generation; `<prefix>1` when the
+    * root has never published. */
+  def nextGen(s: SparkSession, root: String, prefix: String): String =
+    nextGen(if (published(s, root)) currentGeneration(s, root) else "", prefix)
 
   /** GENERATION GC — the retention half every publish defers to (a publish
     * never deletes the superseded generation): delete every top-level dir

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -1015,8 +1016,7 @@ object Sources {
       },
       Some {
         def lane(keyExpr: String, i: Int) =
-          s"CAST(('0x' || substr(md5('bloom:v1:' || $keyExpr::VARCHAR), " +
-            s"${1 + 4 * i}, 4)) AS BIGINT) % 16384"
+          md5Lane(s"'bloom:v1:' || $keyExpr::VARCHAR", 1 + 4 * i, len = 4) + " % 16384"
         def laneList(keyExpr: String) =
           (0 until 4).map(i => lane(keyExpr, i)).mkString("[", ", ", "]")
         val theory = """CAST(round(1000000.0 *

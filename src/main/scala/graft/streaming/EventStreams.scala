@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.queries.Entry
+import graft.queries.OracleSql._
 import graft.sources.Artifacts
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -358,15 +359,7 @@ object EventStreams {
     Entry(
       "q63_stream_sessionize",
       sessionizeStream,
-      Some("""WITH g AS (
-             | SELECT user_id,
-             |  CASE WHEN lag(ts) OVER w IS NULL
-             |        OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-             |       THEN 1 ELSE 0 END AS new_session
-             | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-             |SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
-             | count(*) AS n_events
-             |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(sessionCounts)),
     Entry(
       "q68_stream_dedup",
       streamDedup,
@@ -513,11 +506,7 @@ object EventStreams {
               .as("z"))
           .orderBy(col("event_type"), col("hr"))
       },
-      Some("""WITH e AS (SELECT event_type,
-             |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS hr,
-             |    CAST(round(value*100) AS BIGINT) AS cents FROM events),
-             |h AS (SELECT event_type, hr, CAST(sum(cents) AS BIGINT) AS y
-             |  FROM e GROUP BY 1, 2),
+      Some(sql"""$withHourlyCents,
              |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              |    CAST(sum(y) AS BIGINT) AS sy,
              |    CAST(sum(y*y) AS BIGINT) AS syy FROM h GROUP BY 1),
@@ -527,7 +516,7 @@ object EventStreams {
              |SELECT event_type, hr, CAST(y / 100.0 AS DOUBLE) AS sum_value,
              |  round(CAST(dev AS DOUBLE) / sqrt(CAST(mss AS DOUBLE)), 4) AS z
              |FROM j WHERE dev * dev >= 9 * mss
-             |ORDER BY event_type, hr""".stripMargin)),
+             |ORDER BY event_type, hr""")),
 
     // q220: LATE-DATA DEAD-LETTER SPLIT — the accounting Structured
     // Streaming does NOT give you: `withWatermark` silently DROPS late

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.sources.Artifacts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -94,6 +96,38 @@ class ArtifactsSuite extends SparkTestBase {
       assert(Artifacts.committedEpochs(spark, root) == epochs :+ "epoch-000000001")
       assert(Artifacts.readEpochs(spark, root).count() == ev.count())
     }
+  }
+
+  test("a q108 re-run publishes a fresh generation; the old one keeps its files and rows") {
+    val q108 = graft.queries.Registry.byName("q108_ann_index_build")
+    val root = graft.operators.Similarity.pqIndexRoot(sf)
+    def files(gen: String): Seq[java.nio.file.Path] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(gen))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList
+      finally walk.close()
+    }
+    def rows(gen: String): Seq[String] =
+      Seq("codebook", "codes")
+        .flatMap(p => spark.read.parquet(s"$gen/$p").collect().map(_.toString)).sorted
+
+    q108.q(spark, sf).collect()
+    val first = Artifacts.currentGeneration(spark, root)
+    val firstFiles = files(first)
+    val firstRows = rows(first)
+    assert(firstFiles.exists(_.toString.endsWith(".parquet")))
+
+    q108.q(spark, sf).collect()
+    val gone = firstFiles.filterNot(java.nio.file.Files.exists(_))
+    assert(gone.isEmpty,
+      s"the re-run deleted files of the generation it superseded: ${gone.take(4)}")
+    assert(rows(first) == firstRows)
+    val second = Artifacts.currentGeneration(spark, root)
+    assert(second != first, s"the re-run republished the live generation $first")
+    val live = second.substring(second.lastIndexOf('/') + 1)
+    assert(intercept[IllegalStateException] {
+      Artifacts.publish(spark, root, live)("codes" -> spark.read.parquet(s"$first/codes"))
+    }.getMessage.contains("is live"))
+    assert(Artifacts.currentGeneration(spark, root) == second)
   }
 
   test("a manifest swap starts no process") {
